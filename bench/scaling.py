@@ -54,8 +54,6 @@ from ironspark.spider import LinkSpider
 M = {cores}
 N = {pages}
 REPEATS = {repeats}
-FETCH = {fetch!r}
-SEEN_JOIN = {seen_join!r}
 SEED_DIV = {seed_div}
 WAVE_S = {wave_s}
 SEEN_BMAX = {seen_bmax}
@@ -79,15 +77,7 @@ if EVLOG:
     _conf["spark.eventLog.enabled"] = "true"
     _conf["spark.eventLog.dir"] = EVLOG
     _conf["spark.eventLog.compress"] = "false"
-if FETCH == "shuffle":
-    # pure shuffled fetch join: without this AQE would convert the
-    # small post-shuffle side back to a DRIVER-BUILT broadcast — the
-    # exact serial cost the shuffle strategy exists to avoid. Explicit
-    # F.broadcast() hints elsewhere (retry keys, robots, cookie jar)
-    # still broadcast: hints override the threshold.
-    _conf["spark.sql.autoBroadcastJoinThreshold"] = "-1"
-spark = get_spark("scaling-%d" % M, master="local[%d]" % M, shuffle_partitions=M,
-                  extra_conf=_conf)
+spark = get_spark("scaling-%d" % M, master="local[%d]" % M, extra_conf=_conf)
 spark.sparkContext.setLogLevel("ERROR")
 
 if not os.path.isdir(PDIR):
@@ -104,8 +94,7 @@ cfg = EngineConfig(dedup=True, seen_backend="bloom",
                    bloom_capacity=max(2 * N, 1 << 16),
                    max_waves=12, respect_robots=False,
                    wave_seconds=WAVE_S, default_crawl_delay=0.5,
-                   checkpoint_every=100, fetch_strategy=FETCH,
-                   seen_join=SEEN_JOIN,
+                   checkpoint_every=100,
                    seen_broadcast_max_rows=SEEN_BMAX,
                    seen_flip_ratio=SEEN_FLIP)
 
@@ -161,13 +150,13 @@ for rep in range(REPEATS):
 
 def run_child(
     cores: int, pages: int, repeats: int, filler: int, pdir: str,
-    pin: bool = True, markup: int = 0, fetch: str = "broadcast",
-    seen_join: str = "auto", seed_div: int = 20, wave_s: float = 3600.0,
+    pin: bool = True, markup: int = 0, seed_div: int = 20,
+    wave_s: float = 3600.0,
     evlog: str = "", seen_bmax: int = 4_000_000, seen_flip: float = 2.0,
 ) -> list[dict]:
     code = CHILD.format(root=ROOT, cores=cores, pages=pages, repeats=repeats,
-                        filler=filler, pdir=pdir, markup=markup, fetch=fetch,
-                        seen_join=seen_join, seed_div=seed_div, wave_s=wave_s,
+                        filler=filler, pdir=pdir, markup=markup,
+                        seed_div=seed_div, wave_s=wave_s,
                         evlog=evlog, seen_bmax=seen_bmax, seen_flip=seen_flip)
     env = dict(os.environ, IRONSPARK_DRIVER_MEM="48g")
     argv = [sys.executable, "-c", code]
@@ -233,14 +222,6 @@ def main() -> None:
                          "efficiency cells")
     ap.add_argument("--steal-retries", type=int, default=2)
     ap.add_argument("--settings", type=int, nargs="+", default=[2, 8, 32])
-    ap.add_argument("--fetch-strategy", default="broadcast",
-                    choices=["broadcast", "shuffle"],
-                    help="fetch join strategy for the child config. "
-                         "broadcast = the real-crawl regime (wave << "
-                         "corpus). shuffle = the BFS-benchmark regime "
-                         "(wave ~ corpus), avoiding the O(wave) "
-                         "driver-serial broadcast build that caps "
-                         "measured scaling on saturation benchmarks")
     ap.add_argument("--no-pin", dest="pin", action="store_false")
     ap.add_argument("--no-cpu-decomp", dest="cpu_decomp",
                     action="store_false",
@@ -280,8 +261,7 @@ def main() -> None:
                 warm_cache()
                 runs = run_child(
                     cores, args.pages, 1, args.filler, pdir,
-                    pin=args.pin, markup=args.markup,
-                    fetch=args.fetch_strategy, seed_div=args.seed_div,
+                    pin=args.pin, markup=args.markup, seed_div=args.seed_div,
                     wave_s=args.wave_seconds,
                 )
                 attempts.append(runs[0])
@@ -393,8 +373,7 @@ def main() -> None:
             warm_cache()
             run_child(
                 cores, args.pages, 1, args.filler, pdir, pin=args.pin,
-                markup=args.markup, fetch=args.fetch_strategy,
-                seed_div=args.seed_div, wave_s=args.wave_seconds,
+                markup=args.markup, seed_div=args.seed_div, wave_s=args.wave_seconds,
                 evlog=ev,
             )
             decs[cores] = decompose(ev)

@@ -1,14 +1,22 @@
-"""EngineConfig — parity with the reference's config surface.
+"""EngineConfig — what a crawl does, not how the engine executes it.
 
 Reference: ``src/config.rs:8-31`` (fields) and ``:33-59`` (defaults).
-Timeout/thread-pool knobs that have no meaning in a batch engine are
-kept for API parity but documented as no-ops; concurrency knobs map to
-wave sizing and politeness budgets (SURVEY.md §2.2, §4.1).
+Fields set crawl semantics (retry/acceptance, politeness budgets,
+dedup, recrawl, trap throttling, robots, cookies) and the thresholds
+of the engine's own plan choices. Physical plans are not settable:
+the seen anti-join regime is resolved per wave from the engine's
+counters (``seen_broadcast_max_rows``, ``seen_flip_ratio``), and the
+fetch is the corpus join when the engine gets a pages table and live
+HTTP when it gets ``pages=None``. The reference's thread-pool and
+in-flight limits have no meaning in a wave engine and are not carried
+(Spark's task scheduler bounds concurrency; SURVEY.md §2.2, §4.1).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+
+SEEN_BACKENDS = frozenset({"exact", "bloom", "cuckoo"})
 
 
 @dataclass(frozen=True)
@@ -17,18 +25,14 @@ class EngineConfig:
     max_retry_times: int = 2
     http_error_allow_codes: frozenset[int] = frozenset()
 
-    # -- concurrency → wave sizing (src/config.rs:47; downloader.rs:23,64) ---
-    concurrent_limit: int = 32
-    waiting_factor: int = 2  # max waiting = waiting_factor * concurrent_limit
-
     # -- politeness (reference global quota, src/config.rs:12) ---------------
     # Seconds of simulated wall-clock each wave represents; per-host budget
     # = floor(wave_seconds / crawl_delay(host)).
     wave_seconds: float = 60.0
     default_crawl_delay: float = 1.0
     # Global per-wave cap on scheduled URLs (None = unbounded). The
-    # reference's backpressure gate (waiting_factor * concurrent_limit)
-    # is intentionally NOT applied by default: at cluster scale a wave
+    # reference's backpressure gate (2 x its in-flight limit) is
+    # intentionally NOT applied by default: at cluster scale a wave
     # should saturate all executors, not mimic one process's queue.
     max_wave_size: int | None = None
 
@@ -39,58 +43,36 @@ class EngineConfig:
     # a plain channel, src/scheduler/scheduler.rs:34-76).
     dedup: bool = True
     # URL-seen backend: "exact" (anti-join) | "bloom" (partitioned Bloom
-    # prune + exact confirm) | "cuckoo" (deletable entries).
+    # prune + exact confirm) | "cuckoo" (deletable entries, 4 shards).
     seen_backend: str = "exact"
     # Per-SLICE capacity: each wave's new urls build one fixed-geometry
     # delta slice (broadcast once, never re-sent); size this so a
-    # slice's bitset stays broadcast-friendly (~1.2 MB per 2^20 at 1%).
+    # slice's bitset stays broadcast-friendly (~1.2 MB per 2^20 at 1%
+    # false positives).
     bloom_capacity: int = 1 << 20
-    bloom_fpp: float = 0.01
     # Live slices before OR-compaction into one (stale broadcasts are
     # released on compaction) — bounds both probe cost and executor
     # memory at max_slices + 1 bitsets.
     bloom_max_slices: int = 8
-    # cuckoo backend: hash-routed shard count (tables don't OR-merge,
-    # so deletable membership is sharded, not merged)
-    cuckoo_shards: int = 4
-    # Exact-confirm anti-join physical strategy. The seen side GROWS
-    # with the crawl, so the right plan is a regime choice (same
-    # pattern as fetch_strategy): "broadcast" while the table fits an
-    # executor-held hash map — no shuffle of the (much larger)
-    # candidate side, at the cost of one O(seen) driver build per
-    # wave — and "shuffle_hash" beyond, which keeps the O(seen) build
-    # distributed and shuffles candidates once. "auto" switches at
-    # seen_broadcast_max_rows using the engine's own url counter
-    # (next_seq, exact for unique enqueued urls). Default crossover
-    # 4M urls ≈ 250 MB of strings ≈ <1 GB hashed per executor;
-    # measured at 400k pages: broadcast is 1.2-1.5x faster end-to-end
-    # at 2-8 cores and the shuffle only breaks even at 32.
-    # "flip" replaces the O(seen) driver build with two O(wave)
-    # broadcasts: broadcast the deduped candidate KEYS into a fully
-    # parallel scan of seen (left_semi -> the dupes), then broadcast
-    # the dupes back for the exact anti-join. Serial driver cost
-    # drops from O(seen) — which grows every wave and dominates the
-    # small-wave politeness tail — to O(wave), while the O(seen) work
-    # becomes a scan that scales with cores. "auto" picks flip once
-    # the seen set outgrows the wave (seen_flip_ratio x outlinks).
-    seen_join: str = "auto"  # auto | broadcast | flip | shuffle_hash
+    # Thresholds of the exact-confirm anti-join regime, which the
+    # engine resolves per wave from its own counters (the seen side
+    # GROWS with the crawl, so the right plan changes with crawl age;
+    # CrawlEngine._resolve_seen_join):
+    # * "shuffle_hash" once seen rows (next_seq, exact for unique
+    #   enqueued urls) exceed seen_broadcast_max_rows — the O(seen)
+    #   build stays distributed and candidates shuffle once. 4M urls
+    #   ≈ 250 MB of strings ≈ <1 GB hashed per executor; measured at
+    #   400k pages: broadcast is 1.2-1.5x faster end-to-end at 2-8
+    #   cores and the shuffle only breaks even at 32.
+    # * "flip" once seen outgrows seen_flip_ratio x the wave's
+    #   outlinks: broadcast the deduped candidate KEYS into a parallel
+    #   scan of seen (left_semi -> the dupes), then broadcast the
+    #   dupes back for the exact anti-join — serial driver cost drops
+    #   from O(seen), which grows every wave and dominates the small-
+    #   wave politeness tail, to O(wave).
+    # * "broadcast" otherwise: one small driver build, no shuffle.
     seen_broadcast_max_rows: int = 4_000_000
     seen_flip_ratio: float = 2.0
-    # Heavy-job AQE gate: adaptive execution is worth its sequential
-    # re-optimization rounds (measured ~1.4s flat per action,
-    # independent of core count) only when the wave is big enough for
-    # runtime skew handling to matter. Waves with fewer pending rows
-    # than this run the fetch+parse job with static plans.
-    aqe_min_pending: int = 65_536
-    # Corpus-scan split sizing: target file-scan tasks per core. Spark's
-    # default split formula (bytes/defaultParallelism, capped at 128 MB)
-    # yields ~1 task per core on sub-GB corpora, so one straggler split
-    # (mega-host pages cluster in files) idles the whole fetch stage
-    # tail. Measured on the fused fetch+parse wave: 65s -> 42s at 2
-    # cores and 16.6s -> 13.3s at 8 just from cutting splits to ~4+/
-    # core. The 128 MB cap makes this a no-op at petabyte corpus sizes,
-    # where the default already produces thousands of splits. 0 = off.
-    scan_tasks_per_core: int = 4
 
     # -- spider admission (src/spider/manager.rs:34-36) ----------------------
     scheduler_holding_threshold: int = 50
@@ -125,7 +107,8 @@ class EngineConfig:
     # are NOT dropped: they stay pending in FIFO order and trickle out
     # at trap_template_cap per wave instead of eating the politeness
     # budget. None = off. Must be >= 1 when set (guarantees progress,
-    # so a trap host drains eventually and idle shutdown still fires).
+    # so a trap host drains eventually and idle shutdown still fires);
+    # __post_init__ rejects smaller values.
     trap_template_cap: int | None = None
     trap_min_urls: int = 100
     trap_share: float = 0.5
@@ -139,35 +122,27 @@ class EngineConfig:
     # -- robots enforcement ----------------------------------------------------
     respect_robots: bool = True
 
-    # -- fetch join strategy -----------------------------------------------------
-    # "broadcast": the scheduled batch probes the corpus scan (no corpus
-    # shuffle — right up to waves of ~10M rows). "shuffle": plain
-    # shuffled left join (giant waves; pair with a bucketed corpus).
-    fetch_strategy: str = "broadcast"
-
-    # -- parity no-ops kept for API compatibility (src/config.rs:38-43,49,56) --
+    # -- HTTP client (src/config.rs:14,38-43) -----------------------------------
+    # Timeouts and UA apply to the live fetch (CrawlEngine(pages=None));
+    # store_cookies replays the per-host jar on either fetch path.
     downloader_request_timeout_s: float = 3.0
     downloader_connect_timeout_s: float = 3.0
     store_cookies: bool = False
     user_agent: str = "ironspark/0.1"
-    spider_manager_worker_threads: int = 4
-    pipeline_worker_threads: int = 4
 
-    # -- engine-plane knobs (ours) ---------------------------------------------
-    shuffle_partitions: int = 32
-    # Hosts holding more than skew_salt_threshold of a wave's rows get
-    # salted into skew_salt_buckets sub-keys for the politeness rank
-    # (two-phase: salted partial rank, then exact per-host cap).
-    skew_salt_buckets: int = 8
-    checkpoint_dir: str | None = None
-    checkpoint_every: int = 1  # waves between checkpoints
-    # Overlap the durable tail (frontier segment + seen delta + bloom
-    # slice, one chained I/O-pool task) with the next wave's compute.
-    # False = run it synchronously at the wave boundary (ablation knob).
-    overlap_tail: bool = True
-    # Hand the fast-path pending set to the next wave as a lineage-
-    # truncated live DataFrame instead of the parquet read-back.
-    # False = always re-read the segment (ablation knob).
-    pending_handoff: bool = True
+    # -- checkpointing ---------------------------------------------------------
+    checkpoint_every: int = 1  # waves between manifest commits
 
     extra: dict = field(default_factory=dict, compare=False, hash=False)
+
+    def __post_init__(self) -> None:
+        if self.seen_backend not in SEEN_BACKENDS:
+            raise ValueError(
+                f"seen_backend must be one of {sorted(SEEN_BACKENDS)}, "
+                f"got {self.seen_backend!r}"
+            )
+        if self.trap_template_cap is not None and self.trap_template_cap < 1:
+            raise ValueError(
+                f"trap_template_cap must be None or >= 1, "
+                f"got {self.trap_template_cap}"
+            )

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from ironspark.config import EngineConfig
 from ironspark.fetch import fetch_from_corpus, http_fetch_stage
 from ironspark.frontier import (
+    _FRONTIER_COLS,
     _finish_frontier,
     drain_seq_caches,
     enqueue_outlinks,
@@ -54,12 +55,23 @@ from ironspark.schemas import SEEDS_SCHEMA
 from ironspark.seen import ShardedBloom, ShardedCuckoo
 from ironspark.spider import Spider
 
-# no `wave` data column: a frontier row's wave is its segment directory
-# (see ironspark/frontier.py note — keeps per-wave plans literal-free)
-_FRONTIER_COLS = [
-    "url_canon", "url", "host", "spider_id", "seq", "attempt",
-    "method", "headers", "body", "meta", "status",
-]
+# Heavy-job AQE gate: adaptive execution is worth its sequential
+# re-optimization rounds (measured ~1.4s flat per action, independent of
+# core count) only when the wave is big enough for runtime skew handling
+# to matter. Waves with fewer pending rows run fetch+parse statically.
+_AQE_MIN_PENDING = 65_536
+
+# Corpus-scan split sizing: target file-scan tasks per core. Spark's
+# default split formula (bytes/defaultParallelism, capped at 128 MB)
+# yields ~1 task per core on sub-GB corpora, so one straggler split
+# (mega-host pages cluster in files) idles the whole fetch stage tail.
+# Measured on the fused fetch+parse wave: 65s -> 42s at 2 cores and
+# 16.6s -> 13.3s at 8 from cutting splits to ~4+/core. The 128 MB clamp
+# makes this a no-op at petabyte corpus sizes.
+_SCAN_TASKS_PER_CORE = 4
+
+# session settings the wave loop overrides; run() restores them on exit
+_RUN_CONFS = ("spark.sql.adaptive.enabled", "spark.sql.files.maxPartitionBytes")
 
 _TRACE = os.environ.get("IRONSPARK_TRACE", "") not in ("", "0")
 
@@ -531,7 +543,7 @@ class CrawlEngine:
         # column-pruned corpus view; the scan carries only what the
         # fetch join needs (url, html, warc_ts) — Catalyst would prune
         # anyway, this makes it explicit and keeps text/lang out.
-        # pages may be None when fetch_strategy="http" (live fetch).
+        # pages=None selects the live HTTP fetch (fetch.http_fetch_stage).
         self._pages_view = (
             pages.select("url", "html", "warc_ts") if pages is not None else None
         )
@@ -554,20 +566,16 @@ class CrawlEngine:
             dt = dt.astimezone(timezone.utc).replace(tzinfo=None)
         return dt
 
-    def _prepared_pages(self) -> DataFrame:
-        return self._pages_view
-
     def _scan_split_bytes(self) -> int | None:
-        """maxPartitionBytes targeting cfg.scan_tasks_per_core file-scan
+        """maxPartitionBytes targeting _SCAN_TASKS_PER_CORE file-scan
         tasks per core over the fetch corpus, clamped to [4 MB, 128 MB].
 
-        None (= leave the session default) when the override is
-        disabled, there is no file-backed corpus, or sizes can't be
-        read (non-local filesystem) — the 128 MB clamp means a corpus
-        big enough to be remote is also big enough not to need this.
+        None (= leave the session default) when there is no file-backed
+        corpus or sizes can't be read (non-local filesystem) — the
+        128 MB clamp means a corpus big enough to be remote is also big
+        enough not to need this.
         """
-        k = self.cfg.scan_tasks_per_core
-        if not k or self.pages is None:
+        if self.pages is None:
             return None
         try:
             total = 0
@@ -585,7 +593,7 @@ class CrawlEngine:
         if total <= 0:
             return None
         par = max(self.spark.sparkContext.defaultParallelism, 1)
-        return min(128 << 20, max(4 << 20, total // (k * par)))
+        return min(128 << 20, max(4 << 20, total // (_SCAN_TASKS_PER_CORE * par)))
 
     def _prepared_page_urls(self) -> DataFrame | None:
         if self._pages_urls is None and self._pages_view is not None:
@@ -605,37 +613,31 @@ class CrawlEngine:
     def _resolve_seen_join(
         self, seen_rows: int | None, wave_outlinks: int | None = None
     ) -> str:
-        """Resolve cfg.seen_join ("auto") to a physical strategy.
+        """Resolve this wave's exact anti-join plan from the engine's
+        own counters.
 
-        Regime choice (same pattern as fetch_strategy), ordered by
-        crawl age: "broadcast" while the seen set is comparable to the
-        wave (early waves — one small driver build, no shuffle of
-        either side); "flip" once seen outgrows the wave
-        (seen_flip_ratio x the wave's outlink count, known for free
-        from the fused metrics pass) — two O(wave) broadcasts and a
-        parallel O(seen) scan instead of an O(seen) driver build that
-        would otherwise grow with crawl progress and floor the
-        politeness tail's small waves; "shuffle_hash" beyond
+        Regime choice, ordered by crawl age: "broadcast" while the
+        seen set is comparable to the wave (early waves — one small
+        driver build, no shuffle of either side); "flip" once seen
+        outgrows the wave (seen_flip_ratio x the wave's outlink count,
+        known for free from the fused metrics pass) — two O(wave)
+        broadcasts and a parallel O(seen) scan instead of an O(seen)
+        driver build that would otherwise grow with crawl progress and
+        floor the politeness tail's small waves; "shuffle_hash" beyond
         seen_broadcast_max_rows — O(seen) stays distributed (the
-        10^10-url plan) at the cost of one candidate shuffle per
-        wave. auto switches on the engine's own counters — NOT on
-        AQE's estimate, which would silently flip strategies mid-crawl
-        and re-plan.
+        10^10-url plan) at the cost of one candidate shuffle per wave.
+        The switch reads the engine's counters — NOT AQE's estimate,
+        which would silently flip strategies mid-crawl and re-plan.
         """
-        mode = self.cfg.seen_join
-        if mode == "auto":
-            if (
-                seen_rows is None
-                or seen_rows > self.cfg.seen_broadcast_max_rows
-            ):
-                mode = "shuffle_hash"
-            elif (
-                wave_outlinks is not None
-                and seen_rows > self.cfg.seen_flip_ratio * wave_outlinks
-            ):
-                mode = "flip"
-            else:
-                mode = "broadcast"
+        if seen_rows is None or seen_rows > self.cfg.seen_broadcast_max_rows:
+            mode = "shuffle_hash"
+        elif (
+            wave_outlinks is not None
+            and seen_rows > self.cfg.seen_flip_ratio * wave_outlinks
+        ):
+            mode = "flip"
+        else:
+            mode = "broadcast"
         # recorded per wave into CrawlStats (the main wave dedup is the
         # last resolution before the wave's stats append) — the regime
         # transition log the scaling artifact discloses
@@ -725,17 +727,12 @@ class CrawlEngine:
                 self._bloom = ShardedBloom(
                     self.spark,
                     self.cfg.bloom_capacity,
-                    self.cfg.bloom_fpp,
-                    self.cfg.bloom_max_slices,
+                    max_slices=self.cfg.bloom_max_slices,
                 )
             self._bloom.add_delta(new_urls.select("url_canon"), "url_canon")
         elif self.cfg.seen_backend == "cuckoo":
             if self._bloom is None:
-                self._bloom = ShardedCuckoo(
-                    self.spark,
-                    self.cfg.bloom_capacity,
-                    self.cfg.cuckoo_shards,
-                )
+                self._bloom = ShardedCuckoo(self.spark, self.cfg.bloom_capacity)
             self._bloom.add_df(new_urls.select("url_canon"), "url_canon")
 
     def invalidate_seen(self, run_dir: str, urls: list[str]) -> int:
@@ -868,17 +865,42 @@ class CrawlEngine:
         wave, but only while the frontier holds no more than
         cfg.scheduler_holding_threshold pending requests (admission
         control F4, SCHEDULER_HOLDING_THRESOLD src/spider/manager.rs:34-36).
+
+        The session settings the wave loop overrides (AQE, scan split
+        size) are restored and the I/O pool is shut down on every exit,
+        including a crawl that raises.
         """
-        cfg = self.cfg
-        run_dir = run_dir or cfg.checkpoint_dir or tempfile.mkdtemp(prefix="ironspark_")
-        io = make_table_io(self.spark, run_dir)
-        stats = CrawlStats(run_dir=run_dir)
-        self._metrics_buf: list[dict] = []
-        self._status_buf: list[dict] = []
+        conf = self.spark.conf
+        saved = {k: conf.get(k, None) for k in _RUN_CONFS}
         # independent sink writes (order, items) run as concurrent Spark
         # actions so file I/O overlaps the wave's compute; drained at
         # each wave's end before commits/unpersist (see wave loop)
         io_pool = ThreadPoolExecutor(max_workers=3)
+        try:
+            return self._crawl(io_pool, seeds, run_dir, resume, staged_seeds)
+        finally:
+            io_pool.shutdown(wait=True, cancel_futures=True)
+            for k, v in saved.items():
+                if v is None:
+                    conf.unset(k)
+                else:
+                    conf.set(k, v)
+
+    def _crawl(
+        self,
+        io_pool: ThreadPoolExecutor,
+        seeds,
+        run_dir: str | None,
+        resume: bool,
+        staged_seeds: list | None,
+    ) -> CrawlStats:
+        """The wave loop behind run()."""
+        cfg = self.cfg
+        run_dir = run_dir or tempfile.mkdtemp(prefix="ironspark_")
+        io = make_table_io(self.spark, run_dir)
+        stats = CrawlStats(run_dir=run_dir)
+        self._metrics_buf: list[dict] = []
+        self._status_buf: list[dict] = []
         t_start = time.monotonic()
 
         # Selective AQE: adaptive execution turns EVERY action into a
@@ -903,27 +925,27 @@ class CrawlEngine:
                     "spark.sql.adaptive.enabled", "true" if on else "false"
                 )
 
-        # Corpus-scan split sizing (cfg.scan_tasks_per_core): on small
+        # Corpus-scan split sizing (_SCAN_TASKS_PER_CORE): on small
         # corpora Spark's default split math gives ~1 scan task per
         # core, so the fetch+parse stage runs at the speed of its
         # slowest split. Size splits for >=k tasks/core; the 128 MB
-        # cap keeps this inert at real corpus scale. Restored on exit.
-        _prev_mpb = self.spark.conf.get(
-            "spark.sql.files.maxPartitionBytes", None
-        )
+        # cap keeps this inert at real corpus scale. Restored by run().
         _mpb = self._scan_split_bytes()
         if _mpb is not None:
             self.spark.conf.set("spark.sql.files.maxPartitionBytes", str(_mpb))
 
-        def _restore_mpb() -> None:
-            if _mpb is None:
-                return
-            if _prev_mpb is None:
-                self.spark.conf.unset("spark.sql.files.maxPartitionBytes")
-            else:
-                self.spark.conf.set(
-                    "spark.sql.files.maxPartitionBytes", _prev_mpb
-                )
+        def _commit(**extra) -> None:
+            io.commit(
+                {
+                    "next_wave": wave,
+                    "next_seq": int(next_seq),
+                    "deduped": int(stats.deduped),
+                    "segments": segments,
+                    "consumed": consumed,
+                    "consumed_rows": consumed_rows,
+                    **extra,
+                }
+            )
 
         # Frontier state is MERGE-ON-READ (the Iceberg pattern on the
         # TableIO seam): `segments` lists delta dirs (each wave appends
@@ -982,16 +1004,7 @@ class CrawlEngine:
             segments = ["frontier/wave=0"]
             consumed = []
             consumed_rows = 0
-            io.commit(
-                {
-                    "next_wave": 0,
-                    "next_seq": int(next_seq),
-                    "deduped": 0,
-                    "segments": segments,
-                    "consumed": consumed,
-                    "consumed_rows": 0,
-                }
-            )
+            _commit()
             if cfg.seen_backend in ("bloom", "cuckoo") and cfg.dedup:
                 self._bloom_add(front0)
 
@@ -1017,9 +1030,7 @@ class CrawlEngine:
                 ).collect()
             }
 
-        _aqe(False)  # wave-loop steady state (restored before return;
-        # an exception leaves it off, which is safe — only the wave's
-        # single heavy job wants it on)
+        _aqe(False)  # wave-loop steady state (run() restores it)
         pending_count = None  # unknown -> probe once
         # handle to the PREVIOUS wave's overlapped durable tail
         # (frontier segment + seen delta + bloom slice, ONE chained
@@ -1030,7 +1041,7 @@ class CrawlEngine:
         release_after_seen: list = []
         frontier_done: threading.Event | None = None
         prev_front = None        # previous wave's front_next cache
-        pending_handoff = None   # live DataFrame for next wave's pending
+        handoff = None           # live DataFrame for next wave's pending
         handoff_streak = 0
 
         def _await_frontier():
@@ -1047,14 +1058,14 @@ class CrawlEngine:
                 release_after_seen = []
 
         while wave < cfg.max_waves:
-            if pending_handoff is not None:
+            if handoff is not None:
                 # fast-path handoff: last wave's delta IS the whole
                 # pending set and its cached frame is live — plan the
                 # wave against it; the parquet read-back (and the wait
                 # for the overlapped segment write) disappears from the
                 # critical path
-                pending = pending_handoff
-                pending_handoff = None
+                pending = handoff
+                handoff = None
             else:
                 _await_frontier()  # segment dir complete before listing
                 pending = pending_view()
@@ -1210,14 +1221,13 @@ class CrawlEngine:
             # InMemoryRelation -> Arrow path measured ~10x slower than
             # the live join.
             t0 = time.monotonic()
-            if cfg.fetch_strategy == "http":
+            if self.pages is None:
                 # live pooled-HTTP fetch (fetch.http_fetch_stage): same
                 # column contract, no pages table needed
                 responses = http_fetch_stage(scheduled, cfg)
             else:
                 responses = fetch_from_corpus(
-                    scheduled, self._prepared_pages(), self.redirects,
-                    strategy=cfg.fetch_strategy,
+                    scheduled, self._pages_view, self.redirects,
                     corpus_urls=self._prepared_page_urls(),
                 )
             for hook in self.response_hooks:
@@ -1235,9 +1245,9 @@ class CrawlEngine:
             # serial budget (metrics.wave_metrics_fine docstring)
             # heavy-job AQE only when the wave is big enough for
             # runtime skew handling to repay the re-optimization
-            # rounds (cfg.aqe_min_pending; small waves measured ~1.4s
+            # rounds (_AQE_MIN_PENDING; small waves measured ~1.4s
             # flat per AQE'd action, pure serial floor)
-            big_wave = (pending_count or 0) >= cfg.aqe_min_pending
+            big_wave = (pending_count or 0) >= _AQE_MIN_PENDING
             _aqe(big_wave)
             fine = wave_metrics_fine(parse_out).collect()
             if big_wave:
@@ -1384,13 +1394,8 @@ class CrawlEngine:
                 tail_release.append(prev_front)
             prev_front = front_next
             _await_seen()  # no-op unless dedup=False skipped the await
-            if cfg.overlap_tail:
-                seen_fut = io_pool.submit(_tail)
-                release_after_seen = tail_release
-            else:  # ablation: synchronous tail at the wave boundary
-                _tail()
-                for df in tail_release:
-                    df.unpersist()
+            seen_fut = io_pool.submit(_tail)
+            release_after_seen = tail_release
             tr.mark("tail(submit)")
 
             if n_sched == pending_count:
@@ -1406,16 +1411,15 @@ class CrawlEngine:
                 # logical plan tree stays bounded on long crawls.
                 handoff_streak += 1
                 if (
-                    cfg.pending_handoff
-                    and not staged_seeds
+                    not staged_seeds
                     and not self.request_hooks
                     and handoff_streak % 8 != 0
                 ):
-                    pending_handoff = front_next
+                    handoff = front_next
                 else:
-                    pending_handoff = None
+                    handoff = None
             else:
-                pending_handoff = None
+                handoff = None
                 handoff_streak = 0
                 segments = segments + [f"frontier/wave={wave + 1}"]
                 # tombstones: the PRE-hook scheduled keys leave pending
@@ -1526,16 +1530,7 @@ class CrawlEngine:
                 # slice is durable — await the overlapped write+build
                 _await_seen()
                 self._flush_metrics(io)
-                io.commit(
-                    {
-                        "next_wave": wave,
-                        "next_seq": int(next_seq),
-                        "deduped": int(stats.deduped),
-                        "segments": segments,
-                        "consumed": consumed,
-                        "consumed_rows": consumed_rows,
-                    }
-                )
+                _commit()
             # NOTE: this wave's caches are NOT swept here — the tail
             # task still reads them; _await_seen() releases them when
             # the tail lands (at the next wave's dedup point or below)
@@ -1554,20 +1549,7 @@ class CrawlEngine:
             # final wave's items are written (manager.rs:105-150)
             self.pipelines.close_all()
         self._flush_metrics(io)
-        io.commit(
-            {
-                "next_wave": wave,
-                "next_seq": int(next_seq),
-                "deduped": int(stats.deduped),
-                "segments": segments,
-                "consumed": consumed,
-                "consumed_rows": consumed_rows,
-                "done": True,
-            }
-        )
-        io_pool.shutdown(wait=True)
-        _aqe(True)  # restore the session's adaptive setting
-        _restore_mpb()
+        _commit(done=True)
         stats.wall_s = time.monotonic() - t_start
         return stats
 

@@ -3,8 +3,9 @@
 At test scale, "fetch" is a deterministic left join of the scheduled
 frontier against the pages corpus (the reference's live reqwest GET,
 ``src/downloader/downloader.rs:152-226``, replaced per SURVEY §2.1 S3).
-A real deployment swaps in a pooled-HTTP ``mapInPandas`` behind the
-same column contract (see ``http_fetch_stage`` stub).
+A live crawl swaps in a pooled-HTTP ``mapInPandas`` behind the same
+column contract (``http_fetch_stage``; the engine runs it when it has
+no pages table).
 
 Scale shape: the scheduled batch is orders of magnitude smaller than
 the corpus. The session enables Spark's runtime Bloom-filter pushdown,
@@ -44,7 +45,6 @@ def fetch_from_corpus(
     scheduled: DataFrame,
     pages: DataFrame,
     redirects: DataFrame | None = None,
-    strategy: str = "broadcast",
     corpus_urls: DataFrame | None = None,
 ) -> DataFrame:
     """scheduled frontier rows -> response rows (status, body bytes).
@@ -73,59 +73,50 @@ def fetch_from_corpus(
         F.col("html").alias("body_bytes"),
         F.col("warc_ts"),
     )
-    if strategy == "broadcast":
-        # NEVER shuffle the corpus: a wave's scheduled batch is tiny next
-        # to the page store, so hits = corpus scan probing a broadcast
-        # hash table of the batch (zero shuffle, zero sort; parallelism =
-        # parquet splits), and misses = an anti-join against the
-        # column-pruned url-only scan (KBs of parquet, not the html).
-        # A plain left join would shuffle wave-sized HTML every wave —
-        # measured as the scaling killer (disk-bound, flat across cores).
-        # The broadcast build side is projected to exactly what the
-        # parse stage consumes: probing a full frontier row (incl. null
-        # MAP columns) measured 2x the whole stage cost, since every
-        # matched row copies the build side. For waves too large to
-        # broadcast (>~10M rows), strategy "shuffle" is the fallback; at
-        # 100 TB the corpus side is bucketed by url so even that
-        # shuffles only the batch.
-        slim = scheduled.select(
-            "url_canon", "url", "host", "spider_id", "seq", "attempt",
-            "method", "headers", "body",
+    # NEVER shuffle the corpus: a wave's scheduled batch is tiny next
+    # to the page store, so hits = corpus scan probing a broadcast
+    # hash table of the batch (zero shuffle, zero sort; parallelism =
+    # parquet splits), and misses = an anti-join against the
+    # column-pruned url-only scan (KBs of parquet, not the html).
+    # A plain left join would shuffle wave-sized HTML every wave —
+    # measured as the scaling killer (disk-bound, flat across cores).
+    # The broadcast build side is projected to exactly what the
+    # parse stage consumes: probing a full frontier row (incl. null
+    # MAP columns) measured 2x the whole stage cost, since every
+    # matched row copies the build side. The engine's max_wave_size
+    # bounds the broadcast side for corpora whose waves would
+    # otherwise outgrow it.
+    slim = scheduled.select(
+        "url_canon", "url", "host", "spider_id", "seq", "attempt",
+        "method", "headers", "body",
+    )
+    # method-aware: the page store answers GETs; any other method is
+    # an explicit miss, never a silent GET (a ported POST spider
+    # sees 404s, not wrong pages; the live-HTTP stage would serve
+    # these). Reference sends the request's real method,
+    # downloader.rs:152-226.
+    is_get = F.coalesce(F.col("method"), F.lit("GET")) == "GET"
+    gets = slim.filter(is_get)
+    nongets = slim.filter(~is_get)
+    hits = corpus.join(
+        F.broadcast(gets), corpus["_page_url"] == gets["url_canon"]
+    ).drop("_page_url")
+    # miss detection probes a url-only corpus side; callers that
+    # loop (the engine) pass a persisted single-partition
+    # `corpus_urls` so the per-wave broadcast build reads a compact
+    # cache instead of re-scanning parquet every wave
+    url_side = corpus_urls if corpus_urls is not None else pages
+    misses = (
+        gets.join(
+            F.broadcast(url_side.select(F.col("url").alias("_page_url"))),
+            gets["url_canon"] == F.col("_page_url"),
+            "left_anti",
         )
-        # method-aware: the page store answers GETs; any other method is
-        # an explicit miss, never a silent GET (a ported POST spider
-        # sees 404s, not wrong pages; the live-HTTP stage would serve
-        # these). Reference sends the request's real method,
-        # downloader.rs:152-226.
-        is_get = F.coalesce(F.col("method"), F.lit("GET")) == "GET"
-        gets = slim.filter(is_get)
-        nongets = slim.filter(~is_get)
-        hits = corpus.join(
-            F.broadcast(gets), corpus["_page_url"] == gets["url_canon"]
-        ).drop("_page_url")
-        # miss detection probes a url-only corpus side; callers that
-        # loop (the engine) pass a persisted single-partition
-        # `corpus_urls` so the per-wave broadcast build reads a compact
-        # cache instead of re-scanning parquet every wave
-        url_side = corpus_urls if corpus_urls is not None else pages
-        misses = (
-            gets.join(
-                F.broadcast(url_side.select(F.col("url").alias("_page_url"))),
-                gets["url_canon"] == F.col("_page_url"),
-                "left_anti",
-            )
-            .unionByName(nongets)
-            .withColumn("body_bytes", F.lit(None).cast("binary"))
-            .withColumn("warc_ts", F.lit(None).cast("timestamp"))
-        )
-        joined = hits.unionByName(misses.select(*hits.columns))
-    else:
-        is_get = F.coalesce(scheduled["method"], F.lit("GET")) == "GET"
-        joined = scheduled.join(
-            corpus,
-            (scheduled["url_canon"] == corpus["_page_url"]) & is_get,
-            "left",
-        ).drop("_page_url")
+        .unionByName(nongets)
+        .withColumn("body_bytes", F.lit(None).cast("binary"))
+        .withColumn("warc_ts", F.lit(None).cast("timestamp"))
+    )
+    joined = hits.unionByName(misses.select(*hits.columns))
 
     # path length via a codegen-friendly regex strip of scheme://host —
     # parse_url lowers to an interpreted evaluator invoke (measured hot)
@@ -197,8 +188,8 @@ def http_fetch_stage(scheduled: DataFrame, cfg: EngineConfig) -> DataFrame:
     """Live-HTTP fetch: pooled http.client inside ONE mapInPandas pass.
 
     Same column contract as ``fetch_from_corpus`` so the parse stage is
-    oblivious to the strategy (engine selects via
-    ``cfg.fetch_strategy == "http"``). Mirrors the reference client
+    oblivious to the fetch path (the engine runs it when constructed
+    with ``pages=None``). Mirrors the reference client
     (``src/downloader/downloader.rs:43-76``: UA, connect/request
     timeouts, redirect following; ``:152-226``: dispatch with the
     request's real method/headers/body):

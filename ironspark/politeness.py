@@ -9,7 +9,7 @@ crawl_delay d may be fetched floor(wave_seconds/d) times per wave.
 
 Skew (the mega-domain problem) is handled two-phase, per the north
 rule: phase 1 ranks within (host, salt) — the mega-host's millions of
-pending rows are ranked in ``skew_salt_buckets`` parallel groups and
+pending rows are ranked in ``_SALT_BUCKETS`` parallel groups and
 cut to ``budget`` each, bounding any single window partition; phase 2
 ranks the ≤ buckets×budget survivors exactly per host and applies the
 true budget. The final output is byte-identical to a naive global
@@ -22,6 +22,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ironspark.config import EngineConfig
+
+# salt sub-keys per host for the phase-1 rank (module docstring)
+_SALT_BUCKETS = 8
 
 
 def with_budget(
@@ -154,7 +157,7 @@ def throttle_traps(pending: DataFrame, cfg: EngineConfig) -> DataFrame:
         F.broadcast(traps), ["host", "_tmpl"], "left_anti"
     ).drop("_tmpl")
     cap = cfg.trap_template_cap
-    salt = F.pmod(F.xxhash64("url_canon"), F.lit(cfg.skew_salt_buckets))
+    salt = F.pmod(F.xxhash64("url_canon"), F.lit(_SALT_BUCKETS))
     w1 = Window.partitionBy("host", "_tmpl", salt).orderBy("seq")
     p1 = flagged.withColumn("_r1", F.row_number().over(w1)).filter(
         F.col("_r1") <= cap
@@ -201,7 +204,7 @@ def select_wave(
     hot = p.join(F.broadcast(over_hosts), "host", "left_semi")
 
     # phase 1: salted partial rank — bounds the biggest window partition
-    salt = F.pmod(F.xxhash64("url_canon"), F.lit(cfg.skew_salt_buckets))
+    salt = F.pmod(F.xxhash64("url_canon"), F.lit(_SALT_BUCKETS))
     w1 = Window.partitionBy("host", salt).orderBy("seq")
     p1 = hot.withColumn("_r1", F.row_number().over(w1)).filter(
         F.col("_r1") <= F.col("budget")

@@ -1,4 +1,8 @@
-"""URL-seen set: exact anti-join oracle + partitioned Bloom scale path.
+"""URL-seen prune structures: sharded Bloom slices and a sharded cuckoo.
+
+The exact seen set is the engine's append-only ``seen`` table, and the
+one dedup implementation is ``CrawlEngine._filter_new``; the structures
+here only prune its input.
 
 Reference semantics: the example spider's discovered ``HashSet``
 (``examples/basic_spider.rs:29,75-89``) and, for frontier dedup, the
@@ -10,8 +14,8 @@ is confirmed by an exact anti-join. False positives cannot leak.
 Bloom construction is distributed: url hashes are JVM-side xxhash64
 columns, each partition builds a numpy bitset over its hashes inside a
 mapInPandas pass, partial bitsets are OR-merged executor-side in a
-treeAggregate-shaped repartition fan-in, and the single merged filter
-is broadcast for the next wave's membership test. A cuckoo filter
+treeAggregate-shaped repartition fan-in, and each wave's merged slice
+is broadcast for later membership tests (``ShardedBloom``). A cuckoo filter
 (deletable fingerprints, for re-crawl invalidation) is provided as a
 hash-routed sharded alternative.
 """
@@ -247,29 +251,6 @@ def _bloom_merged_partials(
     return merged
 
 
-def bloom_maybe_udf(spark, bloom: BloomFilter):
-    """Broadcast the bitset; return a callable over a url column that
-    expands to JVM hash_cols feeding a vectorized hash-consuming UDF
-    (zero per-row Python: the UDF sees ready int64 arrays)."""
-    bcast = spark.sparkContext.broadcast((bloom.m, bloom.k, bloom.bits.tobytes()))
-
-    def maybe_seen(h1: pd.Series, h2: pd.Series) -> pd.Series:
-        m, k, raw = bcast.value
-        bf = BloomFilter(2, 0.5)
-        bf.m, bf.k = m, k
-        bf.bits = np.frombuffer(raw, dtype=np.uint64)
-        if not len(h1):
-            return pd.Series(np.zeros(0, dtype=bool))
-        return pd.Series(bf.contains_hashes(_u64(h1), _u64(h2)))
-
-    udf = F.pandas_udf(maybe_seen, "boolean")
-
-    def apply(url_col):
-        return udf(*hash_cols(url_col))
-
-    return apply
-
-
 class ShardedBloom:
     """Incremental URL-seen Bloom as broadcast SLICES (LSM-style).
 
@@ -290,7 +271,7 @@ class ShardedBloom:
     the broadcast comfort zone and the slice count, not the bitset,
     absorbs growth. Exactness is unaffected — the Bloom only ever
     PRUNES; "maybe seen" rows are still confirmed by the exact
-    anti-join (see BloomSeen/engine._filter_new).
+    anti-join (see engine._filter_new).
     """
 
     def __init__(self, spark, capacity: int, fpp: float = 0.01, max_slices: int = 8):
@@ -365,51 +346,6 @@ class ShardedBloom:
             b.unpersist()
             self.n_unpersisted += 1
         self._slices = []
-
-
-class ExactSeen:
-    """Correctness-oracle backend: plain anti-join against the seen table."""
-
-    def __init__(self, seen_df: DataFrame):
-        self.df = seen_df.select("url_canon")
-
-    def filter_new(self, candidates: DataFrame) -> DataFrame:
-        return candidates.join(self.df, "url_canon", "left_anti")
-
-    def union(self, new_urls: DataFrame) -> DataFrame:
-        return self.df.unionByName(new_urls.select("url_canon")).distinct()
-
-
-class BloomSeen:
-    """Scale backend: broadcast Bloom prune + exact confirm join.
-
-    filter_new splits candidates inside a vectorized UDF: Bloom says
-    "definitely new" (bypass the shuffle join entirely — at steady
-    state the vast majority of discovered links) or "maybe seen" (exact
-    anti-join on the small residue). Result is EXACTLY the anti-join
-    answer; the Bloom only prunes join input.
-    """
-
-    def __init__(self, seen_df: DataFrame, capacity: int = 1 << 20, fpp: float = 0.01):
-        self.df = seen_df.select("url_canon")
-        self.capacity = capacity
-        self.fpp = fpp
-        self._bloom = build_bloom(self.df, "url_canon", capacity, fpp)
-
-    def filter_new(self, candidates: DataFrame) -> DataFrame:
-        maybe_seen = bloom_maybe_udf(candidates.sparkSession, self._bloom)
-        tagged = candidates.withColumn("_maybe", maybe_seen(F.col("url_canon")))
-        definite_new = tagged.filter(~F.col("_maybe")).drop("_maybe")
-        confirm = (
-            tagged.filter(F.col("_maybe"))
-            .drop("_maybe")
-            .join(self.df, "url_canon", "left_anti")
-        )
-        return definite_new.unionByName(confirm)
-
-    def union(self, new_urls: DataFrame) -> "BloomSeen":
-        merged = self.df.unionByName(new_urls.select("url_canon")).distinct()
-        return BloomSeen(merged, self.capacity, self.fpp)
 
 
 # fp -> second-bucket hash, precomputed for the full 16-bit fingerprint

@@ -59,7 +59,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    spark = get_spark("driver-gate", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("driver-gate", master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

@@ -5,6 +5,6 @@ import pytest
 def spark():
     from ironspark.session import get_spark
 
-    s = get_spark("ironspark-tests", master="local[4]", shuffle_partitions=4)
+    s = get_spark("ironspark-tests", master="local[4]")
     yield s
     s.stop()

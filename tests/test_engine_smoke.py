@@ -90,3 +90,43 @@ def test_resume_matches_uninterrupted(spark, chain_setup, tmp_path):
     ob = eng3.crawl_order_df(str(tmp_path / "part")).toPandas().sort_values("seq")
     assert list(oa["url_canon"]) == list(ob["url_canon"])
     assert list(oa["seq"]) == list(ob["seq"])
+
+
+def test_raising_crawl_restores_session(spark, tmp_path):
+    """A spider that raises mid-wave must leave the shared session as it
+    found it: AQE and the corpus scan split size restored, and the
+    engine's I/O pool threads joined."""
+    import threading
+
+    from ironspark.corpus import build_graph_corpus_pdf, graph_seeds
+    from ironspark.spider import LinkSpider
+
+    class BrokenSpider(LinkSpider):
+        def parse_batch(self, pdf):
+            raise RuntimeError("spider boom")
+
+    pdir = str(tmp_path / "pages")
+    spark.createDataFrame(
+        build_graph_corpus_pdf(40, n_hosts=4), PAGES_SCHEMA
+    ).write.parquet(pdir)
+    pages = spark.read.parquet(pdir)  # file-backed: split size overridden
+    seeds = spark.createDataFrame(graph_seeds(40, 4, 4), SEEDS_SCHEMA)
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.files.maxPartitionBytes")
+    before = {k: spark.conf.get(k, None) for k in keys}
+    pools_before = {
+        t for t in threading.enumerate()
+        if t.name.startswith("ThreadPoolExecutor")
+    }
+    eng = CrawlEngine(
+        spark, pages, {1: BrokenSpider()},
+        EngineConfig(max_waves=3, respect_robots=False),
+    )
+    assert eng._scan_split_bytes() is not None
+    with pytest.raises(Exception, match="spider boom"):
+        eng.run(seeds=seeds, run_dir=str(tmp_path / "run"))
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+    pools_after = {
+        t for t in threading.enumerate()
+        if t.name.startswith("ThreadPoolExecutor")
+    }
+    assert pools_after <= pools_before

@@ -1,8 +1,8 @@
 """Live HTTP fetch stage vs the corpus join (VERDICT r2 "Next round" #4).
 
 An in-process loopback ThreadingHTTPServer serves the synthetic chain
-corpus; the SAME crawl runs once with fetch_strategy="http" (engine
-never sees a pages table) and once with the corpus join — items, crawl
+corpus; the SAME crawl runs once as a live fetch (the engine gets
+pages=None) and once with the corpus join — items, crawl
 order, and the seen set must be identical. Also covers real Set-Cookie
 harvesting into the engine jar (and replay as a cookie request header),
 redirect following to the final url, and timeout classification.
@@ -118,8 +118,8 @@ def test_http_matches_corpus_join(spark, tmp_path, server):
         respect_robots=False, wave_seconds=3600.0,
     )
 
-    http_cfg = EngineConfig(fetch_strategy="http", **cfg_common)
-    eng_h = CrawlEngine(spark, None, {1: ArticleSpider()}, http_cfg)
+    eng_h = CrawlEngine(spark, None, {1: ArticleSpider()},
+                        EngineConfig(**cfg_common))
     stats_h = eng_h.run(seeds=_seeds(spark, port), run_dir=str(tmp_path / "h"))
 
     corpus_df = spark.createDataFrame(pd.DataFrame(pages), PAGES_SCHEMA)
@@ -142,9 +142,8 @@ def test_http_cookie_jar_roundtrip(spark, tmp_path, server):
     _load_chain(port)
     _CorpusHandler.cookie = "sid=abc123; Path=/"
     cfg = EngineConfig(
-        fetch_strategy="http", store_cookies=True, dedup=True,
-        seen_backend="exact", max_waves=10, respect_robots=False,
-        wave_seconds=3600.0,
+        store_cookies=True, dedup=True, seen_backend="exact",
+        max_waves=10, respect_robots=False, wave_seconds=3600.0,
     )
     eng = CrawlEngine(spark, None, {1: ArticleSpider()}, cfg)
     stats = eng.run(seeds=_seeds(spark, port), run_dir=str(tmp_path / "ck"))
@@ -160,8 +159,8 @@ def test_http_redirect_final_url(spark, tmp_path, server):
     port = server
     _load_chain(port)
     _CorpusHandler.redirects["/r/head"] = f"http://127.0.0.1:{port}/article/4"
-    cfg = EngineConfig(fetch_strategy="http", dedup=True, seen_backend="exact",
-                       max_waves=10, respect_robots=False, wave_seconds=3600.0)
+    cfg = EngineConfig(dedup=True, seen_backend="exact", max_waves=10,
+                       respect_robots=False, wave_seconds=3600.0)
     eng = CrawlEngine(spark, None, {1: ArticleSpider()}, cfg)
     stats = eng.run(seeds=_seeds(spark, port, "/r/head"),
                     run_dir=str(tmp_path / "r"))
@@ -176,7 +175,7 @@ def test_http_timeout_retry_exhaust(spark, tmp_path, server):
     port = server
     _CorpusHandler.slow.add("/slow")
     cfg = EngineConfig(
-        fetch_strategy="http", dedup=True, seen_backend="exact",
+        dedup=True, seen_backend="exact",
         max_waves=10, respect_robots=False, wave_seconds=3600.0,
         max_retry_times=1, downloader_request_timeout_s=0.4,
         downloader_connect_timeout_s=0.4,

@@ -47,10 +47,14 @@ def _run_both(spark, graph, tmp_path, *, dedup, seen_backend="exact", max_waves=
     cfg = EngineConfig(
         dedup=dedup,
         seen_backend=seen_backend,
-        # pin the shuffle regime so the bloom/cuckoo PRUNE path (the
+        # force the shuffle regime so the bloom/cuckoo PRUNE path (the
         # thing these parity tests exist to verify) actually executes —
-        # auto resolves to broadcast at toy scale, which skips the prune
-        seen_join="shuffle_hash" if seen_backend != "exact" else "auto",
+        # the default crossover resolves to broadcast at toy scale,
+        # which skips the prune
+        seen_broadcast_max_rows=(
+            0 if seen_backend != "exact"
+            else EngineConfig.seen_broadcast_max_rows
+        ),
         max_waves=max_waves,
         wave_seconds=60.0,
         default_crawl_delay=1.0,

@@ -256,7 +256,7 @@ def test_invalidate_seen_recrawl(spark, tmp_path):
     )
     cfg = EngineConfig(dedup=True, seen_backend="cuckoo", max_waves=10,
                        respect_robots=False, bloom_capacity=1 << 12,
-                       seen_join="shuffle_hash")  # exercise the prune path
+                       seen_broadcast_max_rows=0)  # exercise the prune path
     run_dir = str(tmp_path / "recrawl")
     eng = CrawlEngine(spark, pages, {1: ArticleSpider()}, cfg)
     stats = eng.run(seeds=seeds, run_dir=run_dir)

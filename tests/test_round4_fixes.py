@@ -81,7 +81,8 @@ def test_invalidate_absent_url_repairs_collision(spark, tmp_path):
     (gate on zeroed entries) so the survivor stays in the prune."""
     run_dir = str(tmp_path / "run")
     eng = _engine(
-        spark, dedup=True, seen_backend="cuckoo", bloom_capacity=1 << 12, seen_join="shuffle_hash"
+        spark, dedup=True, seen_backend="cuckoo", bloom_capacity=1 << 12,
+        seen_broadcast_max_rows=0,
     )
     io = make_table_io(spark, run_dir)
     io.write(
@@ -131,7 +132,7 @@ def test_metrics_flush_through_tableio(spark, tmp_path, monkeypatch):
 
 
 def test_seen_join_regime_resolution(spark):
-    """seen_join=auto switches broadcast -> shuffle_hash at the
+    """The seen-join regime switches broadcast -> shuffle_hash at the
     documented crossover, and the resolved mode shows up in the
     physical plan: broadcast regime = BroadcastHashJoin with NO bloom
     tag column; shuffle regime = the pruned split over a shuffled hash
@@ -194,8 +195,8 @@ def test_seen_join_regime_resolution(spark):
 
 
 def test_scan_split_sizing(spark, tmp_path):
-    """cfg.scan_tasks_per_core sizes corpus-scan splits for >=k tasks
-    per core (clamped to [4 MB, 128 MB]); disabled/None cases no-op."""
+    """Corpus-scan splits are sized for >=4 tasks per core (clamped to
+    [4 MB, 128 MB]); without a corpus (http fetch mode) it no-ops."""
     import os
 
     import pyspark.sql.functions as F
@@ -219,9 +220,5 @@ def test_scan_split_sizing(spark, tmp_path):
     got = eng._scan_split_bytes()
     assert got == min(128 << 20, max(4 << 20, total // (4 * par)))
 
-    # k=0 disables; no corpus (http fetch mode) disables
-    eng0 = CrawlEngine(
-        spark, pages, {1: ArticleSpider()}, EngineConfig(scan_tasks_per_core=0)
-    )
-    assert eng0._scan_split_bytes() is None
+    # no corpus (http fetch mode) disables
     assert _engine(spark)._scan_split_bytes() is None

@@ -106,7 +106,7 @@ def test_engine_bloom_broadcast_discipline(spark, tmp_path):
     cfg = EngineConfig(
         dedup=True, seen_backend="bloom", bloom_max_slices=2,
         max_waves=10, respect_robots=False, bloom_capacity=1 << 12,
-        seen_join="shuffle_hash",  # exercise the prune path at toy scale
+        seen_broadcast_max_rows=0,  # shuffle regime: exercise the prune path
     )
     eng = CrawlEngine(spark, pages, {1: LinkSpider()}, cfg)
     stats = eng.run(seeds=seeds, run_dir=str(tmp_path / "bloomrun"))
@@ -138,21 +138,3 @@ def test_bloom_tree_merge_driver_bytes_bounded(spark):
     # and the merged result is still the exact union
     dist = build_bloom(df, "url_canon", 4096, 0.01)
     assert dist.contains_series(urls["url_canon"]).all()
-
-
-def test_bloom_seen_via_tree_merge(spark):
-    """BloomSeen (the library entry point) builds through the
-    tree-merged path and stays exact on a many-partition seen table."""
-    import pandas as pd
-
-    from ironspark.seen import BloomSeen
-
-    seen = spark.createDataFrame(
-        pd.DataFrame({"url_canon": [f"http://s.test/{i}" for i in range(300)]})
-    ).repartition(32)
-    cand = spark.createDataFrame(
-        pd.DataFrame({"url_canon":
-                      [f"http://s.test/{i}" for i in range(250, 350)]})
-    )
-    got = {r.url_canon for r in BloomSeen(seen).filter_new(cand).collect()}
-    assert got == {f"http://s.test/{i}" for i in range(300, 350)}

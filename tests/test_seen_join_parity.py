@@ -1,8 +1,12 @@
-"""Seen-join regime equivalence: every physical strategy for the exact
+"""Seen-join regime equivalence: every physical plan for the exact
 dedup anti-join ("broadcast", "flip", "shuffle_hash") must produce the
 IDENTICAL crawl (items, order, seen). flip is the mid-regime for a seen
-set that has outgrown the wave but not the shuffle crossover
-(config.py seen_join docstring); shuffle_hash is the 10^10-url plan."""
+set that has outgrown the wave but not the shuffle crossover;
+shuffle_hash is the 10^10-url plan (config.py threshold comments).
+
+The engine picks the regime itself, so each one is forced through the
+thresholds it resolves from, and the run must record that regime for
+every wave."""
 
 from __future__ import annotations
 
@@ -16,7 +20,15 @@ from ironspark.schemas import PAGES_SCHEMA, SEEDS_SCHEMA
 from ironspark.spider import LinkSpider
 
 
-def _run(spark, tmp_path, seen_join):
+# thresholds that force each regime on every wave (seen rows > 0)
+_FORCE = {
+    "broadcast": {"seen_flip_ratio": float("inf")},
+    "flip": {"seen_flip_ratio": 0.0},
+    "shuffle_hash": {"seen_broadcast_max_rows": 0},
+}
+
+
+def _run(spark, tmp_path, regime):
     pages = spark.createDataFrame(
         build_graph_corpus_pdf(90, n_hosts=7), PAGES_SCHEMA
     )
@@ -24,11 +36,13 @@ def _run(spark, tmp_path, seen_join):
     cfg = EngineConfig(
         dedup=True, seen_backend="bloom", max_waves=8,
         respect_robots=False, wave_seconds=3600.0, bloom_capacity=1 << 12,
-        seen_join=seen_join,
+        **_FORCE[regime],
     )
     eng = CrawlEngine(spark, pages, {1: LinkSpider()}, cfg)
-    run_dir = str(tmp_path / seen_join)
+    run_dir = str(tmp_path / regime)
     stats = eng.run(seeds=seeds, run_dir=run_dir)
+    assert stats.waves >= 2
+    assert set(stats.wave_seen_join) == {regime}
     items = (
         eng.items_df(run_dir).toPandas()
         .sort_values(["src_url", "wave"]).reset_index(drop=True)
