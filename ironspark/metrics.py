@@ -17,16 +17,6 @@ from pyspark.sql import functions as F
 from ironspark.schemas import METRICS_SCHEMA
 
 
-def _conform(df: DataFrame) -> DataFrame:
-    cols = []
-    for f in METRICS_SCHEMA.fields:
-        if f.name in df.columns:
-            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*cols)
-
-
 _SUM_COLS = [
     "scheduled", "fetched", "failed", "retried", "parsed", "dropped",
     "items", "outlinks", "bytes_req", "bytes_resp",
@@ -44,6 +34,10 @@ def wave_metrics_fine(parse_out: DataFrame) -> DataFrame:
     and roll up normally.
     """
     is_resp = F.col("kind") == "resp"
+    # fetched/failed follow the ACCEPTANCE rule (status < 400 OR in
+    # http_error_allow_codes — already evaluated into `accepted` by the
+    # parse pass), not a bare status threshold: with allow codes set, an
+    # allow-listed 4xx counts as fetched (downloader.rs:236-247).
     ok = F.col("accepted")
     return parse_out.groupBy("partition_id", "resp_status").agg(
         F.sum(is_resp.cast("long")).alias("scheduled"),
@@ -107,49 +101,3 @@ def rollup_wave_metrics(
     mrows.append(roll)
     return mrows, status_counts, (ps_min, ps_max)
 
-
-def wave_metrics(
-    wave: int,
-    parse_out: DataFrame,
-    deduped_count: int,
-    t_fetch_ms: float,
-    t_parse_ms: float,
-) -> DataFrame:
-    """Assemble the wave's crawl_metrics rows from parse_out alone."""
-    is_resp = F.col("kind") == "resp"
-    # fetched/failed follow the ACCEPTANCE rule (status < 400 OR in
-    # http_error_allow_codes — already evaluated into `accepted` by the
-    # parse pass), not a bare status threshold: with allow codes set, an
-    # allow-listed 4xx counts as fetched (downloader.rs:236-247).
-    ok = F.col("accepted")
-    agg = parse_out.groupBy("partition_id").agg(
-        F.sum(is_resp.cast("long")).alias("scheduled"),
-        F.sum((is_resp & ok).cast("long")).alias("fetched"),
-        F.sum((is_resp & ~ok).cast("long")).alias("failed"),
-        F.sum((is_resp & F.col("retryable")).cast("long")).alias("retried"),
-        F.sum((is_resp & F.col("accepted")).cast("long")).alias("parsed"),
-        F.sum((is_resp & ok & ~F.col("routed")).cast("long")).alias("dropped"),
-        F.sum((F.col("kind") == "item").cast("long")).alias("items"),
-        F.sum((F.col("kind") == "request").cast("long")).alias("outlinks"),
-        F.sum(F.when(is_resp, F.col("bytes_req")).otherwise(0)).alias("bytes_req"),
-        F.sum(F.when(is_resp, F.col("bytes_resp")).otherwise(0)).alias("bytes_resp"),
-    )
-    agg = (
-        agg.withColumn("wave", F.lit(wave))
-        .withColumn("deduped", F.lit(None).cast("long"))
-        .withColumn("t_fetch_ms", F.lit(float(t_fetch_ms)))
-        .withColumn("t_parse_ms", F.lit(float(t_parse_ms)))
-    )
-
-    spark = parse_out.sparkSession
-    rollup = spark.createDataFrame(
-        [(wave, -1, int(deduped_count), float(t_fetch_ms), float(t_parse_ms))],
-        "wave int, partition_id int, deduped long, t_fetch_ms double, t_parse_ms double",
-    )
-    out = _conform(agg).unionByName(_conform(rollup))
-    fill = {
-        f.name: 0
-        for f in METRICS_SCHEMA.fields
-        if f.name not in ("t_fetch_ms", "t_parse_ms")
-    }
-    return out.fillna(fill)

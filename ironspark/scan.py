@@ -203,13 +203,15 @@ def _attr_start_tag(html: str, lt: int, gtpos: int, want_href: bool):
 
 def _scan_simple(html: str) -> tuple[str | None, str | None, list[str]]:
     """Tier 1: article text via one C-level tag strip. Exact-or-bail."""
-    if "&" in html or _OK.fullmatch(html) is None:
-        return _scan_tokens(html)
+    if _OK.fullmatch(html) is None:
+        return _scan(html)
+    if "&" in html:
+        return _scan_tokens_checked(html)
     for m in _SPECIAL.finditer(html):
         t = m.group()
         u = t.lower()
         if "scr" in u or "sty" in u or t != u:
-            return _scan_tokens(html)
+            return _scan_tokens_checked(html)
     p = html.find("<article")
     if p != -1:
         # the plain '<article>' must be the document's FIRST tag (so
@@ -217,11 +219,11 @@ def _scan_simple(html: str) -> tuple[str | None, str | None, list[str]]:
         # through it), closed by a plain '</article>' with no second
         # '<article' before the close
         if p != html.find("<") or not html.startswith("<article>", p):
-            return _scan_tokens(html)
+            return _scan_tokens_checked(html)
         e = html.find("</article")
         if e == -1 or not html.startswith("</article>", e) or \
                 html.find("<article", p + 1, e) != -1:
-            return _scan_tokens(html)
+            return _scan_tokens_checked(html)
     hrefs: list[str] = []
     for m in _ATTRTAG.finditer(html):
         endpos, _sc, href = _attr_start_tag(
@@ -230,7 +232,7 @@ def _scan_simple(html: str) -> tuple[str | None, str | None, list[str]]:
         if endpos < 0:
             # junk start tags emit data (not strip-safe) and quoted
             # '>' re-tokenizes the page — both bail to tier 2
-            return _scan_tokens(html)
+            return _scan_tokens_checked(html)
         if href:
             hrefs.append(href)
     if p == -1:
@@ -242,11 +244,11 @@ def _scan_simple(html: str) -> tuple[str | None, str | None, list[str]]:
         # direct child with text-only gaps: no tag between article
         # open and author open, none inside author
         if not html.startswith("<author>", q) or html.find("<", p + 9) != q:
-            return _scan_tokens(html)
+            return _scan_tokens_checked(html)
         qe = html.find("</author", q)
         if qe == -1 or not html.startswith("</author>", qe) or \
                 html.find("<", q + 8, qe) != -1:
-            return _scan_tokens(html)
+            return _scan_tokens_checked(html)
         author = html[q + 8:qe]
     return article, author, hrefs
 
@@ -257,6 +259,11 @@ def _scan_tokens(html: str) -> tuple[str | None, str | None, list[str]]:
     mismatches (quoted '>')."""
     if _OK.fullmatch(html) is None:
         return _scan(html)
+    return _scan_tokens_checked(html)
+
+
+def _scan_tokens_checked(html: str) -> tuple[str | None, str | None, list[str]]:
+    """``_scan_tokens`` for a document already known to match ``_OK``."""
     stack: list[str] = []
     art_idx = -1
     art_seen = False

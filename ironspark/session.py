@@ -48,6 +48,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("IRONSPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # Python workers fork from a daemon that skips re-indexing
+        # pyspark.zip on every task (ironspark/worker_daemon.py)
+        .config("spark.python.daemon.module", "ironspark.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -232,7 +232,8 @@ def test_tier1_taken_on_corpus_shape(monkeypatch):
     def boom(html):  # pragma: no cover - failure path
         raise AssertionError("tier 1 fell back on a corpus-shaped page")
 
-    monkeypatch.setattr(scan_mod, "_scan_tokens", boom)
+    for fallback in ("_scan_tokens", "_scan_tokens_checked", "_scan"):
+        monkeypatch.setattr(scan_mod, fallback, boom)
     for pid in (0, 1, 2, 991 + 7):  # incl. the no-author variant
         page = graph_page(pid, 5000, 20, filler_words=120, markup_every=2)
         html = page["html"].decode("utf-8")
@@ -244,12 +245,16 @@ def test_precondition_regex_is_linear():
     """The tier preconditions use possessive quantifiers; the greedy
     equivalent backtracks exponentially on unterminated-tag soup
     (~2 s at 23 repetitions, doubling per rep). 400 reps must be
-    effectively instant."""
+    effectively instant. Best of 3, so one stalled sample on a shared
+    host does not fail it."""
     import time
 
     from ironspark.scan import scan_page
 
     evil = "<ab>" * 400 + "<a href="
-    t0 = time.perf_counter()
-    scan_page(evil)
-    assert time.perf_counter() - t0 < 1.0
+    timings = []
+    for _ in range(3):
+        t0 = time.perf_counter()
+        scan_page(evil)
+        timings.append(time.perf_counter() - t0)
+    assert min(timings) < 1.0
