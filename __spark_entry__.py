@@ -1,12 +1,14 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Flagship crawl entry point plus the operator contract.
 
 entry(spark)   — flagship: the full crawl-engine loop on a deterministic
                  synthetic page corpus (chains + web graph), returning the
                  extracted-items DataFrame.
-queries()      — one entry per implemented operator (SURVEY.md §2 + the
+queries()      — one entry per operator (SURVEY.md §2 + the
                  training-data pipeline ops), each (spark, sf_dir) -> DF.
 oracle_sql()   — matching ANSI SQL for DuckDB over the same tables.
                  Column names/aliases match the Spark results exactly.
+                 ``tests/test_oracle_parity.py`` checks every entry
+                 against its oracle.
 
 Hash arithmetic shared by both sides is md5-hex based (engine-portable):
 Spark  CAST(conv(substr(md5(x),1,15),16,10) AS BIGINT)
@@ -45,12 +47,12 @@ def _tp(
     multi-row-group corpus would get the parallelism from the scan
     itself and the extra exchange would be pure overhead.
 
-    Round-7 second pass: HASH partitioning on the table's unique key,
+    HASH partitioning on the table's unique key,
     never keyless round-robin — `repartition(n)` pays its
     sort-before-repartition (SPARK-23207) INSIDE the single scan task,
     i.e. a serial sort of the whole table before any parallelism is
     bought (measured: the sort was the bulk of several queries'
-    fan-out cost; see OPTIMIZATION_r07.md). A unique key spreads as
+    fan-out cost). A unique key spreads as
     evenly as round-robin, and a downstream aggregate/window keyed on
     (a superset of) it reuses the exchange outright (guide §2.4)."""
     return _t(spark, sf_dir, name).repartition(
@@ -617,93 +619,6 @@ def _t_rep_signals(spark, sf):
     return repetition_signals(_chunked_docs(spark, sf), n=2)
 
 
-# -- link-graph analytics -------------------------------------------------------
-
-def _g_edges(spark, sf, fan_out=False):
-    # deterministic directed multigraph derived from lineitem: 1009
-    # nodes, ~60k edges at sf0.01, 12 dangling nodes (dst-only) so the
-    # dangling-mass path is exercised. fan_out: the _tp rationale for
-    # the iterative consumers — their first op is _weighted_edges'
-    # (src, dst) partial aggregate (~1M groups at 6M rows), which
-    # otherwise runs inside the single-row-group scan's ONE task; only
-    # the two 8-byte key columns cross the exchange.
-    e = _t(spark, sf, "lineitem").select(
-        (F.col("l_orderkey") % 997).cast("long").alias("src"),
-        (F.col("l_partkey") % 1009).cast("long").alias("dst"),
-    )
-    if fan_out:
-        # HASH repartition on the aggregate key, which the consumer's
-        # groupBy(src, dst) reuses (guide §2.4) — NOT keyless
-        # repartition(n), whose sort-before-repartition (SPARK-23207)
-        # runs inside the single scan task and measured 60% slower
-        # than no fan-out at all. The serial stage is left with
-        # hash + shuffle-write only.
-        e = e.repartition(
-            spark.sparkContext.defaultParallelism, "src", "dst"
-        )
-    return e
-
-
-def _g_degree(spark, sf):
-    from ironspark.graph import degree_stats
-
-    return degree_stats(_g_edges(spark, sf))
-
-
-def _g_pagerank(spark, sf):
-    from ironspark.graph import pagerank_fixedpoint
-
-    return pagerank_fixedpoint(
-        _g_edges(spark, sf, fan_out=True), iterations=5
-    )
-
-
-# -- similarity search ----------------------------------------------------------
-
-def _query_vec(spark, sf):
-    row = (
-        _t(spark, sf, "embeddings").filter(F.col("vec_id") == 0).first()
-    )
-    return [float(x) for x in row["embedding"]]
-
-
-def _a_cosine_topk(spark, sf):
-    from ironspark.ann import cosine_topk
-
-    emb = _t(spark, sf, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
-    return cosine_topk(emb, _query_vec(spark, sf), k=10)
-
-
-def _a_knn_join(spark, sf):
-    from ironspark.ann import knn_join_bruteforce
-
-    emb = _t(spark, sf, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
-    queries = emb.filter(F.col("vec_id") < 3)
-    return knn_join_bruteforce(emb, queries, k=5)
-
-
-def _a_ivf_assign(spark, sf):
-    from ironspark.ann import ivf_assign
-
-    emb = _t(spark, sf, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
-    return ivf_assign(emb, n_centroids=8)
-
-
-def _a_ivf_topk(spark, sf):
-    from ironspark.ann import ivf_topk
-
-    emb = _t(spark, sf, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
-    return ivf_topk(emb, _query_vec(spark, sf), k=10, n_centroids=8, nprobe=2)
-
-
 # -- multimodal plumbing ---------------------------------------------------------
 
 def _docids(spark, sf):
@@ -1255,62 +1170,6 @@ def _i1_routing_counts(spark, sf):
     )
 
 
-def _a_embed_simhash(spark, sf):
-    # SRP-LSH signature over embeddings (deterministic hyperplanes)
-    from ironspark.ann import embedding_simhash
-
-    emb = _t(spark, sf, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
-    return embedding_simhash(emb, bits=12, dim=16)
-
-
-def _a_near_dup(spark, sf):
-    # embedding-cosine near-dup: SRP bucket join + exact cosine verify
-    from ironspark.ann import embedding_near_dup
-
-    emb = _t(spark, sf, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
-    # bits=6 -> enough bucket collisions on the synthetic embeddings to
-    # exercise the verify stage (71 pairs at sf0.01), not a 0-row test
-    return embedding_near_dup(emb, bits=6, dim=16, threshold=0.3)
-
-
-def _srp_planes(bits: int = 12, dim: int = 16) -> list[list[float]]:
-    import hashlib
-
-    return [
-        [
-            (int(hashlib.md5(f"{b}:{d}".encode()).hexdigest()[:15], 16) % 2001
-             - 1000) / 1000.0
-            for d in range(dim)
-        ]
-        for b in range(bits)
-    ]
-
-
-_IVF_INDEX_CACHE: dict[str, str] = {}
-
-
-def _a_ivf_index(spark, sf):
-    # the PERSISTED IVF index (build once, probe many; partition-pruned
-    # probe) — must answer identically to the inline ivf_topk oracle
-    import tempfile
-
-    from ironspark.ann import IVFIndex
-
-    emb = _t(spark, sf, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
-    if sf not in _IVF_INDEX_CACHE:
-        path = tempfile.mkdtemp(prefix="ironspark_ivf_")
-        IVFIndex.build(emb, path, n_centroids=8)
-        _IVF_INDEX_CACHE[sf] = path
-    idx = IVFIndex(spark, _IVF_INDEX_CACHE[sf])
-    return idx.search(_query_vec(spark, sf), k=10, nprobe=2)
-
-
 def _t_bpe_merges(spark, sf):
     from ironspark.textops import bpe_train
 
@@ -1354,23 +1213,6 @@ def _c_url_templates(spark, sf):
     )
 
 
-def _g_anchor_topk(spark, sf):
-    # deterministic link table from documents: each doc links to one of
-    # 97 target pages (md5-derived), its first 80 chars as anchor text
-    from ironspark.graph import anchor_topk
-    from ironspark.textops import _md5num
-
-    d = _t(spark, sf, "documents")
-    links = d.select(
-        F.col("doc_id").alias("src"),
-        F.pmod(_md5num(F.col("doc_id").cast("string")), F.lit(97))
-        .cast("long")
-        .alias("dst"),
-        F.substring("text", 1, 80).alias("anchor"),
-    )
-    return anchor_topk(links, k=3)
-
-
 def _g_components(spark, sf):
     # deterministic mixed-size component graph from documents: blocks
     # of 4 consecutive doc_ids star onto their block root, and every
@@ -1402,12 +1244,6 @@ def _t_incr_dedup(spark, sf):
     )
 
 
-def _g_hits(spark, sf):
-    from ironspark.graph import hits_fixedpoint
-
-    return hits_fixedpoint(_g_edges(spark, sf, fan_out=True), iterations=4)
-
-
 def _t_bpe_tokens(spark, sf):
     from ironspark.textops import _word_freqs, bpe_encode, bpe_train
 
@@ -1421,23 +1257,11 @@ def _t_bpe_tokens(spark, sf):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # NOTE on ordering (SURVEY §2.12): the driver attests at most ~50
-    # entries per round while this dict holds 83 — so the FRONT of the
-    # dict is the round-7 attestation window: the 33 entries whose
-    # last driver row was r5 (they sat past r6's window edge; all 33
-    # were re-verified green under scripts/driver_gate.py in the r6
-    # review), then the 50 entries driver-attested in
-    # CORRECTNESS_r06.json. Every entry therefore keeps a driver-green
-    # row within the last two rounds. Every entry stays shipped and
-    # green under scripts/driver_gate.py; only attestation order
-    # changes round over round.
     return {
-        # -- last driver row r5 (gate-green in the r6 review) → front --
         "fr_recrawl_due": _fr_recrawl_due,
         "t_decontaminate": _t_decontaminate,
         "t_gopher_quality": _t_gopher_quality,
         "t_tfidf_topk": _t_tfidf_topk,
-        "a_near_dup": _a_near_dup,
         "t_dup_ngrams": _t_dup_ngrams,
         "t_vocab_topk": _t_vocab_topk,
         "t_pii_scrub": _t_pii_scrub,
@@ -1447,8 +1271,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "t_domain_stats": _t_domain_stats,
         "t_length_quantiles": _t_length_quantiles,
         "t_line_dedup": _t_line_dedup,
-        "g_degree": _g_degree,
-        "g_pagerank": _g_pagerank,
         "t_rep_signals": _t_rep_signals,
         "q2_supplier_region": _q2_supplier_region,
         "q3_part_brand": _q3_part_brand,
@@ -1465,11 +1287,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "t_simhash": _t_simhash,
         "t_langid": _t_langid,
         "t_fingerprint": _t_fingerprint,
-        "a_cosine_topk": _a_cosine_topk,
-        # -- r6-attested (CORRECTNESS_r06.json), rotated behind --------
-        "a_knn_join": _a_knn_join,
-        "a_ivf_assign": _a_ivf_assign,
-        "a_ivf_topk": _a_ivf_topk,
         "mm_metadata": _mm_metadata,
         "mm_frame_sample": _mm_frame_sample,
         "mm_feature": _mm_feature,
@@ -1495,18 +1312,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mm_gif_frames": _mm_gif_frames,
         "t_bpe_merges": _t_bpe_merges,
         "c_url_templates": _c_url_templates,
-        "g_anchor_topk": _g_anchor_topk,
         "g_components": _g_components,
         "t_bpe_tokens": _t_bpe_tokens,
-        "g_hits": _g_hits,
         "t_incr_dedup": _t_incr_dedup,
         "m9_scheduler_depth": _m9_scheduler_depth,
         "i1_routing_counts": _i1_routing_counts,
-        "a_ivf_index": _a_ivf_index,
         "m5_avg": _m5_avg,
         "p5_regexp_extract": _p5_regexp_extract,
         "l1_registration": _l1_registration,
-        "a_embed_simhash": _a_embed_simhash,
         "w_lag_running": _w_lag_running,
         "m4_minmax": _m4_minmax,
         "arr_array_funcs": _arr_array_funcs,
@@ -1537,101 +1350,6 @@ _CHUNKED_CTE = (
     "i -> array_to_string(ws[((i-1)*10+1):(i*10)], ' ')), chr(10)) AS text "
     "FROM ws0)"
 )
-
-# edge derivation shared by the g_* oracles (mirrors _g_edges)
-_G_EDGES_SQL = (
-    "SELECT CAST(l_orderkey % 997 AS BIGINT) AS src, "
-    "CAST(l_partkey % 1009 AS BIGINT) AS dst FROM lineitem"
-)
-
-
-def _pagerank_oracle_sql(
-    iterations: int = 5,
-    scale: int = 1_000_000_000,
-    d_num: int = 85,
-    d_den: int = 100,
-) -> str:
-    """Unrolled fixed-point PageRank mirroring graph.pagerank_fixedpoint:
-    identical integer recurrence, one CTE trio (dangling, contrib, rank)
-    per iteration."""
-    ctes = [
-        f"e AS ({_G_EDGES_SQL})",
-        "nodes AS (SELECT DISTINCT node FROM "
-        "(SELECT src AS node FROM e UNION ALL SELECT dst FROM e))",
-        "od AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg "
-        "FROM e GROUP BY src)",
-        f"r0 AS (SELECT node, n_nodes, "
-        f"CAST({scale} AS BIGINT) // n_nodes AS base, "
-        f"CAST({scale} AS BIGINT) // n_nodes AS rank FROM nodes, "
-        "(SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes FROM nodes))",
-    ]
-    prev = "r0"
-    for i in range(1, iterations + 1):
-        ctes.append(
-            f"d{i} AS (SELECT CAST(COALESCE(SUM(rank), 0) AS BIGINT) AS ds "
-            f"FROM {prev} LEFT JOIN od ON node = src WHERE outdeg IS NULL)"
-        )
-        ctes.append(
-            f"c{i} AS (SELECT dst, CAST(SUM(rank // outdeg) AS BIGINT) AS in_sum "
-            f"FROM e JOIN od USING (src) JOIN {prev} ON {prev}.node = e.src "
-            "GROUP BY dst)"
-        )
-        ctes.append(
-            f"r{i} AS (SELECT node, n_nodes, base, "
-            f"(({d_den} - {d_num}) * base + {d_num} * (COALESCE(in_sum, 0) + "
-            f"(SELECT ds FROM d{i}) // n_nodes)) // {d_den} AS rank "
-            f"FROM {prev} LEFT JOIN c{i} ON node = dst)"
-        )
-        prev = f"r{i}"
-    return (
-        "WITH " + ", ".join(ctes)
-        + f" SELECT node, rank AS pr_scaled FROM {prev}"
-    )
-
-
-def _hits_oracle_sql(iterations: int = 4, scale: int = 1_000_000) -> str:
-    """Unrolled integer fixed-point HITS mirroring graph.hits_fixedpoint:
-    identical recurrence (dst-keyed auth sum, max-normalize, src-keyed
-    hub sum, max-normalize), one CTE sextet per iteration."""
-    ctes = [
-        f"e AS ({_G_EDGES_SQL})",
-        "nodes AS (SELECT DISTINCT node FROM "
-        "(SELECT src AS node FROM e UNION ALL SELECT dst FROM e))",
-        f"h0 AS (SELECT node, CAST({scale} AS BIGINT) AS hub FROM nodes)",
-    ]
-    for i in range(1, iterations + 1):
-        ctes.append(
-            f"ar{i} AS (SELECT dst, CAST(SUM(hub) AS BIGINT) AS araw "
-            f"FROM e JOIN h{i - 1} ON node = src GROUP BY dst)"
-        )
-        ctes.append(
-            f"am{i} AS (SELECT CAST(COALESCE(MAX(araw), 1) AS BIGINT) "
-            f"AS amax FROM ar{i})"
-        )
-        ctes.append(
-            f"a{i} AS (SELECT node, CAST(COALESCE(araw, 0) * {scale} // "
-            f"(SELECT amax FROM am{i}) AS BIGINT) AS auth "
-            f"FROM nodes LEFT JOIN ar{i} ON node = dst)"
-        )
-        ctes.append(
-            f"hr{i} AS (SELECT src, CAST(SUM(auth) AS BIGINT) AS hraw "
-            f"FROM e JOIN a{i} ON node = dst GROUP BY src)"
-        )
-        ctes.append(
-            f"hm{i} AS (SELECT CAST(COALESCE(MAX(hraw), 1) AS BIGINT) "
-            f"AS hmax FROM hr{i})"
-        )
-        ctes.append(
-            f"h{i} AS (SELECT node, CAST(COALESCE(hraw, 0) * {scale} // "
-            f"(SELECT hmax FROM hm{i}) AS BIGINT) AS hub "
-            f"FROM nodes LEFT JOIN hr{i} ON node = src)"
-        )
-    return (
-        "WITH " + ", ".join(ctes)
-        + f" SELECT node, hub AS hub_scaled, auth AS auth_scaled "
-        f"FROM h{iterations} JOIN a{iterations} USING (node)"
-    )
-
 
 def _bpe_ctes(num_merges: int) -> list:
     """Shared CTE chain for the BPE oracles: word-frequency table,
@@ -1745,23 +1463,6 @@ _JACCARD_SQL = (
     "FROM inter i JOIN sizes sa ON sa.doc_id = i.doc_a "
     "JOIN sizes sb ON sb.doc_id = i.doc_b"
 )
-
-
-def _srp_simhash_sql(bits: int = 12, dim: int = 16) -> str:
-    """SRP-LSH signature CTE: same deterministic hyperplanes as
-    ironspark.ann.embedding_simhash, inlined as literals."""
-    planes = _srp_planes(bits, dim)
-    terms = " + ".join(
-        "(CASE WHEN ROUND(list_dot_product(embedding[1:{d}]::DOUBLE[], "
-        "[{plane}]::DOUBLE[]), 6) > 0 THEN {w} ELSE 0 END)".format(
-            d=dim, plane=", ".join(repr(p) for p in planes[b]), w=1 << b
-        )
-        for b in range(bits)
-    )
-    return (
-        "WITH sig AS (SELECT vec_id, CAST(" + terms + " AS BIGINT) AS esimhash "
-        "FROM embeddings)"
-    )
 
 
 def oracle_sql() -> dict[str, str]:
@@ -2105,24 +1806,8 @@ def oracle_sql() -> dict[str, str]:
             "ROUND(quantile_cont(n_chars, 0.99), 6) AS p99 "
             "FROM documents GROUP BY lang"
         ),
-        "g_degree": (
-            f"WITH e AS ({_G_EDGES_SQL}), "
-            "nodes AS (SELECT DISTINCT node FROM "
-            "(SELECT src AS node FROM e UNION ALL SELECT dst FROM e)), "
-            "o AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS out_edges, "
-            "CAST(COUNT(DISTINCT dst) AS BIGINT) AS out_nbrs FROM e GROUP BY src), "
-            "i AS (SELECT dst AS node, CAST(COUNT(*) AS BIGINT) AS in_edges, "
-            "CAST(COUNT(DISTINCT src) AS BIGINT) AS in_nbrs FROM e GROUP BY dst) "
-            "SELECT n.node, COALESCE(o.out_edges, 0) AS out_edges, "
-            "COALESCE(i.in_edges, 0) AS in_edges, "
-            "COALESCE(o.out_nbrs, 0) AS out_nbrs, "
-            "COALESCE(i.in_nbrs, 0) AS in_nbrs "
-            "FROM nodes n LEFT JOIN o USING (node) LEFT JOIN i USING (node)"
-        ),
-        "g_pagerank": _pagerank_oracle_sql(iterations=5),
         "t_bpe_merges": _bpe_oracle_sql(num_merges=6),
         "t_bpe_tokens": _bpe_tokens_oracle_sql(num_merges=6),
-        "g_hits": _hits_oracle_sql(iterations=4),
         "t_incr_dedup": (
             # cross-snapshot dedup: signatures are per-doc, so sig over
             # ALL docs then split mirrors signing each side separately;
@@ -2188,22 +1873,6 @@ def oracle_sql() -> dict[str, str]:
             "ROUND(n_urls / host_urls, 6) AS url_share, "
             "(template LIKE '%{%' AND n_urls >= 10 AND n_urls / host_urls >= 0.5) "
             "AS is_trap FROM g JOIN h USING (host)"
-        ),
-        "g_anchor_topk": (
-            "WITH l AS (SELECT doc_id AS src, CAST("
-            + _MD5NUM_DUCK.format(x="CAST(doc_id AS VARCHAR)")
-            + " % 97 AS BIGINT) AS dst, substr(text, 1, 80) AS anchor "
-            "FROM documents), "
-            "w AS (SELECT dst, unnest(string_split_regex(lower(anchor), '\\s+')) "
-            "AS word FROM l), "
-            "wf AS (SELECT dst, word, CAST(COUNT(*) AS BIGINT) AS n_word "
-            "FROM w WHERE word <> '' GROUP BY dst, word), "
-            "r AS (SELECT dst, word, n_word, CAST(ROW_NUMBER() OVER ("
-            "PARTITION BY dst ORDER BY n_word DESC, word) AS INT) AS rn FROM wf), "
-            "i AS (SELECT dst, CAST(COUNT(*) AS BIGINT) AS n_links FROM l "
-            "GROUP BY dst) "
-            "SELECT dst, word, n_word, rn, n_links FROM r JOIN i USING (dst) "
-            "WHERE rn <= 3"
         ),
         "t_line_dedup": (
             f"WITH {_CHUNKED_CTE}, "
@@ -2317,50 +1986,6 @@ def oracle_sql() -> dict[str, str]:
             "PARTITION BY doc_id ORDER BY tfidf DESC, word) AS rn FROM s) "
             "SELECT doc_id, word, CAST(tf AS BIGINT) AS tf, "
             "ROUND(tfidf, 6) AS tfidf, CAST(rn AS INT) AS rn FROM r WHERE rn <= 3"
-        ),
-        "a_cosine_topk": (
-            "SELECT vec_id, ROUND(list_cosine_similarity(embedding::DOUBLE[], "
-            "(SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = 0)), 6) AS sim "
-            "FROM embeddings ORDER BY sim DESC, vec_id LIMIT 10"
-        ),
-        "a_knn_join": (
-            "WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qvec "
-            "FROM embeddings WHERE vec_id < 3), "
-            "scored AS (SELECT q.query_id, e.vec_id, "
-            "ROUND(list_cosine_similarity(e.embedding::DOUBLE[], q.qvec), 6) AS sim "
-            "FROM embeddings e CROSS JOIN q) "
-            "SELECT query_id, vec_id, sim, CAST(rank AS INT) AS rank FROM ("
-            "SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rank "
-            "FROM scored) WHERE rank <= 5"
-        ),
-        "a_ivf_assign": (
-            "WITH c AS (SELECT vec_id AS centroid_id, embedding::DOUBLE[] AS cvec "
-            "FROM embeddings WHERE vec_id < 8), "
-            "scored AS (SELECT e.vec_id, c.centroid_id, "
-            "ROUND(list_cosine_similarity(e.embedding::DOUBLE[], c.cvec), 6) AS csim "
-            "FROM embeddings e CROSS JOIN c) "
-            "SELECT vec_id, centroid_id, csim AS sim_to_centroid FROM ("
-            "SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, centroid_id) AS rk "
-            "FROM scored) WHERE rk = 1"
-        ),
-        "a_ivf_topk": (
-            "WITH c AS (SELECT vec_id AS centroid_id, embedding::DOUBLE[] AS cvec "
-            "FROM embeddings WHERE vec_id < 8), "
-            "assign AS (SELECT vec_id, centroid_id FROM ("
-            "SELECT e.vec_id, c.centroid_id, "
-            "ROUND(list_cosine_similarity(e.embedding::DOUBLE[], c.cvec), 6) AS csim, "
-            "ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY "
-            "ROUND(list_cosine_similarity(e.embedding::DOUBLE[], c.cvec), 6) DESC, c.centroid_id) AS rk "
-            "FROM embeddings e CROSS JOIN c) WHERE rk = 1), "
-            "probe AS (SELECT centroid_id FROM ("
-            "SELECT centroid_id, ROUND(list_cosine_similarity(cvec, "
-            "(SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = 0)), 6) AS qsim "
-            "FROM c) ORDER BY qsim DESC, centroid_id LIMIT 2) "
-            "SELECT e.vec_id, ROUND(list_cosine_similarity(e.embedding::DOUBLE[], "
-            "(SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = 0)), 6) AS sim "
-            "FROM embeddings e JOIN assign a ON a.vec_id = e.vec_id "
-            "JOIN probe p ON p.centroid_id = a.centroid_id "
-            "ORDER BY sim DESC, e.vec_id LIMIT 10"
         ),
         "mm_metadata": (
             "SELECT doc_id AS media_id, 'image' AS kind, "
@@ -2579,39 +2204,5 @@ def oracle_sql() -> dict[str, str]:
             "UNION ALL "
             "SELECT '__unrouted__' AS item_type, COUNT(*) AS cnt FROM documents "
             "WHERE doc_id % 3 = 2"
-        ),
-        "a_embed_simhash": _srp_simhash_sql() + " SELECT vec_id, esimhash FROM sig",
-        "a_near_dup": (
-            _srp_simhash_sql(bits=6)
-            + ", small AS (SELECT esimhash FROM sig GROUP BY esimhash "
-            "HAVING COUNT(*) > 1 AND COUNT(*) <= 200), "
-            "sigf AS (SELECT sig.* FROM sig JOIN small USING (esimhash)), "
-            "pairs AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b "
-            "FROM sigf a JOIN sigf b USING (esimhash) WHERE a.vec_id < b.vec_id) "
-            "SELECT vec_a, vec_b, sim FROM (SELECT p.vec_a, p.vec_b, "
-            "ROUND(list_cosine_similarity(ea.embedding::DOUBLE[], eb.embedding::DOUBLE[]), 6) AS sim "
-            "FROM pairs p JOIN embeddings ea ON ea.vec_id = p.vec_a "
-            "JOIN embeddings eb ON eb.vec_id = p.vec_b) WHERE sim >= 0.3"
-        ),
-        "a_ivf_index": (
-            # identical semantics to a_ivf_topk — the index persists the
-            # same deterministic assignment, probed with nprobe=2
-            "WITH c AS (SELECT vec_id AS centroid_id, embedding::DOUBLE[] AS cvec "
-            "FROM embeddings WHERE vec_id < 8), "
-            "assign AS (SELECT vec_id, centroid_id FROM ("
-            "SELECT e.vec_id, c.centroid_id, "
-            "ROUND(list_cosine_similarity(e.embedding::DOUBLE[], c.cvec), 6) AS csim, "
-            "ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY "
-            "ROUND(list_cosine_similarity(e.embedding::DOUBLE[], c.cvec), 6) DESC, c.centroid_id) AS rk "
-            "FROM embeddings e CROSS JOIN c) WHERE rk = 1), "
-            "probe AS (SELECT centroid_id FROM ("
-            "SELECT centroid_id, ROUND(list_cosine_similarity(cvec, "
-            "(SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = 0)), 6) AS qsim "
-            "FROM c) ORDER BY qsim DESC, centroid_id LIMIT 2) "
-            "SELECT e.vec_id, ROUND(list_cosine_similarity(e.embedding::DOUBLE[], "
-            "(SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = 0)), 6) AS sim "
-            "FROM embeddings e JOIN assign a ON a.vec_id = e.vec_id "
-            "JOIN probe p ON p.centroid_id = a.centroid_id "
-            "ORDER BY sim DESC, e.vec_id LIMIT 10"
         ),
     }

@@ -24,7 +24,7 @@ from datetime import datetime, timedelta, timezone
 import pandas as pd
 
 from ironspark.extract import article_text_of, next_link
-from ironspark.schemas import PAGES_SCHEMA, ROBOTS_SCHEMA, SEEDS_SCHEMA
+from ironspark.schemas import PAGES_SCHEMA
 
 EPOCH = datetime(2025, 1, 1, tzinfo=timezone.utc)
 MEGA_HOST = "mega.example.com"
@@ -216,19 +216,3 @@ def graph_seeds(
             }
         )
     return pd.DataFrame(rows)
-
-
-def build_robots(hosts: list[str], default_delay: float = 1.0) -> pd.DataFrame:
-    """Deterministic per-host crawl delays + disallow prefixes."""
-    rows = []
-    for h in hosts:
-        hv = sum(ord(ch) for ch in h)
-        delay = [0.5, 1.0, 2.0, 5.0][hv % 4] if h != MEGA_HOST else 0.5
-        disallow = ["/private/"] if hv % 3 == 0 else []
-        rows.append({"host": h, "crawl_delay": delay, "disallow": disallow,
-                     "allow": []})
-    return pd.DataFrame(rows)
-
-
-def to_spark(spark, pdf: pd.DataFrame, schema):
-    return spark.createDataFrame(pdf, schema=schema)

@@ -1,4 +1,4 @@
-"""Fetch stage: corpus equi-join, acceptance filter, retry policy.
+"""Fetch stage: corpus equi-join, or live HTTP when there is no corpus.
 
 At test scale, "fetch" is a deterministic left join of the scheduled
 frontier against the pages corpus (the reference's live reqwest GET,
@@ -148,34 +148,6 @@ def fetch_from_corpus(
     )
 
 
-def split_accepted(
-    responses: DataFrame, cfg: EngineConfig
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(accepted, retry, exhausted) per the reference acceptance rule.
-
-    Accept when status < 400 OR status in http_error_allow_codes
-    (``downloader.rs:236-247``; config ``src/config.rs:19``). Rejected
-    rows retry with attempt+1 up to max_retry_times (linear backoff
-    ``100ms*(attempt+1)`` becomes "next wave" — deterministic,
-    ``downloader.rs:210-223``), then are exhausted.
-    """
-    allow = list(cfg.http_error_allow_codes)
-    ok = F.col("resp_status") < 400
-    if allow:
-        ok = ok | F.col("resp_status").isin(allow)
-    accepted = responses.filter(ok)
-    rejected = responses.filter(~ok)
-    retry = (
-        rejected.filter(F.col("attempt") < cfg.max_retry_times)
-        .withColumn("attempt", F.col("attempt") + 1)
-        .withColumn("status", F.lit("pending"))
-    )
-    exhausted = rejected.filter(
-        F.col("attempt") >= cfg.max_retry_times
-    ).withColumn("status", F.lit("exhausted"))
-    return accepted, retry, exhausted
-
-
 _HTTP_OUT_SCHEMA = (
     "url_canon string, url string, host string, spider_id long, seq long, "
     "attempt int, method string, headers map<string,string>, body string, "
@@ -202,8 +174,7 @@ def http_fetch_stage(scheduled: DataFrame, cfg: EngineConfig) -> DataFrame:
     * ``Set-Cookie`` response headers are harvested into ``set_cookie``
       (the engine folds them into its per-host jar);
     * transport errors map onto the reference's error classes
-      (timeout -> 408, connect/other -> 503 — both retryable and
-      classified by ``error_class_expr``);
+      (timeout -> 408, connect/other -> 503 — both retryable);
     * wire-size columns (bytes_req/bytes_resp) use the SAME expressions
       as the corpus path (Request::size, src/request.rs:18-47).
     """
@@ -347,14 +318,4 @@ def http_fetch_stage(scheduled: DataFrame, cfg: EngineConfig) -> DataFrame:
         ).cast("long"),
     ).withColumn(
         "bytes_resp", F.coalesce(F.length("body_bytes"), F.lit(0)).cast("long")
-    )
-
-
-def error_class_expr():
-    """D3 error classification (downloader.rs:266-286) as a column expr."""
-    return (
-        F.when(F.col("resp_status") == 404, F.lit("request"))
-        .when(F.col("resp_status") >= 500, F.lit("request"))
-        .when(F.col("resp_status") == 408, F.lit("timeout"))
-        .otherwise(F.lit("unknown"))
     )

@@ -1,311 +1,15 @@
-"""Web-link-graph analytics over an edge table.
+"""Connected components over a ``(src: long, dst: long)`` edge table.
 
-A crawl's natural by-product is the directed host/page graph
-(src url -> dst url from extracted links, ironspark.extract). These
-operators consume any ``(src: long, dst: long)`` edge DataFrame —
-parallel edges are kept and act as weights (a page linking twice
-votes twice), matching the raw output of link extraction before any
-dedup pass.
-
-Everything is JVM-side ``pyspark.sql.functions`` — no Python UDFs —
-and all arithmetic is **integer** so results are bit-reproducible
-across engines, partitionings and cluster sizes (see
-``pagerank_fixedpoint``).
+Used by ``textops.near_dup_clusters`` to label near-duplicate clusters
+from candidate pairs. Everything is JVM-side ``pyspark.sql.functions``
+— no Python UDFs — and the labels (minimum reachable node id) are
+bit-reproducible across engines, partitionings and cluster sizes.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-#: node-count ceiling under which the per-iteration score table of the
-#: fixed-point operators is broadcast into the edge join (a score row is
-#: ~24 bytes, so 2e6 nodes ~ 48 MB — inside the session's 64 MB
-#: broadcast budget). Above it the operators fall back to keyed joins;
-#: the knob is per-call overridable for clusters with more executor
-#: memory.
-BROADCAST_STATE_MAX_NODES = 2_000_000
-
-
-def _nodes(edges: DataFrame) -> DataFrame:
-    return (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-
-
-def _weighted_edges(edges: DataFrame, part_key: str) -> DataFrame:
-    """Collapse parallel edges to integer weights ONCE, hash-partitioned
-    by ``part_key`` and persisted, so iterative operators scan a
-    distinct-pair table instead of re-scanning (and re-shuffling) the
-    raw edge multiset every iteration (guide §2.3 "aggregate before you
-    shuffle" + §2.4 "two operations keyed the same way share one
-    exchange"). The weight table is bounded by the number of distinct
-    (src, dst) pairs — never larger than the input, usually far
-    smaller on web graphs where parallel links act as weights.
-    """
-    return (
-        edges.select(
-            F.col("src").cast("long").alias("src"),
-            F.col("dst").cast("long").alias("dst"),
-        )
-        .groupBy("src", "dst")
-        .agg(F.count("*").cast("long").alias("w"))
-        .repartition(part_key)
-        .persist()
-    )
-
-
-def degree_stats(edges: DataFrame) -> DataFrame:
-    """Per-node degree profile: out/in edge counts and distinct
-    neighbour counts. The first thing a crawl operator looks at
-    (hub/authority shape, mega-domain detection for politeness
-    budgeting, dead-end pages).
-
-    Returns (node, out_edges, in_edges, out_nbrs, in_nbrs); nodes
-    with no edges in a direction report 0.
-
-    Scale: two hash-aggregates (by src, by dst) and two joins onto
-    the node set — each keyed on the node id, so the whole plan is
-    one shuffle exchange reused. count(distinct dst) inside the
-    groupBy is a two-level partial aggregate; at 10^10 edges swap to
-    approx_count_distinct (HLL) and accept the documented 2% error.
-    """
-    out = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").cast("long").alias("out_edges"),
-        F.countDistinct("dst").cast("long").alias("out_nbrs"),
-    )
-    inc = edges.groupBy(F.col("dst").alias("node")).agg(
-        F.count("*").cast("long").alias("in_edges"),
-        F.countDistinct("src").cast("long").alias("in_nbrs"),
-    )
-    zero = F.lit(0).cast("long")
-    return (
-        _nodes(edges)
-        .join(out, "node", "left")
-        .join(inc, "node", "left")
-        .select(
-            "node",
-            F.coalesce("out_edges", zero).alias("out_edges"),
-            F.coalesce("in_edges", zero).alias("in_edges"),
-            F.coalesce("out_nbrs", zero).alias("out_nbrs"),
-            F.coalesce("in_nbrs", zero).alias("in_nbrs"),
-        )
-    )
-
-
-def pagerank_fixedpoint(
-    edges: DataFrame,
-    iterations: int = 5,
-    scale: int = 1_000_000_000,
-    d_num: int = 85,
-    d_den: int = 100,
-) -> DataFrame:
-    """Deterministic fixed-point PageRank (Page et al. 1999) over the
-    link graph, with dangling-mass redistribution.
-
-    Ranks are BIGINTs in units of 1/``scale``; every step is integer
-    arithmetic (``DIV``), so the result is **bit-identical regardless
-    of partition count, executor count, or aggregation order** — the
-    property float PageRank lacks (parallel float sums reorder) and
-    the reason this variant can be oracle-checked exactly and
-    reproduced between a 10-node and a 1000-node cluster run. The
-    truncation error per step is < 1 unit/edge, i.e. < 1e-9 * E of
-    total mass per iteration at the default scale.
-
-    Recurrence (per node v, per iteration):
-        contrib(v)  = sum over in-edges (u,v) of rank(u) DIV outdeg(u)
-        dang_each   = (sum of rank over outdeg-0 nodes) DIV N
-        rank'(v)    = ((d_den - d_num)*base + d_num*(contrib(v) + dang_each)) DIV d_den
-    with base = scale DIV N and rank_0 = base.
-
-    Scale (round 7 shape): the edge multiset is collapsed ONCE to a
-    persisted (src, dst, w) weight table hash-partitioned by dst, and
-    outdeg is folded into the rank state up front — so a 50-iteration
-    run does ONE pass over the raw edges, not 50 (guide §2.3/§2.4).
-    Per iteration the only data-sized job is the contribution
-    aggregate: weight-table scan -> join with the rank state -> hash
-    aggregate keyed by dst. When the node count is small enough to
-    broadcast (``BROADCAST_STATE_MAX_NODES``), the rank state is
-    broadcast into that join and the aggregate reuses the weight
-    table's dst-partitioning — ZERO exchanges per iteration; above the
-    threshold it degrades to one keyed shuffle per iteration (the
-    textbook plan). The dangling sum is a 1-row aggregate over the
-    nodes-sized state, broadcast back via crossJoin. Lineage is
-    truncated each iteration with localCheckpoint (same plan-OOM guard
-    as textops.near_dup_clusters) so 50 iterations do not build a
-    500-join plan.
-    """
-    w = _weighted_edges(edges, "dst")
-    nodes = _nodes(w)
-    outdeg = w.groupBy("src").agg(F.sum("w").cast("long").alias("outdeg"))
-    n_nodes = nodes.count()
-    base = scale // max(n_nodes, 1)
-    small = n_nodes <= BROADCAST_STATE_MAX_NODES
-    state = (
-        nodes.join(outdeg, nodes["node"] == outdeg["src"], "left")
-        .select(
-            "node",
-            F.lit(base).cast("long").alias("base"),
-            F.lit(base).cast("long").alias("rank"),
-            F.coalesce("outdeg", F.lit(0).cast("long")).alias("outdeg"),
-        )
-        .localCheckpoint()
-    )
-    for _ in range(iterations):
-        dang = state.filter(F.col("outdeg") == 0).agg(
-            F.coalesce(F.sum("rank"), F.lit(0)).cast("long").alias("dang_sum")
-        )
-        active = (
-            state.filter(F.col("outdeg") > 0)
-            .select(
-                F.col("node").alias("src"),
-                F.expr("rank DIV outdeg").alias("share"),
-            )
-        )
-        if small:
-            active = F.broadcast(active)
-        contrib = (
-            w.join(active, "src")
-            .select("dst", (F.col("w") * F.col("share")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").cast("long").alias("in_sum"))
-        )
-        state = (
-            state.join(contrib, state["node"] == contrib["dst"], "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                state["node"],
-                state["base"],
-                F.expr(
-                    f"(({d_den} - {d_num}) * base + {d_num} * "
-                    "(coalesce(in_sum, CAST(0 AS BIGINT)) + "
-                    f"dang_sum DIV {max(n_nodes, 1)})) DIV {d_den}"
-                ).alias("rank"),
-                state["outdeg"],
-            )
-            .localCheckpoint(eager=False)
-        )
-    out = state.select("node", F.col("rank").alias("pr_scaled"))
-    out = out.localCheckpoint()
-    w.unpersist()
-    return out
-
-
-def hits_fixedpoint(
-    edges: DataFrame, iterations: int = 5, scale: int = 1_000_000
-) -> DataFrame:
-    """Deterministic fixed-point HITS (Kleinberg 1999): hub and
-    authority scores over the link graph — the other classic web-graph
-    ranking, complementary to PageRank (a hub links to many good
-    authorities; an authority is linked from many good hubs; used for
-    seed selection and spam-farm detection in crawl curation).
-
-    Integer arithmetic with L-infinity normalization: per iteration
-        auth_raw(v) = sum over in-edges (u,v) of hub(u)
-        auth(v)     = auth_raw(v) * scale DIV max(auth_raw)
-        hub_raw(u)  = sum over out-edges (u,v) of auth(v)
-        hub(u)      = hub_raw(u) * scale DIV max(hub_raw)
-    with hub_0 = scale. Max-normalization keeps every score in
-    [0, scale] as exact BIGINTs, so results are bit-identical across
-    partitionings and engines (same property as pagerank_fixedpoint;
-    float HITS with L2 normalization is not reproducible under
-    parallel sum reordering). Parallel edges act as weights. Overflow
-    headroom: the normalization product is bounded by
-    max-weighted-degree * scale^2, so the default scale=1e6 is exact
-    up to ~9.2e6 inbound links on one page; beyond that lower scale
-    (quantization stays < 1/scale of the max score) or swap the two
-    BIGINT products to DECIMAL(38,0).
-
-    Returns (node, hub_scaled, auth_scaled) after ``iterations``
-    rounds; nodes with no out-edges have hub 0, no in-edges auth 0.
-
-    Scale (round 7 shape): the edge multiset is collapsed ONCE to a
-    persisted (src, dst, w) weight table hash-partitioned by dst, and
-    the node set is persisted — previously BOTH were re-derived from
-    the raw edges twice per iteration (a full scan + distinct per
-    half-step). Per iteration the two data-sized jobs are the weighted
-    score aggregates over the weight table; with a broadcastable score
-    table (``BROADCAST_STATE_MAX_NODES``) the auth half-step runs with
-    zero exchanges (dst-partitioning reused) and the hub half-step
-    pays only the post-partial-aggregation src exchange. The two 1-row
-    max aggregates broadcast back via crossJoin; lineage truncated per
-    half-step with localCheckpoint.
-    """
-    if iterations < 1:
-        raise ValueError("hits_fixedpoint needs iterations >= 1")
-    w = _weighted_edges(edges, "dst")
-    nodes = _nodes(w).persist()
-    n_nodes = nodes.count()
-    small = n_nodes <= BROADCAST_STATE_MAX_NODES
-
-    def _maybe_bc(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
-
-    hub = nodes.withColumn("hub", F.lit(scale).cast("long"))
-    auth = None
-    for _ in range(iterations):
-        # araw feeds BOTH the 1-row max and the normalization join;
-        # with the zero-exchange aggregate there is no shuffle for
-        # ReuseExchange to share, so without this barrier the full
-        # weight-table scan + join + aggregate ran TWICE per
-        # half-step (round 7 second pass). The checkpointed frame is
-        # nodes-sized — trivial to hold.
-        araw = (
-            w.join(_maybe_bc(hub.withColumnRenamed("node", "src")), "src")
-            .select("dst", (F.col("w") * F.col("hub")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").cast("long").alias("araw"))
-            .localCheckpoint(eager=False)
-        )
-        amax = araw.agg(
-            F.coalesce(F.max("araw"), F.lit(1)).cast("long").alias("amax")
-        )
-        auth = (
-            nodes.join(araw, nodes["node"] == araw["dst"], "left")
-            .crossJoin(F.broadcast(amax))
-            .select(
-                "node",
-                F.expr(
-                    f"coalesce(araw, CAST(0 AS BIGINT)) * {scale} DIV amax"
-                ).alias("auth"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        hraw = (
-            w.join(_maybe_bc(auth.withColumnRenamed("node", "dst")), "dst")
-            .select("src", (F.col("w") * F.col("auth")).alias("c"))
-            .groupBy("src")
-            .agg(F.sum("c").cast("long").alias("hraw"))
-            .localCheckpoint(eager=False)  # same two-consumer barrier as araw
-        )
-        hmax = hraw.agg(
-            F.coalesce(F.max("hraw"), F.lit(1)).cast("long").alias("hmax")
-        )
-        hub = (
-            nodes.join(hraw, nodes["node"] == hraw["src"], "left")
-            .crossJoin(F.broadcast(hmax))
-            .select(
-                "node",
-                F.expr(
-                    f"coalesce(hraw, CAST(0 AS BIGINT)) * {scale} DIV hmax"
-                ).alias("hub"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    out = (
-        hub.join(auth, "node")
-        .select(
-            "node",
-            F.col("hub").alias("hub_scaled"),
-            F.col("auth").alias("auth_scaled"),
-        )
-        .localCheckpoint()
-    )
-    w.unpersist()
-    nodes.unpersist()
-    return out
 
 
 def _star_violations(s: DataFrame) -> int:
@@ -370,8 +74,8 @@ def connected_components(
     a hub (u side) — so the round loop stops when that violation count
     hits zero (this replaces the two exceptAll set-differences the
     round-6 version ran per round; exact, not probabilistic). Lineage
-    is truncated per round with localCheckpoint, the same plan-OOM
-    guard as pagerank_fixedpoint. Skewed mega-hubs (a node with 10^8
+    is truncated per round with localCheckpoint (a plan-OOM guard for
+    long round loops). Skewed mega-hubs (a node with 10^8
     neighbors) are exactly what large-star handles: the hub's
     neighborhood is split across partitions by the groupBy's partial
     aggregation since only min() is carried.
@@ -462,50 +166,5 @@ def connected_components(
         .select(
             "node",
             F.coalesce("component", F.col("node")).alias("component"),
-        )
-    )
-
-
-def anchor_topk(links: DataFrame, k: int = 3) -> DataFrame:
-    """Anchor-text aggregation: per target page, the top-k anchor words
-    across every inbound link (the classic web-graph signal — anchor
-    text describes the TARGET better than the target's own text; used
-    for retrieval training data and document expansion).
-
-    Input: ``(src: long, dst: long, anchor: string)`` link rows from
-    extraction. Output one row per (dst, word) kept: inbound-link count
-    for the page, the word's weighted count (a page linking twice votes
-    twice), and its rank. Ties break (count desc, word asc) so the
-    ranking is engine-reproducible.
-
-    Scale: one explode + one (dst, word) hash-aggregate (map-side
-    combine absorbs the repetition that makes an anchor word frequent),
-    a dst-keyed inbound-count aggregate joined back (dst-sized, AQE
-    broadcasts when it fits), and ONE window partitioned by dst for the
-    top-k — the same shape as tfidf_topk, no all-pairs anywhere.
-    """
-    from pyspark.sql import Window
-
-    words = links.select(
-        "dst",
-        F.explode(F.split(F.lower(F.col("anchor")), r"\s+")).alias("word"),
-    ).filter(F.col("word") != "")
-    wc = words.groupBy("dst", "word").agg(
-        F.count("*").cast("long").alias("n_word")
-    )
-    inbound = links.groupBy("dst").agg(
-        F.count("*").cast("long").alias("n_links")
-    )
-    win = Window.partitionBy("dst").orderBy(F.desc("n_word"), "word")
-    return (
-        wc.withColumn("rn", F.row_number().over(win))
-        .filter(F.col("rn") <= k)
-        .join(inbound, "dst")
-        .select(
-            "dst",
-            "word",
-            "n_word",
-            F.col("rn").cast("int").alias("rn"),
-            "n_links",
         )
     )

@@ -31,22 +31,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),  # image | audio | video
-        StructField("payload", BinaryType()),
-        StructField("mime", StringType()),
-    ]
 )
 
 META_SCHEMA = StructType(
@@ -903,7 +893,7 @@ def encode_jpeg(
         # einsum in the last float ulp (different summation order), but
         # proven output-identical for every reachable input of the
         # mm_jpeg oracle (exhaustive 80,640-config sweep vs the round-6
-        # codec, OPTIMIZATION_r07.md) and golden-pinned in test_jpeg.py;
+        # codec) and golden-pinned in test_jpeg.py;
         # the codec's +1e-9 rounding eps absorbs ulp-level drift.
         coef = a @ blocks @ a.T
         qd = _jround(coef / q).astype(np.int64)

@@ -41,10 +41,6 @@ _PARSE_IN_COLS = [
 _OUT_COLS = [f.name for f in PARSE_OUT_SCHEMA.fields]
 
 
-def _empty_out() -> pd.DataFrame:
-    return pd.DataFrame({c: pd.Series(dtype="object") for c in _OUT_COLS})
-
-
 def parse_responses(
     responses: DataFrame, spiders: dict[int, object], cfg: EngineConfig | None = None
 ) -> DataFrame:

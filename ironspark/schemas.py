@@ -111,20 +111,6 @@ PARSE_OUT_SCHEMA = StructType(
     ]
 )
 
-# -- extracted article items (reference ArticleItem, basic_spider.rs:21-25) ---
-ITEMS_SCHEMA = StructType(
-    [
-        StructField("item_type", StringType()),
-        StructField("spider_id", LongType()),
-        StructField("src_url", StringType()),
-        StructField("title", StringType()),
-        StructField("author", StringType()),
-        StructField("number", LongType()),
-        StructField("text", StringType()),
-        # wave comes from the partition directory (items/wave=N) on read
-    ]
-)
-
 # -- per-(wave, partition) lineage + metrics (FIXTURES.md §8) ------------------
 METRICS_SCHEMA = StructType(
     [

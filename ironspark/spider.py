@@ -1,16 +1,17 @@
 """Spider API surface (SURVEY.md §2.9; reference src/spider/spider.rs:47-54).
 
-A Spider declares seeds and a vectorized parse function. The parse
-contract mirrors the reference's ``parse(Response) -> SpiderResult``
-(requests and/or items and/or none, ``src/spider/spider.rs:37-45``) but
-operates on Arrow record batches: the engine calls ``parse_batch`` with
-a pandas DataFrame of responses and expects PARSE_OUT_SCHEMA rows of
-kind "request" (outlinks) and "item".
+A Spider declares a vectorized parse function (seeds go to
+``CrawlEngine.run``). The parse contract mirrors the reference's
+``parse(Response) -> SpiderResult`` (requests and/or items and/or none,
+``src/spider/spider.rs:37-45``) but operates on Arrow record batches:
+the engine calls ``parse_batch`` with a pandas DataFrame of responses
+and expects PARSE_OUT_SCHEMA rows of kind "request" (outlinks) and
+"item".
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pandas as pd
 
@@ -20,17 +21,9 @@ from ironspark.scan import scan_page
 
 @dataclass
 class Spider:
-    """Base spider: subclass or pass functions.
-
-    seeds: list of (url, seed_rank) the engine injects at wave 0
-    (reference ``start_requests``, src/spider/spider.rs:49).
-    """
+    """Base spider: subclass or pass functions."""
 
     name: str = "spider"
-    seeds: list = field(default_factory=list)
-
-    def start_requests(self) -> list[str]:
-        return list(self.seeds)
 
     def parse_batch(self, pdf: pd.DataFrame) -> pd.DataFrame:
         """Responses batch -> PARSE_OUT rows. Override per spider.
@@ -54,8 +47,8 @@ class ArticleSpider(Spider):
 
     ITEM_TYPE = "article"
 
-    def __init__(self, name: str = "example_spider", seeds: list | None = None):
-        super().__init__(name=name, seeds=seeds or [])
+    def __init__(self, name: str = "example_spider"):
+        super().__init__(name=name)
 
     def parse_batch(self, pdf: pd.DataFrame) -> pd.DataFrame:
         out: dict[str, list] = {
@@ -99,8 +92,8 @@ class LinkSpider(Spider):
 
     ITEM_TYPE = "page"
 
-    def __init__(self, name: str = "link_spider", seeds: list | None = None):
-        super().__init__(name=name, seeds=seeds or [])
+    def __init__(self, name: str = "link_spider"):
+        super().__init__(name=name)
 
     def parse_batch(self, pdf: pd.DataFrame) -> pd.DataFrame:
         out: dict[str, list] = {

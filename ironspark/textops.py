@@ -153,8 +153,7 @@ def lsh_candidate_pairs(
     key list at runtime when it actually fits and falls back to a keyed
     shuffle join when it is corpus-sized — same result, no driver-sized
     failure mode (hint absence is plan-asserted in
-    tests/test_round7_fixes.py). For the pure-aggregate alternative
-    with zero joins, see ann.embedding_near_dup's bucket-array shape.
+    tests/test_round7_fixes.py).
     """
     # persist the signatures: they are consumed THREE times (bucket-size
     # guard + both self-join branches) and each scan would otherwise
@@ -212,8 +211,7 @@ def jaccard_pairs(documents: DataFrame, pairs: DataFrame) -> DataFrame:
     so each is computed once per action. The caches are
     operator-lifetime (LRU-evictable); eagerly materializing to
     release them was measured at 2-4x the whole operator wall at bench
-    scale, so the r6 ADVICE #3 unpersist is deliberately NOT done —
-    rationale in OPTIMIZATION_r07.md."""
+    scale, so the r6 ADVICE #3 unpersist is deliberately NOT done."""
     pairs = pairs.persist()
     ids = (
         pairs.select(F.col("doc_a").alias("doc_id"))

@@ -1,9 +1,7 @@
-"""URL-template mining (url.url_templates) and anchor-text aggregation
-(graph.anchor_topk), round 6."""
+"""URL-template mining (url.url_templates), round 6."""
 
 import pandas as pd
 
-from ironspark.graph import anchor_topk
 from ironspark.url import url_templates
 
 
@@ -48,29 +46,3 @@ def test_url_templates_hex_before_digits(spark):
     )
     out = url_templates(df, min_urls=1, trap_share=0.9).toPandas()
     assert set(out.template) == {"/x/{H}", "/beef/item{D}"}
-
-
-def test_anchor_topk_ranks_and_ties(spark):
-    links = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "src": [1, 2, 3, 4],
-                "dst": [9, 9, 9, 7],
-                "anchor": [
-                    "best pizza in town",
-                    "Pizza  pizza best",
-                    "town guide",
-                    "solo page",
-                ],
-            }
-        )
-    )
-    out = anchor_topk(links, k=2).toPandas()
-    nine = out[out.dst == 9].sort_values("rn")
-    # pizza appears 3x (case-folded, multi-space split), best 2x
-    assert list(nine.word) == ["pizza", "best"]
-    assert list(nine.n_word) == [3, 2]
-    assert set(nine.n_links) == {3}
-    seven = out[out.dst == 7].sort_values("rn")
-    # tie at count 1 breaks alphabetically: page before solo
-    assert list(seven.word) == ["page", "solo"]

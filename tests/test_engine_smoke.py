@@ -14,7 +14,7 @@ from ironspark.spider import ArticleSpider
 def chain_setup(spark):
     pages = spark.createDataFrame(build_chain_corpus(3, 5), PAGES_SCHEMA)
     seeds = spark.createDataFrame(article_seeds(3, 5, dup=3), SEEDS_SCHEMA)
-    spiders = {i: ArticleSpider(seeds=[]) for i in (1, 2, 3)}
+    spiders = {i: ArticleSpider() for i in (1, 2, 3)}
     return pages, seeds, spiders
 
 

@@ -1,79 +1,10 @@
-"""Semantic tests for the link-graph operators (ironspark.graph)."""
+"""Semantic tests for connected components (ironspark.graph)."""
 
-from pyspark.sql import functions as F
-
-from ironspark.graph import degree_stats, pagerank_fixedpoint
+from ironspark.graph import connected_components
 
 
 def _edges(spark, rows):
     return spark.createDataFrame(rows, ["src", "dst"])
-
-
-def test_degree_stats_counts_parallel_edges(spark):
-    # 1 -> 2 twice (parallel), 1 -> 3, 3 -> 2; node 2 is a sink
-    e = _edges(spark, [(1, 2), (1, 2), (1, 3), (3, 2)])
-    out = {r["node"]: r for r in degree_stats(e).collect()}
-    assert set(out) == {1, 2, 3}
-    assert (out[1]["out_edges"], out[1]["out_nbrs"]) == (3, 2)
-    assert (out[2]["in_edges"], out[2]["in_nbrs"]) == (3, 2)
-    assert (out[2]["out_edges"], out[2]["out_nbrs"]) == (0, 0)
-    assert (out[3]["out_edges"], out[3]["in_edges"]) == (1, 1)
-
-
-def test_pagerank_fixedpoint_matches_hand_recurrence(spark):
-    # two nodes, edge 1 -> 2; node 2 dangling. N=2, scale=1000 for
-    # hand arithmetic: base = 500.
-    # iter: dang = rank(2); contrib(2) = rank(1) DIV 1
-    # rank'(v) = (15*500 + 85*(contrib + dang DIV 2)) DIV 100
-    e = _edges(spark, [(1, 2)])
-    scale = 1000
-    r1, r2 = 500, 500
-    for _ in range(3):
-        dang_each = r2 // 2
-        n1 = (15 * 500 + 85 * (0 + dang_each)) // 100
-        n2 = (15 * 500 + 85 * (r1 // 1 + dang_each)) // 100
-        r1, r2 = n1, n2
-    out = {
-        r["node"]: r["pr_scaled"]
-        for r in pagerank_fixedpoint(e, iterations=3, scale=scale).collect()
-    }
-    assert out == {1: r1, 2: r2}
-
-
-def test_pagerank_sink_gains_rank_and_is_deterministic(spark):
-    # star into node 9: every other node links to it; 9 must rank top.
-    rows = [(i, 9) for i in range(1, 9)] + [(9, 1)]
-    e = _edges(spark, rows)
-    out = {
-        r["node"]: r["pr_scaled"]
-        for r in pagerank_fixedpoint(e, iterations=5).collect()
-    }
-    assert max(out, key=out.get) == 9
-    # bit-identical under a different partitioning (the integer-
-    # arithmetic guarantee the docstring sells)
-    out2 = {
-        r["node"]: r["pr_scaled"]
-        for r in pagerank_fixedpoint(
-            e.repartition(7, "dst"), iterations=5
-        ).collect()
-    }
-    assert out == out2
-
-
-def test_pagerank_parallel_edges_weight_contributions(spark):
-    # 1 -> 2 twice and 1 -> 3 once: node 2 gets twice node 3's
-    # contribution share from node 1
-    e = _edges(spark, [(1, 2), (1, 2), (1, 3), (2, 1), (3, 1)])
-    out = {
-        r["node"]: r["pr_scaled"]
-        for r in pagerank_fixedpoint(e, iterations=4).collect()
-    }
-    assert out[2] > out[3]
-
-
-# -- connected components (large-star/small-star, round 6) -------------------
-
-from ironspark.graph import connected_components
 
 
 def _uf_components(edges):
@@ -132,59 +63,3 @@ def test_cc_star_and_singleton_components(spark):
     edges = [(10, 2), (10, 7), (10, 30), (40, 41), (50, 50)]
     out = _cc(spark, edges)
     assert out == {2: 2, 7: 2, 10: 2, 30: 2, 40: 40, 41: 40, 50: 50}
-
-
-# -- HITS (integer fixed point, round 6) --------------------------------------
-
-from ironspark.graph import hits_fixedpoint
-
-
-def _ref_hits(edges, iterations, scale):
-    nodes = sorted({a for a, _ in edges} | {b for _, b in edges})
-    hub = {n: scale for n in nodes}
-    auth = {n: 0 for n in nodes}
-    for _ in range(iterations):
-        araw = {n: 0 for n in nodes}
-        for u, v in edges:
-            araw[v] += hub[u]
-        amax = max(max(araw.values()), 1) if araw else 1
-        amax = amax if amax > 0 else 1
-        auth = {n: araw[n] * scale // amax for n in nodes}
-        hraw = {n: 0 for n in nodes}
-        for u, v in edges:
-            hraw[u] += auth[v]
-        hmax = max(max(hraw.values()), 1) if hraw else 1
-        hmax = hmax if hmax > 0 else 1
-        hub = {n: hraw[n] * scale // hmax for n in nodes}
-    return {n: (hub[n], auth[n]) for n in nodes}
-
-
-def test_hits_matches_reference_recurrence(spark):
-    import hashlib
-
-    edges = [(1, 2), (1, 3), (3, 2), (4, 2), (2, 5), (5, 5)]
-    for i in range(40):
-        h = int.from_bytes(hashlib.md5(f"h{i}".encode()).digest()[:8], "big")
-        edges.append((h % 13, (h // 13) % 17))
-    edges = [(a, b) for a, b in edges]
-    expect = _ref_hits(edges, iterations=4, scale=1_000_000)
-    out = {
-        r["node"]: (r["hub_scaled"], r["auth_scaled"])
-        for r in hits_fixedpoint(
-            spark.createDataFrame(edges, ["src", "dst"]), iterations=4
-        ).collect()
-    }
-    assert out == expect
-
-
-def test_hits_sink_and_source_extremes(spark):
-    # 1,2,3 all point at 4; 4 points nowhere. 4 is the pure authority
-    # (auth = scale), the others pure hubs (hub = scale, auth 0).
-    e = _edges(spark, [(1, 4), (2, 4), (3, 4)])
-    out = {
-        r["node"]: (r["hub_scaled"], r["auth_scaled"])
-        for r in hits_fixedpoint(e, iterations=3, scale=1000).collect()
-    }
-    assert out[4] == (0, 1000)
-    for n in (1, 2, 3):
-        assert out[n] == (1000, 0)

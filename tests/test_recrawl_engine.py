@@ -48,7 +48,7 @@ def _build(spark, clock, **over):
     seeds = spark.createDataFrame(
         article_seeds(N_CHAINS, LENGTH, dup=1), SEEDS_SCHEMA
     )
-    spiders = {i: ArticleSpider(seeds=[]) for i in range(1, N_CHAINS + 1)}
+    spiders = {i: ArticleSpider() for i in range(1, N_CHAINS + 1)}
     kw = dict(
         dedup=True,
         respect_robots=False,

@@ -1,20 +1,16 @@
 """Round-7 optimization pins.
 
-Each test guards one optimization from OPTIMIZATION_r07.md:
+Each test guards one round-7 optimization:
 - the LSH bucket-guard broadcast inversion (VERDICT r6 #1),
 - the BPE driver-side finishing switch (VERDICT r6 #5),
 - the connected-components star-forest convergence probe (VERDICT r6 #3),
-- the r6 ADVICE guards (hits iterations, near_dup_clusters algorithm).
+- the r6 ADVICE guard on the near_dup_clusters algorithm.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from ironspark.graph import (
-    _star_violations,
-    connected_components,
-    hits_fixedpoint,
-)
+from ironspark.graph import _star_violations, connected_components
 from ironspark.textops import (
     _bpe_merge_rounds,
     _incr_candidates,
@@ -55,29 +51,6 @@ def test_lsh_bucket_guard_is_not_hint_broadcast(spark):
         for r in lsh_candidate_pairs(_docs(spark, NEAR_DUP_TEXTS), bands=4).collect()
     }
     assert (0, 3) in pairs  # exact dup docs share every bucket
-
-
-def test_embedding_near_dup_pair_generation_is_join_free(spark):
-    # the embedding variant keeps the pure-aggregate bucket-array shape:
-    # the candidate-pair subplan has no join and no broadcast at all
-    from ironspark.ann import embedding_simhash
-
-    emb = spark.createDataFrame(
-        [(i, [float((i * 7 + d) % 5 - 2) for d in range(16)]) for i in range(8)],
-        "vec_id long, embedding array<double>",
-    )
-    sig = embedding_simhash(emb, bits=4, dim=16)
-    # reproduce the pair-generation subplan exactly as embedding_near_dup
-    # builds it (pre-verify): bucket agg + per-row pair array
-    from pyspark.sql import functions as F2
-
-    buckets = (
-        sig.groupBy("esimhash")
-        .agg(F2.sort_array(F2.collect_list("vec_id")).alias("_ids"))
-        .filter(F2.size("_ids").between(2, 200))
-    )
-    plan = buckets._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan and "BroadcastExchange" not in plan
 
 
 def test_incremental_candidate_guard_broadcasts_only_overcap_side(spark):
@@ -151,12 +124,6 @@ def test_components_still_correct_on_chain_and_star(spark):
     assert out[30] == 30
 
 
-def test_hits_rejects_zero_iterations(spark):
-    e = spark.createDataFrame([(1, 2)], ["src", "dst"])
-    with pytest.raises(ValueError):
-        hits_fixedpoint(e, iterations=0)
-
-
 def test_near_dup_clusters_rejects_unknown_algorithm(spark):
     with pytest.raises(ValueError):
         near_dup_clusters(_docs(spark, NEAR_DUP_TEXTS), algorithm="stars")
@@ -187,26 +154,3 @@ def test_bpe_shared_words_matches_unshared(spark):
         for r in bpe_encode(d, m_plain).collect()
     }
     assert t_shared == t_plain
-
-
-def test_g_edges_fan_out_is_result_identical(spark):
-    # the hash fan-out is a pure repartition: the edge MULTISET must
-    # be byte-identical with and without it
-    import os
-
-    import __spark_entry__ as em
-
-    sfd = "/root/testdata/sf0.001"
-    if not os.path.isdir(sfd):
-        pytest.skip("no testdata in this environment")
-
-    def multiset(fan):
-        return {
-            (r["src"], r["dst"], r["n"])
-            for r in em._g_edges(spark, sfd, fan_out=fan)
-            .groupBy("src", "dst")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-
-    assert multiset(False) == multiset(True)

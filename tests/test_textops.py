@@ -4,7 +4,6 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from ironspark.ann import cosine_topk, ivf_topk, knn_join_bruteforce
 from ironspark.textops import (
     exact_dedup,
     fingerprint,
@@ -90,28 +89,6 @@ def test_fingerprint_normalizes_whitespace(spark):
     sdf = __import__("pyspark").sql.SparkSession.getActiveSession().createDataFrame(docs)
     out = fingerprint(sdf).toPandas()
     assert out["fp_md5"].nunique() == 1  # case+whitespace normalized
-
-
-def test_cosine_topk_and_ivf(spark):
-    import numpy as np
-
-    rng = [[float((i * 7 + j * 3) % 10) for j in range(8)] for i in range(50)]
-    emb = spark.createDataFrame(
-        pd.DataFrame({"vec_id": range(50), "embedding": rng})
-    )
-    q = rng[0]
-    exact = cosine_topk(emb, q, k=5).toPandas()
-    assert exact.iloc[0]["vec_id"] == 0 and exact.iloc[0]["sim"] == 1.0
-    assert (exact["sim"].diff().dropna() <= 1e-9).all()  # descending
-
-    ivf = ivf_topk(emb, q, k=5, n_centroids=8, nprobe=8).toPandas()
-    # probing ALL centroids == exact
-    assert list(ivf["vec_id"]) == list(exact["vec_id"])
-
-    knn = knn_join_bruteforce(emb, emb.filter(F.col("vec_id") < 2), k=3).toPandas()
-    assert set(knn["query_id"]) == {0, 1}
-    assert (knn.groupby("query_id").size() == 3).all()
-    assert (knn[knn["rank"] == 1]["sim"] == 1.0).all()  # self is nearest
 
 
 def test_pii_scrub_goldens(spark):
