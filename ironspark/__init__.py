@@ -5,7 +5,7 @@ crawl framework ``vanviethieuanh/iron-spider`` (Rust, studied read-only
 at /root/reference — behavior only, no code copied), re-expressed as an
 idiomatic Spark DataFrame program:
 
-* URL frontier = a parquet/Iceberg-backed DataFrame with a deterministic
+* URL frontier = a parquet-backed DataFrame with a deterministic
   FIFO ``seq`` column (reference: ``src/scheduler/scheduler.rs:34-76``).
 * URL-seen set = exact anti-join correctness path + partitioned Bloom
   filter scale path (reference example's discovered set,

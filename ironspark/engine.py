@@ -12,15 +12,14 @@ One wave = politeness-select → request hooks → fetch (corpus join) →
 status filter + retry union → response hooks → parse (mapInPandas) →
 split items/outlinks → canonicalize → seen-dedup → seq-extend →
 frontier append. State tables (frontier, seen, items, crawl order,
-metrics) are materialized per wave under the checkpoint dir — parquet
-directories with a JSON manifest (the Iceberg-snapshot pattern behind
-a minimal TableIO seam; swaps to real Iceberg where the runtime jar
-exists). Idle shutdown (monitor.rs:62-72) = frontier-empty probe.
+metrics) are materialized per wave under the checkpoint dir by
+TableIO — parquet directories with a JSON manifest and an
+Iceberg-shaped snapshot chain. Idle shutdown (monitor.rs:62-72) =
+frontier-empty probe.
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import shutil
@@ -51,7 +50,15 @@ from ironspark.metrics import rollup_wave_metrics, wave_metrics_fine
 from ironspark.parse import parse_responses
 from ironspark.pipeline import PipelineManager
 from ironspark.politeness import robots_disallow_filter, select_wave
-from ironspark.schemas import SEEDS_SCHEMA
+from ironspark.schemas import (
+    CONSUMED_SCHEMA,
+    CRAWL_ORDER_SCHEMA,
+    FRONTIER_SCHEMA,
+    METRICS_SCHEMA,
+    SEEDS_SCHEMA,
+    SEEN_SCHEMA,
+    STATUS_SCHEMA,
+)
 from ironspark.seen import ShardedBloom, ShardedCuckoo
 from ironspark.spider import Spider
 
@@ -121,66 +128,36 @@ class CrawlStats:
         return (self.scheduled + self.deduped) / self.wall_s if self.wall_s else 0.0
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when the Iceberg Spark runtime jar is on the session's
-    classpath (probe VERDICT r2 #5). The sandbox ships without it; a
-    real deployment adds iceberg-spark-runtime and the engine's state
-    tables transparently become real Iceberg tables."""
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001 — jar probe
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:  # noqa: BLE001 — Py4J wraps ClassNotFound
-        return False
-
-
-def make_table_io(spark: SparkSession, root: str) -> "TableIO":
-    """Backend chosen by probe: real Iceberg when the runtime jar is
-    present (or IRONSPARK_TABLE_BACKEND=iceberg), parquet-dir +
-    JSON-manifest otherwise. IRONSPARK_TABLE_BACKEND=parquet forces the
-    fallback even with the jar."""
-    pref = os.environ.get("IRONSPARK_TABLE_BACKEND", "auto")
-    if pref != "parquet" and (pref == "iceberg" or iceberg_available(spark)):
-        return IcebergTableIO(spark, root)
-    return TableIO(spark, root)
+# engine-controlled table schemas: providing them to the reader elides
+# the per-read parquet footer-inference job (measured as a swarm of
+# 1-task jobs inside every wave's serial budget). `items` is
+# deliberately ABSENT — user pipelines may reshape item rows.
+_TABLE_SCHEMAS = {
+    "frontier": FRONTIER_SCHEMA,
+    "frontier_base": FRONTIER_SCHEMA,
+    "seen": SEEN_SCHEMA,
+    "order": CRAWL_ORDER_SCHEMA,
+    "consumed": CONSUMED_SCHEMA,
+    "metrics": METRICS_SCHEMA,
+    "status": STATUS_SCHEMA,
+}
 
 
 class TableIO:
-    """Parquet-dir snapshot store with a JSON manifest (Iceberg seam)."""
-
-    # engine-controlled table schemas: providing them to the reader
-    # elides the per-read parquet footer-inference job (measured as a
-    # swarm of 1-task jobs inside every wave's serial budget). `items`
-    # is deliberately ABSENT — user pipelines may reshape item rows.
-    SCHEMAS: dict = {}
+    """The engine's state store: parquet dirs, a JSON run manifest and
+    an Iceberg-shaped snapshot chain."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
-        if not TableIO.SCHEMAS:
-            from ironspark.schemas import (
-                CONSUMED_SCHEMA,
-                CRAWL_ORDER_SCHEMA,
-                FRONTIER_SCHEMA,
-                METRICS_SCHEMA,
-                SEEN_SCHEMA,
-                STATUS_SCHEMA,
-            )
-
-            TableIO.SCHEMAS = {
-                "frontier": FRONTIER_SCHEMA,
-                "frontier_base": FRONTIER_SCHEMA,
-                "seen": SEEN_SCHEMA,
-                "order": CRAWL_ORDER_SCHEMA,
-                "consumed": CONSUMED_SCHEMA,
-                "metrics": METRICS_SCHEMA,
-                "status": STATUS_SCHEMA,
-            }
+        # finish any rewrite() a crash cut between its two renames
+        for d in os.listdir(root):
+            if d.startswith("_") and d.endswith("_old"):
+                self._finish_rewrite(d[1:-len("_old")])
 
     def _reader(self, name: str):
-        s = TableIO.SCHEMAS.get(name.split("/", 1)[0])
+        s = _TABLE_SCHEMAS.get(name.split("/", 1)[0])
         return self.spark.read.schema(s) if s is not None else self.spark.read
 
     def path(self, name: str, wave: int | None = None) -> str:
@@ -221,11 +198,26 @@ class TableIO:
 
     def rewrite(self, df: DataFrame, name: str) -> None:
         """Atomically replace a whole table (seen-set invalidation):
-        write aside, swap directories — a crash never tears the table."""
-        tmp = os.path.join(self.root, f"_{name}_rewrite")
-        df.write.mode("overwrite").parquet(os.path.join(tmp, "wave=0"))
-        shutil.rmtree(os.path.join(self.root, name))
-        os.replace(tmp, os.path.join(self.root, name))
+        write aside, then swap directories by rename — a crash never
+        tears the table (the next TableIO on this root finishes the
+        swap)."""
+        new = os.path.join(self.root, f"_{name}_rewrite")
+        df.write.mode("overwrite").parquet(os.path.join(new, "wave=0"))
+        os.replace(self.path(name), os.path.join(self.root, f"_{name}_old"))
+        self._finish_rewrite(name)
+
+    def _finish_rewrite(self, name: str) -> None:
+        """Second half of rewrite(): move the new table into place if
+        the live one is aside, then drop the aside copy. A TableIO
+        opened by another process (the live monitor) may run this
+        concurrently, so either side may find the work done."""
+        live = self.path(name)
+        if not os.path.isdir(live):
+            try:
+                os.replace(os.path.join(self.root, f"_{name}_rewrite"), live)
+            except FileNotFoundError:
+                pass
+        shutil.rmtree(os.path.join(self.root, f"_{name}_old"), ignore_errors=True)
 
     def manifest(self) -> dict | None:
         p = os.path.join(self.root, "manifest.json")
@@ -271,12 +263,8 @@ class TableIO:
     def _data_files(table_root: str) -> list[dict]:
         files = []
         for dirpath, dirnames, filenames in os.walk(table_root):
-            # skip work dirs (_temporary, .staging) but keep partition
-            # dirs whose column name is underscore-prefixed (_wp=N)
-            dirnames[:] = [
-                d for d in dirnames
-                if "=" in d or not d.startswith(("_", "."))
-            ]
+            # skip work dirs (_temporary, .staging)
+            dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
             for f in sorted(filenames):
                 if f.endswith(".parquet"):
                     fp = os.path.join(dirpath, f)
@@ -382,127 +370,6 @@ class TableIO:
             json.dump(man, fh)
         os.replace(p + ".tmp", p)
         return man
-
-
-class IcebergTableIO(TableIO):
-    """TableIO on a REAL Iceberg hadoop catalog (jar present; see
-    make_table_io). The mapping docs/SCALE.md specifies, made concrete:
-
-    * one Iceberg table per state table (frontier, seen, items, order,
-      metrics, status, consumed, frontier_base), partitioned by the
-      hidden ``_wp`` wave column → ``read(name, wave)`` partition-prunes;
-    * per-wave write = append snapshot (delta segment);
-    * per-wave overwrite = dynamic partition overwrite on ``_wp``;
-    * seen rewrite (invalidation) = createOrReplace (RTAS);
-    * the engine's amortized frontier compaction corresponds to
-      ``rewrite_data_files`` — here it materializes the pending set
-      into the ``frontier_base`` table exactly as on parquet.
-
-    The JSON run manifest (next_wave/next_seq/segments/consumed) stays
-    file-based: it is ENGINE state spanning several tables, not table
-    state — each commit() still lands after the tables' own snapshot
-    commits, so a resume sees only fully-committed waves.
-    """
-
-    def __init__(self, spark: SparkSession, root: str):
-        super().__init__(spark, root)
-        wh = os.path.join(root, "_iceberg_warehouse")
-        # Spark instantiates catalog objects once per name and Iceberg's
-        # SparkCatalog wraps a CachingCatalog — a FIXED catalog name
-        # would keep resolving against the first run_dir's warehouse for
-        # the whole session.  Deriving the name from the run root makes
-        # each run_dir its own catalog; cache-enabled=false also drops
-        # stale table metadata when a run_dir is wiped and recreated.
-        digest = hashlib.md5(os.path.abspath(root).encode()).hexdigest()[:12]
-        self.CATALOG = f"ironspark_{digest}"
-        spark.conf.set(
-            f"spark.sql.catalog.{self.CATALOG}",
-            "org.apache.iceberg.spark.SparkCatalog",
-        )
-        spark.conf.set(f"spark.sql.catalog.{self.CATALOG}.type", "hadoop")
-        spark.conf.set(f"spark.sql.catalog.{self.CATALOG}.warehouse", wh)
-        spark.conf.set(
-            f"spark.sql.catalog.{self.CATALOG}.cache-enabled", "false"
-        )
-        spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {self.CATALOG}.state")
-
-    def _ident(self, name: str) -> str:
-        return f"{self.CATALOG}.state.{name}"
-
-    def _table_exists(self, name: str) -> bool:
-        return self.spark.catalog.tableExists(self._ident(name))
-
-    @staticmethod
-    def _split_rel(relpath: str) -> tuple[str, int]:
-        name, _, wave = relpath.partition("/wave=")
-        return name, int(wave)
-
-    def _write(self, df: DataFrame, name: str, wave: int, mode: str) -> None:
-        df = df.withColumn("_wp", F.lit(int(wave)))
-        ident = self._ident(name)
-        if not self._table_exists(name):
-            df.writeTo(ident).using("iceberg").partitionedBy(
-                F.col("_wp")
-            ).create()
-        elif mode == "append":
-            df.writeTo(ident).append()
-        else:
-            df.writeTo(ident).overwritePartitions()
-
-    def write(self, df, name, wave=None, mode="overwrite"):
-        self._write(df, name, wave or 0, mode)
-
-    def write_rel(self, df, relpath, mode="overwrite"):
-        name, wave = self._split_rel(relpath)
-        self._write(df, name, wave, mode)
-
-    def read(self, name, wave=None):
-        t = self.spark.table(self._ident(name))
-        if wave is not None:
-            t = t.filter(F.col("_wp") == int(wave))
-        return t.drop("_wp")
-
-    def read_rel(self, relpaths):
-        parts = [self._split_rel(r) for r in relpaths]
-        out = None
-        for name, wave in parts:
-            df = self.read(name, wave)
-            out = df if out is None else out.unionByName(df)
-        return out
-
-    def read_all_waves(self, name):
-        if not self._table_exists(name):
-            return None
-        t = self.spark.table(self._ident(name))
-        if "wave" in t.columns:
-            return t.drop("_wp")
-        # state rows carry no wave data column (plan stability — see
-        # frontier.py note); surface the partition value as `wave`,
-        # mirroring the parquet backend's directory-derived column
-        return t.withColumnRenamed("_wp", "wave")
-
-    def exists(self, name):
-        return self._table_exists(name)
-
-    def rewrite(self, df, name):
-        df.withColumn("_wp", F.lit(0)).writeTo(
-            self._ident(name)
-        ).using("iceberg").partitionedBy(F.col("_wp")).createOrReplace()
-
-    def _table_roots(self) -> dict[str, str]:
-        """Engine-level snapshots enumerate the hadoop-catalog
-        warehouse layout (<root>/_iceberg_warehouse/state/<table>);
-        the .parquet filter in _data_files skips Iceberg's own
-        avro/json metadata, so a snapshot manifest lists exactly the
-        data files — readable by any engine without the catalog."""
-        wh = os.path.join(self.root, "_iceberg_warehouse", "state")
-        out: dict[str, str] = {}
-        if os.path.isdir(wh):
-            for d in sorted(os.listdir(wh)):
-                p = os.path.join(wh, d)
-                if os.path.isdir(p):
-                    out[d] = p
-        return out
 
 
 class CrawlEngine:
@@ -748,7 +615,7 @@ class CrawlEngine:
         by the exact confirm join, costing one join row, never
         correctness. Returns the number of seen rows removed.
         """
-        io = make_table_io(self.spark, run_dir)
+        io = TableIO(self.spark, run_dir)
         seen = io.read_all_waves("seen")
         if seen is None or not urls:
             return 0
@@ -758,7 +625,7 @@ class CrawlEngine:
         removed = seen.join(url_df, "url_canon", "left_semi").count()
         if removed:
             kept = seen.join(url_df, "url_canon", "left_anti")
-            io.rewrite(kept, "seen")  # atomic swap / Iceberg RTAS
+            io.rewrite(kept, "seen")  # atomic directory swap
         if isinstance(self._bloom, ShardedCuckoo):
             zeroed = self._bloom.delete_urls(urls)
             if zeroed:
@@ -897,7 +764,9 @@ class CrawlEngine:
         """The wave loop behind run()."""
         cfg = self.cfg
         run_dir = run_dir or tempfile.mkdtemp(prefix="ironspark_")
-        io = make_table_io(self.spark, run_dir)
+        if not resume and os.path.isdir(run_dir):
+            shutil.rmtree(run_dir)
+        io = TableIO(self.spark, run_dir)
         stats = CrawlStats(run_dir=run_dir)
         self._metrics_buf: list[dict] = []
         self._status_buf: list[dict] = []
@@ -947,8 +816,8 @@ class CrawlEngine:
                 }
             )
 
-        # Frontier state is MERGE-ON-READ (the Iceberg pattern on the
-        # TableIO seam): `segments` lists delta dirs (each wave appends
+        # Frontier state is MERGE-ON-READ (the Iceberg pattern, on
+        # TableIO): `segments` lists delta dirs (each wave appends
         # only its retry+new rows), `consumed` lists the (seq, attempt)
         # keys scheduled so far; pending = segments ⟕̸ consumed. The
         # backlog is never rewritten per wave — only on amortized
@@ -975,9 +844,6 @@ class CrawlEngine:
                 # rebuild the prune filter from the full seen table
                 self._bloom_add(io.read("seen"))
         else:
-            if os.path.isdir(run_dir):
-                shutil.rmtree(run_dir)
-            io = make_table_io(self.spark, run_dir)
             if isinstance(seeds, (list, tuple)):
                 import pandas as pd
 
@@ -1579,14 +1445,10 @@ class CrawlEngine:
             return
         import pandas as pd
 
-        from ironspark.schemas import METRICS_SCHEMA
-
         pdf = pd.DataFrame(self._metrics_buf)[[f.name for f in METRICS_SCHEMA.fields]]
         df = self.spark.createDataFrame(pdf, METRICS_SCHEMA)
-        # through the TableIO abstraction, NOT direct parquet: resume
-        # (io.exists/io.read above) and monitor.render_run go through the
-        # backend — a direct-parquet flush would be invisible to the
-        # Iceberg backend's catalog-based exists()
+        # through TableIO, NOT direct parquet: resume (io.exists/io.read
+        # above) and monitor.render_run read it back through the store
         io.write(df.coalesce(1), "metrics")
         if self._status_buf:
             sdf = self.spark.createDataFrame(
@@ -1598,16 +1460,16 @@ class CrawlEngine:
     # -- result accessors ------------------------------------------------------
 
     def items_df(self, run_dir: str) -> DataFrame | None:
-        return make_table_io(self.spark, run_dir).read_all_waves("items")
+        return TableIO(self.spark, run_dir).read_all_waves("items")
 
     def crawl_order_df(self, run_dir: str) -> DataFrame | None:
-        return make_table_io(self.spark, run_dir).read_all_waves("order")
+        return TableIO(self.spark, run_dir).read_all_waves("order")
 
     def metrics_df(self, run_dir: str) -> DataFrame | None:
-        io = make_table_io(self.spark, run_dir)
+        io = TableIO(self.spark, run_dir)
         if not io.exists("metrics"):
             return None
         return io.read("metrics")
 
     def seen_df(self, run_dir: str) -> DataFrame:
-        return make_table_io(self.spark, run_dir).read("seen")
+        return TableIO(self.spark, run_dir).read("seen")

@@ -127,9 +127,9 @@ def render_dashboard(stats, pending_count: int = 0,
 def render_run(spark, run_dir: str) -> str:
     """Dashboard for a (possibly still running) crawl directory: reads
     the flushed metrics table + manifest — the live-monitor entry point."""
-    from ironspark.engine import CrawlStats, make_table_io
+    from ironspark.engine import CrawlStats, TableIO
 
-    io = make_table_io(spark, run_dir)
+    io = TableIO(spark, run_dir)
     man = io.manifest() or {}
     stats = CrawlStats(run_dir=run_dir)
     status_counts: dict[int, int] = {}

@@ -4,7 +4,7 @@ import pandas as pd
 
 from ironspark.config import EngineConfig
 from ironspark.corpus import article_seeds, build_chain_corpus
-from ironspark.engine import CrawlEngine, make_table_io
+from ironspark.engine import CrawlEngine, TableIO
 from ironspark.schemas import PAGES_SCHEMA, SEEDS_SCHEMA
 from ironspark.spider import ArticleSpider
 
@@ -44,7 +44,7 @@ def test_redirects_resolution(spark, tmp_path):
     assert len(items) == 2  # followed the redirected chain 2 -> 1
     assert set(items["title"]) == {"Article 2", "Article 1"}
     # the miss is fetched once plus max_retry_times retries, all 404
-    status = make_table_io(spark, stats.run_dir).read("status").toPandas()
+    status = TableIO(spark, stats.run_dir).read("status").toPandas()
     assert set(status["resp_status"]) == {200, 404}
     assert status.loc[status["resp_status"] == 404, "count"].sum() == (
         cfg.max_retry_times + 1

@@ -112,9 +112,9 @@ def test_recrawl_order_is_stalest_first_per_host(cycle):
 
 def test_seen_membership_exact_after_delete_readd(spark, cycle):
     eng2, run_dir, _, _, order1, _ = cycle
-    from ironspark.engine import make_table_io
+    from ironspark.engine import TableIO
 
-    seen = make_table_io(spark, run_dir).read_all_waves("seen").toPandas()
+    seen = TableIO(spark, run_dir).read_all_waves("seen").toPandas()
     # exactly the crawled url set, each url present exactly once: the
     # invalidation removed it, the re-admission re-recorded it
     assert sorted(seen["url_canon"]) == sorted(order1["url_canon"])

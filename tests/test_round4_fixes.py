@@ -5,8 +5,8 @@
 * invalidate_seen repairs cuckoo delete collisions even when the
   invalidated url was never in the seen table (resync gated on zeroed
   entries, not on seen-table rows);
-* metrics/status flush goes through the TableIO abstraction so resume
-  and the monitor see them under ANY backend.
+* metrics/status flush goes through TableIO so resume and the monitor
+  read them back through the same store.
 """
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ import pandas as pd
 import pytest
 
 from ironspark.config import EngineConfig
-from ironspark.engine import CrawlEngine, make_table_io
+from ironspark.engine import CrawlEngine, TableIO
 from ironspark.seen import ShardedCuckoo, _hash128
 from ironspark.spider import ArticleSpider
 
@@ -84,7 +84,7 @@ def test_invalidate_absent_url_repairs_collision(spark, tmp_path):
         spark, dedup=True, seen_backend="cuckoo", bloom_capacity=1 << 12,
         seen_broadcast_max_rows=0,
     )
-    io = make_table_io(spark, run_dir)
+    io = TableIO(spark, run_dir)
     io.write(
         spark.createDataFrame([(_COLL_A,)], "url_canon string"), "seen", 0
     )
@@ -101,9 +101,10 @@ def test_invalidate_absent_url_repairs_collision(spark, tmp_path):
 
 
 def test_metrics_flush_through_tableio(spark, tmp_path, monkeypatch):
-    """ADVICE r3: _flush_metrics must land via io.write (the backend
-    abstraction), not direct parquet — otherwise the Iceberg backend's
-    catalog-based exists() never sees metrics/status on resume."""
+    """_flush_metrics must land via io.write, not direct parquet:
+    resume and monitor.render_run find metrics/status only through
+    TableIO's exists()/read(), so the flush goes through the same store
+    they read."""
     calls = []
     eng = _engine(spark, store_cookies=False)
     eng._metrics_buf = [
@@ -116,7 +117,7 @@ def test_metrics_flush_through_tableio(spark, tmp_path, monkeypatch):
         }
     ]
     eng._status_buf = [{"wave": 0, "resp_status": 200, "count": 1}]
-    io = make_table_io(spark, str(tmp_path / "m"))
+    io = TableIO(spark, str(tmp_path / "m"))
     orig_write = io.write
 
     def spy(df, name, wave=None, mode="overwrite"):

@@ -50,8 +50,7 @@ def _cfg(**kw):
     return EngineConfig(**base)
 
 
-def test_snapshot_chain_and_manifest_reads(spark, crawl_setup, tmp_path, monkeypatch):
-    monkeypatch.setenv("IRONSPARK_TABLE_BACKEND", "parquet")
+def test_snapshot_chain_and_manifest_reads(spark, crawl_setup, tmp_path):
     pages, seeds = crawl_setup
     run_dir = str(tmp_path / "run")
     eng = CrawlEngine(spark, pages, {1: LinkSpider()}, _cfg())
@@ -109,8 +108,7 @@ def test_snapshot_chain_and_manifest_reads(spark, crawl_setup, tmp_path, monkeyp
     assert set(early) <= set(files) and len(early) < len(files)
 
 
-def test_resume_strictly_from_snapshot_summary(spark, crawl_setup, tmp_path, monkeypatch):
-    monkeypatch.setenv("IRONSPARK_TABLE_BACKEND", "parquet")
+def test_resume_strictly_from_snapshot_summary(spark, crawl_setup, tmp_path):
     pages, seeds = crawl_setup
 
     full_dir = str(tmp_path / "full")

@@ -1,45 +1,19 @@
-"""TableIO backend seam (VERDICT r2 #5): the engine's state tables run
-on the parquet-dir store everywhere, and on REAL Iceberg tables when
-the runtime jar is present — same crawl results, same resume behavior.
-The iceberg param skips cleanly in jarless environments (this sandbox);
-on a cluster with iceberg-spark-runtime the same tests exercise the
-real catalog."""
+"""TableIO, the engine's state store: a full crawl and a resumed leg
+read back through it, the seen-set invalidation rewrite, and recovery
+from a crash inside that rewrite."""
 
 from __future__ import annotations
+
+import os
 
 import pandas as pd
 import pytest
 
 from ironspark.config import EngineConfig
 from ironspark.corpus import build_graph_corpus_pdf, graph_seeds
-from ironspark.engine import (
-    CrawlEngine,
-    IcebergTableIO,
-    TableIO,
-    iceberg_available,
-    make_table_io,
-)
+from ironspark.engine import CrawlEngine, TableIO
 from ironspark.schemas import PAGES_SCHEMA, SEEDS_SCHEMA
 from ironspark.spider import LinkSpider
-
-
-@pytest.fixture(params=["parquet", "iceberg"])
-def backend(request, spark, monkeypatch):
-    if request.param == "iceberg" and not iceberg_available(spark):
-        pytest.skip("iceberg-spark-runtime jar not on the classpath")
-    monkeypatch.setenv("IRONSPARK_TABLE_BACKEND", request.param)
-    return request.param
-
-
-def test_probe_selects_backend(spark, monkeypatch):
-    monkeypatch.setenv("IRONSPARK_TABLE_BACKEND", "parquet")
-    assert type(make_table_io(spark, "/tmp/tio_probe")) is TableIO
-    monkeypatch.delenv("IRONSPARK_TABLE_BACKEND")
-    io = make_table_io(spark, "/tmp/tio_probe")
-    if iceberg_available(spark):
-        assert isinstance(io, IcebergTableIO)
-    else:
-        assert type(io) is TableIO
 
 
 def _setup(spark, n=80):
@@ -50,24 +24,26 @@ def _setup(spark, n=80):
     return pages, seeds
 
 
-def test_crawl_and_resume_on_backend(spark, tmp_path, backend):
+def test_crawl_and_resume(spark, tmp_path):
     """Full crawl, then a resumed second leg with an injected seed
-    group — both legs run entirely on the selected TableIO backend."""
+    group; the resumed leg keeps the first leg's metrics history and
+    crawl order."""
     pages, seeds = _setup(spark)
     cfg = EngineConfig(dedup=True, seen_backend="bloom", max_waves=3,
                        respect_robots=False, wave_seconds=3600.0,
                        bloom_capacity=1 << 12)
-    run_dir = str(tmp_path / f"run_{backend}")
+    run_dir = str(tmp_path / "run")
     eng = CrawlEngine(spark, pages, {1: LinkSpider()}, cfg)
     stats1 = eng.run(seeds=seeds, run_dir=run_dir)
-    assert stats1.items > 0
+    assert stats1.items > 0 and stats1.waves >= 2
 
-    io = make_table_io(spark, run_dir)
+    io = TableIO(spark, run_dir)
     man = io.manifest()
     assert man is not None and man["next_wave"] == stats1.waves
     n_items_1 = eng.items_df(run_dir).count()
     n_seen_1 = eng.seen_df(run_dir).count()
     assert n_seen_1 >= n_items_1 > 0
+    assert eng.metrics_df(run_dir).count() > 0
 
     # resume with more waves allowed + a fresh staged seed group
     cfg2 = EngineConfig(dedup=True, seen_backend="bloom", max_waves=10,
@@ -80,21 +56,26 @@ def test_crawl_and_resume_on_backend(spark, tmp_path, backend):
         SEEDS_SCHEMA,
     )
     eng2 = CrawlEngine(spark, pages, {1: LinkSpider()}, cfg2)
-    eng2.run(run_dir=run_dir, resume=True, staged_seeds=[grp])
+    stats2 = eng2.run(run_dir=run_dir, resume=True, staged_seeds=[grp])
+    assert stats2.waves > stats1.waves and stats2.scheduled > 0
     assert eng2.items_df(run_dir).count() >= n_items_1
     assert eng2.seen_df(run_dir).count() >= n_seen_1
+    # the metrics flush of the resumed leg keeps every wave of the first
+    m2 = eng2.metrics_df(run_dir).toPandas()
+    assert set(m2["wave"]) >= set(range(stats1.waves))
     # seq numbers never reused across the resume boundary (a retry may
     # re-schedule its seq, but always in a distinct wave)
-    order = eng2.crawl_order_df(run_dir).toPandas()
-    assert not order.duplicated(["seq", "wave"]).any()
+    order = eng2.crawl_order_df(run_dir)
+    assert order.count() == stats1.scheduled + stats2.scheduled
+    assert not order.toPandas().duplicated(["seq", "wave"]).any()
 
 
-def test_invalidation_rewrite_on_backend(spark, tmp_path, backend):
+def test_invalidation_rewrite(spark, tmp_path):
     pages, seeds = _setup(spark)
     cfg = EngineConfig(dedup=True, seen_backend="cuckoo", max_waves=3,
                        respect_robots=False, wave_seconds=3600.0,
                        bloom_capacity=1 << 12)
-    run_dir = str(tmp_path / f"inv_{backend}")
+    run_dir = str(tmp_path / "inv")
     eng = CrawlEngine(spark, pages, {1: LinkSpider()}, cfg)
     eng.run(seeds=seeds, run_dir=run_dir)
     seen = [r.url_canon for r in eng.seen_df(run_dir).collect()]
@@ -102,3 +83,38 @@ def test_invalidation_rewrite_on_backend(spark, tmp_path, backend):
     assert eng.invalidate_seen(run_dir, [victim]) == 1
     left = {r.url_canon for r in eng.seen_df(run_dir).collect()}
     assert victim not in left and len(left) == len(seen) - 1
+
+
+def test_rewrite_crash_recovers_on_open(spark, tmp_path, monkeypatch):
+    """A crash after the live seen table is moved aside, before the
+    rewritten one is in place, loses nothing: the next TableIO on the
+    run dir finishes the swap."""
+    run_dir = str(tmp_path / "crash")
+    io = TableIO(spark, run_dir)
+    urls = [f"http://h{i % 3}.example.com/p/{i}" for i in range(12)]
+    for wave in (0, 1):
+        io.write(
+            spark.createDataFrame([(u,) for u in urls[wave::2]], "url_canon string"),
+            "seen", wave,
+        )
+    victims = urls[:3]
+    eng = CrawlEngine(
+        spark, None, {1: LinkSpider()}, EngineConfig(seen_backend="exact")
+    )
+
+    real_replace = os.replace
+
+    def crash(src, dst):
+        if dst == io.path("seen"):
+            raise OSError("crash before the rewritten table is in place")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", crash)
+    with pytest.raises(OSError, match="crash before"):
+        eng.invalidate_seen(run_dir, victims)
+    monkeypatch.undo()
+
+    reopened = TableIO(spark, run_dir)
+    got = {r.url_canon for r in reopened.read("seen").collect()}
+    assert got == set(urls) - set(victims)
+    assert not os.path.exists(os.path.join(run_dir, "_seen_old"))
