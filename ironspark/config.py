@@ -45,14 +45,18 @@ class EngineConfig:
     # URL-seen backend: "exact" (anti-join) | "bloom" (partitioned Bloom
     # prune + exact confirm) | "cuckoo" (deletable entries, 4 shards).
     seen_backend: str = "exact"
-    # Per-SLICE capacity: each wave's new urls build one fixed-geometry
-    # delta slice (broadcast once, never re-sent); size this so a
-    # slice's bitset stays broadcast-friendly (~1.2 MB per 2^20 at 1%
-    # false positives).
+    # Per-SLICE capacity of the prune filter. The engine builds the
+    # filter at the first "shuffle_hash" probe (the only regime that
+    # reads it), as one base slice from the whole seen table; after
+    # that each seen append adds one fixed-geometry delta slice
+    # (broadcast once, never re-sent). Size this so a slice's bitset
+    # stays broadcast-friendly (~1.2 MB per 2^20 at 1% false
+    # positives). A crawl that never reaches shuffle_hash builds none.
     bloom_capacity: int = 1 << 20
     # Live slices before OR-compaction into one (stale broadcasts are
     # released on compaction) — bounds both probe cost and executor
-    # memory at max_slices + 1 bitsets.
+    # memory at max_slices + 1 bitsets, from the first shuffle_hash
+    # probe on.
     bloom_max_slices: int = 8
     # Thresholds of the exact-confirm anti-join regime, which the
     # engine resolves per wave from its own counters (the seen side
@@ -86,15 +90,14 @@ class EngineConfig:
     # -- loop termination (src/config.rs:51) ----------------------------------
     max_waves: int = 1000
 
-    # -- continuous crawl: freshness recrawl (ours; north-rule cuckoo
-    # delete path exercised end-to-end) --------------------------------------
+    # -- continuous crawl: freshness recrawl (ours) ---------------------------
     # When set, the engine does NOT shut down at frontier-empty:
     # it ticks frontier.recrawl_due over the fetch history (order
-    # table), clears the due URLs' seen membership (exact table
-    # rewrite + cuckoo fingerprint delete + collision resync) and
-    # re-admits them stalest-first under recrawl_per_host_budget —
-    # the crawl→age→recrawl cycle, bounded by max_waves. None = off
-    # (single-pass crawl, the reference's behavior).
+    # table) and re-admits the due URLs straight into the frontier,
+    # stalest-first under recrawl_per_host_budget — the
+    # crawl→age→recrawl cycle, bounded by max_waves. Seen membership
+    # is left as it is (due URLs never meet the seen anti-join). None
+    # = off (single-pass crawl, the reference's behavior).
     recrawl_interval_s: float | None = None
     recrawl_per_host_budget: int = 5
 

@@ -527,9 +527,10 @@ class CrawlEngine:
         prune's tag stage (an Arrow round-trip over every candidate
         url) + persist + two-branch union is pure per-wave overhead —
         measured ~1.7s/wave flat at 400k pages — and is skipped. The
-        prune filter itself is still BUILT every wave (tail task), so
-        crossing the regime boundary mid-crawl starts with warm
-        slices.
+        filter is built here, once per run(), from the whole ``seen``
+        table at the first shuffle_hash probe; from then on every seen
+        append also adds its delta (_bloom_add). A crawl that never
+        leaves broadcast/flip builds no filter.
 
         ``tagged`` is persisted: the definite-new / maybe-seen split is a
         UNION of two filters over it, and without the cache the whole
@@ -538,12 +539,15 @@ class CrawlEngine:
         phase). Released in the wave's unpersist sweep.
         """
         mode = self._resolve_seen_join(seen_rows, wave_outlinks)
-        if (
-            mode == "shuffle_hash"
-            and self.cfg.seen_backend in ("bloom", "cuckoo")
-            and self._bloom is not None
-            and self._bloom.n_slices
-        ):
+        if mode == "shuffle_hash" and self.cfg.seen_backend != "exact":
+            if self._bloom is None:
+                cap = self.cfg.bloom_capacity
+                self._bloom = (
+                    ShardedBloom(self.spark, cap, max_slices=self.cfg.bloom_max_slices)
+                    if self.cfg.seen_backend == "bloom"
+                    else ShardedCuckoo(self.spark, cap)
+                )
+                self._bloom_add(seen)
             seen = seen.hint("shuffle_hash")
             maybe_seen = self._bloom.maybe_seen_udf()
             tagged = candidates.withColumn(
@@ -584,23 +588,17 @@ class CrawlEngine:
         return candidates.join(seen, "url_canon", "left_anti")
 
     def _bloom_add(self, new_urls: DataFrame) -> None:
-        """Add this wave's new urls to the prune filter. bloom: ONE
+        """Add urls just recorded as seen to the prune filter; a no-op
+        while no filter exists (_filter_new builds it). bloom: ONE
         delta slice, O(new) distributed build, one fixed-size broadcast
-        (ShardedBloom). cuckoo: driver-side fingerprint inserts into
+        (ShardedBloom). cuckoo: executor-built fingerprint tables in
         hash-routed shards — the DELETABLE variant for re-crawl
         invalidation (see invalidate_seen)."""
-        if self.cfg.seen_backend == "bloom":
-            if self._bloom is None:
-                self._bloom = ShardedBloom(
-                    self.spark,
-                    self.cfg.bloom_capacity,
-                    max_slices=self.cfg.bloom_max_slices,
-                )
-            self._bloom.add_delta(new_urls.select("url_canon"), "url_canon")
-        elif self.cfg.seen_backend == "cuckoo":
-            if self._bloom is None:
-                self._bloom = ShardedCuckoo(self.spark, self.cfg.bloom_capacity)
-            self._bloom.add_df(new_urls.select("url_canon"), "url_canon")
+        urls = new_urls.select("url_canon")
+        if isinstance(self._bloom, ShardedBloom):
+            self._bloom.add_delta(urls, "url_canon")
+        elif self._bloom is not None:
+            self._bloom.add_df(urls, "url_canon")
 
     def invalidate_seen(self, run_dir: str, urls: list[str]) -> int:
         """Re-crawl invalidation: remove urls from the seen set so they
@@ -640,32 +638,30 @@ class CrawlEngine:
         return removed
 
     def _admit_recrawls(
-        self, io, run_dir: str, wave: int, next_seq: int, segments: list[str]
+        self, io, wave: int, next_seq: int, segments: list[str]
     ) -> int:
         """Frontier-empty freshness tick — the crawl→age→recrawl
         composition of a CONTINUOUS crawl (the reference crawls once
-        and stops; the north rule's deletable cuckoo path exists for
-        exactly this cycle).
+        and stops).
 
         Reads the fetch history (order sink: one row per scheduled
         fetch with host + fetch_ts), selects due URLs stalest-first
         under cfg.recrawl_per_host_budget (frontier.recrawl_due — the
-        same per-host politeness shape as first-visit scheduling),
-        removes them from the exact seen table AND the prune structures
-        (invalidate_seen: atomic table rewrite + cuckoo fingerprint
-        delete + collision resync), then appends them to the live
-        frontier segment with fresh seq numbers in global stalest-first
-        order and re-records them as seen (they are enqueued again, so
-        later-discovered duplicates must still dedup). Returns the seq
+        same per-host politeness shape as first-visit scheduling), and
+        appends them to the live frontier segment with fresh seq
+        numbers in global stalest-first order. The due rows go straight
+        into the frontier and never meet the seen anti-join, so seen
+        membership needs no invalidation: a due url is normally still
+        seen, and only the ones that are not (removed earlier through
+        invalidate_seen) are appended to seen and to the prune filter,
+        so later-discovered duplicates still dedup. Returns the seq
         numbers consumed (0 = nothing due → idle shutdown proceeds).
 
         Scale shape: the due set is budget-bounded (hosts ×
-        recrawl_per_host_budget); selection, owner re-join, and seq
-        assignment all stay distributed — only the invalidation batch
-        is collected, because the cuckoo fingerprint delete is
-        driver-side by design (deletions rare; seen.py). The history
-        scan is one hash-agg per tick, and ticks only fire at
-        frontier-empty, never per wave.
+        recrawl_per_host_budget); selection, owner re-join, seq
+        assignment and the seen anti-join all stay distributed and
+        nothing is collected. The history scan is one hash-agg per
+        tick, and ticks only fire at frontier-empty, never per wave.
         """
         cfg = self.cfg
         history = io.read_all_waves("order")
@@ -703,15 +699,15 @@ class CrawlEngine:
         if n == 0:
             return 0
         inj = _finish_frontier(f.drop("_neg_age")).persist()
-        urls = [r["url_canon"] for r in inj.select("url_canon").collect()]
-        # clear membership FIRST (exact rewrite + cuckoo delete +
-        # resync), then re-record the re-admitted urls as seen
-        self.invalidate_seen(run_dir, urls)
         io.write_rel(inj, segments[-1], mode="append")
         if cfg.dedup:
-            io.write(inj.select("url_canon"), "seen", wave, mode="append")
-            if cfg.seen_backend in ("bloom", "cuckoo"):
-                self._bloom_add(inj)
+            # persisted: a filter add would otherwise re-run the O(seen) join
+            unseen = inj.select("url_canon").join(
+                io.read_all_waves("seen"), "url_canon", "left_anti"
+            ).persist()
+            io.write(unseen, "seen", wave, mode="append")
+            self._bloom_add(unseen)
+            unseen.unpersist()
         inj.unpersist()
         return n
 
@@ -768,6 +764,10 @@ class CrawlEngine:
             shutil.rmtree(run_dir)
         io = TableIO(self.spark, run_dir)
         stats = CrawlStats(run_dir=run_dir)
+        # one filter per run(): an earlier run's filter misses this run's seeds
+        if self._bloom is not None:
+            self._bloom.unpersist_all()
+        self._bloom = None
         self._metrics_buf: list[dict] = []
         self._status_buf: list[dict] = []
         t_start = time.monotonic()
@@ -840,9 +840,6 @@ class CrawlEngine:
                 self._status_buf = [
                     r.asDict() for r in io.read("status").collect()
                 ]
-            if cfg.seen_backend in ("bloom", "cuckoo") and cfg.dedup:
-                # rebuild the prune filter from the full seen table
-                self._bloom_add(io.read("seen"))
         else:
             if isinstance(seeds, (list, tuple)):
                 import pandas as pd
@@ -871,8 +868,6 @@ class CrawlEngine:
             consumed = []
             consumed_rows = 0
             _commit()
-            if cfg.seen_backend in ("bloom", "cuckoo") and cfg.dedup:
-                self._bloom_add(front0)
 
         def pending_view() -> DataFrame:
             """Merge-on-read pending set: delta segments minus the
@@ -899,8 +894,9 @@ class CrawlEngine:
         _aqe(False)  # wave-loop steady state (run() restores it)
         pending_count = None  # unknown -> probe once
         # handle to the PREVIOUS wave's overlapped durable tail
-        # (frontier segment + seen delta + bloom slice, ONE chained
-        # io_pool task); every seen-set consumer awaits it first.
+        # (frontier segment + seen delta, plus the delta's prune slice
+        # once _filter_new has built a filter; ONE chained io_pool
+        # task); every seen-set consumer awaits it first.
         # frontier_done gates only the frontier-segment stage, for
         # readers that need the DIRECTORY but not the seen set.
         seen_fut = None
@@ -981,14 +977,12 @@ class CrawlEngine:
                     continue  # same-wave re-tick: activate the next group
                 if cfg.recrawl_interval_s is not None:
                     # continuous crawl: at the frontier-empty point,
-                    # tick the freshness scheduler — due URLs clear
-                    # their seen fingerprints and re-enter the frontier
-                    # stalest-first (bounded overall by max_waves)
+                    # tick the freshness scheduler — due URLs re-enter
+                    # the frontier stalest-first (bounded overall by
+                    # max_waves)
                     _await_seen()
                     _await_frontier()
-                    n_re = self._admit_recrawls(
-                        io, run_dir, wave, next_seq, segments
-                    )
+                    n_re = self._admit_recrawls(io, wave, next_seq, segments)
                     if n_re:
                         next_seq += n_re
                         pending_count = None
@@ -1166,7 +1160,7 @@ class CrawlEngine:
             )
             if cfg.dedup:
                 # first point this wave that needs the seen set: await
-                # the overlapped write+build, then list the table dirs
+                # the overlapped seen write, then list the table dirs
                 _await_seen()
                 tr.mark("await-seen")
                 # next_seq == unique urls enqueued so far == seen rows
@@ -1204,7 +1198,8 @@ class CrawlEngine:
             # and the segment/consumed state resets for free.
             #
             # The ENTIRE durable tail — frontier segment write, seen
-            # delta write, bloom/cuckoo slice build — is ONE chained
+            # delta write, and the delta's bloom/cuckoo slice once a
+            # shuffle_hash probe has built the filter — is ONE chained
             # task on the I/O pool: it overlaps the next wave's
             # schedule + fetch + parse. frontier_done gates readers of
             # the segment DIRECTORY (pending_view/admission/compaction);
@@ -1244,9 +1239,9 @@ class CrawlEngine:
                         fn.filter(F.col("attempt") == 0).select("url_canon"),
                         "seen", w + 1,
                     )
-                    # build the delta slice from the url-only seen
-                    # parquet just written — a fraction of the frontier
-                    # dir's bytes
+                    # once a filter exists, add the delta slice from the
+                    # url-only seen parquet just written — a fraction of
+                    # the frontier dir's bytes
                     self._bloom_add(io.read("seen", w + 1))
 
             # caches the tail task reads — released once it lands. The
@@ -1393,7 +1388,7 @@ class CrawlEngine:
             stats.waves = wave
             if wave % cfg.checkpoint_every == 0:
                 # a manifest advancing next_wave implies the wave's seen
-                # slice is durable — await the overlapped write+build
+                # slice is durable — await the overlapped tail
                 _await_seen()
                 self._flush_metrics(io)
                 _commit()

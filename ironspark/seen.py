@@ -257,7 +257,7 @@ class ShardedBloom:
     The naive scale path re-broadcasts the full merged bitset every wave
     — O(total-seen-geometry) bytes on the wire per wave, and superseded
     broadcasts pile up on driver and executors (a slow leak across
-    hundreds of waves). Instead each wave's NEW urls build one
+    hundreds of waves). Instead each batch of NEW urls builds one
     fixed-geometry delta slice that is broadcast ONCE and never re-sent;
     membership is the OR over the live slices (hashes computed once per
     batch, shared across slices). When more than ``max_slices``
@@ -395,7 +395,7 @@ class ShardedCuckoo:
     fingerprints delete cleanly, keeping the prune tight across
     invalidations.
 
-    Scale shape mirrors ShardedBloom: each wave's new urls become ONE
+    Scale shape mirrors ShardedBloom: each batch of new urls becomes ONE
     immutable slice — K fixed-geometry shard tables built EXECUTOR-side
     (`add_df` repartitions the slim url column by shard id and each
     shard's table is assembled in one task; the driver receives K

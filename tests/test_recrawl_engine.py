@@ -1,13 +1,13 @@
 """Continuous-crawl composition: crawl → age → recrawl (VERDICT r5 #1).
 
-The individually-oracled pieces — frontier.recrawl_due (stalest-first
-per-host selection), CrawlEngine.invalidate_seen (exact seen rewrite +
-cuckoo fingerprint delete + collision resync), ShardedCuckoo
-delete/re-add — composed through the engine wave loop: a crawl
-completes, the clock advances past cfg.recrawl_interval_s, a resumed
-run re-admits the stale URLs stalest-first under the recrawl budget,
-re-fetches them, and seen membership stays exact across the whole
-delete/re-add cycle.
+frontier.recrawl_due (stalest-first per-host selection) composed
+through the engine wave loop: a crawl completes, the clock advances
+past cfg.recrawl_interval_s, a resumed run re-admits the stale URLs
+stalest-first under the recrawl budget and re-fetches them. The due
+URLs go straight into the frontier, so seen membership is left as it
+was: the seen table keeps each crawled URL exactly once, and the
+cuckoo prune the resumed run builds at its first shuffle_hash probe
+answers "maybe seen" for every one of them.
 """
 
 from datetime import datetime, timedelta
@@ -56,6 +56,7 @@ def _build(spark, clock, **over):
         recrawl_interval_s=3600.0,
         recrawl_per_host_budget=2,
         max_waves=40,
+        seen_broadcast_max_rows=0,  # shuffle regime: the prune is probed
         extra={"clock": clock},
     )
     kw.update(over)
@@ -115,8 +116,8 @@ def test_seen_membership_exact_after_delete_readd(spark, cycle):
     from ironspark.engine import TableIO
 
     seen = TableIO(spark, run_dir).read_all_waves("seen").toPandas()
-    # exactly the crawled url set, each url present exactly once: the
-    # invalidation removed it, the re-admission re-recorded it
+    # exactly the crawled url set, each url present exactly once: a
+    # re-admitted url that is still seen is not appended again
     assert sorted(seen["url_canon"]) == sorted(order1["url_canon"])
 
 
@@ -133,7 +134,7 @@ def test_cuckoo_prune_consistent_after_cycle(spark, cycle):
     got = urls.withColumn(
         "m", eng2._bloom.maybe_seen_udf()(F.col("url_canon"))
     ).toPandas()
-    assert got["m"].all()  # no false negatives after delete/re-add
+    assert got["m"].all()  # no false negatives after the recrawl cycle
 
 
 def test_recrawl_off_by_default(spark, tmp_path):
