@@ -8,14 +8,15 @@ gained is determinism (exact crawl-order replay) and snapshot
 checkpointing (every wave commit is a resumable snapshot) — SURVEY.md
 §3.4.
 
-One wave = politeness-select → request hooks → fetch (corpus join) →
-status filter + retry union → response hooks → parse (mapInPandas) →
-split items/outlinks → canonicalize → seen-dedup → seq-extend →
-frontier append. State tables (frontier, seen, items, crawl order,
-metrics) are materialized per wave under the checkpoint dir by
-TableIO — parquet directories with a JSON manifest and an
-Iceberg-shaped snapshot chain. Idle shutdown (monitor.rs:62-72) =
-frontier-empty probe.
+``CrawlEngine._crawl`` is that loop: ``_start`` (seed or resume), then
+per wave ``_admit`` (staged seeds, freshness tick; None = idle
+shutdown, monitor.rs:62-72) → ``_schedule`` → ``_fetch_parse`` →
+``_items`` → ``_dedup_enqueue`` → ``_tail`` → ``_advance_frontier`` →
+``_commit_wave``, each a method over one ``RunState`` (the
+loop-carried state, the overlapped tail and the wave's one cache
+list). State tables (frontier, seen, items, crawl order, metrics) are
+materialized per wave by TableIO — parquet directories with a JSON
+manifest and an Iceberg-shaped snapshot chain.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ import tempfile
 import threading
 import time
 from datetime import datetime, timezone
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -39,7 +40,6 @@ from ironspark.fetch import fetch_from_corpus, http_fetch_stage
 from ironspark.frontier import (
     _FRONTIER_COLS,
     _finish_frontier,
-    drain_seq_caches,
     enqueue_outlinks,
     prepare_candidates,
     recrawl_due,
@@ -77,24 +77,14 @@ _AQE_MIN_PENDING = 65_536
 # makes this a no-op at petabyte corpus sizes.
 _SCAN_TASKS_PER_CORE = 4
 
+_WAVE_TOTALS = (
+    "scheduled", "fetched", "failed", "retried", "items", "outlinks", "dropped",
+)
+
 # session settings the wave loop overrides; run() restores them on exit
 _RUN_CONFS = ("spark.sql.adaptive.enabled", "spark.sql.files.maxPartitionBytes")
 
 _TRACE = os.environ.get("IRONSPARK_TRACE", "") not in ("", "0")
-
-
-class _Tracer:
-    """Phase wall-clock tracing (enable with IRONSPARK_TRACE=1)."""
-
-    def __init__(self, wave: int):
-        self.wave = wave
-        self.t = time.monotonic()
-
-    def mark(self, phase: str) -> None:
-        if _TRACE:
-            now = time.monotonic()
-            print(f"[trace] wave={self.wave} {phase}: {now - self.t:.2f}s", flush=True)
-            self.t = now
 
 
 @dataclass
@@ -185,12 +175,17 @@ class TableIO:
     def read(self, name: str, wave: int | None = None) -> DataFrame:
         return self._reader(name).parquet(self.path(name, wave))
 
-    def read_all_waves(self, name: str) -> DataFrame | None:
+    def read_all_waves(self, name: str, upto: int | None = None) -> DataFrame | None:
+        """Every ``wave=N`` slice of a table; with ``upto``, only N <= upto."""
         base = os.path.join(self.root, name)
         if not os.path.isdir(base) or not os.listdir(base):
             return None
         return self._reader(name).option("basePath", base).parquet(
-            *[os.path.join(base, d) for d in sorted(os.listdir(base)) if d.startswith("wave=")]
+            *[
+                os.path.join(base, d)
+                for d in sorted(os.listdir(base))
+                if d.startswith("wave=") and (upto is None or int(d[5:]) <= upto)
+            ]
         )
 
     def exists(self, name: str) -> bool:
@@ -372,6 +367,104 @@ class TableIO:
         return man
 
 
+@dataclass
+class RunState:
+    """Loop-carried state of one ``run()``, passed to every wave phase.
+
+    Frontier state is MERGE-ON-READ (the Iceberg pattern, on TableIO):
+    ``segments`` lists delta dirs (each wave appends only its retry+new
+    rows), ``consumed`` the (seq, attempt) tombstone dirs of rows
+    scheduled since the last compaction; pending = segments ⟕̸ consumed.
+
+    Every DataFrame a wave persists goes into ``caches``; the tail phase
+    moves the list to ``tail_release``, unpersisted once that wave's
+    overlapped tail has landed (await_tail).
+    """
+
+    io: TableIO
+    pool: ThreadPoolExecutor | None = None  # runs the overlapped writes
+    stats: CrawlStats = field(default_factory=CrawlStats)
+    staged: list = field(default_factory=list)  # seed groups not yet admitted
+    aqe: bool = False  # the session had AQE on (see CrawlEngine._start)
+    wave: int = 0
+    next_seq: int = 0
+    segments: list = field(default_factory=list)
+    consumed: list = field(default_factory=list)
+    consumed_rows: int = 0
+    pending_count: int | None = None  # None = unknown, probe once
+    handoff: DataFrame | None = None  # live frame of the next pending set
+    handoff_streak: int = 0
+    writes: list = field(default_factory=list)  # this wave's sink futures
+    # the PREVIOUS wave's overlapped tail (CrawlEngine._tail) and the
+    # gate of its frontier-segment stage
+    tail: Future | None = None
+    tail_release: list = field(default_factory=list)
+    frontier_done: threading.Event | None = None
+    closed_spiders: set = field(default_factory=set)
+    # (wave, partition) metric rows and the status histogram, buffered
+    # driver-side and flushed at commits
+    metrics_buf: list = field(default_factory=list)
+    status_buf: list = field(default_factory=list)
+    caches: list = field(default_factory=list)
+    t_start: float = field(default_factory=time.monotonic)
+    t_wave: float = 0.0  # the wave's start
+    t_mark: float = 0.0  # the end of its last traced phase
+
+    def mark(self, phase: str) -> None:
+        """Phase wall-clock tracing (enable with IRONSPARK_TRACE=1)."""
+        if _TRACE:
+            now = time.monotonic()
+            print(f"[trace] wave={self.wave} {phase}: {now - self.t_mark:.2f}s", flush=True)
+            self.t_mark = now
+
+    def manifest(self, **extra) -> dict:
+        return {
+            "next_wave": self.wave,
+            "next_seq": int(self.next_seq),
+            "deduped": int(self.stats.deduped),
+            "segments": self.segments,
+            "consumed": self.consumed,
+            "consumed_rows": self.consumed_rows,
+            **extra,
+        }
+
+    def pending_view(self) -> DataFrame:
+        """Merge-on-read pending set: delta segments minus the
+        scheduled (seq, attempt) keys since the last compaction."""
+        df = self.io.read_rel(self.segments)
+        if self.consumed:
+            keys = self.io.read_rel(self.consumed).select("seq", "attempt")
+            df = df.join(keys, ["seq", "attempt"], "left_anti")
+        return df
+
+    def seen(self) -> DataFrame | None:
+        """The append-only seen set as of this wave; later slices are
+        from a tail no manifest committed (resume), and are skipped."""
+        return self.io.read_all_waves("seen", upto=self.wave)
+
+    def write_async(self, df: DataFrame, name: str) -> None:
+        """Overlapped write of this wave's slice of a sink table."""
+        self.writes.append(self.pool.submit(self.io.write, df, name, self.wave))
+
+    def drain_writes(self) -> None:
+        for fut in self.writes:
+            fut.result()
+        self.writes = []
+
+    def await_frontier(self) -> None:
+        if self.frontier_done is not None:
+            self.frontier_done.wait()
+
+    def await_tail(self) -> None:
+        """Wait for the previous wave's tail, then release its caches."""
+        if self.tail is not None:
+            self.tail.result()
+            self.tail = None
+            for df in self.tail_release:
+                df.unpersist()
+            self.tail_release = []
+
+
 class CrawlEngine:
     """The public engine API (reference Engine::new, src/engine.rs:39-82)."""
 
@@ -404,8 +497,6 @@ class CrawlEngine:
         # (bounded by hosts-with-cookies; shipped per wave as a
         # broadcast join).
         self._cookie_jar: dict[str, str] = {}
-        # per-wave persisted intermediates, released at wave end
-        self._wave_caches: list[DataFrame] = []
         self._bloom: ShardedBloom | ShardedCuckoo | None = None
         # column-pruned corpus view; the scan carries only what the
         # fetch join needs (url, html, warc_ts) — Catalyst would prune
@@ -497,28 +588,20 @@ class CrawlEngine:
         which would silently flip strategies mid-crawl and re-plan.
         """
         if seen_rows is None or seen_rows > self.cfg.seen_broadcast_max_rows:
-            mode = "shuffle_hash"
-        elif (
+            return "shuffle_hash"
+        if (
             wave_outlinks is not None
             and seen_rows > self.cfg.seen_flip_ratio * wave_outlinks
         ):
-            mode = "flip"
-        else:
-            mode = "broadcast"
-        # recorded per wave into CrawlStats (the main wave dedup is the
-        # last resolution before the wave's stats append) — the regime
-        # transition log the scaling artifact discloses
-        self._last_seen_join = mode
-        return mode
+            return "flip"
+        return "broadcast"
 
     def _filter_new(
-        self,
-        candidates: DataFrame,
-        seen: DataFrame,
-        seen_rows: int | None = None,
-        wave_outlinks: int | None = None,
+        self, candidates: DataFrame, seen: DataFrame, mode: str, caches: list
     ) -> DataFrame:
-        """Exact anti-join; Bloom/cuckoo-pruned in the shuffle regime.
+        """Exact anti-join planned for the regime ``mode``
+        (_resolve_seen_join); Bloom/cuckoo-pruned in the shuffle regime.
+        Frames it persists go into ``caches``.
 
         The prune exists FOR the shuffle regime: it keeps definitely-
         new rows out of the candidate shuffle, which is the join's
@@ -529,16 +612,15 @@ class CrawlEngine:
         measured ~1.7s/wave flat at 400k pages — and is skipped. The
         filter is built here, once per run(), from the whole ``seen``
         table at the first shuffle_hash probe; from then on every seen
-        append also adds its delta (_bloom_add). A crawl that never
+        append also adds its delta (_append_seen). A crawl that never
         leaves broadcast/flip builds no filter.
 
         ``tagged`` is persisted: the definite-new / maybe-seen split is a
         UNION of two filters over it, and without the cache the whole
         upstream candidate chain (dedup groupBy + Bloom UDF) executed
         once per branch inside the same job (measured ~2x the dedup
-        phase). Released in the wave's unpersist sweep.
+        phase).
         """
-        mode = self._resolve_seen_join(seen_rows, wave_outlinks)
         if mode == "shuffle_hash" and self.cfg.seen_backend != "exact":
             if self._bloom is None:
                 cap = self.cfg.bloom_capacity
@@ -553,7 +635,7 @@ class CrawlEngine:
             tagged = candidates.withColumn(
                 "_maybe", maybe_seen(F.col("url_canon"))
             ).persist()
-            self._wave_caches.append(tagged)
+            caches.append(tagged)
             definite_new = tagged.filter(~F.col("_maybe")).drop("_maybe")
             confirm = (
                 tagged.filter(F.col("_maybe"))
@@ -569,7 +651,7 @@ class CrawlEngine:
             # parallel — nothing about this plan grows a serial cost
             # with crawl progress.
             cand = candidates.persist()
-            self._wave_caches.append(cand)
+            caches.append(cand)
             dupes = seen.join(
                 F.broadcast(cand.select("url_canon")),
                 "url_canon",
@@ -599,6 +681,13 @@ class CrawlEngine:
             self._bloom.add_delta(urls, "url_canon")
         elif self._bloom is not None:
             self._bloom.add_df(urls, "url_canon")
+
+    def _append_seen(
+        self, io: TableIO, urls: DataFrame, wave: int, mode: str = "append"
+    ) -> None:
+        """Record urls in the wave's seen slice, then in the prune filter."""
+        io.write(urls, "seen", wave, mode=mode)
+        self._bloom_add(urls)
 
     def invalidate_seen(self, run_dir: str, urls: list[str]) -> int:
         """Re-crawl invalidation: remove urls from the seen set so they
@@ -637,12 +726,221 @@ class CrawlEngine:
                 self._bloom.resync_after_delete(io.read("seen"))
         return removed
 
-    def _admit_recrawls(
-        self, io, wave: int, next_seq: int, segments: list[str]
-    ) -> int:
+    # -- run ------------------------------------------------------------------
+
+    def run(
+        self,
+        seeds=None,
+        run_dir: str | None = None,
+        resume: bool = False,
+        staged_seeds: list | None = None,
+    ) -> CrawlStats:
+        """Run the crawl to frontier-empty (or max_waves).
+
+        seeds: DataFrame/list seeded at wave 0. staged_seeds: optional
+        list of further seed DataFrames ("pending spiders", reference
+        src/spider/manager.rs:239-279) — one group is activated per
+        wave, but only while the frontier holds no more than
+        cfg.scheduler_holding_threshold pending requests (admission
+        control F4, SCHEDULER_HOLDING_THRESOLD src/spider/manager.rs:34-36).
+
+        The session settings the wave loop overrides (AQE, scan split
+        size) are restored and the I/O pool is shut down on every exit,
+        including a crawl that raises.
+        """
+        conf = self.spark.conf
+        saved = {k: conf.get(k, None) for k in _RUN_CONFS}
+        # runs the wave's overlapped sink writes and durable tail
+        io_pool = ThreadPoolExecutor(max_workers=3)
+        try:
+            return self._crawl(
+                self._start(io_pool, seeds, run_dir, resume, staged_seeds)
+            )
+        finally:
+            io_pool.shutdown(wait=True, cancel_futures=True)
+            for k, v in saved.items():
+                if v is None:
+                    conf.unset(k)
+                else:
+                    conf.set(k, v)
+
+    def _crawl(self, st: RunState) -> CrawlStats:
+        """The wave loop behind run(): one method call per phase."""
+        while st.wave < self.cfg.max_waves:
+            pending = self._admit(st)
+            if pending is None:
+                break  # idle shutdown
+            st.t_wave = st.t_mark = time.monotonic()
+            selected, scheduled = self._schedule(st, pending)
+            parse_out, mrows, ps_bounds = self._fetch_parse(st, scheduled)
+            n = {k: sum(r[k] for r in mrows) for k in _WAVE_TOTALS}
+            n_unrouted = self._items(st, parse_out)
+            new_front, n_new = self._dedup_enqueue(
+                st, parse_out, n["outlinks"], ps_bounds
+            )
+            front_next = self._tail(
+                st, scheduled, parse_out, new_front, n["retried"], n_new
+            )
+            self._advance_frontier(
+                st, selected, front_next, n["scheduled"], n["retried"], n_new
+            )
+            self._commit_wave(st, mrows, n, n_new, n_unrouted)
+        self._shutdown(st)
+        return st.stats
+
+    # -- wave phases ------------------------------------------------------
+
+    def _start(
+        self,
+        io_pool: ThreadPoolExecutor,
+        seeds,
+        run_dir: str | None,
+        resume: bool,
+        staged_seeds: list | None,
+    ) -> RunState:
+        """Start/resume phase: restore the manifest, or seed and commit wave 0."""
+        run_dir = run_dir or tempfile.mkdtemp(prefix="ironspark_")
+        if not resume and os.path.isdir(run_dir):
+            shutil.rmtree(run_dir)
+        io = TableIO(self.spark, run_dir)
+        # one filter per run(): an earlier run's filter misses this run's seeds
+        if self._bloom is not None:
+            self._bloom.unpersist_all()
+        self._bloom = None
+        # Selective AQE: adaptive execution turns EVERY action into a
+        # chain of sequential stage-jobs with a driver re-optimization
+        # between each. For the one heavy job per wave (fetch + Arrow
+        # parse) that is what we want at scale — runtime skew-join
+        # splitting and partition coalescing. For the wave's many tiny
+        # bookkeeping actions (seq counts, sink writes, probes) the
+        # re-optimization rounds ARE the cost: measured ~1.4s for a
+        # count whose task time is ~50ms, flat across core counts —
+        # i.e. pure driver-serial floor, the 2v8 scaling drag
+        # (BENCH.md round-4). So AQE is OFF as the wave-loop steady
+        # state and flipped on only around the heavy collect.
+        st = RunState(
+            io,
+            io_pool,
+            CrawlStats(run_dir=run_dir),
+            staged_seeds or [],
+            aqe=str(self.spark.conf.get("spark.sql.adaptive.enabled", "false"))
+            .lower() == "true",
+        )
+        # Corpus-scan split sizing (_SCAN_TASKS_PER_CORE): on small
+        # corpora Spark's default split math gives ~1 scan task per
+        # core, so the fetch+parse stage runs at the speed of its
+        # slowest split. Size splits for >=k tasks/core; the 128 MB
+        # cap keeps this inert at real corpus scale. Restored by run().
+        mpb = self._scan_split_bytes()
+        if mpb is not None:
+            self.spark.conf.set("spark.sql.files.maxPartitionBytes", str(mpb))
+
+        if resume:
+            man = io.manifest()
+            if man is None:
+                raise FileNotFoundError(f"no manifest to resume in {run_dir}")
+            st.wave = man["next_wave"]
+            st.next_seq = man["next_seq"]
+            st.segments = man.get("segments", [f"frontier/wave={st.wave}"])
+            st.consumed = man.get("consumed", [])
+            st.consumed_rows = man.get("consumed_rows", 0)
+            st.stats.deduped = man.get("deduped", 0)
+            if io.exists("metrics"):
+                st.metrics_buf = [r.asDict() for r in io.read("metrics").collect()]
+            if io.exists("status"):
+                st.status_buf = [r.asDict() for r in io.read("status").collect()]
+        else:
+            if isinstance(seeds, (list, tuple)):
+                import pandas as pd
+
+                seeds = self.spark.createDataFrame(
+                    pd.DataFrame(seeds, columns=["spider_id", "url", "seed_rank"]),
+                    SEEDS_SCHEMA,
+                )
+            # duplicate seeds consume seq numbers (spec seed loop,
+            # tests/reference_executor.py): advance by the full numbered
+            # count, never max(seq) over surviving rows — if the LAST
+            # seed in order is a duplicate, max() would re-issue its seq
+            # to the first outlink and diverge from reference ordering.
+            front0, st.next_seq = self._seed_frontier(st, seeds)
+            io.write(front0, "frontier", 0)
+            front0 = io.read("frontier", 0)
+            io.write(front0.select("url_canon"), "seen", 0)
+            st.segments = ["frontier/wave=0"]
+            self._commit(st)
+        if st.aqe:  # wave-loop steady state (run() restores it)
+            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
+        return st
+
+    def _seed_frontier(self, st: RunState, seeds: DataFrame) -> tuple[DataFrame, int]:
+        """Seed rows -> (robots-filtered frontier rows, seq numbers used)."""
+        front, n = seeds_to_frontier(
+            seeds, dedup=self.cfg.dedup, base_seq=st.next_seq, caches=st.caches
+        )
+        return robots_disallow_filter(front, self._active_robots), n
+
+    @property
+    def _active_robots(self) -> DataFrame | None:
+        """The robots table the crawl obeys (None with respect_robots off)."""
+        return self.robots if self.cfg.respect_robots else None
+
+    def _admit(self, st: RunState) -> DataFrame | None:
+        """Admit phase: staged seeds, then at frontier-empty the freshness
+        tick; returns the wave's pending frame, or None = idle shutdown
+        (reference monitor.rs:62-68 also requires no pending spiders)."""
+        cfg = self.cfg
+        while True:
+            if st.handoff is not None:
+                # fast-path handoff: last wave's delta IS the whole
+                # pending set and its cached frame is live — plan the
+                # wave against it; the parquet read-back (and the wait
+                # for the overlapped segment write) disappears from the
+                # critical path
+                pending, st.handoff = st.handoff, None
+            else:
+                st.await_frontier()  # segment dir complete before listing
+                pending = st.pending_view()
+            if st.pending_count is None:
+                st.pending_count = pending.count()
+
+            # spider admission (F4/L2): activate one pending seed group
+            # per wave while the frontier holds <= threshold requests
+            # (reference try_activate_pending_spider,
+            # src/spider/manager.rs:239-279, threshold :34-36)
+            if st.staged and st.pending_count <= cfg.scheduler_holding_threshold:
+                st.await_frontier()  # injection appends to segments[-1]
+                inj, n_grp = self._seed_frontier(st, st.staged.pop(0))
+                if cfg.dedup:
+                    st.await_tail()
+                    regime = self._resolve_seen_join(st.next_seq)
+                    inj = self._filter_new(inj, st.seen(), regime, st.caches)
+                inj = inj.persist()
+                n_inj = inj.count()
+                if n_inj:
+                    st.io.write_rel(inj, st.segments[-1], mode="append")
+                    pending = st.pending_view()
+                    if cfg.dedup:
+                        self._append_seen(st.io, inj.select("url_canon"), st.wave)
+                inj.unpersist()
+                # every numbered seed consumes a seq — including ones
+                # dropped as duplicates or already-seen (spec seed loop
+                # advances the counter before its dedup check)
+                st.next_seq += n_grp
+                st.pending_count += n_inj
+
+            if st.pending_count != 0:
+                return pending
+            if st.staged:
+                continue  # same-wave re-tick: activate the next group
+            if cfg.recrawl_interval_s is None or not self._admit_recrawls(st):
+                return None
+
+    def _admit_recrawls(self, st: RunState) -> bool:
         """Frontier-empty freshness tick — the crawl→age→recrawl
         composition of a CONTINUOUS crawl (the reference crawls once
-        and stops).
+        and stops). True when due urls re-entered the frontier (bounded
+        overall by max_waves); False = nothing due, idle shutdown
+        proceeds.
 
         Reads the fetch history (order sink: one row per scheduled
         fetch with host + fetch_ts), selects due URLs stalest-first
@@ -654,8 +952,7 @@ class CrawlEngine:
         membership needs no invalidation: a due url is normally still
         seen, and only the ones that are not (removed earlier through
         invalidate_seen) are appended to seen and to the prune filter,
-        so later-discovered duplicates still dedup. Returns the seq
-        numbers consumed (0 = nothing due → idle shutdown proceeds).
+        so later-discovered duplicates still dedup.
 
         Scale shape: the due set is budget-bounded (hosts ×
         recrawl_per_host_budget); selection, owner re-join, seq
@@ -664,9 +961,11 @@ class CrawlEngine:
         tick, and ticks only fire at frontier-empty, never per wave.
         """
         cfg = self.cfg
-        history = io.read_all_waves("order")
+        st.await_tail()
+        st.await_frontier()
+        history = st.io.read_all_waves("order")
         if history is None:
-            return 0
+            return False
         hist = history.filter(F.col("fetch_ts").isNotNull())
         due = recrawl_due(
             hist.select(
@@ -694,725 +993,442 @@ class CrawlEngine:
                 (-F.col("age_seconds")).alias("_neg_age"),
             ),
             ["_neg_age", "url"],
-            next_seq,
+            st.next_seq,
+            caches=st.caches,
         )
         if n == 0:
-            return 0
+            return False
         inj = _finish_frontier(f.drop("_neg_age")).persist()
-        io.write_rel(inj, segments[-1], mode="append")
+        st.io.write_rel(inj, st.segments[-1], mode="append")
         if cfg.dedup:
             # persisted: a filter add would otherwise re-run the O(seen) join
             unseen = inj.select("url_canon").join(
-                io.read_all_waves("seen"), "url_canon", "left_anti"
+                st.seen(), "url_canon", "left_anti"
             ).persist()
-            io.write(unseen, "seen", wave, mode="append")
-            self._bloom_add(unseen)
+            self._append_seen(st.io, unseen, st.wave)
             unseen.unpersist()
         inj.unpersist()
-        return n
+        st.next_seq += n
+        st.pending_count = None
+        return True
 
-    # -- run ------------------------------------------------------------------
-
-    def run(
-        self,
-        seeds=None,
-        run_dir: str | None = None,
-        resume: bool = False,
-        staged_seeds: list | None = None,
-    ) -> CrawlStats:
-        """Run the crawl to frontier-empty (or max_waves).
-
-        seeds: DataFrame/list seeded at wave 0. staged_seeds: optional
-        list of further seed DataFrames ("pending spiders", reference
-        src/spider/manager.rs:239-279) — one group is activated per
-        wave, but only while the frontier holds no more than
-        cfg.scheduler_holding_threshold pending requests (admission
-        control F4, SCHEDULER_HOLDING_THRESOLD src/spider/manager.rs:34-36).
-
-        The session settings the wave loop overrides (AQE, scan split
-        size) are restored and the I/O pool is shut down on every exit,
-        including a crawl that raises.
-        """
-        conf = self.spark.conf
-        saved = {k: conf.get(k, None) for k in _RUN_CONFS}
-        # independent sink writes (order, items) run as concurrent Spark
-        # actions so file I/O overlaps the wave's compute; drained at
-        # each wave's end before commits/unpersist (see wave loop)
-        io_pool = ThreadPoolExecutor(max_workers=3)
-        try:
-            return self._crawl(io_pool, seeds, run_dir, resume, staged_seeds)
-        finally:
-            io_pool.shutdown(wait=True, cancel_futures=True)
-            for k, v in saved.items():
-                if v is None:
-                    conf.unset(k)
-                else:
-                    conf.set(k, v)
-
-    def _crawl(
-        self,
-        io_pool: ThreadPoolExecutor,
-        seeds,
-        run_dir: str | None,
-        resume: bool,
-        staged_seeds: list | None,
-    ) -> CrawlStats:
-        """The wave loop behind run()."""
-        cfg = self.cfg
-        run_dir = run_dir or tempfile.mkdtemp(prefix="ironspark_")
-        if not resume and os.path.isdir(run_dir):
-            shutil.rmtree(run_dir)
-        io = TableIO(self.spark, run_dir)
-        stats = CrawlStats(run_dir=run_dir)
-        # one filter per run(): an earlier run's filter misses this run's seeds
-        if self._bloom is not None:
-            self._bloom.unpersist_all()
-        self._bloom = None
-        self._metrics_buf: list[dict] = []
-        self._status_buf: list[dict] = []
-        t_start = time.monotonic()
-
-        # Selective AQE: adaptive execution turns EVERY action into a
-        # chain of sequential stage-jobs with a driver re-optimization
-        # between each. For the one heavy job per wave (fetch + Arrow
-        # parse) that is what we want at scale — runtime skew-join
-        # splitting and partition coalescing. For the wave's many tiny
-        # bookkeeping actions (seq counts, sink writes, probes) the
-        # re-optimization rounds ARE the cost: measured ~1.4s for a
-        # count whose task time is ~50ms, flat across core counts —
-        # i.e. pure driver-serial floor, the 2v8 scaling drag
-        # (BENCH.md round-4). So AQE is OFF as the wave-loop steady
-        # state and flipped on only around the heavy collect.
-        _had_aqe = (
-            str(self.spark.conf.get("spark.sql.adaptive.enabled", "false"))
-            .lower() == "true"
+    def _schedule(
+        self, st: RunState, pending: DataFrame
+    ) -> tuple[DataFrame, DataFrame]:
+        """Schedule phase (F3/F7): politeness window-rank + global cap ->
+        (selected: persisted, pre-hook; scheduled: after the request
+        hooks and the cookie jar), plus the crawl-order write."""
+        selected = select_wave(pending, self._active_robots, self.cfg)
+        # Re-balance after politeness: the window rank leaves the
+        # batch hash-partitioned by HOST, so a mega-domain (80% of
+        # URLs) lands in ONE partition and the whole fetch+parse
+        # stage inherits that skew (one straggler task does 80% of
+        # the work — measured). A cheap shuffle of the body-free
+        # scheduled rows by url_canon restores uniform parallelism
+        # for everything downstream. Persisted PRE-hook: the same
+        # cached rows feed the fetch (post-hook), the order table,
+        # the retry rejoin, and the consumed-keys tombstones.
+        nparts = max(self.spark.sparkContext.defaultParallelism, 1)
+        selected = (
+            selected.repartition(nparts, "url_canon")
+            .withColumn("partition_id", F.spark_partition_id())
+            .persist()
         )
-
-        def _aqe(on: bool) -> None:
-            if _had_aqe:
-                self.spark.conf.set(
-                    "spark.sql.adaptive.enabled", "true" if on else "false"
+        st.caches.append(selected)
+        scheduled = selected
+        for hook in self.request_hooks:
+            scheduled = hook(scheduled)
+        if self.cfg.store_cookies and self._cookie_jar:
+            # jar applies after middleware, like the reference's
+            # HTTP-client-level jar; an existing `cookie` header is
+            # replaced, other headers pass through untouched
+            jar = F.broadcast(
+                self.spark.createDataFrame(
+                    sorted(self._cookie_jar.items()),
+                    "host string, _cookie string",
                 )
-
-        # Corpus-scan split sizing (_SCAN_TASKS_PER_CORE): on small
-        # corpora Spark's default split math gives ~1 scan task per
-        # core, so the fetch+parse stage runs at the speed of its
-        # slowest split. Size splits for >=k tasks/core; the 128 MB
-        # cap keeps this inert at real corpus scale. Restored by run().
-        _mpb = self._scan_split_bytes()
-        if _mpb is not None:
-            self.spark.conf.set("spark.sql.files.maxPartitionBytes", str(_mpb))
-
-        def _commit(**extra) -> None:
-            io.commit(
-                {
-                    "next_wave": wave,
-                    "next_seq": int(next_seq),
-                    "deduped": int(stats.deduped),
-                    "segments": segments,
-                    "consumed": consumed,
-                    "consumed_rows": consumed_rows,
-                    **extra,
-                }
             )
-
-        # Frontier state is MERGE-ON-READ (the Iceberg pattern, on
-        # TableIO): `segments` lists delta dirs (each wave appends
-        # only its retry+new rows), `consumed` lists the (seq, attempt)
-        # keys scheduled so far; pending = segments ⟕̸ consumed. The
-        # backlog is never rewritten per wave — only on amortized
-        # compaction or the fast-path reset (see end of wave loop).
-        if resume:
-            man = io.manifest()
-            if man is None:
-                raise FileNotFoundError(f"no manifest to resume in {run_dir}")
-            wave = man["next_wave"]
-            next_seq = man["next_seq"]
-            segments = man.get("segments", [f"frontier/wave={wave}"])
-            consumed = man.get("consumed", [])
-            consumed_rows = man.get("consumed_rows", 0)
-            stats.deduped = man.get("deduped", 0)
-            if io.exists("metrics"):
-                self._metrics_buf = [
-                    r.asDict() for r in io.read("metrics").collect()
-                ]
-            if io.exists("status"):
-                self._status_buf = [
-                    r.asDict() for r in io.read("status").collect()
-                ]
-        else:
-            if isinstance(seeds, (list, tuple)):
-                import pandas as pd
-
-                seeds = self.spark.createDataFrame(
-                    pd.DataFrame(seeds, columns=["spider_id", "url", "seed_rank"]),
-                    SEEDS_SCHEMA,
+            no_cookie = F.map_filter(
+                F.coalesce(
+                    F.col("headers"),
+                    F.create_map().cast("map<string,string>"),
+                ),
+                lambda k, _: k != "cookie",
+            )
+            scheduled = (
+                scheduled.join(jar, "host", "left")
+                .withColumn(
+                    "headers",
+                    F.when(
+                        F.col("_cookie").isNotNull(),
+                        F.map_concat(
+                            no_cookie,
+                            F.create_map(F.lit("cookie"), F.col("_cookie")),
+                        ),
+                    ).otherwise(F.col("headers")),
                 )
-            front0, n_seed = seeds_to_frontier(seeds, dedup=cfg.dedup)
-            front0 = robots_disallow_filter(front0, self.robots if cfg.respect_robots else None)
-            io.write(front0, "frontier", 0)
-            front0 = io.read("frontier", 0)
-            # seen is APPEND-ONLY: each wave dir holds only that wave's
-            # new urls, disjoint by construction (anti-join before
-            # enqueue) — reading it is a plain multi-dir scan, no
-            # union/distinct job ever runs over the full set.
-            io.write(front0.select("url_canon"), "seen", 0)
-            # duplicate seeds consume seq numbers (spec seed loop,
-            # tests/reference_executor.py): advance by the full numbered
-            # count, never max(seq) over surviving rows — if the LAST
-            # seed in order is a duplicate, max() would re-issue its seq
-            # to the first outlink and diverge from reference ordering.
-            next_seq = n_seed
-            wave = 0
-            segments = ["frontier/wave=0"]
-            consumed = []
-            consumed_rows = 0
-            _commit()
+                .drop("_cookie")
+            )
+        # order/items are INDEPENDENT sinks: written on the I/O pool so
+        # they overlap the wave's compute (the driver-serial turnaround
+        # between actions was measured as the 2v8 scaling drag once
+        # parse got fast — docs/SCALE.md #17). The futures are drained
+        # before the wave's commit (_commit_wave), and the caches they
+        # read are released only after the wave's tail lands.
+        # wave is the PARTITION DIRECTORY (order/wave=N), not a data
+        # column. host + spider_id + fetch_ts make this sink the fetch
+        # HISTORY the continuous-crawl freshness tick reads
+        # (recrawl_due); the per-wave timestamp literal costs one plan
+        # compile per wave (~ms), accepted for a clock-injectable,
+        # deterministic history.
+        st.write_async(
+            scheduled.select("seq", "url_canon", "host", "spider_id").withColumn(
+                "fetch_ts", F.lit(self._now()).cast("timestamp")
+            ),
+            "order",
+        )
+        st.mark("schedule+order")
+        return selected, scheduled
 
-        def pending_view() -> DataFrame:
-            """Merge-on-read pending set: delta segments minus the
-            scheduled (seq, attempt) keys since the last compaction."""
-            df = io.read_rel(segments)
-            if consumed:
-                keys = io.read_rel(consumed).select("seq", "attempt")
-                df = df.join(keys, ["seq", "attempt"], "left_anti")
-            return df
+    def _fetch_parse(
+        self, st: RunState, scheduled: DataFrame
+    ) -> tuple[DataFrame, list, tuple]:
+        """Fetch + parse + metrics phase (S3/D1-D5, P1-P9) -> (parse_out,
+        metric rows, (min, max) parent_seq of the outlinks).
 
-        # L3 deactivation sweep state: per-spider pending counts,
-        # maintained incrementally (reference closes a spider as soon
-        # as it has zero in-flight work, src/spider/manager.rs:188-199)
-        spider_pending: dict[int, int] = {}
-        closed_spiders: set[int] = set()
+        The corpus join output (html bytes included) is consumed by
+        EXACTLY ONE Arrow pass — acceptance, retry lineage, parsing,
+        and outlink canonicalization all happen inside it (see
+        parse.py). Nothing holding binary columns is ever persisted:
+        the InMemoryRelation -> Arrow path measured ~10x slower than
+        the live join.
+        """
+        t0 = time.monotonic()
+        if self.pages is None:
+            # live pooled-HTTP fetch (fetch.http_fetch_stage): same
+            # column contract, no pages table needed
+            responses = http_fetch_stage(scheduled, self.cfg)
+        else:
+            responses = fetch_from_corpus(
+                scheduled, self._pages_view, self.redirects,
+                corpus_urls=self._prepared_page_urls(),
+            )
+        for hook in self.response_hooks:
+            responses = hook(responses)
+        parse_out = parse_responses(responses, self.spiders, self.cfg).persist()
+        st.caches.append(parse_out)
+
+        # metrics first: the ONE aggregation pass materializes
+        # parse_out (the wave's heavy job) and yields every counter
+        # the rest of the wave needs. ONE collect serves both the
+        # per-partition metrics rows and the M2 status histogram
+        # (monitor Status Codes pane, tui.rs:103-117): the agg runs at
+        # (partition, status) grain and rolls up driver-side — one
+        # fewer job in the wave's serial budget
+        # (metrics.wave_metrics_fine docstring).
+        # heavy-job AQE only when the wave is big enough for
+        # runtime skew handling to repay the re-optimization
+        # rounds (_AQE_MIN_PENDING; small waves measured ~1.4s
+        # flat per AQE'd action, pure serial floor)
+        big_wave = st.aqe and (st.pending_count or 0) >= _AQE_MIN_PENDING
+        if big_wave:
+            self.spark.conf.set("spark.sql.adaptive.enabled", "true")
+        fine = wave_metrics_fine(parse_out).collect()
+        if big_wave:  # back to tiny bookkeeping actions
+            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
+        t_fp_ms = (time.monotonic() - t0) * 1000  # fetch+parse wall
+        mrows, status_counts, ps_bounds = rollup_wave_metrics(
+            fine, st.wave, 0, t_fp_ms, 0.0
+        )
+        st.status_buf.extend(
+            {"wave": st.wave, "resp_status": s, "count": c}
+            for s, c in sorted(status_counts.items())
+        )
+        st.mark("fetch+parse+metrics")
+        return parse_out, mrows, ps_bounds
+
+    def _items(self, st: RunState, parse_out: DataFrame) -> int:
+        """Items phase (I1-I5, S4): items -> pipelines -> sink; returns
+        the unrouted count."""
+        if self.cfg.store_cookies:
+            self._harvest_cookies(parse_out)
+        items = (
+            parse_out.filter(F.col("kind") == "item")
+            .select(
+                "item_type", "spider_id", "src_url", "title", "author",
+                "number", "text",
+            )
+        )
+        n_unrouted = 0
+        if self.pipelines is not None:
+            items, unrouted = self.pipelines.process(items)
+            # M7 pipeline counter (manager.rs:96-98): items whose
+            # item_type has no chain are counted, not silently lost
+            n_unrouted = unrouted.count()
+        st.write_async(items, "items")
+        st.mark("items")
+        return n_unrouted
+
+    def _dedup_enqueue(
+        self, st: RunState, parse_out: DataFrame, n_outlinks: int, ps_bounds: tuple
+    ) -> tuple[DataFrame, int]:
+        """Dedup + enqueue phase: outlinks (canonicalized in-pass) ->
+        self-dedup -> seen anti-join (its regime goes to stats) -> seq
+        extension. Returns (new frontier rows, their count)."""
+        candidates = prepare_candidates(
+            parse_out.filter(F.col("kind") == "request").select(
+                "spider_id", "parent_seq", "link_index", "out_url",
+                "url_canon", "host",
+            ),
+            dedup=self.cfg.dedup,
+        )
+        candidates = robots_disallow_filter(candidates, self._active_robots)
+        regime = None
+        if self.cfg.dedup:
+            # first point this wave that needs the seen set: await
+            # the overlapped seen write, then list the table dirs
+            st.await_tail()
+            st.mark("await-seen")
+            # next_seq == unique urls enqueued so far == seen rows
+            regime = self._resolve_seen_join(st.next_seq, n_outlinks)
+            candidates = self._filter_new(candidates, st.seen(), regime, st.caches)
+        # the regime transition log the scaling artifact discloses
+        st.stats.wave_seen_join.append(regime)
+        new_front, n_new = enqueue_outlinks(
+            candidates, st.next_seq, bounds=ps_bounds, caches=st.caches
+        )
+        st.mark("enqueue(seq-jobs)")
+        return new_front, n_new
+
+    def _tail(
+        self,
+        st: RunState,
+        scheduled: DataFrame,
+        parse_out: DataFrame,
+        new_front: DataFrame,
+        n_retried: int,
+        n_new: int,
+    ) -> DataFrame:
+        """Tail phase: submit the durable write of the wave's frontier
+        delta (retry + new rows); returns the delta frame.
+
+        The ENTIRE durable tail — frontier segment write, seen delta
+        write, and the delta's bloom/cuckoo slice once a shuffle_hash
+        probe has built the filter — is ONE chained task on the I/O
+        pool (_write_tail): it overlaps the next wave's schedule +
+        fetch + parse. frontier_done gates readers of the segment
+        DIRECTORY (pending_view/admission/compaction); await_tail()
+        gates seen-set consumers and releases this wave's caches.
+        """
+        # retry rows: rejoin the small retryable key set against the
+        # cached scheduled frontier (never against the corpus).
+        if n_retried > 0:
+            retry_keys = parse_out.filter(
+                (F.col("kind") == "resp") & F.col("retryable")
+            ).select(F.col("parent_seq").alias("seq"))
+            retry = (
+                scheduled.join(F.broadcast(retry_keys), "seq")
+                .select(*_FRONTIER_COLS)
+                .withColumn("attempt", F.col("attempt") + 1)
+            )
+        else:
+            retry = new_front.limit(0)
+        # localCheckpoint (non-eager), NOT plain persist: persist
+        # caches DATA but keeps the full logical plan, and the
+        # handoff (_advance_frontier) would nest every previous wave's
+        # plan into the next one (select_wave references pending
+        # several times, so the tree grows ~4x per wave — measured as
+        # a planning-time explosion by wave 3). The checkpoint
+        # truncates lineage to a LogicalRDD scan, materialized for
+        # free by the tail task's frontier write. On a cluster the
+        # blocks are unreplicated — executor loss fails the wave —
+        # but the parquet segment the tail wrote is the durable
+        # copy, and a resume from the manifest replays cleanly.
+        front_next = retry.unionByName(new_front).localCheckpoint(eager=False)
+        st.await_tail()  # no-op unless dedup=False skipped the await
+        st.frontier_done = threading.Event()
+        st.tail = st.pool.submit(
+            self._write_tail, st.io, st.wave, front_next, st.frontier_done,
+            bool(self.cfg.dedup and n_new),
+        )
+        # the tail reads this wave's caches: they are released once it
+        # lands. front_next opens the next wave's list — that wave's
+        # handoff plan may read it as `pending`.
+        st.tail_release, st.caches = st.caches, [front_next]
+        st.mark("tail(submit)")
+        return front_next
+
+    def _write_tail(
+        self, io: TableIO, wave: int, front: DataFrame, done: threading.Event, seen: bool
+    ) -> None:
+        """The overlapped durable tail of one wave (an I/O pool task)."""
+        try:
+            io.write(front, "frontier", wave + 1)
+        finally:
+            done.set()  # never leave a reader blocked
+        if seen:
+            # new rows are exactly the attempt==0 rows (retries have
+            # attempt >= 1); literal-free filter. Overwrite: a slice
+            # left by a tail no manifest committed is replaced.
+            new = front.filter(F.col("attempt") == 0).select("url_canon")
+            self._append_seen(io, new, wave + 1, mode="overwrite")
+
+    def _advance_frontier(
+        self,
+        st: RunState,
+        selected: DataFrame,
+        front_next: DataFrame,
+        n_sched: int,
+        n_retried: int,
+        n_new: int,
+    ) -> None:
+        """Frontier advance phase: fast-path reset, or tombstones + compaction.
+
+        DELTA-ONLY frontier write: only retry+new rows land in the
+        wave's segment — the deferred backlog is never rewritten
+        (merge-on-read; per-wave write volume is O(wave), see
+        stats.wave_frontier_rows). Fast path: n_sched equal to
+        pending_count means politeness scheduled everything and no
+        hook dropped rows, so this delta IS the whole pending set and
+        the segment/consumed state resets for free.
+        """
+        pending_next = st.pending_count - n_sched + n_retried + n_new
+        if n_sched == st.pending_count:
+            st.segments = [f"frontier/wave={st.wave + 1}"]
+            st.consumed = []
+            st.consumed_rows = 0
+            # DataFrame handoff: the new segment IS the whole next
+            # pending set, and front_next is its live cached frame —
+            # the next wave plans against it directly instead of
+            # waiting for the parquet read-back. Only on the plain
+            # path (no staged seeds/hooks mutating pending outside
+            # the frame), and lineage-reset every few waves so the
+            # logical plan tree stays bounded on long crawls.
+            st.handoff_streak += 1
+            if (
+                not st.staged
+                and not self.request_hooks
+                and st.handoff_streak % 8 != 0
+            ):
+                st.handoff = front_next
+        else:
+            st.handoff_streak = 0
+            st.segments = st.segments + [f"frontier/wave={st.wave + 1}"]
+            # tombstones: the PRE-hook scheduled keys leave pending
+            # (a hook-dropped request is consumed, never retried).
+            # Overlapped like the other independent sinks; the next
+            # pending_view read happens after the wave-end drain.
+            st.write_async(selected.select("seq", "attempt"), "consumed")
+            st.consumed = st.consumed + [f"consumed/wave={st.wave}"]
+            st.consumed_rows += n_sched
+            if (
+                len(st.segments) > self.cfg.frontier_max_segments
+                or st.consumed_rows > 2 * max(pending_next, 1)
+            ):
+                # amortized compaction (Iceberg rewrite-data-files
+                # analog): materialize the true pending set as ONE
+                # base segment, drop the tombstones. O(backlog), but
+                # triggered only when tombstones dominate or the
+                # segment list grows — O(1) amortized per row.
+                # pending_view reads the consumed tombstones written
+                # above and the segment dir the tail is writing.
+                st.drain_writes()
+                st.await_frontier()
+                base_rel = f"frontier_base/wave={st.wave + 1}"
+                st.io.write_rel(st.pending_view(), base_rel)
+                st.segments = [base_rel]
+                st.consumed = []
+                st.consumed_rows = 0
+        st.mark("dedup+seq+frontier")
+        st.next_seq += n_new
+        # a request hook may have dropped scheduled rows AFTER
+        # select_wave counted them against pending; the arithmetic
+        # would overcount pending forever (blocking idle shutdown +
+        # staged-seed admission), so re-probe the materialized frontier
+        # next wave instead
+        st.pending_count = None if self.request_hooks else pending_next
+
+    def _commit_wave(
+        self, st: RunState, mrows: list, n: dict, n_new: int, n_unrouted: int
+    ) -> None:
+        """Commit phase: fold the wave's metric rows (totals ``n``) into
+        stats, close idle spiders, drain the sink writes, advance the
+        wave, and commit every checkpoint_every waves."""
+        cfg, stats = self.cfg, st.stats
+        n_dedup = max(n["outlinks"] - n_new, 0)
+        for r in mrows:
+            if r["partition_id"] == -1:
+                r["deduped"] = n_dedup
+                r["unrouted"] = n_unrouted
+        st.metrics_buf.extend(mrows)
+        stats.scheduled += n["scheduled"]
+        stats.fetched += n["fetched"]
+        stats.failed += n["failed"]
+        stats.items += n["items"]
+        stats.outlinks += n["outlinks"]
+        stats.deduped += n_dedup
+        stats.unrouted += n_unrouted
+        stats.dropped += n["dropped"]
+        stats.exhausted += n["failed"] - n["retried"]
         if cfg.track_spiders:
-            spider_pending = {
+            # L3 deactivation sweep (reference
+            # src/spider/manager.rs:188-199, 340-369). pending_view
+            # reads this wave's consumed tombstones AND the new
+            # frontier segment: drain the overlapped writes and the
+            # tail's frontier stage first
+            st.drain_writes()
+            st.await_frontier()
+            pending = {
                 int(r["spider_id"]): r["cnt"]
-                for r in pending_view().groupBy("spider_id").agg(
+                for r in st.pending_view().groupBy("spider_id").agg(
                     F.count("*").alias("cnt")
                 ).collect()
             }
+            for sid, sp in self.spiders.items():
+                if sid not in st.closed_spiders and pending.get(sid, 0) == 0:
+                    sp.close()
+                    st.closed_spiders.add(sid)
+            stats.closed_spiders = len(st.closed_spiders)
 
-        _aqe(False)  # wave-loop steady state (run() restores it)
-        pending_count = None  # unknown -> probe once
-        # handle to the PREVIOUS wave's overlapped durable tail
-        # (frontier segment + seen delta, plus the delta's prune slice
-        # once _filter_new has built a filter; ONE chained io_pool
-        # task); every seen-set consumer awaits it first.
-        # frontier_done gates only the frontier-segment stage, for
-        # readers that need the DIRECTORY but not the seen set.
-        seen_fut = None
-        release_after_seen: list = []
-        frontier_done: threading.Event | None = None
-        prev_front = None        # previous wave's front_next cache
-        handoff = None           # live DataFrame for next wave's pending
-        handoff_streak = 0
+        stats.wave_walls.append(time.monotonic() - st.t_wave)
+        stats.wave_scheduled.append(n["scheduled"])
+        stats.wave_new.append(n_new)
+        stats.wave_outlinks.append(n["outlinks"])
+        # lineage evidence that frontier writes are O(wave), not
+        # O(backlog): rows written to the wave's delta segment
+        stats.wave_frontier_rows.append(n["retried"] + n_new)
 
-        def _await_frontier():
-            if frontier_done is not None:
-                frontier_done.wait()
+        # drain overlapped sink writes BEFORE any commit (a manifest
+        # must never point past unwritten data). This wave's caches
+        # are NOT released here — the tail task still reads them;
+        # await_tail() releases them when it lands.
+        st.drain_writes()
+        st.wave += 1
+        stats.waves = st.wave
+        if st.wave % cfg.checkpoint_every == 0:
+            self._commit(st)
 
-        def _await_seen():
-            nonlocal seen_fut, release_after_seen
-            if seen_fut is not None:
-                seen_fut.result()
-                seen_fut = None
-                for df in release_after_seen:
-                    df.unpersist()
-                release_after_seen = []
+    def _commit(self, st: RunState, **extra) -> None:
+        """Commit point: a manifest advancing next_wave implies the wave's
+        seen slice is durable (await the tail); metrics flush with it."""
+        st.await_tail()
+        self._flush_metrics(st)
+        st.io.commit(st.manifest(**extra))
 
-        while wave < cfg.max_waves:
-            if handoff is not None:
-                # fast-path handoff: last wave's delta IS the whole
-                # pending set and its cached frame is live — plan the
-                # wave against it; the parquet read-back (and the wait
-                # for the overlapped segment write) disappears from the
-                # critical path
-                pending = handoff
-                handoff = None
-            else:
-                _await_frontier()  # segment dir complete before listing
-                pending = pending_view()
-            if pending_count is None:
-                pending_count = pending.count()
-
-            # spider admission (F4/L2): activate one pending seed group
-            # per wave while the frontier holds <= threshold requests
-            # (reference try_activate_pending_spider,
-            # src/spider/manager.rs:239-279, threshold :34-36)
-            if staged_seeds and pending_count <= cfg.scheduler_holding_threshold:
-                _await_frontier()  # injection appends to segments[-1]
-                grp = staged_seeds.pop(0)
-                inj, n_grp = seeds_to_frontier(
-                    grp, dedup=cfg.dedup, base_seq=next_seq
-                )
-                inj = robots_disallow_filter(
-                    inj, self.robots if cfg.respect_robots else None
-                )
-                if cfg.dedup:
-                    _await_seen()
-                    inj = self._filter_new(
-                        inj, io.read_all_waves("seen"), seen_rows=next_seq
-                    )
-                inj = inj.persist()
-                n_inj = inj.count()
-                if n_inj:
-                    io.write_rel(inj, segments[-1], mode="append")
-                    pending = pending_view()
-                    if cfg.dedup:
-                        io.write(
-                            inj.select("url_canon"), "seen", wave, mode="append"
-                        )
-                        self._bloom_add(inj)
-                inj.unpersist()
-                # every numbered seed consumes a seq — including ones
-                # dropped as duplicates or already-seen (spec seed loop
-                # advances the counter before its dedup check)
-                next_seq += n_grp
-                pending_count += n_inj
-
-            # idle shutdown: frontier empty AND no pending spiders
-            # (reference condition monitor.rs:62-68 includes
-            # pending_spiders == 0)
-            if pending_count == 0:
-                if staged_seeds:
-                    continue  # same-wave re-tick: activate the next group
-                if cfg.recrawl_interval_s is not None:
-                    # continuous crawl: at the frontier-empty point,
-                    # tick the freshness scheduler — due URLs re-enter
-                    # the frontier stalest-first (bounded overall by
-                    # max_waves)
-                    _await_seen()
-                    _await_frontier()
-                    n_re = self._admit_recrawls(io, wave, next_seq, segments)
-                    if n_re:
-                        next_seq += n_re
-                        pending_count = None
-                        continue
-                break
-
-            tr = _Tracer(wave)
-            t_wave = time.monotonic()
-
-            # schedule (F3/F7): politeness window-rank + global cap
-            selected, _deferred = select_wave(
-                pending, self.robots if cfg.respect_robots else None, cfg
-            )
-            # Re-balance after politeness: the window rank leaves the
-            # batch hash-partitioned by HOST, so a mega-domain (80% of
-            # URLs) lands in ONE partition and the whole fetch+parse
-            # stage inherits that skew (one straggler task does 80% of
-            # the work — measured). A cheap shuffle of the body-free
-            # scheduled rows by url_canon restores uniform parallelism
-            # for everything downstream. Persisted PRE-hook: the same
-            # cached rows feed the fetch (post-hook), the order table,
-            # the retry rejoin, and the consumed-keys tombstones.
-            nparts = max(self.spark.sparkContext.defaultParallelism, 1)
-            selected = (
-                selected.repartition(nparts, "url_canon")
-                .withColumn("partition_id", F.spark_partition_id())
-                .persist()
-            )
-            scheduled = selected
-            for hook in self.request_hooks:
-                scheduled = hook(scheduled)
-            if cfg.store_cookies and self._cookie_jar:
-                # jar applies after middleware, like the reference's
-                # HTTP-client-level jar; an existing `cookie` header is
-                # replaced, other headers pass through untouched
-                jar = F.broadcast(
-                    self.spark.createDataFrame(
-                        sorted(self._cookie_jar.items()),
-                        "host string, _cookie string",
-                    )
-                )
-                no_cookie = F.map_filter(
-                    F.coalesce(
-                        F.col("headers"),
-                        F.create_map().cast("map<string,string>"),
-                    ),
-                    lambda k, _: k != "cookie",
-                )
-                scheduled = (
-                    scheduled.join(jar, "host", "left")
-                    .withColumn(
-                        "headers",
-                        F.when(
-                            F.col("_cookie").isNotNull(),
-                            F.map_concat(
-                                no_cookie,
-                                F.create_map(F.lit("cookie"), F.col("_cookie")),
-                            ),
-                        ).otherwise(F.col("headers")),
-                    )
-                    .drop("_cookie")
-                )
-            # order/items are INDEPENDENT sinks: submit them on the I/O
-            # pool so they overlap the wave's compute (the driver-serial
-            # turnaround between actions was measured as the 2v8 scaling
-            # drag once parse got fast — docs/SCALE.md #17). Futures are
-            # drained before this wave's unpersist sweep, so every
-            # overlapped write reads live caches; manifest commits only
-            # happen after the drain.
-            wave_writes = [
-                io_pool.submit(
-                    io.write,
-                    # wave is the PARTITION DIRECTORY (order/wave=N),
-                    # not a data column. host + spider_id + fetch_ts
-                    # make this sink the fetch HISTORY the continuous-
-                    # crawl freshness tick reads (recrawl_due); the
-                    # per-wave timestamp literal costs one plan
-                    # compile per wave (~ms), accepted for a
-                    # clock-injectable, deterministic history.
-                    scheduled.select(
-                        "seq", "url_canon", "host", "spider_id"
-                    ).withColumn(
-                        "fetch_ts", F.lit(self._now()).cast("timestamp")
-                    ),
-                    "order",
-                    wave,
-                )
-            ]
-            tr.mark("schedule+order")
-
-            # fetch + parse (S3/D1-D5, P1-P9): the corpus join output
-            # (html bytes included) is consumed by EXACTLY ONE Arrow
-            # pass — acceptance, retry lineage, parsing, and outlink
-            # canonicalization all happen inside it (see parse.py).
-            # Nothing holding binary columns is ever persisted: the
-            # InMemoryRelation -> Arrow path measured ~10x slower than
-            # the live join.
-            t0 = time.monotonic()
-            if self.pages is None:
-                # live pooled-HTTP fetch (fetch.http_fetch_stage): same
-                # column contract, no pages table needed
-                responses = http_fetch_stage(scheduled, cfg)
-            else:
-                responses = fetch_from_corpus(
-                    scheduled, self._pages_view, self.redirects,
-                    corpus_urls=self._prepared_page_urls(),
-                )
-            for hook in self.response_hooks:
-                responses = hook(responses)
-            parse_out = parse_responses(responses, self.spiders, cfg).persist()
-
-            # metrics first: the ONE aggregation pass materializes
-            # parse_out (the wave's heavy job) and yields every counter
-            # the rest of the wave needs. Rows are buffered driver-side
-            # (tiny — one per partition) and flushed at commits.
-            # ONE collect serves both the per-partition metrics rows and
-            # the M2 status histogram (monitor Status Codes pane,
-            # tui.rs:103-117): the agg runs at (partition, status) grain
-            # and rolls up driver-side — one fewer job in the wave's
-            # serial budget (metrics.wave_metrics_fine docstring)
-            # heavy-job AQE only when the wave is big enough for
-            # runtime skew handling to repay the re-optimization
-            # rounds (_AQE_MIN_PENDING; small waves measured ~1.4s
-            # flat per AQE'd action, pure serial floor)
-            big_wave = (pending_count or 0) >= _AQE_MIN_PENDING
-            _aqe(big_wave)
-            fine = wave_metrics_fine(parse_out).collect()
-            if big_wave:
-                _aqe(False)  # back to tiny bookkeeping actions
-            mrows, status_counts, ps_bounds = rollup_wave_metrics(
-                fine, wave, 0, 0.0, 0.0
-            )
-            self._status_buf.extend(
-                {"wave": wave, "resp_status": s, "count": c}
-                for s, c in sorted(status_counts.items())
-            )
-            t_fp_ms = (time.monotonic() - t0) * 1000  # fetch+parse wall
-            n_sched = sum(r["scheduled"] for r in mrows)
-            n_failed = sum(r["failed"] for r in mrows)
-            n_retried = sum(r["retried"] for r in mrows)
-            n_outlinks = sum(r["outlinks"] for r in mrows)
-            tr.mark("fetch+parse+metrics")
-
-            if cfg.store_cookies:
-                self._harvest_cookies(parse_out)
-
-            # items -> pipelines -> sink (I1-I5, S4)
-            items = (
-                parse_out.filter(F.col("kind") == "item")
-                .select(
-                    "item_type", "spider_id", "src_url", "title", "author",
-                    "number", "text",
-                )
-            )
-            n_unrouted = 0
-            if self.pipelines is not None:
-                items, unrouted = self.pipelines.process(items)
-                # M7 pipeline counter (manager.rs:96-98): items whose
-                # item_type has no chain are counted, not silently lost
-                n_unrouted = unrouted.count()
-            wave_writes.append(io_pool.submit(io.write, items, "items", wave))
-            tr.mark("items")
-
-            # outlinks (already canonicalized in-pass) -> self-dedup ->
-            # seen anti-join -> seq extension -> frontier append.
-            candidates = prepare_candidates(
-                parse_out.filter(F.col("kind") == "request").select(
-                    "spider_id", "parent_seq", "link_index", "out_url",
-                    "url_canon", "host",
-                ),
-                dedup=cfg.dedup,
-            )
-            candidates = robots_disallow_filter(
-                candidates, self.robots if cfg.respect_robots else None
-            )
-            if cfg.dedup:
-                # first point this wave that needs the seen set: await
-                # the overlapped seen write, then list the table dirs
-                _await_seen()
-                tr.mark("await-seen")
-                # next_seq == unique urls enqueued so far == seen rows
-                candidates = self._filter_new(
-                    candidates,
-                    io.read_all_waves("seen"),
-                    seen_rows=next_seq,
-                    wave_outlinks=n_outlinks,
-                )
-            new_front, n_new = enqueue_outlinks(
-                candidates, next_seq, bounds=ps_bounds
-            )
-            tr.mark("enqueue(seq-jobs)")
-
-            # retry rows: rejoin the small retryable key set against the
-            # cached scheduled frontier (never against the corpus).
-            if n_retried > 0:
-                retry_keys = parse_out.filter(
-                    (F.col("kind") == "resp") & F.col("retryable")
-                ).select(F.col("parent_seq").alias("seq"))
-                retry = (
-                    scheduled.join(F.broadcast(retry_keys), "seq")
-                    .select(*_FRONTIER_COLS)
-                    .withColumn("attempt", F.col("attempt") + 1)
-                )
-            else:
-                retry = new_front.limit(0)
-
-            # DELTA-ONLY frontier write: only retry+new rows land in the
-            # wave's segment — the deferred backlog is never rewritten
-            # (merge-on-read; per-wave write volume is O(wave), see
-            # stats.wave_frontier_rows). Fast path: n_sched equal to
-            # pending_count means politeness scheduled everything and no
-            # hook dropped rows, so this delta IS the whole pending set
-            # and the segment/consumed state resets for free.
-            #
-            # The ENTIRE durable tail — frontier segment write, seen
-            # delta write, and the delta's bloom/cuckoo slice once a
-            # shuffle_hash probe has built the filter — is ONE chained
-            # task on the I/O pool: it overlaps the next wave's
-            # schedule + fetch + parse. frontier_done gates readers of
-            # the segment DIRECTORY (pending_view/admission/compaction);
-            # _await_seen() (the full future) gates seen-set consumers
-            # and releases this wave's caches.
-            # localCheckpoint (non-eager), NOT plain persist: persist
-            # caches DATA but keeps the full logical plan, and the
-            # handoff below would nest every previous wave's plan into
-            # the next one (select_wave references pending several
-            # times, so the tree grows ~4x per wave — measured as a
-            # planning-time explosion by wave 3). The checkpoint
-            # truncates lineage to a LogicalRDD scan, materialized for
-            # free by the tail task's frontier write. On a cluster the
-            # blocks are unreplicated — executor loss fails the wave —
-            # but the parquet segment the tail wrote is the durable
-            # copy, and a resume from the manifest replays cleanly.
-            front_next = retry.unionByName(new_front).localCheckpoint(
-                eager=False
-            )
-            do_seen = bool(cfg.dedup and n_new)
-            frontier_done = threading.Event()
-
-            def _tail(
-                w: int = wave,
-                fn: DataFrame = front_next,
-                ev: threading.Event = frontier_done,
-                do_seen: bool = do_seen,
-            ) -> None:
-                try:
-                    io.write(fn, "frontier", w + 1)
-                finally:
-                    ev.set()  # never leave a reader blocked
-                if do_seen:
-                    # new rows are exactly the attempt==0 rows (retries
-                    # have attempt >= 1); literal-free filter
-                    io.write(
-                        fn.filter(F.col("attempt") == 0).select("url_canon"),
-                        "seen", w + 1,
-                    )
-                    # once a filter exists, add the delta slice from the
-                    # url-only seen parquet just written — a fraction of
-                    # the frontier dir's bytes
-                    self._bloom_add(io.read("seen", w + 1))
-
-            # caches the tail task reads — released once it lands. The
-            # PREVIOUS wave's front_next is released one wave later (the
-            # handoff plan below may reference it as `pending`).
-            tail_release = [
-                selected, parse_out, *drain_seq_caches(), *self._wave_caches
-            ]
-            self._wave_caches = []
-            if prev_front is not None:
-                tail_release.append(prev_front)
-            prev_front = front_next
-            _await_seen()  # no-op unless dedup=False skipped the await
-            seen_fut = io_pool.submit(_tail)
-            release_after_seen = tail_release
-            tr.mark("tail(submit)")
-
-            if n_sched == pending_count:
-                segments = [f"frontier/wave={wave + 1}"]
-                consumed = []
-                consumed_rows = 0
-                # DataFrame handoff: the new segment IS the whole next
-                # pending set, and front_next is its live cached frame —
-                # the next wave plans against it directly instead of
-                # waiting for the parquet read-back. Only on the plain
-                # path (no staged seeds/hooks mutating pending outside
-                # the frame), and lineage-reset every few waves so the
-                # logical plan tree stays bounded on long crawls.
-                handoff_streak += 1
-                if (
-                    not staged_seeds
-                    and not self.request_hooks
-                    and handoff_streak % 8 != 0
-                ):
-                    handoff = front_next
-                else:
-                    handoff = None
-            else:
-                handoff = None
-                handoff_streak = 0
-                segments = segments + [f"frontier/wave={wave + 1}"]
-                # tombstones: the PRE-hook scheduled keys leave pending
-                # (a hook-dropped request is consumed, never retried).
-                # Overlapped like the other independent sinks; the next
-                # pending_view read happens after the wave-end drain.
-                wave_writes.append(
-                    io_pool.submit(
-                        io.write, selected.select("seq", "attempt"),
-                        "consumed", wave,
-                    )
-                )
-                consumed = consumed + [f"consumed/wave={wave}"]
-                consumed_rows += n_sched
-                pending_next = max(pending_count - n_sched + n_retried + n_new, 1)
-                if (
-                    len(segments) > cfg.frontier_max_segments
-                    or consumed_rows > 2 * pending_next
-                ):
-                    # amortized compaction (Iceberg rewrite-data-files
-                    # analog): materialize the true pending set as ONE
-                    # base segment, drop the tombstones. O(backlog), but
-                    # triggered only when tombstones dominate or the
-                    # segment list grows — O(1) amortized per row.
-                    # pending_view reads the consumed tombstones written
-                    # above: drain the overlapped writes first.
-                    for fut in wave_writes:
-                        fut.result()
-                    wave_writes = []
-                    frontier_done.wait()  # segment dir must be complete
-                    base_rel = f"frontier_base/wave={wave + 1}"
-                    io.write_rel(pending_view(), base_rel)
-                    segments = [base_rel]
-                    consumed = []
-                    consumed_rows = 0
-            tr.mark("dedup+seq+frontier")
-            next_seq += n_new
-
-            n_dedup = max(n_outlinks - n_new, 0)
-            for r in mrows:
-                if r["partition_id"] == -1:
-                    r["deduped"] = n_dedup
-                    r["unrouted"] = n_unrouted
-                r["t_fetch_ms"] = t_fp_ms
-            self._metrics_buf.extend(mrows)
-            stats.scheduled += n_sched
-            stats.fetched += sum(r["fetched"] for r in mrows)
-            stats.failed += n_failed
-            stats.items += sum(r["items"] for r in mrows)
-            stats.outlinks += n_outlinks
-            stats.deduped += n_dedup
-            stats.unrouted += n_unrouted
-            stats.dropped += sum(r["dropped"] for r in mrows)
-            stats.exhausted += n_failed - n_retried
-            if self.request_hooks:
-                # a request hook may have dropped scheduled rows AFTER
-                # select_wave counted them against pending; the
-                # arithmetic below would overcount pending forever
-                # (blocking idle shutdown + staged-seed admission), so
-                # re-probe the materialized frontier next wave instead.
-                pending_count = None
-            else:
-                pending_count = pending_count - n_sched + n_retried + n_new
-            if cfg.track_spiders:
-                # pending_view reads this wave's consumed tombstones
-                # AND the new frontier segment: drain the overlapped
-                # writes and the tail's frontier stage first
-                for fut in wave_writes:
-                    fut.result()
-                frontier_done.wait()
-                nxt = pending_view()
-                spider_pending = {
-                    int(r["spider_id"]): r["cnt"]
-                    for r in nxt.groupBy("spider_id").agg(
-                        F.count("*").alias("cnt")
-                    ).collect()
-                }
-                for sid, sp in self.spiders.items():
-                    if (
-                        sid not in closed_spiders
-                        and spider_pending.get(sid, 0) == 0
-                    ):
-                        sp.close()  # deactivation (manager.rs:340-369)
-                        closed_spiders.add(sid)
-                stats.closed_spiders = len(closed_spiders)
-
-            stats.wave_walls.append(time.monotonic() - t_wave)
-            stats.wave_scheduled.append(n_sched)
-            stats.wave_new.append(n_new)
-            stats.wave_outlinks.append(n_outlinks)
-            # lineage evidence that frontier writes are O(wave), not
-            # O(backlog): rows written to the wave's delta segment
-            stats.wave_frontier_rows.append(n_retried + n_new)
-            stats.wave_seen_join.append(
-                getattr(self, "_last_seen_join", None)
-            )
-
-            # drain overlapped sink writes BEFORE any commit (a manifest
-            # must never point past unwritten data) and before the
-            # unpersist sweep (the writes read this wave's caches)
-            for fut in wave_writes:
-                fut.result()
-
-            wave += 1
-            stats.waves = wave
-            if wave % cfg.checkpoint_every == 0:
-                # a manifest advancing next_wave implies the wave's seen
-                # slice is durable — await the overlapped tail
-                _await_seen()
-                self._flush_metrics(io)
-                _commit()
-            # NOTE: this wave's caches are NOT swept here — the tail
-            # task still reads them; _await_seen() releases them when
-            # the tail lands (at the next wave's dedup point or below)
-
-        _await_seen()  # terminal wave's overlapped tail, if any
-        for df in (*drain_seq_caches(), *self._wave_caches):
-            df.unpersist()  # caches from injections on terminal waves
-        self._wave_caches = []
-        if prev_front is not None:
-            prev_front.unpersist()  # last wave's handoff frame
+    def _shutdown(self, st: RunState) -> None:
+        """Release the last caches, close spiders and pipelines, commit."""
+        st.await_tail()  # terminal wave's overlapped tail, if any
+        for df in st.caches:
+            df.unpersist()  # last handoff frame, terminal-wave injections
         for sid, sp in self.spiders.items():
-            if not cfg.track_spiders or sid not in closed_spiders:
+            if not self.cfg.track_spiders or sid not in st.closed_spiders:
                 sp.close()  # forced close at shutdown (manager.rs:208-237)
         if self.pipelines is not None:
             # I5 drain + close: pipelines close after spiders, once the
             # final wave's items are written (manager.rs:105-150)
             self.pipelines.close_all()
-        self._flush_metrics(io)
-        _commit(done=True)
-        stats.wall_s = time.monotonic() - t_start
-        return stats
+        self._commit(st, done=True)
+        st.stats.wall_s = time.monotonic() - st.t_start
 
     def _harvest_cookies(self, parse_out: DataFrame) -> list:
         """Fold Set-Cookie lineage into the per-host jar (S6 harvest,
@@ -1434,23 +1450,23 @@ class CrawlEngine:
             self._cookie_jar[r["host"]] = r["set_cookie"]
         return jar_rows
 
-    def _flush_metrics(self, io: TableIO) -> None:
+    def _flush_metrics(self, st: RunState) -> None:
         """Write all buffered (wave, partition) metric rows as one table."""
-        if not self._metrics_buf:
+        if not st.metrics_buf:
             return
         import pandas as pd
 
-        pdf = pd.DataFrame(self._metrics_buf)[[f.name for f in METRICS_SCHEMA.fields]]
+        pdf = pd.DataFrame(st.metrics_buf)[[f.name for f in METRICS_SCHEMA.fields]]
         df = self.spark.createDataFrame(pdf, METRICS_SCHEMA)
-        # through TableIO, NOT direct parquet: resume (io.exists/io.read
-        # above) and monitor.render_run read it back through the store
-        io.write(df.coalesce(1), "metrics")
-        if self._status_buf:
+        # through TableIO, NOT direct parquet: resume (_start) and
+        # monitor.render_run read it back through the store
+        st.io.write(df.coalesce(1), "metrics")
+        if st.status_buf:
             sdf = self.spark.createDataFrame(
-                pd.DataFrame(self._status_buf),
+                pd.DataFrame(st.status_buf),
                 "wave int, resp_status int, count long",
             )
-            io.write(sdf.coalesce(1), "status")
+            st.io.write(sdf.coalesce(1), "status")
 
     # -- result accessors ------------------------------------------------------
 

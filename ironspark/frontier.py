@@ -11,19 +11,19 @@ the whole frontier through ONE task. ``with_global_seq`` instead does a
 distributed range-partitioned sort, numbers rows per partition in
 parallel, and shifts by per-partition offsets (a tiny driver-side
 cumulative sum) — the classic scalable zip-with-index.
+
+Cache ownership: the module keeps no state. ``with_global_seq`` (and
+through it ``seeds_to_frontier`` and ``enqueue_outlinks``) appends the
+two frames it persists to the caller's ``caches`` list; the engine
+passes its wave's one list (``engine.RunState.caches``).
 """
 
 from __future__ import annotations
-
-import os
-import time
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ironspark.url import with_canonical
-
-_TRACE = os.environ.get("IRONSPARK_TRACE", "") not in ("", "0")
 
 # NOTE: no `wave` data column — a frontier row's wave is its segment
 # directory (frontier/wave=N), and order/items tables likewise derive
@@ -31,28 +31,19 @@ _TRACE = os.environ.get("IRONSPARK_TRACE", "") not in ("", "0")
 # the data keeps every per-wave plan literal-free, so whole-stage
 # codegen compiles ONCE per plan shape instead of once per wave
 # (wave-varying int literals inline into the generated source).
-_FRONTIER_COLS = [
+_FRONTIER_COLS = (
     "url_canon", "url", "host", "spider_id", "seq", "attempt",
     "method", "headers", "body", "meta", "status",
-]
-
-# persisted intermediates from with_global_seq, drained by the engine
-# once the wave's frontier is materialized (see drain_seq_caches)
-_SEQ_CACHES: list = []
-
-
-def drain_seq_caches() -> list:
-    out = list(_SEQ_CACHES)
-    _SEQ_CACHES.clear()
-    return out
+)
 
 
 def with_global_seq(
     df: DataFrame,
     order_cols: list[str],
     base_seq: int = 0,
-    out: str = "seq",
     bounds: tuple[int, int] | None = None,
+    *,
+    caches: list,
 ) -> tuple[DataFrame, int]:
     """Dense global 1-based sequence by order_cols, offset by base_seq.
 
@@ -78,11 +69,12 @@ def with_global_seq(
 
     The INPUT is persisted first so the sampling/count job's execution
     of the child plan (dedup groupBy + seen anti-join) is not repeated
-    by the later consumer of the returned frame.
+    by the later consumer of the returned frame. Both persisted frames
+    go into ``caches`` (module docstring).
     """
     nparts = max(df.sparkSession.sparkContext.defaultParallelism, 1)
     src = df.persist()
-    _SEQ_CACHES.append(src)
+    caches.append(src)
     if bounds is not None and bounds[0] is not None and bounds[1] is not None:
         lo, hi = int(bounds[0]), int(bounds[1])
         span = max(hi - lo + 1, 1)
@@ -108,18 +100,8 @@ def with_global_seq(
             nparts, *[F.col(c) for c in order_cols]
         ).withColumn("_pid", F.spark_partition_id())
     d = d.persist()
-    _SEQ_CACHES.append(d)
-    if _TRACE:
-        t0 = time.monotonic()
-        q = d.groupBy("_pid").count()
-        q._jdf.queryExecution().executedPlan()  # force analyze+optimize+plan
-        t1 = time.monotonic()
-        counts = dict(q.collect())
-        t2 = time.monotonic()
-        print(f"[trace]   seq: plan={t1 - t0:.2f}s exec={t2 - t1:.2f}s",
-              flush=True)
-    else:
-        counts = dict(d.groupBy("_pid").count().collect())
+    caches.append(d)
+    counts = dict(d.groupBy("_pid").count().collect())
     acc = 0
     offs = [0] * nbuckets
     for p in sorted(counts):
@@ -134,7 +116,7 @@ def with_global_seq(
     )
     out_df = (
         d.withColumn("_rn", F.row_number().over(w))
-        .withColumn(out, (off_expr + F.col("_rn")).cast("long"))
+        .withColumn("seq", (off_expr + F.col("_rn")).cast("long"))
         .drop("_pid", "_rn")
     )
     return out_df, acc
@@ -163,7 +145,7 @@ def _finish_frontier(f: DataFrame) -> DataFrame:
 
 
 def seeds_to_frontier(
-    seeds: DataFrame, dedup: bool = True, base_seq: int = 0
+    seeds: DataFrame, dedup: bool = True, base_seq: int = 0, *, caches: list
 ) -> tuple[DataFrame, int]:
     """Seed rows -> (wave-0 pending frontier with deterministic seq,
     total seed rows numbered).
@@ -178,7 +160,9 @@ def seeds_to_frontier(
     callers must continue from base_seq + total, not max(surviving seq).
     """
     f = with_canonical(seeds, "url").filter(F.col("url_canon").isNotNull())
-    f, total = with_global_seq(f, ["spider_id", "seed_rank", "url_canon"], base_seq)
+    f, total = with_global_seq(
+        f, ["spider_id", "seed_rank", "url_canon"], base_seq, caches=caches
+    )
     if dedup:
         f = _first_per_url(f)
     return _finish_frontier(f), total
@@ -221,13 +205,16 @@ def enqueue_outlinks(
     candidates: DataFrame,
     base_seq: int,
     bounds: tuple[int, int] | None = None,
+    *,
+    caches: list,
 ) -> tuple[DataFrame, int]:
     """Canonicalized (and seen-filtered) candidates -> (pending frontier
     rows with seq continuing the global FIFO, row count). bounds =
     (min, max) parent_seq of the wave's outlinks when known (fused
     metrics pass) — elides the range-sampling job."""
     f, n = with_global_seq(
-        candidates, ["parent_seq", "link_index"], base_seq, bounds=bounds
+        candidates, ["parent_seq", "link_index"], base_seq, bounds=bounds,
+        caches=caches,
     )
     return _finish_frontier(f.drop("parent_seq", "link_index")), n
 

@@ -129,8 +129,8 @@ def throttle_traps(pending: DataFrame, cfg: EngineConfig) -> DataFrame:
     template ({D}/{H} placeholder) covering >= trap_min_urls pending
     URLs and >= trap_share of its host's pending set — the signature of
     calendar traps, session ids and infinite pagination. Throttled rows
-    are not dropped; select_wave's deferred anti-join keeps them
-    pending, so the group trickles out cap-per-wave (cap >= 1
+    are not dropped; like every row select_wave does not schedule they
+    stay pending, so the group trickles out cap-per-wave (cap >= 1
     guarantees progress and eventual idle shutdown).
 
     Scale: one (host, template) hash-agg over the frontier + a
@@ -173,15 +173,15 @@ def throttle_traps(pending: DataFrame, cfg: EngineConfig) -> DataFrame:
 
 def select_wave(
     pending: DataFrame, robots: DataFrame | None, cfg: EngineConfig
-) -> tuple[DataFrame, DataFrame]:
-    """(scheduled, deferred) for this wave.
+) -> DataFrame:
+    """The rows of ``pending`` scheduled this wave.
 
-    scheduled = per-host lowest-seq rows within budget (two-phase salted
-    rank), optionally capped globally by cfg.max_wave_size in seq order
-    (the reference's global quota / backpressure analog); when
+    Per-host lowest-seq rows within budget (two-phase salted rank),
+    optionally capped globally by cfg.max_wave_size in seq order (the
+    reference's global quota / backpressure analog); when
     cfg.trap_template_cap is set, trap-flagged (host, template) groups
-    are first capped by throttle_traps. deferred = everything else,
-    untouched, stays pending next wave.
+    are first capped by throttle_traps. Every other row stays pending:
+    the engine tombstones only the scheduled (seq, attempt) keys.
     """
     if cfg.trap_template_cap is not None:
         pending_in = throttle_traps(pending, cfg)
@@ -221,9 +221,5 @@ def select_wave(
     p2 = under.unionByName(p2).drop("budget", "crawl_delay")
 
     if cfg.max_wave_size is not None:
-        scheduled = p2.orderBy("seq").limit(cfg.max_wave_size)
-    else:
-        scheduled = p2
-
-    deferred = pending.join(scheduled.select("seq"), "seq", "left_anti")
-    return scheduled, deferred
+        return p2.orderBy("seq").limit(cfg.max_wave_size)
+    return p2

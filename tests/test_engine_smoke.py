@@ -39,6 +39,32 @@ def test_chain_crawl_dedup(spark, chain_setup, tmp_path):
         assert row["text"] == truth[row["src_url"]]
 
 
+def test_trace_phases_per_wave(spark, chain_setup, tmp_path, capsys, monkeypatch):
+    """The [trace] lines perfbench/trace.py parses: every wave prints
+    these phases, once each, in this order."""
+    import re
+
+    import ironspark.engine as engine_mod
+
+    monkeypatch.setattr(engine_mod, "_TRACE", True)
+    pages, seeds, spiders = chain_setup
+    cfg = EngineConfig(dedup=True, max_waves=10, respect_robots=False)
+    stats = CrawlEngine(spark, pages, spiders, cfg).run(
+        seeds=seeds, run_dir=str(tmp_path / "run")
+    )
+    phases: dict[int, list[str]] = {}
+    for m in re.finditer(
+        r"^\[trace\] wave=(\d+) (\S+): [\d.]+s$", capsys.readouterr().out, re.M
+    ):
+        phases.setdefault(int(m[1]), []).append(m[2])
+    assert sorted(phases) == list(range(stats.waves))
+    for wave in phases.values():
+        assert wave == [
+            "schedule+order", "fetch+parse+metrics", "items", "await-seen",
+            "enqueue(seq-jobs)", "tail(submit)", "dedup+seq+frontier",
+        ]
+
+
 def test_chain_crawl_no_dedup_reference_parity(spark, chain_setup, tmp_path):
     """dedup=False: the reference engine never dedups (scheduler is a plain
     FIFO channel) — 9 seeds stay 9 chains-in-flight."""

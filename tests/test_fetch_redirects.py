@@ -60,7 +60,7 @@ def test_corpus_scan_column_pruning(spark):
 
     pages = spark.createDataFrame(build_chain_corpus(1, 2), PAGES_SCHEMA)
     seeds = spark.createDataFrame(article_seeds(1, 2, dup=1), SEEDS_SCHEMA)
-    sched, _ = seeds_to_frontier(seeds)
+    sched, _ = seeds_to_frontier(seeds, caches=[])
     plan = fetch_from_corpus(
         sched, pages.select("url", "html", "warc_ts")
     )._jdf.queryExecution().executedPlan().toString()

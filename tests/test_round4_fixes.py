@@ -15,7 +15,7 @@ import pandas as pd
 import pytest
 
 from ironspark.config import EngineConfig
-from ironspark.engine import CrawlEngine, TableIO
+from ironspark.engine import CrawlEngine, RunState, TableIO
 from ironspark.seen import ShardedCuckoo, _hash128
 from ironspark.spider import ArticleSpider
 
@@ -107,7 +107,9 @@ def test_metrics_flush_through_tableio(spark, tmp_path, monkeypatch):
     they read."""
     calls = []
     eng = _engine(spark, store_cookies=False)
-    eng._metrics_buf = [
+    io = TableIO(spark, str(tmp_path / "m"))
+    st = RunState(io)
+    st.metrics_buf = [
         {
             "wave": 0, "partition_id": 0, "scheduled": 1, "fetched": 1,
             "failed": 0, "retried": 0, "parsed": 1, "items": 1,
@@ -116,8 +118,7 @@ def test_metrics_flush_through_tableio(spark, tmp_path, monkeypatch):
             "t_fetch_ms": 1.0, "t_parse_ms": 1.0,
         }
     ]
-    eng._status_buf = [{"wave": 0, "resp_status": 200, "count": 1}]
-    io = TableIO(spark, str(tmp_path / "m"))
+    st.status_buf = [{"wave": 0, "resp_status": 200, "count": 1}]
     orig_write = io.write
 
     def spy(df, name, wave=None, mode="overwrite"):
@@ -125,7 +126,7 @@ def test_metrics_flush_through_tableio(spark, tmp_path, monkeypatch):
         return orig_write(df, name, wave, mode)
 
     monkeypatch.setattr(io, "write", spy)
-    eng._flush_metrics(io)
+    eng._flush_metrics(st)
     assert "metrics" in calls and "status" in calls
     assert io.exists("metrics") and io.exists("status")
     assert io.read("metrics").count() == 1
@@ -166,9 +167,10 @@ def test_seen_join_regime_resolution(spark):
     seen = spark.createDataFrame(
         pd.DataFrame({"url_canon": [f"http://h/{i}" for i in range(0, 20, 2)]})
     )
+    caches = []
     # broadcast regime: map-side anti-join, no prune stage
     plan_b = eng._filter_new(
-        cand, seen, seen_rows=10
+        cand, seen, eng._resolve_seen_join(seen_rows=10), caches
     )._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan_b and "LeftAnti" in plan_b
     assert "_maybe" not in plan_b
@@ -176,7 +178,9 @@ def test_seen_join_regime_resolution(spark):
     # flip regime: BOTH broadcasts are wave-sized (the seen side is
     # only scanned); plan shows a semi (dupes) feeding an anti probe,
     # and the result is exactly the unseen candidates
-    flipped = eng._filter_new(cand, seen, seen_rows=10, wave_outlinks=1)
+    flipped = eng._filter_new(
+        cand, seen, eng._resolve_seen_join(seen_rows=10, wave_outlinks=1), caches
+    )
     plan_f = flipped._jdf.queryExecution().executedPlan().toString()
     assert plan_f.count("BroadcastHashJoin") == 2
     assert "LeftSemi" in plan_f and "LeftAnti" in plan_f
@@ -186,12 +190,14 @@ def test_seen_join_regime_resolution(spark):
     # shuffle regime with live slices: pruned split + shuffled hash join
     eng._bloom = ShardedBloom(spark, 1 << 12, 0.01, 4)
     eng._bloom.add_local(["http://h/0"])
-    pruned = eng._filter_new(cand, seen, seen_rows=10**9)
+    pruned = eng._filter_new(
+        cand, seen, eng._resolve_seen_join(seen_rows=10**9), caches
+    )
     plan_s = pruned._jdf.queryExecution().executedPlan().toString()
     assert "ShuffledHashJoin" in plan_s and "_maybe" not in pruned.columns
     got = {r.url_canon for r in pruned.collect()}
     assert got == {f"http://h/{i}" for i in range(1, 20, 2)}
-    for df in eng._wave_caches:
+    for df in caches:
         df.unpersist()
 
 

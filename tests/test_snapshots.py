@@ -13,8 +13,9 @@ assert the three claims the metadata makes:
   * the parent chain walks back to snapshot 0 and summaries advance
     monotonically with the wave counter;
   * a crawl whose engine manifest.json is LOST resumes purely from the
-    snapshot summary (restore_manifest) and converges to the same
-    items + crawl order as an uninterrupted run.
+    snapshot summary (restore_manifest) — the head or a mid-chain
+    snapshot — and converges to the same items + crawl order as an
+    uninterrupted run.
 """
 
 from __future__ import annotations
@@ -114,33 +115,45 @@ def test_resume_strictly_from_snapshot_summary(spark, crawl_setup, tmp_path):
     full_dir = str(tmp_path / "full")
     eng_full = CrawlEngine(spark, pages, {1: LinkSpider()}, _cfg())
     eng_full.run(seeds=seeds, run_dir=full_dir)
-
-    part_dir = str(tmp_path / "part")
-    eng1 = CrawlEngine(spark, pages, {1: LinkSpider()}, _cfg(max_waves=2))
-    eng1.run(seeds=seeds, run_dir=part_dir)
-
-    # simulate a torn/lost engine manifest: the ONLY recovery input is
-    # the snapshot chain
-    os.remove(os.path.join(part_dir, "manifest.json"))
-    io = TableIO(spark, part_dir)
-    with pytest.raises(FileNotFoundError):
-        io.restore_manifest(snapshot_id=10_000)
-    restored = io.restore_manifest()
-    assert restored["next_wave"] == 2
-
-    eng2 = CrawlEngine(spark, pages, {1: LinkSpider()}, _cfg())
-    eng2.run(run_dir=part_dir, resume=True)
-
     a = eng_full.items_df(full_dir).select("src_url", "title", "text")
-    b = eng2.items_df(part_dir).select("src_url", "title", "text")
-    assert sorted(a.collect()) == sorted(b.collect())
     oa = eng_full.crawl_order_df(full_dir).toPandas().sort_values("seq")
-    ob = eng2.crawl_order_df(part_dir).toPandas().sort_values("seq")
-    assert list(oa["url_canon"]) == list(ob["url_canon"])
-    assert list(oa["seq"]) == list(ob["seq"])
 
-    # recovery did not mint a snapshot; the resumed leg extended the
-    # chain past the pre-crash head
-    resumed_head = io.current_snapshot_id()
-    assert resumed_head > restored["next_wave"]
-    assert io.snapshot(resumed_head)["summary"].get("done") is True
+    # (waves the first run crawls, snapshot restored, config): the head
+    # snapshot of a run cut at max_waves; and a mid-chain snapshot whose
+    # next wave's overlapped tail already wrote seen/wave=3, which the
+    # resumed dedup (and the prune's base build) must not read
+    cases = [
+        (2, None, {}),
+        (3, 2, {"seen_backend": "exact"}),
+        (3, 2, {"seen_backend": "cuckoo", "seen_broadcast_max_rows": 0}),
+    ]
+    for i, (waves, snap, kw) in enumerate(cases):
+        part_dir = str(tmp_path / f"part{i}")
+        cfg1 = _cfg(max_waves=waves, **kw)
+        CrawlEngine(spark, pages, {1: LinkSpider()}, cfg1).run(
+            seeds=seeds, run_dir=part_dir
+        )
+
+        # simulate a torn/lost engine manifest: the ONLY recovery input
+        # is the snapshot chain
+        os.remove(os.path.join(part_dir, "manifest.json"))
+        io = TableIO(spark, part_dir)
+        with pytest.raises(FileNotFoundError):
+            io.restore_manifest(snapshot_id=10_000)
+        restored = io.restore_manifest(snap)
+        assert restored["next_wave"] == 2
+
+        eng2 = CrawlEngine(spark, pages, {1: LinkSpider()}, _cfg(**kw))
+        eng2.run(run_dir=part_dir, resume=True)
+
+        b = eng2.items_df(part_dir).select("src_url", "title", "text")
+        assert sorted(a.collect()) == sorted(b.collect()), kw
+        ob = eng2.crawl_order_df(part_dir).toPandas().sort_values("seq")
+        assert list(oa["url_canon"]) == list(ob["url_canon"]), kw
+        assert list(oa["seq"]) == list(ob["seq"]), kw
+
+        # recovery did not mint a snapshot; the resumed leg extended the
+        # chain past the pre-crash head
+        resumed_head = io.current_snapshot_id()
+        assert resumed_head > restored["next_wave"]
+        assert io.snapshot(resumed_head)["summary"].get("done") is True
