@@ -134,7 +134,7 @@ class EngineConfig:
     user_agent: str = "ironspark/0.1"
 
     # -- checkpointing ---------------------------------------------------------
-    checkpoint_every: int = 1  # waves between manifest commits
+    checkpoint_every: int = 1  # waves between snapshot commits
 
     extra: dict = field(default_factory=dict, compare=False, hash=False)
 

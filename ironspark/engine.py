@@ -15,8 +15,10 @@ shutdown, monitor.rs:62-72) → ``_schedule`` → ``_fetch_parse`` →
 ``_commit_wave``, each a method over one ``RunState`` (the
 loop-carried state, the overlapped tail and the wave's one cache
 list). State tables (frontier, seen, items, crawl order, metrics) are
-materialized per wave by TableIO — parquet directories with a JSON
-manifest and an Iceberg-shaped snapshot chain.
+materialized per wave by TableIO — parquet directories whose only
+commit record is an Iceberg-shaped snapshot chain of relative-path
+deltas; a resume first returns the run directory to the files the
+current snapshot lists.
 """
 
 from __future__ import annotations
@@ -134,17 +136,35 @@ _TABLE_SCHEMAS = {
 
 
 class TableIO:
-    """The engine's state store: parquet dirs, a JSON run manifest and
-    an Iceberg-shaped snapshot chain."""
+    """The engine's state store: one parquet dir per state table, and
+    under ``metadata/`` an Iceberg-shaped snapshot chain, the engine's
+    only commit record.
+
+    ``commit`` appends ``snap-<id>.json``: the parent id, the engine
+    summary (next wave, seq counter, frontier segments, ...) and the
+    parquet files added or removed since the parent, with sizes and
+    run-dir-relative paths. A snapshot's file list is the fold of its
+    chain, so a commit writes O(delta) metadata (the Iceberg spec's
+    manifest reuse, https://iceberg.apache.org/spec/, cut to one delta
+    per commit). ``version-hint.text``, written last, is the commit
+    point (the hadoop-catalog protocol).
+
+    Data lands in the table dirs before the commit that lists it, and
+    per-wave reads list directories: ``restore`` (the start of every
+    resume) deletes each file the current snapshot does not list. One
+    run writes a run dir at a time; readers such as the live monitor
+    open their own TableIO, and opening one deletes nothing.
+    """
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        self.meta = os.path.join(root, "metadata")
         os.makedirs(root, exist_ok=True)
-        # finish any rewrite() a crash cut between its two renames
-        for d in os.listdir(root):
-            if d.startswith("_") and d.endswith("_old"):
-                self._finish_rewrite(d[1:-len("_old")])
+        # ((snapshot id, timestamp), folded file list) of the last
+        # snapshot folded or committed: a commit reads one snapshot,
+        # not the chain
+        self._listed: tuple[tuple, dict] | None = None
 
     def _reader(self, name: str):
         s = _TABLE_SCHEMAS.get(name.split("/", 1)[0])
@@ -175,8 +195,8 @@ class TableIO:
     def read(self, name: str, wave: int | None = None) -> DataFrame:
         return self._reader(name).parquet(self.path(name, wave))
 
-    def read_all_waves(self, name: str, upto: int | None = None) -> DataFrame | None:
-        """Every ``wave=N`` slice of a table; with ``upto``, only N <= upto."""
+    def read_all_waves(self, name: str) -> DataFrame | None:
+        """Every ``wave=N`` slice of a table."""
         base = os.path.join(self.root, name)
         if not os.path.isdir(base) or not os.listdir(base):
             return None
@@ -184,7 +204,7 @@ class TableIO:
             *[
                 os.path.join(base, d)
                 for d in sorted(os.listdir(base))
-                if d.startswith("wave=") and (upto is None or int(d[5:]) <= upto)
+                if d.startswith("wave=")
             ]
         )
 
@@ -192,155 +212,152 @@ class TableIO:
         return os.path.isdir(self.path(name))
 
     def rewrite(self, df: DataFrame, name: str) -> None:
-        """Atomically replace a whole table (seen-set invalidation):
-        write aside, then swap directories by rename — a crash never
-        tears the table (the next TableIO on this root finishes the
-        swap)."""
-        new = os.path.join(self.root, f"_{name}_rewrite")
-        df.write.mode("overwrite").parquet(os.path.join(new, "wave=0"))
-        os.replace(self.path(name), os.path.join(self.root, f"_{name}_old"))
-        self._finish_rewrite(name)
-
-    def _finish_rewrite(self, name: str) -> None:
-        """Second half of rewrite(): move the new table into place if
-        the live one is aside, then drop the aside copy. A TableIO
-        opened by another process (the live monitor) may run this
-        concurrently, so either side may find the work done."""
-        live = self.path(name)
-        if not os.path.isdir(live):
-            try:
-                os.replace(os.path.join(self.root, f"_{name}_rewrite"), live)
-            except FileNotFoundError:
-                pass
-        shutil.rmtree(os.path.join(self.root, f"_{name}_old"), ignore_errors=True)
+        """Replace a whole table (seen-set invalidation). The new rows
+        land beside the old files; one snapshot lists them in place of
+        the old ones (the decision point), then the old files go. A
+        crash before that commit leaves unlisted new files, after it
+        unlisted old ones: restore() deletes either, so the table is
+        whole on the side of the commit the crash fell."""
+        old = [p for p in self._files(self.snapshot()) if p.startswith(name + "/")]
+        df.write.mode("append").parquet(self.path(name, 0))
+        self.commit(self.manifest(), drop=old)
+        self._prune([name])
 
     def manifest(self) -> dict | None:
-        p = os.path.join(self.root, "manifest.json")
-        if not os.path.exists(p):
-            return None
-        with open(p) as fh:
-            return json.load(fh)
+        """The engine state: the current snapshot's summary."""
+        snap = self.snapshot()
+        return None if snap is None else snap["summary"]
 
-    def commit(self, manifest: dict) -> None:
-        p = os.path.join(self.root, "manifest.json")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, p)  # atomic: a crash never leaves a torn manifest
-        self._write_snapshot(manifest)
-
-    # -- Iceberg-shaped snapshot chain ---------------------------------
-    # Every commit also appends a snapshot under <root>/metadata/: a
-    # snap-<id>.json carrying the parent pointer + a manifest list, one
-    # manifest-<id>-<table>.json per state table enumerating the
-    # concrete parquet data files (path / size / format) visible at
-    # commit time, and a version-hint.text updated LAST as the commit
-    # point (the Iceberg hadoop-catalog protocol). This makes the
-    # "resumable from snapshots" claim testable without the runtime
-    # jar: any engine (DuckDB in tests) can read a checkpoint strictly
-    # from the files a snapshot manifest lists, and a lost
-    # manifest.json is reconstructible from the snapshot summary.
-
-    def _meta_dir(self) -> str:
-        return os.path.join(self.root, "metadata")
-
-    def _table_roots(self) -> dict[str, str]:
-        """name -> directory holding that state table's data files."""
-        out: dict[str, str] = {}
-        if os.path.isdir(self.root):
-            for d in sorted(os.listdir(self.root)):
-                p = os.path.join(self.root, d)
-                if os.path.isdir(p) and d != "metadata" and not d.startswith("_"):
-                    out[d] = p
-        return out
-
-    @staticmethod
-    def _data_files(table_root: str) -> list[dict]:
-        files = []
-        for dirpath, dirnames, filenames in os.walk(table_root):
-            # skip work dirs (_temporary, .staging)
-            dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
-            for f in sorted(filenames):
-                if f.endswith(".parquet"):
-                    fp = os.path.join(dirpath, f)
-                    files.append(
-                        {
-                            "file-path": fp,
-                            "file-size-in-bytes": os.path.getsize(fp),
-                            "file-format": "PARQUET",
-                        }
-                    )
-        return files
-
-    def _write_snapshot(self, manifest: dict) -> None:
-        meta = self._meta_dir()
-        os.makedirs(meta, exist_ok=True)
-        parent = self.current_snapshot_id()
-        sid = 0 if parent is None else parent + 1
-        manifest_list = []
-        for name, troot in self._table_roots().items():
-            mf = f"manifest-{sid}-{name}.json"
-            with open(os.path.join(meta, mf + ".tmp"), "w") as fh:
-                json.dump(
-                    {"table": name, "data-files": self._data_files(troot)},
-                    fh,
-                )
-            os.replace(
-                os.path.join(meta, mf + ".tmp"), os.path.join(meta, mf)
-            )
-            manifest_list.append(mf)
+    def commit(self, manifest: dict, *, drop=()) -> None:
+        """Append a snapshot with ``manifest`` as its summary and, as
+        its delta, the data files written since the parent (and the
+        listed ones in ``drop``, retired though still on disk)."""
+        os.makedirs(self.meta, exist_ok=True)
+        parent = self.snapshot()
+        listed = self._files(parent)
+        files = self._data_files(self._tables())
+        for p in drop:
+            files.pop(p, None)
+        sid = 0 if parent is None else parent["snapshot-id"] + 1
         snap = {
             "snapshot-id": sid,
-            "parent-snapshot-id": parent,
-            "sequence-number": sid,
+            "parent-snapshot-id": None if parent is None else parent["snapshot-id"],
             "timestamp-ms": int(time.time() * 1000),
-            "operation": "append",
-            "manifest-list": manifest_list,
             "summary": manifest,
+            "added-files": _entries(files, set(files) - set(listed)),
+            "removed-files": _entries(listed, set(listed) - set(files)),
         }
-        with open(os.path.join(meta, f"snap-{sid}.json.tmp"), "w") as fh:
-            json.dump(snap, fh)
-        os.replace(
-            os.path.join(meta, f"snap-{sid}.json.tmp"),
-            os.path.join(meta, f"snap-{sid}.json"),
-        )
+        _put(os.path.join(self.meta, f"snap-{sid}.json"), json.dumps(snap))
         # version-hint LAST: readers never see a hinted-at snapshot
-        # whose manifests aren't fully on disk
-        hint = os.path.join(meta, "version-hint.text")
-        with open(hint + ".tmp", "w") as fh:
-            fh.write(str(sid))
-        os.replace(hint + ".tmp", hint)
+        # that is not fully on disk
+        _put(os.path.join(self.meta, "version-hint.text"), str(sid))
+        self._listed = ((sid, snap["timestamp-ms"]), files)
+
+    def rollback(self, snapshot_id: int) -> None:
+        """Make a snapshot current and delete the ones after it
+        (Iceberg's rollback). Data files stay until restore()."""
+        if self.snapshot(snapshot_id) is None:
+            raise FileNotFoundError(f"no snapshot {snapshot_id} in {self.root}")
+        _put(os.path.join(self.meta, "version-hint.text"), str(snapshot_id))
+        for f in os.listdir(self.meta):
+            if f.startswith("snap-") and f.endswith(".json") and int(f[5:-5]) > snapshot_id:
+                os.remove(os.path.join(self.meta, f))
+
+    def restore(self) -> dict:
+        """Return the run dir to exactly the files the current snapshot
+        lists, and return its summary (the state a resume starts from).
+        Deleted: what a run wrote after its last commit (a tail's
+        slice, staged-seed or freshness-tick rows appended to a
+        committed slice) and the uncommitted side of a rewrite."""
+        man = self.manifest()
+        if man is None:
+            raise FileNotFoundError(f"no snapshot to resume in {self.root}")
+        self._prune(self._tables())
+        return man
+
+    def _tables(self) -> list[str]:
+        return [d for d in sorted(os.listdir(self.root)) if d != "metadata"]
+
+    def _data_files(self, tables: list[str]) -> dict[str, int]:
+        """Relative path -> size of every parquet file under ``tables``,
+        outside Spark's work dirs (_temporary, .staging)."""
+        out = {}
+        for t in tables:
+            for d, dirs, names in os.walk(os.path.join(self.root, t)):
+                dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+                for f in names:
+                    if f.endswith(".parquet"):
+                        p = os.path.join(d, f)
+                        out[os.path.relpath(p, self.root)] = os.path.getsize(p)
+        return out
+
+    def _prune(self, tables: list[str]) -> None:
+        """Delete every parquet file (with its .crc) under ``tables``
+        that the current snapshot does not list, then every dir left
+        holding no listed file."""
+        listed = self._files(self.snapshot())
+        for p in self._data_files(tables):
+            if p not in listed:
+                d, f = os.path.split(os.path.join(self.root, p))
+                for x in (f, f".{f}.crc"):
+                    if os.path.exists(os.path.join(d, x)):
+                        os.remove(os.path.join(d, x))
+        live = set()
+        for p in listed:
+            while p:
+                p = os.path.dirname(p)
+                live.add(p)
+        for t in tables:
+            for d, _, _ in os.walk(os.path.join(self.root, t), topdown=False):
+                if os.path.relpath(d, self.root) not in live:
+                    shutil.rmtree(d)
 
     def current_snapshot_id(self) -> int | None:
-        hint = os.path.join(self._meta_dir(), "version-hint.text")
+        hint = os.path.join(self.meta, "version-hint.text")
         if not os.path.exists(hint):
             return None
         with open(hint) as fh:
             return int(fh.read().strip())
 
     def snapshot(self, snapshot_id: int | None = None) -> dict | None:
+        """A snapshot (default: the current one), None if absent."""
         sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
-        if sid is None:
-            return None
-        p = os.path.join(self._meta_dir(), f"snap-{sid}.json")
-        if not os.path.exists(p):
+        p = os.path.join(self.meta, f"snap-{sid}.json")
+        if sid is None or not os.path.exists(p):
             return None
         with open(p) as fh:
             return json.load(fh)
 
+    def _files(self, snap: dict | None) -> dict[str, int]:
+        """Relative path -> size of every data file ``snap`` lists: the
+        fold of its chain's deltas. Callers must not mutate it."""
+        if snap is None:
+            return {}
+        key = (snap["snapshot-id"], snap["timestamp-ms"])
+        if self._listed is None or self._listed[0] != key:
+            chain = [snap]
+            while chain[-1]["parent-snapshot-id"] is not None:
+                chain.append(self.snapshot(chain[-1]["parent-snapshot-id"]))
+            files: dict[str, int] = {}
+            for s in reversed(chain):
+                for e in s["removed-files"]:
+                    del files[e["file-path"]]
+                for e in s["added-files"]:
+                    files[e["file-path"]] = e["file-size-in-bytes"]
+            self._listed = (key, files)
+        return self._listed[1]
+
     def snapshot_table_files(
         self, name: str, snapshot_id: int | None = None
     ) -> list[str]:
-        """Data files of one state table as listed by a snapshot's
-        manifest — the strictly-metadata-driven read path."""
-        snap = self.snapshot(snapshot_id)
-        if snap is None:
-            return []
-        mf = f"manifest-{snap['snapshot-id']}-{name}.json"
-        if mf not in snap["manifest-list"]:
-            return []
-        with open(os.path.join(self._meta_dir(), mf)) as fh:
-            return [d["file-path"] for d in json.load(fh)["data-files"]]
+        """Absolute paths of one state table's data files as a snapshot
+        lists them: the strictly-metadata-driven read path (a foreign
+        reader such as DuckDB needs nothing else)."""
+        return [
+            os.path.join(self.root, p)
+            for p in sorted(self._files(self.snapshot(snapshot_id)))
+            if p.startswith(name + "/")
+        ]
 
     def read_at_snapshot(
         self, name: str, snapshot_id: int | None = None
@@ -352,19 +369,18 @@ class TableIO:
             )
         return self._reader(name).parquet(*files)
 
-    def restore_manifest(self, snapshot_id: int | None = None) -> dict:
-        """Rewrite manifest.json from a snapshot's summary (recovery
-        after a lost/torn engine manifest) WITHOUT minting a new
-        snapshot; returns the restored manifest."""
-        snap = self.snapshot(snapshot_id)
-        if snap is None:
-            raise FileNotFoundError(f"no snapshot {snapshot_id} in {self.root}")
-        man = snap["summary"]
-        p = os.path.join(self.root, "manifest.json")
-        with open(p + ".tmp", "w") as fh:
-            json.dump(man, fh)
-        os.replace(p + ".tmp", p)
-        return man
+
+def _entries(files: dict[str, int], paths: set) -> list[dict]:
+    return [
+        {"file-path": p, "file-size-in-bytes": files[p]} for p in sorted(paths)
+    ]
+
+
+def _put(path: str, text: str) -> None:
+    """Atomic file write: a crash never leaves a torn one."""
+    with open(path + ".tmp", "w") as fh:
+        fh.write(text)
+    os.replace(path + ".tmp", path)
 
 
 @dataclass
@@ -401,8 +417,8 @@ class RunState:
     tail_release: list = field(default_factory=list)
     frontier_done: threading.Event | None = None
     closed_spiders: set = field(default_factory=set)
-    # (wave, partition) metric rows and the status histogram, buffered
-    # driver-side and flushed at commits
+    # (wave, partition) metric rows and the status histogram since the
+    # last commit, buffered driver-side and appended at the next one
     metrics_buf: list = field(default_factory=list)
     status_buf: list = field(default_factory=list)
     caches: list = field(default_factory=list)
@@ -418,6 +434,8 @@ class RunState:
             self.t_mark = now
 
     def manifest(self, **extra) -> dict:
+        """The engine summary a commit stores in its snapshot (what
+        TableIO.manifest() returns and a resume starts from)."""
         return {
             "next_wave": self.wave,
             "next_seq": int(self.next_seq),
@@ -438,9 +456,9 @@ class RunState:
         return df
 
     def seen(self) -> DataFrame | None:
-        """The append-only seen set as of this wave; later slices are
-        from a tail no manifest committed (resume), and are skipped."""
-        return self.io.read_all_waves("seen", upto=self.wave)
+        """The append-only seen set (a resume's restore() has removed
+        every slice past the snapshot it starts from)."""
+        return self.io.read_all_waves("seen")
 
     def write_async(self, df: DataFrame, name: str) -> None:
         """Overlapped write of this wave's slice of a sink table."""
@@ -682,11 +700,9 @@ class CrawlEngine:
         elif self._bloom is not None:
             self._bloom.add_df(urls, "url_canon")
 
-    def _append_seen(
-        self, io: TableIO, urls: DataFrame, wave: int, mode: str = "append"
-    ) -> None:
+    def _append_seen(self, io: TableIO, urls: DataFrame, wave: int) -> None:
         """Record urls in the wave's seen slice, then in the prune filter."""
-        io.write(urls, "seen", wave, mode=mode)
+        io.write(urls, "seen", wave, mode="append")
         self._bloom_add(urls)
 
     def invalidate_seen(self, run_dir: str, urls: list[str]) -> int:
@@ -696,11 +712,12 @@ class CrawlEngine:
         the north rule's 'cuckoo fallback for deletable entries').
 
         Exactness: the seen TABLE is compacted minus the urls (one
-        rewrite). Prune state: cuckoo shards delete the fingerprints
-        (prune stays tight); a Bloom prune cannot unset bits, so it goes
-        stale-SAFE — a deleted url stays "maybe seen" and is re-admitted
-        by the exact confirm join, costing one join row, never
-        correctness. Returns the number of seen rows removed.
+        rewrite, committed as a snapshot). Prune state: cuckoo shards
+        delete the fingerprints (prune stays tight); a Bloom prune
+        cannot unset bits, so it goes stale-SAFE — a deleted url stays
+        "maybe seen" and is re-admitted by the exact confirm join,
+        costing one join row, never correctness. Returns the number of
+        seen rows removed.
         """
         io = TableIO(self.spark, run_dir)
         seen = io.read_all_waves("seen")
@@ -712,7 +729,7 @@ class CrawlEngine:
         removed = seen.join(url_df, "url_canon", "left_semi").count()
         if removed:
             kept = seen.join(url_df, "url_canon", "left_anti")
-            io.rewrite(kept, "seen")  # atomic directory swap
+            io.rewrite(kept, "seen")  # swapped by one snapshot commit
         if isinstance(self._bloom, ShardedCuckoo):
             zeroed = self._bloom.delete_urls(urls)
             if zeroed:
@@ -798,7 +815,8 @@ class CrawlEngine:
         resume: bool,
         staged_seeds: list | None,
     ) -> RunState:
-        """Start/resume phase: restore the manifest, or seed and commit wave 0."""
+        """Start/resume phase: restore the current snapshot, or seed and
+        commit wave 0."""
         run_dir = run_dir or tempfile.mkdtemp(prefix="ironspark_")
         if not resume and os.path.isdir(run_dir):
             shutil.rmtree(run_dir)
@@ -836,19 +854,13 @@ class CrawlEngine:
             self.spark.conf.set("spark.sql.files.maxPartitionBytes", str(mpb))
 
         if resume:
-            man = io.manifest()
-            if man is None:
-                raise FileNotFoundError(f"no manifest to resume in {run_dir}")
+            man = io.restore()
             st.wave = man["next_wave"]
             st.next_seq = man["next_seq"]
-            st.segments = man.get("segments", [f"frontier/wave={st.wave}"])
-            st.consumed = man.get("consumed", [])
-            st.consumed_rows = man.get("consumed_rows", 0)
-            st.stats.deduped = man.get("deduped", 0)
-            if io.exists("metrics"):
-                st.metrics_buf = [r.asDict() for r in io.read("metrics").collect()]
-            if io.exists("status"):
-                st.status_buf = [r.asDict() for r in io.read("status").collect()]
+            st.segments = man["segments"]
+            st.consumed = man["consumed"]
+            st.consumed_rows = man["consumed_rows"]
+            st.stats.deduped = man["deduped"]
         else:
             if isinstance(seeds, (list, tuple)):
                 import pandas as pd
@@ -1243,7 +1255,7 @@ class CrawlEngine:
         # free by the tail task's frontier write. On a cluster the
         # blocks are unreplicated — executor loss fails the wave —
         # but the parquet segment the tail wrote is the durable
-        # copy, and a resume from the manifest replays cleanly.
+        # copy, and a resume from the snapshot replays cleanly.
         front_next = retry.unionByName(new_front).localCheckpoint(eager=False)
         st.await_tail()  # no-op unless dedup=False skipped the await
         st.frontier_done = threading.Event()
@@ -1268,10 +1280,9 @@ class CrawlEngine:
             done.set()  # never leave a reader blocked
         if seen:
             # new rows are exactly the attempt==0 rows (retries have
-            # attempt >= 1); literal-free filter. Overwrite: a slice
-            # left by a tail no manifest committed is replaced.
+            # attempt >= 1); literal-free filter
             new = front.filter(F.col("attempt") == 0).select("url_canon")
-            self._append_seen(io, new, wave + 1, mode="overwrite")
+            self._append_seen(io, new, wave + 1)
 
     def _advance_frontier(
         self,
@@ -1398,8 +1409,8 @@ class CrawlEngine:
         # O(backlog): rows written to the wave's delta segment
         stats.wave_frontier_rows.append(n["retried"] + n_new)
 
-        # drain overlapped sink writes BEFORE any commit (a manifest
-        # must never point past unwritten data). This wave's caches
+        # drain overlapped sink writes BEFORE any commit (a snapshot
+        # lists the files on disk when it commits). This wave's caches
         # are NOT released here — the tail task still reads them;
         # await_tail() releases them when it lands.
         st.drain_writes()
@@ -1409,8 +1420,8 @@ class CrawlEngine:
             self._commit(st)
 
     def _commit(self, st: RunState, **extra) -> None:
-        """Commit point: a manifest advancing next_wave implies the wave's
-        seen slice is durable (await the tail); metrics flush with it."""
+        """Commit point: a snapshot advancing next_wave lists the wave's
+        seen slice (await the tail); the buffered metrics land with it."""
         st.await_tail()
         self._flush_metrics(st)
         st.io.commit(st.manifest(**extra))
@@ -1451,22 +1462,23 @@ class CrawlEngine:
         return jar_rows
 
     def _flush_metrics(self, st: RunState) -> None:
-        """Write all buffered (wave, partition) metric rows as one table."""
-        if not st.metrics_buf:
-            return
+        """Append the metric and status rows buffered since the last
+        commit, one file per table (none without new rows), into the
+        table dir itself: a ``wave=N`` slice would let partition
+        inference override the ``wave`` column of rows from the other
+        waves a flush holds when checkpoint_every > 1. Through TableIO,
+        so the commit lists them and monitor.render_run reads them."""
         import pandas as pd
 
-        pdf = pd.DataFrame(st.metrics_buf)[[f.name for f in METRICS_SCHEMA.fields]]
-        df = self.spark.createDataFrame(pdf, METRICS_SCHEMA)
-        # through TableIO, NOT direct parquet: resume (_start) and
-        # monitor.render_run read it back through the store
-        st.io.write(df.coalesce(1), "metrics")
-        if st.status_buf:
-            sdf = self.spark.createDataFrame(
-                pd.DataFrame(st.status_buf),
-                "wave int, resp_status int, count long",
-            )
-            st.io.write(sdf.coalesce(1), "status")
+        for name, schema, buf in (
+            ("metrics", METRICS_SCHEMA, st.metrics_buf),
+            ("status", STATUS_SCHEMA, st.status_buf),
+        ):
+            if buf:
+                pdf = pd.DataFrame(buf)[[f.name for f in schema.fields]]
+                df = self.spark.createDataFrame(pdf, schema)
+                st.io.write(df.coalesce(1), name, mode="append")
+                buf.clear()
 
     # -- result accessors ------------------------------------------------------
 

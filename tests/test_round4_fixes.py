@@ -102,9 +102,10 @@ def test_invalidate_absent_url_repairs_collision(spark, tmp_path):
 
 def test_metrics_flush_through_tableio(spark, tmp_path, monkeypatch):
     """_flush_metrics must land via io.write, not direct parquet:
-    resume and monitor.render_run find metrics/status only through
-    TableIO's exists()/read(), so the flush goes through the same store
-    they read."""
+    the commit lists what the store wrote, and monitor.render_run finds
+    metrics/status only through TableIO's exists()/read(). Each flush
+    appends only the rows buffered since the previous one, and a flush
+    with nothing buffered writes nothing."""
     calls = []
     eng = _engine(spark, store_cookies=False)
     io = TableIO(spark, str(tmp_path / "m"))
@@ -126,10 +127,23 @@ def test_metrics_flush_through_tableio(spark, tmp_path, monkeypatch):
         return orig_write(df, name, wave, mode)
 
     monkeypatch.setattr(io, "write", spy)
+    row = dict(st.metrics_buf[0])
     eng._flush_metrics(st)
     assert "metrics" in calls and "status" in calls
     assert io.exists("metrics") and io.exists("status")
     assert io.read("metrics").count() == 1
+    assert io.read("status").count() == 1
+    assert st.metrics_buf == [] and st.status_buf == []
+    # nothing new buffered: no write
+    eng._flush_metrics(st)
+    assert len(calls) == 2
+    # the next wave's rows are appended, the earlier ones kept; no
+    # partition dir overrides the wave column
+    st.metrics_buf = [{**row, "wave": 1}]
+    eng._flush_metrics(st)
+    assert calls == ["metrics", "status", "metrics"]
+    waves = sorted(r.wave for r in io.read("metrics").collect())
+    assert waves == [0, 1]
     assert io.read("status").count() == 1
 
 

@@ -1,21 +1,24 @@
-"""Iceberg-shaped snapshot chain on the TableIO seam (round 6).
+"""The snapshot chain on TableIO: the engine's only commit record.
 
-Every ``commit()`` appends a snapshot under ``<run_dir>/metadata/``:
-``snap-<id>.json`` (parent pointer + manifest list + engine-manifest
-summary), one ``manifest-<id>-<table>.json`` per state table listing
-the concrete parquet data files, and a ``version-hint.text`` written
-LAST as the commit point — the hadoop-catalog protocol. These tests
-assert the three claims the metadata makes:
+Every ``commit()`` appends ``<run_dir>/metadata/snap-<id>.json``: the
+parent id, the engine summary (``TableIO.manifest()``) and the parquet
+files this commit added or removed relative to its parent, with sizes
+and paths relative to the run dir; ``version-hint.text`` is written
+LAST as the commit point (the hadoop-catalog protocol). A snapshot's
+file list is the fold of its chain. These tests assert the claims the
+metadata makes:
 
-  * a checkpoint table is readable STRICTLY from a snapshot manifest's
-    file list — by Spark AND by a foreign engine (DuckDB), byte-equal
-    to the direct read;
+  * a checkpoint table is readable STRICTLY from a snapshot's file
+    list — by Spark AND by a foreign engine (DuckDB), equal to the
+    direct read; listed sizes are real; an earlier snapshot lists
+    fewer files;
   * the parent chain walks back to snapshot 0 and summaries advance
-    monotonically with the wave counter;
-  * a crawl whose engine manifest.json is LOST resumes purely from the
-    snapshot summary (restore_manifest) — the head or a mid-chain
-    snapshot — and converges to the same items + crawl order as an
-    uninterrupted run.
+    monotonically with the wave counter; no stored path is absolute,
+    and each commit lists exactly the files it added or removed;
+  * a resume from the head or a rolled-back mid-chain snapshot
+    converges to the same items + crawl order as an uninterrupted run;
+  * a resume after a crash removes what the crashed run wrote past its
+    last commit, and converges the same way.
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ import json
 import os
 
 import duckdb
+import pandas as pd
 import pytest
 
 from ironspark.config import EngineConfig
@@ -51,28 +55,67 @@ def _cfg(**kw):
     return EngineConfig(**base)
 
 
-def test_snapshot_chain_and_manifest_reads(spark, crawl_setup, tmp_path):
+def _disk_parquet(run_dir):
+    """Relative paths of the parquet files outside Spark's work dirs."""
+    out = set()
+    for d, dirs, names in os.walk(run_dir):
+        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+        out |= {
+            os.path.relpath(os.path.join(d, f), run_dir)
+            for f in names if f.endswith(".parquet")
+        }
+    return out
+
+
+def test_snapshot_chain_and_manifest_reads(spark, crawl_setup, tmp_path, monkeypatch):
     pages, seeds = crawl_setup
     run_dir = str(tmp_path / "run")
-    eng = CrawlEngine(spark, pages, {1: LinkSpider()}, _cfg())
-    eng.run(seeds=seeds, run_dir=run_dir)
+    # the parquet files on disk at each commit, in commit order
+    at_commit = []
+    real_commit = TableIO.commit
+
+    def spy(io, manifest, **kw):
+        at_commit.append(_disk_parquet(io.root))
+        return real_commit(io, manifest, **kw)
+
+    monkeypatch.setattr(TableIO, "commit", spy)
+    # a per-host budget of 12 fetches a wave spreads the mega-host over
+    # more than 5 waves (tombstones and compactions included)
+    eng = CrawlEngine(spark, pages, {1: LinkSpider()}, _cfg(wave_seconds=12.0))
+    stats = eng.run(seeds=seeds, run_dir=run_dir)
+    monkeypatch.undo()
+    assert stats.waves >= 5
 
     io = TableIO(spark, run_dir)
     head = io.current_snapshot_id()
-    assert head is not None and head >= 1  # seed commit + >=1 wave
+    assert head == len(at_commit) - 1  # one snapshot per commit
 
     # parent chain walks to snapshot 0; waves never decrease
-    sid, seen_waves = head, []
+    sid, seen_waves, chain = head, [], []
     while sid is not None:
         snap = io.snapshot(sid)
         assert snap["snapshot-id"] == sid
+        chain.append(snap)
         seen_waves.append(snap["summary"]["next_wave"])
         parent = snap["parent-snapshot-id"]
         assert parent is None or parent == sid - 1
         sid = parent
     assert seen_waves[-1] == 0  # chain reaches the seed commit
     assert seen_waves == sorted(seen_waves, reverse=True)
-    assert io.snapshot(head)["summary"].get("done") is True
+    assert io.manifest() == io.snapshot(head)["summary"]
+    assert io.manifest()["done"] is True
+    assert not os.path.exists(os.path.join(run_dir, "manifest.json"))
+
+    # each commit stores exactly the files it added or removed, by
+    # run-dir-relative path: metadata per commit is O(delta)
+    before = set()
+    for snap, disk in zip(reversed(chain), at_commit):
+        added = {e["file-path"] for e in snap["added-files"]}
+        removed = {e["file-path"] for e in snap["removed-files"]}
+        paths = added | removed
+        assert not any(os.path.isabs(p) for p in paths)
+        assert added == disk - before and removed == before - disk
+        before = disk
 
     # strictly-metadata-driven read == direct read, for Spark…
     direct = {r.url_canon for r in io.read_all_waves("seen").collect()}
@@ -81,7 +124,7 @@ def test_snapshot_chain_and_manifest_reads(spark, crawl_setup, tmp_path):
     }
     assert via_snap == direct and direct
 
-    # …and for a FOREIGN engine consuming only the manifest file list
+    # …and for a FOREIGN engine consuming only the snapshot's file list
     files = io.snapshot_table_files("seen", head)
     assert files and all(os.path.isabs(f) and f.endswith(".parquet") for f in files)
     con = duckdb.connect()
@@ -93,20 +136,21 @@ def test_snapshot_chain_and_manifest_reads(spark, crawl_setup, tmp_path):
     }
     assert duck == direct
 
-    # manifest entries carry real sizes (Iceberg file stats shape)
-    meta = os.path.join(run_dir, "metadata")
-    mf = json.load(
-        open(os.path.join(meta, f"manifest-{head}-seen.json"))
-    )
-    for d in mf["data-files"]:
-        assert d["file-format"] == "PARQUET"
-        assert d["file-size-in-bytes"] == os.path.getsize(d["file-path"])
+    # listed entries carry real sizes (Iceberg file stats shape)
+    listed = {
+        e["file-path"]: e["file-size-in-bytes"]
+        for snap in chain for e in snap["added-files"]
+    }
+    for f in files:
+        rel = os.path.relpath(f, run_dir)
+        assert listed[rel] == os.path.getsize(f)
+    with open(os.path.join(run_dir, "metadata", f"snap-{head}.json")) as fh:
+        assert json.load(fh)["summary"]["next_wave"] == stats.waves
 
-    # an EARLIER snapshot sees strictly fewer (or equal) seen files —
-    # time travel over the append-only table
-    first_wave_sid = 1
-    early = io.snapshot_table_files("seen", first_wave_sid)
-    assert set(early) <= set(files) and len(early) < len(files)
+    # an EARLIER snapshot sees strictly fewer seen files — time travel
+    # over the append-only table
+    early = io.snapshot_table_files("seen", 1)
+    assert set(early) < set(files)
 
 
 def test_resume_strictly_from_snapshot_summary(spark, crawl_setup, tmp_path):
@@ -118,10 +162,11 @@ def test_resume_strictly_from_snapshot_summary(spark, crawl_setup, tmp_path):
     a = eng_full.items_df(full_dir).select("src_url", "title", "text")
     oa = eng_full.crawl_order_df(full_dir).toPandas().sort_values("seq")
 
-    # (waves the first run crawls, snapshot restored, config): the head
-    # snapshot of a run cut at max_waves; and a mid-chain snapshot whose
-    # next wave's overlapped tail already wrote seen/wave=3, which the
-    # resumed dedup (and the prune's base build) must not read
+    # (waves the first run crawls, snapshot rolled back to, config):
+    # the head snapshot of a run cut at max_waves; and a mid-chain
+    # snapshot whose next wave's overlapped tail already wrote
+    # seen/wave=3, which the resumed dedup (and the prune's base
+    # build) must not read
     cases = [
         (2, None, {}),
         (3, 2, {"seen_backend": "exact"}),
@@ -134,14 +179,15 @@ def test_resume_strictly_from_snapshot_summary(spark, crawl_setup, tmp_path):
             seeds=seeds, run_dir=part_dir
         )
 
-        # simulate a torn/lost engine manifest: the ONLY recovery input
-        # is the snapshot chain
-        os.remove(os.path.join(part_dir, "manifest.json"))
+        # the ONLY recovery input is the snapshot chain
         io = TableIO(spark, part_dir)
         with pytest.raises(FileNotFoundError):
-            io.restore_manifest(snapshot_id=10_000)
-        restored = io.restore_manifest(snap)
-        assert restored["next_wave"] == 2
+            io.rollback(snapshot_id=10_000)
+        target = io.current_snapshot_id() if snap is None else snap
+        io.rollback(target)
+        assert io.current_snapshot_id() == target
+        assert io.snapshot(target + 1) is None  # later snapshots deleted
+        assert io.manifest()["next_wave"] == 2
 
         eng2 = CrawlEngine(spark, pages, {1: LinkSpider()}, _cfg(**kw))
         eng2.run(run_dir=part_dir, resume=True)
@@ -152,8 +198,86 @@ def test_resume_strictly_from_snapshot_summary(spark, crawl_setup, tmp_path):
         assert list(oa["url_canon"]) == list(ob["url_canon"]), kw
         assert list(oa["seq"]) == list(ob["seq"]), kw
 
-        # recovery did not mint a snapshot; the resumed leg extended the
-        # chain past the pre-crash head
+        # the resumed leg extended the chain past the rolled-back head,
+        # and the run dir holds exactly the files its head lists
         resumed_head = io.current_snapshot_id()
-        assert resumed_head > restored["next_wave"]
-        assert io.snapshot(resumed_head)["summary"].get("done") is True
+        assert resumed_head > target
+        assert io.snapshot(resumed_head)["parent-snapshot-id"] == resumed_head - 1
+        assert io.manifest().get("done") is True
+        assert _disk_parquet(part_dir) == {
+            os.path.relpath(f, part_dir)
+            for t in ("frontier", "frontier_base", "seen", "order", "items",
+                      "consumed", "metrics", "status")
+            for f in io.snapshot_table_files(t)
+        }
+
+
+def _order(eng, run_dir):
+    return sorted(
+        (r.seq, r.wave, r.url_canon)
+        for r in eng.crawl_order_df(run_dir).collect()
+    )
+
+
+def test_resume_after_crash_past_the_last_commit(
+    spark, crawl_setup, tmp_path, monkeypatch
+):
+    """A run that raises after writing past its last commit — admission
+    already appended a staged seed group to the committed frontier
+    slice; or the overlapped tail wrote its frontier slice but not its
+    seen slice — resumes from exactly the files that commit lists and
+    reaches the uninterrupted run's crawl order and items."""
+    pages, seeds = crawl_setup
+
+    def grp():
+        return spark.createDataFrame(
+            pd.DataFrame([(1, "http://h0001.example.com/page/3", 0)],
+                         columns=["spider_id", "url", "seed_rank"]),
+            SEEDS_SCHEMA,
+        )
+
+    def cfg(**kw):
+        return _cfg(max_waves=3, scheduler_holding_threshold=10**9, **kw)
+
+    def schedule_raises(real):
+        def patched(self, st, pending):
+            raise RuntimeError("injected crash in _schedule")
+        return patched
+
+    def tail_raises(real):
+        # the tail's seen slice is wave + 1; admission appends to wave 0
+        def patched(self, io, urls, wave):
+            if wave == 3:
+                raise RuntimeError("injected crash in _write_tail")
+            return real(self, io, urls, wave)
+        return patched
+
+    # (method patched, its injected raise, config, whether the resumed
+    # leg stages the group again: only a crash before the commit that
+    # follows its admission loses it)
+    cases = [
+        ("_schedule", schedule_raises, dict(dedup=False, checkpoint_every=1), True),
+        ("_append_seen", tail_raises, dict(dedup=True, checkpoint_every=2), False),
+    ]
+    for i, (attr, inject, kw, restage) in enumerate(cases):
+        full_dir = str(tmp_path / f"full{i}")
+        eng = CrawlEngine(spark, pages, {1: LinkSpider()}, cfg(**kw))
+        eng.run(seeds=seeds, run_dir=full_dir, staged_seeds=[grp()])
+        want_order = _order(eng, full_dir)
+        want_items = sorted(eng.items_df(full_dir).select("src_url", "text").collect())
+
+        run_dir = str(tmp_path / f"crash{i}")
+        monkeypatch.setattr(CrawlEngine, attr, inject(getattr(CrawlEngine, attr)))
+        with pytest.raises(RuntimeError, match="injected crash"):
+            CrawlEngine(spark, pages, {1: LinkSpider()}, cfg(**kw)).run(
+                seeds=seeds, run_dir=run_dir, staged_seeds=[grp()]
+            )
+        monkeypatch.undo()
+        eng2 = CrawlEngine(spark, pages, {1: LinkSpider()}, cfg(**kw))
+        eng2.run(run_dir=run_dir, resume=True, staged_seeds=[grp()] if restage else None)
+
+        got = _order(eng2, run_dir)
+        assert len(got) == len(want_order) and got == want_order, attr
+        assert len({(s, w) for s, w, _ in got}) == len(got), attr
+        got_items = sorted(eng2.items_df(run_dir).select("src_url", "text").collect())
+        assert got_items == want_items, attr

@@ -1,11 +1,10 @@
 """TableIO, the engine's state store: a full crawl and a resumed leg
-read back through it, the seen-set invalidation rewrite, and recovery
-from a crash inside that rewrite."""
+read back through it, the seen-set invalidation rewrite (committed as a
+snapshot), and recovery from a crash inside that rewrite."""
 
 from __future__ import annotations
 
-import os
-
+import duckdb
 import pandas as pd
 import pytest
 
@@ -60,9 +59,11 @@ def test_crawl_and_resume(spark, tmp_path):
     assert stats2.waves > stats1.waves and stats2.scheduled > 0
     assert eng2.items_df(run_dir).count() >= n_items_1
     assert eng2.seen_df(run_dir).count() >= n_seen_1
-    # the metrics flush of the resumed leg keeps every wave of the first
+    # the metrics flush of the resumed leg keeps every wave of the first,
+    # and appends each (wave, partition) row once
     m2 = eng2.metrics_df(run_dir).toPandas()
     assert set(m2["wave"]) >= set(range(stats1.waves))
+    assert not m2.duplicated(["wave", "partition_id"]).any()
     # seq numbers never reused across the resume boundary (a retry may
     # re-schedule its seq, but always in a distinct wave)
     order = eng2.crawl_order_df(run_dir)
@@ -83,38 +84,55 @@ def test_invalidation_rewrite(spark, tmp_path):
     assert eng.invalidate_seen(run_dir, [victim]) == 1
     left = {r.url_canon for r in eng.seen_df(run_dir).collect()}
     assert victim not in left and len(left) == len(seen) - 1
-
-
-def test_rewrite_crash_recovers_on_open(spark, tmp_path, monkeypatch):
-    """A crash after the live seen table is moved aside, before the
-    rewritten one is in place, loses nothing: the next TableIO on the
-    run dir finishes the swap."""
-    run_dir = str(tmp_path / "crash")
+    # the rewrite committed a snapshot listing the swapped-in files
     io = TableIO(spark, run_dir)
+    via_snap = [r.url_canon for r in io.read_at_snapshot("seen").collect()]
+    assert sorted(via_snap) == sorted(left)
+    duck = duckdb.connect().execute(
+        "SELECT url_canon FROM read_parquet(?)",
+        [io.snapshot_table_files("seen")],
+    ).fetchall()
+    assert sorted(r[0] for r in duck) == sorted(left)
+
+
+def test_rewrite_crash_recovers_on_resume(spark, tmp_path, monkeypatch):
+    """A crash inside the seen rewrite loses nothing. Before its
+    snapshot commit, the resume's restore() deletes the new files and
+    the table is the old one; after it, restore() deletes the old files
+    and the table is the rewritten one. Opening a TableIO deletes
+    nothing."""
     urls = [f"http://h{i % 3}.example.com/p/{i}" for i in range(12)]
-    for wave in (0, 1):
-        io.write(
-            spark.createDataFrame([(u,) for u in urls[wave::2]], "url_canon string"),
-            "seen", wave,
-        )
     victims = urls[:3]
     eng = CrawlEngine(
         spark, None, {1: LinkSpider()}, EngineConfig(seen_backend="exact")
     )
 
-    real_replace = os.replace
+    def crash(*a, **kw):
+        raise OSError("injected crash")
 
-    def crash(src, dst):
-        if dst == io.path("seen"):
-            raise OSError("crash before the rewritten table is in place")
-        return real_replace(src, dst)
+    # (method that raises, seen set the resume must find)
+    cases = [("commit", set(urls)), ("_prune", set(urls) - set(victims))]
+    for i, (attr, want) in enumerate(cases):
+        run_dir = str(tmp_path / f"crash{i}")
+        io = TableIO(spark, run_dir)
+        for wave in (0, 1):
+            io.write(
+                spark.createDataFrame(
+                    [(u,) for u in urls[wave::2]], "url_canon string"
+                ),
+                "seen", wave,
+            )
+        io.commit({"next_wave": 2})
+        monkeypatch.setattr(TableIO, attr, crash)
+        with pytest.raises(OSError, match="injected crash"):
+            eng.invalidate_seen(run_dir, victims)
+        monkeypatch.undo()
 
-    monkeypatch.setattr(os, "replace", crash)
-    with pytest.raises(OSError, match="crash before"):
-        eng.invalidate_seen(run_dir, victims)
-    monkeypatch.undo()
-
-    reopened = TableIO(spark, run_dir)
-    got = {r.url_canon for r in reopened.read("seen").collect()}
-    assert got == set(urls) - set(victims)
-    assert not os.path.exists(os.path.join(run_dir, "_seen_old"))
+        reopened = TableIO(spark, run_dir)
+        # both sides of the swap are still on disk
+        assert reopened.read("seen").count() == 2 * len(urls) - len(victims)
+        assert reopened.restore() == {"next_wave": 2}
+        got = [r.url_canon for r in reopened.read("seen").collect()]
+        assert sorted(got) == sorted(want), attr
+        via_snap = [r.url_canon for r in reopened.read_at_snapshot("seen").collect()]
+        assert sorted(via_snap) == sorted(want), attr
