@@ -17,8 +17,8 @@ loop-carried state, the overlapped tail and the wave's one cache
 list). State tables (frontier, seen, items, crawl order, metrics) are
 materialized per wave by TableIO — parquet directories whose only
 commit record is an Iceberg-shaped snapshot chain of relative-path
-deltas; a resume first returns the run directory to the files the
-current snapshot lists.
+deltas. Reads follow the snapshot's file list; only a resume deletes
+files, those the snapshot it starts from does not list.
 """
 
 from __future__ import annotations
@@ -84,7 +84,11 @@ _WAVE_TOTALS = (
 )
 
 # session settings the wave loop overrides; run() restores them on exit
-_RUN_CONFS = ("spark.sql.adaptive.enabled", "spark.sql.files.maxPartitionBytes")
+_RUN_CONFS = (
+    "spark.sql.adaptive.enabled",
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.sources.parallelPartitionDiscovery.threshold",
+)
 
 _TRACE = os.environ.get("IRONSPARK_TRACE", "") not in ("", "0")
 
@@ -149,11 +153,17 @@ class TableIO:
     per commit). ``version-hint.text``, written last, is the commit
     point (the hadoop-catalog protocol).
 
-    Data lands in the table dirs before the commit that lists it, and
-    per-wave reads list directories: ``restore`` (the start of every
-    resume) deletes each file the current snapshot does not list. One
-    run writes a run dir at a time; readers such as the live monitor
-    open their own TableIO, and opening one deletes nothing.
+    The file list is also the only way to find data: a TableIO keeps
+    the live list — the current snapshot's files plus the ones its own
+    writes added since (an overwrite drops the files it replaced) — and
+    ``read`` scans listed files only, planning a scan the way Iceberg
+    plans one from manifests, never from a directory listing. A file
+    no snapshot lists (a crashed run's writes past its last commit, the
+    replaced side of a rewrite) is never read, and ``commit`` stores
+    the live list's delta against the parent. Only ``restore``, at the
+    start of a resume, deletes data files: those the current snapshot
+    does not list. One run writes a run dir at a time; readers such as
+    the live monitor open their own TableIO.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -165,6 +175,10 @@ class TableIO:
         # snapshot folded or committed: a commit reads one snapshot,
         # not the chain
         self._listed: tuple[tuple, dict] | None = None
+        # the live list, loaded at first use; the I/O pool's tail and
+        # sink writes register into it from their own threads
+        self._live: dict[str, int] | None = None
+        self._lock = threading.Lock()
 
     def _reader(self, name: str):
         s = _TABLE_SCHEMAS.get(name.split("/", 1)[0])
@@ -180,64 +194,95 @@ class TableIO:
     def write(
         self, df: DataFrame, name: str, wave: int | None = None, mode: str = "overwrite"
     ) -> None:
-        df.write.mode(mode).parquet(self.path(name, wave))
+        self._write(df, self.path(name, wave), mode)
 
     def write_rel(self, df: DataFrame, relpath: str, mode: str = "overwrite") -> None:
-        df.write.mode(mode).parquet(os.path.join(self.root, relpath))
+        self._write(df, os.path.join(self.root, relpath), mode)
 
-    def read_rel(self, relpaths: list[str]) -> DataFrame:
-        # explicit leaf dirs, NO basePath: avoids partition-column
-        # inference colliding with the `wave` data column
-        return self._reader(relpaths[0]).parquet(
-            *[os.path.join(self.root, p) for p in relpaths]
-        )
+    def _write(self, df: DataFrame, path: str, mode: str) -> None:
+        """Write ``df`` into the dir ``path`` and put the parquet files
+        it added on the live list; an overwrite takes the files it
+        replaced off. Only this dir is listed, before and after."""
+        before = set() if mode == "overwrite" else _parquet_names(path)
+        df.write.mode(mode).parquet(path)
+        rel = os.path.relpath(path, self.root)
+        added = {
+            os.path.join(rel, f): os.path.getsize(os.path.join(path, f))
+            for f in _parquet_names(path) - before
+        }
+        with self._lock:
+            live = self._live_files()
+            if mode == "overwrite":
+                for p in _under(live, [rel]):
+                    del live[p]
+            live.update(added)
 
-    def read(self, name: str, wave: int | None = None) -> DataFrame:
-        return self._reader(name).parquet(self.path(name, wave))
+    def _live_files(self) -> dict[str, int]:
+        """The live list (hold ``_lock``)."""
+        if self._live is None:
+            self._live = dict(self._files(self.snapshot()))
+        return self._live
 
-    def read_all_waves(self, name: str) -> DataFrame | None:
-        """Every ``wave=N`` slice of a table."""
-        base = os.path.join(self.root, name)
-        if not os.path.isdir(base) or not os.listdir(base):
+    def read(
+        self,
+        name: str | list[str],
+        wave: int | None = None,
+        snapshot_id: int | None = None,
+    ) -> DataFrame | None:
+        """The rows of the files listed under ``name`` — a table, or
+        run-dir-relative dirs (a list reads frontier segments as one
+        scan) — and ``wave``: the live list's, or snapshot
+        ``snapshot_id``'s. None when nothing there is listed.
+
+        A whole-table read takes ``wave`` from the ``wave=N`` dirs
+        (order, items, seen); metrics and status hold it as a data
+        column. A read of dirs carries no ``wave``: a frontier
+        compaction writes the pending view back under a ``wave=N`` dir.
+        """
+        dirs = [name] if isinstance(name, str) else list(name)
+        if wave is not None:
+            dirs = [f"{d}/wave={wave}" for d in dirs]
+        if snapshot_id is None:
+            with self._lock:
+                files = _under(self._live_files(), dirs)
+        else:
+            files = _under(self._files(self.snapshot(snapshot_id)), dirs)
+        if not files:
             return None
-        return self._reader(name).option("basePath", base).parquet(
-            *[
-                os.path.join(base, d)
-                for d in sorted(os.listdir(base))
-                if d.startswith("wave=")
-            ]
-        )
-
-    def exists(self, name: str) -> bool:
-        return os.path.isdir(self.path(name))
+        reader = self._reader(dirs[0])
+        if isinstance(name, str) and "/" not in name and wave is None:
+            reader = reader.option("basePath", os.path.join(self.root, name))
+        return reader.parquet(*[os.path.join(self.root, p) for p in files])
 
     def rewrite(self, df: DataFrame, name: str) -> None:
         """Replace a whole table (seen-set invalidation). The new rows
-        land beside the old files; one snapshot lists them in place of
-        the old ones (the decision point), then the old files go. A
-        crash before that commit leaves unlisted new files, after it
-        unlisted old ones: restore() deletes either, so the table is
-        whole on the side of the commit the crash fell."""
-        old = [p for p in self._files(self.snapshot()) if p.startswith(name + "/")]
-        df.write.mode("append").parquet(self.path(name, 0))
-        self.commit(self.manifest(), drop=old)
-        self._prune([name])
+        land beside the old files, and one snapshot lists them in place
+        of the old ones (the decision point). Nothing is deleted: a
+        crash before that commit leaves the new files unlisted, and the
+        old ones stay on disk, unlisted, until the next resume's
+        restore(), so a rollback past the rewrite still finds them."""
+        with self._lock:
+            old = _under(self._live_files(), [name])
+        self._write(df, self.path(name, 0), "append")
+        with self._lock:
+            live = self._live_files()
+            for p in old:
+                del live[p]
+        self.commit(self.manifest())
 
     def manifest(self) -> dict | None:
         """The engine state: the current snapshot's summary."""
         snap = self.snapshot()
         return None if snap is None else snap["summary"]
 
-    def commit(self, manifest: dict, *, drop=()) -> None:
+    def commit(self, manifest: dict) -> None:
         """Append a snapshot with ``manifest`` as its summary and, as
-        its delta, the data files written since the parent (and the
-        listed ones in ``drop``, retired though still on disk)."""
+        its delta, the live list against the parent's list."""
         os.makedirs(self.meta, exist_ok=True)
         parent = self.snapshot()
         listed = self._files(parent)
-        files = self._data_files(self._tables())
-        for p in drop:
-            files.pop(p, None)
+        with self._lock:
+            files = dict(self._live_files())
         sid = 0 if parent is None else parent["snapshot-id"] + 1
         snap = {
             "snapshot-id": sid,
@@ -255,62 +300,56 @@ class TableIO:
 
     def rollback(self, snapshot_id: int) -> None:
         """Make a snapshot current and delete the ones after it
-        (Iceberg's rollback). Data files stay until restore()."""
-        if self.snapshot(snapshot_id) is None:
+        (Iceberg's rollback). Raises FileNotFoundError, changing
+        nothing, when the snapshot is absent or a file it lists is gone
+        (a resume from a later snapshot deleted it)."""
+        snap = self.snapshot(snapshot_id)
+        if snap is None:
             raise FileNotFoundError(f"no snapshot {snapshot_id} in {self.root}")
+        for p in sorted(self._files(snap)):
+            if not os.path.exists(os.path.join(self.root, p)):
+                raise FileNotFoundError(
+                    f"snapshot {snapshot_id} lists {p}, deleted by a later resume"
+                )
         _put(os.path.join(self.meta, "version-hint.text"), str(snapshot_id))
         for f in os.listdir(self.meta):
             if f.startswith("snap-") and f.endswith(".json") and int(f[5:-5]) > snapshot_id:
                 os.remove(os.path.join(self.meta, f))
+        with self._lock:
+            self._live = None
 
     def restore(self) -> dict:
-        """Return the run dir to exactly the files the current snapshot
-        lists, and return its summary (the state a resume starts from).
-        Deleted: what a run wrote after its last commit (a tail's
-        slice, staged-seed or freshness-tick rows appended to a
-        committed slice) and the uncommitted side of a rewrite."""
-        man = self.manifest()
-        if man is None:
+        """Return the current snapshot's summary (the state a resume
+        starts from) after the run dir's only sweep: delete every
+        parquet file (with its .crc) the snapshot does not list, then
+        every dir left holding no listed file — what a run wrote past
+        its last commit, and either side of a rewrite the snapshot does
+        not list. Reads never depend on it: they follow the list."""
+        snap = self.snapshot()
+        if snap is None:
             raise FileNotFoundError(f"no snapshot to resume in {self.root}")
-        self._prune(self._tables())
-        return man
-
-    def _tables(self) -> list[str]:
-        return [d for d in sorted(os.listdir(self.root)) if d != "metadata"]
-
-    def _data_files(self, tables: list[str]) -> dict[str, int]:
-        """Relative path -> size of every parquet file under ``tables``,
-        outside Spark's work dirs (_temporary, .staging)."""
-        out = {}
-        for t in tables:
-            for d, dirs, names in os.walk(os.path.join(self.root, t)):
-                dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
-                for f in names:
-                    if f.endswith(".parquet"):
-                        p = os.path.join(d, f)
-                        out[os.path.relpath(p, self.root)] = os.path.getsize(p)
-        return out
-
-    def _prune(self, tables: list[str]) -> None:
-        """Delete every parquet file (with its .crc) under ``tables``
-        that the current snapshot does not list, then every dir left
-        holding no listed file."""
-        listed = self._files(self.snapshot())
-        for p in self._data_files(tables):
-            if p not in listed:
-                d, f = os.path.split(os.path.join(self.root, p))
-                for x in (f, f".{f}.crc"):
-                    if os.path.exists(os.path.join(d, x)):
-                        os.remove(os.path.join(d, x))
+        listed = self._files(snap)
         live = set()
         for p in listed:
             while p:
                 p = os.path.dirname(p)
                 live.add(p)
-        for t in tables:
-            for d, _, _ in os.walk(os.path.join(self.root, t), topdown=False):
-                if os.path.relpath(d, self.root) not in live:
+        for t in os.listdir(self.root):
+            if t == "metadata":
+                continue
+            for d, _, names in os.walk(os.path.join(self.root, t), topdown=False):
+                rel = os.path.relpath(d, self.root)
+                if rel not in live:
                     shutil.rmtree(d)
+                    continue
+                for f in names:
+                    if f.endswith(".parquet") and os.path.join(rel, f) not in listed:
+                        os.remove(os.path.join(d, f))
+                        if os.path.exists(os.path.join(d, f".{f}.crc")):
+                            os.remove(os.path.join(d, f".{f}.crc"))
+        with self._lock:
+            self._live = dict(listed)
+        return snap["summary"]
 
     def current_snapshot_id(self) -> int | None:
         hint = os.path.join(self.meta, "version-hint.text")
@@ -351,23 +390,36 @@ class TableIO:
         self, name: str, snapshot_id: int | None = None
     ) -> list[str]:
         """Absolute paths of one state table's data files as a snapshot
-        lists them: the strictly-metadata-driven read path (a foreign
-        reader such as DuckDB needs nothing else)."""
+        lists them: all a foreign reader such as DuckDB needs."""
         return [
             os.path.join(self.root, p)
-            for p in sorted(self._files(self.snapshot(snapshot_id)))
-            if p.startswith(name + "/")
+            for p in _under(self._files(self.snapshot(snapshot_id)), [name])
         ]
 
-    def read_at_snapshot(
-        self, name: str, snapshot_id: int | None = None
-    ) -> DataFrame:
-        files = self.snapshot_table_files(name, snapshot_id)
-        if not files:
-            raise FileNotFoundError(
-                f"table {name!r} absent from snapshot {snapshot_id}"
-            )
-        return self._reader(name).parquet(*files)
+
+def read_pending(io: TableIO, segments: list, consumed: list) -> DataFrame:
+    """Merge-on-read pending set: the frontier segments minus the
+    (seq, attempt) tombstones scheduled since the last compaction."""
+    df = io.read(segments)
+    if consumed:
+        keys = io.read(consumed).select("seq", "attempt")
+        df = df.join(keys, ["seq", "attempt"], "left_anti")
+    return df
+
+
+def _under(files, dirs: list[str]) -> list[str]:
+    """The relative paths in ``files`` under one of the relative
+    ``dirs``, sorted."""
+    prefixes = tuple(d + "/" for d in dirs)
+    return sorted(p for p in files if p.startswith(prefixes))
+
+
+def _parquet_names(path: str) -> set[str]:
+    """Names of the parquet files directly in the dir ``path``."""
+    try:
+        return {f for f in os.listdir(path) if f.endswith(".parquet")}
+    except FileNotFoundError:
+        return set()
 
 
 def _entries(files: dict[str, int], paths: set) -> list[dict]:
@@ -447,18 +499,11 @@ class RunState:
         }
 
     def pending_view(self) -> DataFrame:
-        """Merge-on-read pending set: delta segments minus the
-        scheduled (seq, attempt) keys since the last compaction."""
-        df = self.io.read_rel(self.segments)
-        if self.consumed:
-            keys = self.io.read_rel(self.consumed).select("seq", "attempt")
-            df = df.join(keys, ["seq", "attempt"], "left_anti")
-        return df
+        return read_pending(self.io, self.segments, self.consumed)
 
     def seen(self) -> DataFrame | None:
-        """The append-only seen set (a resume's restore() has removed
-        every slice past the snapshot it starts from)."""
-        return self.io.read_all_waves("seen")
+        """The append-only seen set: the slices the live list holds."""
+        return self.io.read("seen")
 
     def write_async(self, df: DataFrame, name: str) -> None:
         """Overlapped write of this wave's slice of a sink table."""
@@ -720,7 +765,7 @@ class CrawlEngine:
         seen rows removed.
         """
         io = TableIO(self.spark, run_dir)
-        seen = io.read_all_waves("seen")
+        seen = io.read("seen")
         if seen is None or not urls:
             return 0
         url_df = F.broadcast(
@@ -852,6 +897,12 @@ class CrawlEngine:
         mpb = self._scan_split_bytes()
         if mpb is not None:
             self.spark.conf.set("spark.sql.files.maxPartitionBytes", str(mpb))
+        # TableIO's reads name every file: past this many paths Spark
+        # would run a job that only re-stats them (measured 0.84 s for
+        # 33 files on 4 cores, 0.19 s without). Restored by run().
+        self.spark.conf.set(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
+        )
 
         if resume:
             man = io.restore()
@@ -910,7 +961,7 @@ class CrawlEngine:
                 # critical path
                 pending, st.handoff = st.handoff, None
             else:
-                st.await_frontier()  # segment dir complete before listing
+                st.await_frontier()  # segment listed before the read
                 pending = st.pending_view()
             if st.pending_count is None:
                 st.pending_count = pending.count()
@@ -975,7 +1026,7 @@ class CrawlEngine:
         cfg = self.cfg
         st.await_tail()
         st.await_frontier()
-        history = st.io.read_all_waves("order")
+        history = st.io.read("order")
         if history is None:
             return False
         hist = history.filter(F.col("fetch_ts").isNotNull())
@@ -1198,7 +1249,7 @@ class CrawlEngine:
         regime = None
         if self.cfg.dedup:
             # first point this wave that needs the seen set: await
-            # the overlapped seen write, then list the table dirs
+            # the overlapped seen write, whose files it then lists
             st.await_tail()
             st.mark("await-seen")
             # next_seq == unique urls enqueued so far == seen rows
@@ -1229,8 +1280,9 @@ class CrawlEngine:
         probe has built the filter — is ONE chained task on the I/O
         pool (_write_tail): it overlaps the next wave's schedule +
         fetch + parse. frontier_done gates readers of the segment
-        DIRECTORY (pending_view/admission/compaction); await_tail()
-        gates seen-set consumers and releases this wave's caches.
+        (pending_view/admission/compaction): it is set once the
+        segment's files are on the live list. await_tail() gates
+        seen-set consumers and releases this wave's caches.
         """
         # retry rows: rejoin the small retryable key set against the
         # cached scheduled frontier (never against the corpus).
@@ -1275,7 +1327,7 @@ class CrawlEngine:
     ) -> None:
         """The overlapped durable tail of one wave (an I/O pool task)."""
         try:
-            io.write(front, "frontier", wave + 1)
+            io.write(front, "frontier", wave + 1)  # lists the segment
         finally:
             done.set()  # never leave a reader blocked
         if seen:
@@ -1410,7 +1462,7 @@ class CrawlEngine:
         stats.wave_frontier_rows.append(n["retried"] + n_new)
 
         # drain overlapped sink writes BEFORE any commit (a snapshot
-        # lists the files on disk when it commits). This wave's caches
+        # lists the files the writes registered). This wave's caches
         # are NOT released here — the tail task still reads them;
         # await_tail() releases them when it lands.
         st.drain_writes()
@@ -1482,17 +1534,16 @@ class CrawlEngine:
 
     # -- result accessors ------------------------------------------------------
 
+    # each reads the current snapshot's rows (None: table not listed)
+
     def items_df(self, run_dir: str) -> DataFrame | None:
-        return TableIO(self.spark, run_dir).read_all_waves("items")
+        return TableIO(self.spark, run_dir).read("items")
 
     def crawl_order_df(self, run_dir: str) -> DataFrame | None:
-        return TableIO(self.spark, run_dir).read_all_waves("order")
+        return TableIO(self.spark, run_dir).read("order")
 
     def metrics_df(self, run_dir: str) -> DataFrame | None:
-        io = TableIO(self.spark, run_dir)
-        if not io.exists("metrics"):
-            return None
-        return io.read("metrics")
+        return TableIO(self.spark, run_dir).read("metrics")
 
-    def seen_df(self, run_dir: str) -> DataFrame:
+    def seen_df(self, run_dir: str) -> DataFrame | None:
         return TableIO(self.spark, run_dir).read("seen")

@@ -126,22 +126,25 @@ def render_dashboard(stats, pending_count: int = 0,
 
 def render_run(spark, run_dir: str) -> str:
     """Dashboard for a (possibly still running) crawl directory: reads
-    the flushed metrics table + manifest — the live-monitor entry point."""
-    from ironspark.engine import CrawlStats, TableIO
+    the current snapshot's summary and its metrics, status and pending
+    frontier rows — the live-monitor entry point."""
+    from ironspark.engine import CrawlStats, TableIO, read_pending
 
     io = TableIO(spark, run_dir)
     man = io.manifest() or {}
     stats = CrawlStats(run_dir=run_dir)
     status_counts: dict[int, int] = {}
-    if io.exists("status"):
+    s = io.read("status")
+    if s is not None:
         # per-wave HTTP status histogram flushed by the engine (M2)
-        s = io.read("status").toPandas()
+        s = s.toPandas()
         status_counts = {
             int(k): int(v)
             for k, v in s.groupby("resp_status")["count"].sum().items()
         }
-    if io.exists("metrics"):
-        m = io.read("metrics").toPandas()
+    m = io.read("metrics")
+    if m is not None:
+        m = m.toPandas()
         agg = m[m["partition_id"] >= 0]
         stats.scheduled = int(agg["scheduled"].sum())
         stats.fetched = int(agg["fetched"].sum())
@@ -160,18 +163,8 @@ def render_run(spark, run_dir: str) -> str:
             for w in agg.groupby("wave")["t_fetch_ms"].first().tolist()
         ]
         stats.wall_s = sum(stats.wave_walls) or 1.0
-    pending = 0
-    segs = man.get("segments") or []
-    if segs:
-        try:
-            df = io.read_rel(segs)
-            cons = man.get("consumed") or []
-            if cons:
-                keys = io.read_rel(cons).select("seq", "attempt")
-                df = df.join(keys, ["seq", "attempt"], "left_anti")
-            pending = df.count()
-        except Exception:  # noqa: BLE001 — dirs mid-write during a live run
-            pending = 0
+    segs = man.get("segments")
+    pending = read_pending(io, segs, man.get("consumed") or []).count() if segs else 0
     return render_dashboard(stats, pending_count=pending,
                             status_counts=status_counts)
 
@@ -182,8 +175,8 @@ def watch(spark, run_dir: str, interval_s: float = 2.0,
     flushed metrics/status tables every ``interval_s`` until the run's
     manifest says done (or ``iterations`` renders, for tests/CI). The
     reference's ratatui draw loop (src/monitor/tui.rs:61-78) reduced to
-    a pure poll-and-print — resilient to mid-write table dirs (the
-    engine flushes at checkpoint boundaries). Returns renders done."""
+    a pure poll-and-print of what the current snapshot lists; a render
+    that fails prints a message instead. Returns renders done."""
     import sys
     import time as _time
 
@@ -194,7 +187,7 @@ def watch(spark, run_dir: str, interval_s: float = 2.0,
     while iterations is None or n < iterations:
         try:
             txt = render_run(spark, run_dir)
-        except Exception as e:  # noqa: BLE001 — table dir mid-write
+        except Exception as e:  # noqa: BLE001 — e.g. a file a resume swept
             txt = f"(run dir not readable yet: {e})"
         print(f"\033[2J\033[H{txt}" if out is sys.stdout else txt, file=out)
         n += 1

@@ -115,7 +115,7 @@ def test_seen_membership_exact_after_delete_readd(spark, cycle):
     eng2, run_dir, _, _, order1, _ = cycle
     from ironspark.engine import TableIO
 
-    seen = TableIO(spark, run_dir).read_all_waves("seen").toPandas()
+    seen = TableIO(spark, run_dir).read("seen").toPandas()
     # exactly the crawled url set, each url present exactly once: a
     # re-admitted url that is still seen is not appended again
     assert sorted(seen["url_canon"]) == sorted(order1["url_canon"])

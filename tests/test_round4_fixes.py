@@ -103,7 +103,7 @@ def test_invalidate_absent_url_repairs_collision(spark, tmp_path):
 def test_metrics_flush_through_tableio(spark, tmp_path, monkeypatch):
     """_flush_metrics must land via io.write, not direct parquet:
     the commit lists what the store wrote, and monitor.render_run finds
-    metrics/status only through TableIO's exists()/read(). Each flush
+    metrics/status only through TableIO's read(). Each flush
     appends only the rows buffered since the previous one, and a flush
     with nothing buffered writes nothing."""
     calls = []
@@ -130,7 +130,7 @@ def test_metrics_flush_through_tableio(spark, tmp_path, monkeypatch):
     row = dict(st.metrics_buf[0])
     eng._flush_metrics(st)
     assert "metrics" in calls and "status" in calls
-    assert io.exists("metrics") and io.exists("status")
+    assert io.read("metrics") is not None and io.read("status") is not None
     assert io.read("metrics").count() == 1
     assert io.read("status").count() == 1
     assert st.metrics_buf == [] and st.status_buf == []

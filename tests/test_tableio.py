@@ -1,8 +1,16 @@
 """TableIO, the engine's state store: a full crawl and a resumed leg
 read back through it, the seen-set invalidation rewrite (committed as a
-snapshot), and recovery from a crash inside that rewrite."""
+snapshot), recovery from a crash inside that rewrite, and reads that
+start no Spark listing job."""
 
 from __future__ import annotations
+
+import os
+import re
+import shutil
+import sys
+import threading
+import uuid
 
 import duckdb
 import pandas as pd
@@ -21,6 +29,15 @@ def _setup(spark, n=80):
     )
     seeds = spark.createDataFrame(graph_seeds(n, 8, 6), SEEDS_SCHEMA)
     return pages, seeds
+
+
+def _disk_files(path):
+    """Absolute paths of the parquet files under ``path``."""
+    return {
+        os.path.join(d, f)
+        for d, _, names in os.walk(path)
+        for f in names if f.endswith(".parquet")
+    }
 
 
 def test_crawl_and_resume(spark, tmp_path):
@@ -86,20 +103,32 @@ def test_invalidation_rewrite(spark, tmp_path):
     assert victim not in left and len(left) == len(seen) - 1
     # the rewrite committed a snapshot listing the swapped-in files
     io = TableIO(spark, run_dir)
-    via_snap = [r.url_canon for r in io.read_at_snapshot("seen").collect()]
+    head = io.current_snapshot_id()
+    via_snap = [r.url_canon for r in io.read("seen", snapshot_id=head).collect()]
     assert sorted(via_snap) == sorted(left)
     duck = duckdb.connect().execute(
         "SELECT url_canon FROM read_parquet(?)",
         [io.snapshot_table_files("seen")],
     ).fetchall()
     assert sorted(r[0] for r in duck) == sorted(left)
+    # the replaced files stay on disk until a resume's sweep; once it
+    # has deleted them, a rollback past the rewrite refuses, naming one
+    old = set(io.snapshot_table_files("seen", head - 1))
+    assert old - set(io.snapshot_table_files("seen")) and all(map(os.path.exists, old))
+    io.restore()
+    gone = sorted(old - set(io.snapshot_table_files("seen")))[0]
+    assert not os.path.exists(gone)
+    with pytest.raises(FileNotFoundError, match=re.escape(os.path.relpath(gone, run_dir))):
+        io.rollback(head - 1)
+    assert io.current_snapshot_id() == head and io.snapshot(head) is not None
 
 
 def test_rewrite_crash_recovers_on_resume(spark, tmp_path, monkeypatch):
-    """A crash inside the seen rewrite loses nothing. Before its
-    snapshot commit, the resume's restore() deletes the new files and
-    the table is the old one; after it, restore() deletes the old files
-    and the table is the rewritten one. Opening a TableIO deletes
+    """A crash inside the seen rewrite, or any time after it, loses
+    nothing. The rewrite deletes nothing: both sides stay on disk, and
+    reads follow the current snapshot — before its commit the old table,
+    after it the rewritten one. The resume's restore() then deletes the
+    side that snapshot does not list. Opening a TableIO deletes
     nothing."""
     urls = [f"http://h{i % 3}.example.com/p/{i}" for i in range(12)]
     victims = urls[:3]
@@ -110,8 +139,9 @@ def test_rewrite_crash_recovers_on_resume(spark, tmp_path, monkeypatch):
     def crash(*a, **kw):
         raise OSError("injected crash")
 
-    # (method that raises, seen set the resume must find)
-    cases = [("commit", set(urls)), ("_prune", set(urls) - set(victims))]
+    # (method that raises, seen set the resume must find): a crash
+    # before the commit, or after the rewrite returned (None)
+    cases = [("commit", set(urls)), (None, set(urls) - set(victims))]
     for i, (attr, want) in enumerate(cases):
         run_dir = str(tmp_path / f"crash{i}")
         io = TableIO(spark, run_dir)
@@ -123,16 +153,104 @@ def test_rewrite_crash_recovers_on_resume(spark, tmp_path, monkeypatch):
                 "seen", wave,
             )
         io.commit({"next_wave": 2})
-        monkeypatch.setattr(TableIO, attr, crash)
-        with pytest.raises(OSError, match="injected crash"):
+        old = set(io.snapshot_table_files("seen"))
+        if attr is None:
             eng.invalidate_seen(run_dir, victims)
-        monkeypatch.undo()
+        else:
+            monkeypatch.setattr(TableIO, attr, crash)
+            with pytest.raises(OSError, match="injected crash"):
+                eng.invalidate_seen(run_dir, victims)
+            monkeypatch.undo()
 
         reopened = TableIO(spark, run_dir)
-        # both sides of the swap are still on disk
-        assert reopened.read("seen").count() == 2 * len(urls) - len(victims)
+        # both sides of the swap are still on disk: the old files and
+        # the new ones beside them
+        assert old < _disk_files(reopened.path("seen")), attr
+        # a read before the resume sees the snapshot's side only
+        got = [r.url_canon for r in eng.seen_df(run_dir).collect()]
+        assert sorted(got) == sorted(want), attr
         assert reopened.restore() == {"next_wave": 2}
         got = [r.url_canon for r in reopened.read("seen").collect()]
         assert sorted(got) == sorted(want), attr
-        via_snap = [r.url_canon for r in reopened.read_at_snapshot("seen").collect()]
-        assert sorted(via_snap) == sorted(want), attr
+        assert _disk_files(reopened.path("seen")) == set(
+            reopened.snapshot_table_files("seen")
+        ), attr
+
+
+def test_read_in_a_run_starts_no_listing_job(spark, tmp_path, monkeypatch):
+    """Inside a run, a read of a table listing more than 32 files
+    (Spark's parallel-listing threshold) submits no Spark job: TableIO
+    names every file, and the run raises the threshold that would start
+    a job to list them again; run() restores it."""
+    conf_key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    before = spark.conf.get(conf_key, None)
+    sc = spark.sparkContext
+    got = {}
+
+    def probe(self, st):
+        row = spark.createDataFrame([("u",)], "url_canon string").coalesce(1)
+        for wave in range(1, 34):
+            st.io.write(row, "seen", wave, mode="append")
+        got["files"] = len(st.io.snapshot_table_files("seen")) + 33
+        sc.setJobGroup("tableio-read-probe", "read")
+        try:
+            seen = st.io.read("seen")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        got["jobs"] = list(sc.statusTracker().getJobIdsForGroup("tableio-read-probe"))
+        got["rows"] = seen.count()
+        return st.stats
+
+    monkeypatch.setattr(CrawlEngine, "_crawl", probe)
+    eng = CrawlEngine(spark, None, {1: LinkSpider()}, EngineConfig(seen_backend="exact"))
+    eng.run(seeds=[(1, "http://h0.example.com/a", 0)], run_dir=str(tmp_path / "r"))
+    assert got["files"] > 32
+    assert got["jobs"] == []
+    assert got["rows"] == 34
+    assert spark.conf.get(conf_key, None) == before
+
+
+class _FileFrame:
+    """Stands in for a DataFrame in TableIO.write: its parquet write
+    drops one empty part file (an overwrite clears the dir first)."""
+
+    def __init__(self):
+        self.write = self
+
+    def mode(self, mode):
+        self._mode = mode
+        return self
+
+    def parquet(self, path):
+        if self._mode == "overwrite":
+            shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path, exist_ok=True)
+        open(os.path.join(path, f"part-{uuid.uuid4()}.parquet"), "w").close()
+
+
+def test_concurrent_writes_keep_every_file_listed(tmp_path):
+    """Writes from more threads than cores — the I/O pool's tail and
+    sinks write concurrently — each register their files in the live
+    list: a lost update would leave a file on disk that the commit does
+    not list, or keep one an overwrite removed."""
+    io = TableIO(None, str(tmp_path / "run"))
+    n_threads, n_writes = 4 * (os.cpu_count() or 1), 40
+
+    def writer(t):
+        for k in range(n_writes):
+            io.write(_FileFrame(), f"t{t}", k % 5, mode="append" if k % 3 else "overwrite")
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=writer, args=(t,)) for t in range(n_threads)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+        assert not any(th.is_alive() for th in threads)
+    finally:
+        sys.setswitchinterval(interval)
+    io.commit({})
+    listed = {f for t in range(n_threads) for f in io.snapshot_table_files(f"t{t}")}
+    assert listed == _disk_files(io.root) and len(listed) > n_threads * 5
