@@ -51,7 +51,7 @@ from ironspark.frontier import (
 from ironspark.metrics import rollup_wave_metrics, wave_metrics_fine
 from ironspark.parse import parse_responses
 from ironspark.pipeline import PipelineManager
-from ironspark.politeness import robots_disallow_filter, select_wave
+from ironspark.politeness import min_host_budget, robots_disallow_filter, select_wave
 from ironspark.schemas import (
     CONSUMED_SCHEMA,
     CRAWL_ORDER_SCHEMA,
@@ -81,6 +81,7 @@ _SCAN_TASKS_PER_CORE = 4
 
 _WAVE_TOTALS = (
     "scheduled", "fetched", "failed", "retried", "items", "outlinks", "dropped",
+    "unrouted",
 )
 
 # session settings the wave loop overrides; run() restores them on exit
@@ -163,14 +164,15 @@ class TableIO:
     the live list's delta against the parent. Only ``restore``, at the
     start of a resume, deletes data files: those the current snapshot
     does not list. One run writes a run dir at a time; readers such as
-    the live monitor open their own TableIO.
+    the live monitor open their own TableIO. Only the writers (``write``,
+    ``commit``) create dirs: opening a missing run dir to read it leaves
+    no dir behind.
     """
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         self.meta = os.path.join(root, "metadata")
-        os.makedirs(root, exist_ok=True)
         # ((snapshot id, timestamp), folded file list) of the last
         # snapshot folded or committed: a commit reads one snapshot,
         # not the chain
@@ -460,6 +462,9 @@ class RunState:
     consumed: list = field(default_factory=list)
     consumed_rows: int = 0
     pending_count: int | None = None  # None = unknown, probe once
+    # the smallest budget a host can get (politeness.min_host_budget),
+    # probed once the pending count first fits the default budget
+    min_budget: int | None = None
     handoff: DataFrame | None = None  # live frame of the next pending set
     handoff_streak: int = 0
     writes: list = field(default_factory=list)  # this wave's sink futures
@@ -569,10 +574,12 @@ class CrawlEngine:
             pages.select("url", "html", "warc_ts") if pages is not None else None
         )
         # url-only corpus side for the fetch's miss anti-join: built
-        # lazily ONCE and persisted as a single partition, so the
-        # per-wave broadcast build scans a compact in-memory column
-        # instead of re-launching a full parquet-footprint scan + 400k
-        # row collect every wave (~1s/wave of driver-serial floor).
+        # lazily ONCE and persisted hash-partitioned by url into the
+        # session's shuffle partition count (explicit, so AQE never
+        # coalesces it), so each wave's shuffle_hash anti-join
+        # exchanges only the wave's GET keys and probes the cached
+        # partitions in place — no parquet re-scan and no driver-side
+        # build of every corpus url.
         self._pages_urls: DataFrame | None = None
         # wall clock for fetch_ts stamping + recrawl due checks;
         # injectable via cfg.extra["clock"] so tests can age a crawl
@@ -618,8 +625,9 @@ class CrawlEngine:
 
     def _prepared_page_urls(self) -> DataFrame | None:
         if self._pages_urls is None and self._pages_view is not None:
+            nparts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
             self._pages_urls = (
-                self._pages_view.select("url").coalesce(1).persist()
+                self._pages_view.select("url").repartition(nparts, "url").persist()
             )
         return self._pages_urls
 
@@ -836,7 +844,7 @@ class CrawlEngine:
             selected, scheduled = self._schedule(st, pending)
             parse_out, mrows, ps_bounds = self._fetch_parse(st, scheduled)
             n = {k: sum(r[k] for r in mrows) for k in _WAVE_TOTALS}
-            n_unrouted = self._items(st, parse_out)
+            self._items(st, parse_out)
             new_front, n_new = self._dedup_enqueue(
                 st, parse_out, n["outlinks"], ps_bounds
             )
@@ -846,7 +854,7 @@ class CrawlEngine:
             self._advance_frontier(
                 st, selected, front_next, n["scheduled"], n["retried"], n_new
             )
-            self._commit_wave(st, mrows, n, n_new, n_unrouted)
+            self._commit_wave(st, mrows, n, n_new)
         self._shutdown(st)
         return st.stats
 
@@ -1081,7 +1089,17 @@ class CrawlEngine:
         """Schedule phase (F3/F7): politeness window-rank + global cap ->
         (selected: persisted, pre-hook; scheduled: after the request
         hooks and the cookie jar), plus the crawl-order write."""
-        selected = select_wave(pending, self._active_robots, self.cfg)
+        # select_wave skips its over-budget probe when the pending count
+        # fits the smallest host budget. With robots obeyed that budget
+        # costs a job, so it is probed once per run, and not before the
+        # count fits the default budget, which is never smaller.
+        if st.min_budget is None and st.pending_count <= min_host_budget(
+            None, self.cfg
+        ):
+            st.min_budget = min_host_budget(self._active_robots, self.cfg)
+        selected = select_wave(
+            pending, self._active_robots, self.cfg, st.pending_count, st.min_budget
+        )
         # Re-balance after politeness: the window rank leaves the
         # batch hash-partitioned by HOST, so a mega-domain (80% of
         # URLs) lands in ONE partition and the whole fetch+parse
@@ -1196,13 +1214,13 @@ class CrawlEngine:
         big_wave = st.aqe and (st.pending_count or 0) >= _AQE_MIN_PENDING
         if big_wave:
             self.spark.conf.set("spark.sql.adaptive.enabled", "true")
-        fine = wave_metrics_fine(parse_out).collect()
+        fine = wave_metrics_fine(
+            parse_out, None if self.pipelines is None else self.pipelines.unrouted()
+        ).collect()
         if big_wave:  # back to tiny bookkeeping actions
             self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         t_fp_ms = (time.monotonic() - t0) * 1000  # fetch+parse wall
-        mrows, status_counts, ps_bounds = rollup_wave_metrics(
-            fine, st.wave, 0, t_fp_ms, 0.0
-        )
+        mrows, status_counts, ps_bounds = rollup_wave_metrics(fine, st.wave, t_fp_ms)
         st.status_buf.extend(
             {"wave": st.wave, "resp_status": s, "count": c}
             for s, c in sorted(status_counts.items())
@@ -1210,9 +1228,10 @@ class CrawlEngine:
         st.mark("fetch+parse+metrics")
         return parse_out, mrows, ps_bounds
 
-    def _items(self, st: RunState, parse_out: DataFrame) -> int:
-        """Items phase (I1-I5, S4): items -> pipelines -> sink; returns
-        the unrouted count."""
+    def _items(self, st: RunState, parse_out: DataFrame) -> None:
+        """Items phase (I1-I5, S4): items -> pipelines -> sink. The
+        unrouted items (M7, manager.rs:96-98) were counted by the
+        metrics pass (wave_metrics_fine)."""
         if self.cfg.store_cookies:
             self._harvest_cookies(parse_out)
         items = (
@@ -1222,15 +1241,10 @@ class CrawlEngine:
                 "number", "text",
             )
         )
-        n_unrouted = 0
         if self.pipelines is not None:
-            items, unrouted = self.pipelines.process(items)
-            # M7 pipeline counter (manager.rs:96-98): items whose
-            # item_type has no chain are counted, not silently lost
-            n_unrouted = unrouted.count()
+            items = self.pipelines.process(items)[0]
         st.write_async(items, "items")
         st.mark("items")
-        return n_unrouted
 
     def _dedup_enqueue(
         self, st: RunState, parse_out: DataFrame, n_outlinks: int, ps_bounds: tuple
@@ -1411,18 +1425,13 @@ class CrawlEngine:
         # next wave instead
         st.pending_count = None if self.request_hooks else pending_next
 
-    def _commit_wave(
-        self, st: RunState, mrows: list, n: dict, n_new: int, n_unrouted: int
-    ) -> None:
+    def _commit_wave(self, st: RunState, mrows: list, n: dict, n_new: int) -> None:
         """Commit phase: fold the wave's metric rows (totals ``n``) into
         stats, close idle spiders, drain the sink writes, advance the
         wave, and commit every checkpoint_every waves."""
         cfg, stats = self.cfg, st.stats
         n_dedup = max(n["outlinks"] - n_new, 0)
-        for r in mrows:
-            if r["partition_id"] == -1:
-                r["deduped"] = n_dedup
-                r["unrouted"] = n_unrouted
+        mrows[-1]["deduped"] = n_dedup  # the wave's partition_id -1 row
         st.metrics_buf.extend(mrows)
         stats.scheduled += n["scheduled"]
         stats.fetched += n["fetched"]
@@ -1430,7 +1439,7 @@ class CrawlEngine:
         stats.items += n["items"]
         stats.outlinks += n["outlinks"]
         stats.deduped += n_dedup
-        stats.unrouted += n_unrouted
+        stats.unrouted += n["unrouted"]
         stats.dropped += n["dropped"]
         stats.exhausted += n["failed"] - n["retried"]
         if cfg.track_spiders:

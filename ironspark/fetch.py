@@ -55,6 +55,14 @@ def fetch_from_corpus(
     simulates the reference's redirect-following (final URL lands in
     ``url_canon``; reqwest follows redirects transparently,
     ``src/response.rs:10`` "url: final URL after redirects").
+
+    Misses come from a ``shuffle_hash`` anti-join of the scheduled GETs
+    against the url-only corpus side: ``corpus_urls`` when given (the
+    engine persists it once, hash-partitioned by url into
+    ``spark.sql.shuffle.partitions`` partitions, so a wave exchanges
+    only its own GET keys and probes the cached partitions in place),
+    else the urls of ``pages``. No step collects corpus urls to the
+    driver.
     """
     if redirects is not None:
         r = F.broadcast(redirects.select(
@@ -73,11 +81,11 @@ def fetch_from_corpus(
         F.col("html").alias("body_bytes"),
         F.col("warc_ts"),
     )
-    # NEVER shuffle the corpus: a wave's scheduled batch is tiny next
+    # NEVER shuffle the html: a wave's scheduled batch is tiny next
     # to the page store, so hits = corpus scan probing a broadcast
     # hash table of the batch (zero shuffle, zero sort; parallelism =
-    # parquet splits), and misses = an anti-join against the
-    # column-pruned url-only scan (KBs of parquet, not the html).
+    # parquet splits), and misses = an anti-join against the url-only
+    # corpus side (see the docstring), never the html.
     # A plain left join would shuffle wave-sized HTML every wave —
     # measured as the scaling killer (disk-bound, flat across cores).
     # The broadcast build side is projected to exactly what the
@@ -101,14 +109,10 @@ def fetch_from_corpus(
     hits = corpus.join(
         F.broadcast(gets), corpus["_page_url"] == gets["url_canon"]
     ).drop("_page_url")
-    # miss detection probes a url-only corpus side; callers that
-    # loop (the engine) pass a persisted single-partition
-    # `corpus_urls` so the per-wave broadcast build reads a compact
-    # cache instead of re-scanning parquet every wave
     url_side = corpus_urls if corpus_urls is not None else pages
     misses = (
         gets.join(
-            F.broadcast(url_side.select(F.col("url").alias("_page_url"))),
+            url_side.select(F.col("url").alias("_page_url")).hint("shuffle_hash"),
             gets["url_canon"] == F.col("_page_url"),
             "left_anti",
         )

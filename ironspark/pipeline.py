@@ -15,7 +15,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -58,14 +58,21 @@ class PipelineManager:
     def registered_types(self) -> list[str]:
         return sorted(self._chains)
 
+    def unrouted(self) -> Column:
+        """The routing predicate: true on an item whose item_type has no
+        chain. With chains registered, a null item_type gives null, so
+        such an item is neither routed nor counted; with none, every
+        item is unrouted."""
+        types = self.registered_types()
+        return ~F.col("item_type").isin(types) if types else F.lit(True)
+
     def process(self, items: DataFrame) -> tuple[DataFrame, DataFrame]:
         """(processed, unrouted). processed = union of each type's rows
         run through its priority-ordered transform chain."""
         types = self.registered_types()
+        unrouted = items.filter(self.unrouted())
         if not types:
-            empty = items.limit(0)
-            return empty, items
-        unrouted = items.filter(~F.col("item_type").isin(types))
+            return items.limit(0), unrouted
         processed = None
         for t in types:
             df = items.filter(F.col("item_type") == t)

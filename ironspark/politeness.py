@@ -18,6 +18,8 @@ per-host rank (phase 1 can only drop rows that phase 2 would drop).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -48,6 +50,26 @@ def with_budget(
             ),
         ).cast("int"),
     )
+
+
+def min_host_budget(robots: DataFrame | None, cfg: EngineConfig) -> int:
+    """The smallest budget with_budget can give any host: that of the
+    largest crawl_delay, the robots table's or the default (one Spark
+    job with a robots table, none without). 0 when a crawl_delay is not
+    positive or the budget is not a finite int, the inputs on which
+    with_budget's arithmetic does not shrink with the delay or raises."""
+    delays = [cfg.default_crawl_delay]
+    if robots is not None:
+        lo, hi = robots.agg(F.min("crawl_delay"), F.max("crawl_delay")).first()
+        if lo is not None:
+            delays += [lo, hi]
+    if not all(d > 0 for d in delays):  # NaN too
+        return 0
+    try:
+        budget = max(1, math.floor(cfg.wave_seconds / max(delays)))
+    except (ArithmeticError, ValueError):  # an infinite or NaN quotient
+        return 0
+    return budget if budget < 2**31 else 0
 
 
 def robots_disallow_filter(pending: DataFrame, robots: DataFrame | None) -> DataFrame:
@@ -172,7 +194,11 @@ def throttle_traps(pending: DataFrame, cfg: EngineConfig) -> DataFrame:
 
 
 def select_wave(
-    pending: DataFrame, robots: DataFrame | None, cfg: EngineConfig
+    pending: DataFrame,
+    robots: DataFrame | None,
+    cfg: EngineConfig,
+    pending_count: int | None = None,
+    min_budget: int | None = None,
 ) -> DataFrame:
     """The rows of ``pending`` scheduled this wave.
 
@@ -182,12 +208,28 @@ def select_wave(
     cfg.trap_template_cap is set, trap-flagged (host, template) groups
     are first capped by throttle_traps. Every other row stays pending:
     the engine tombstones only the scheduled (seq, attempt) keys.
+
+    ``pending_count`` is the exact row count of ``pending`` and
+    ``min_budget`` the smallest budget any host can get
+    (min_host_budget), when the caller knows them. A count at most that
+    budget leaves no host over budget, so every pending row is
+    scheduled without the budget join, the over-budget probe (a
+    broadcast job of its own) and the rank windows.
     """
     if cfg.trap_template_cap is not None:
-        pending_in = throttle_traps(pending, cfg)
-    else:
-        pending_in = pending
-    p = with_budget(pending_in, robots, cfg)
+        pending = throttle_traps(pending, cfg)
+    if pending_count is None or min_budget is None or pending_count > min_budget:
+        pending = _within_budget(pending, robots, cfg)
+    if cfg.max_wave_size is not None:
+        return pending.orderBy("seq").limit(cfg.max_wave_size)
+    return pending
+
+
+def _within_budget(
+    pending: DataFrame, robots: DataFrame | None, cfg: EngineConfig
+) -> DataFrame:
+    """Each host's lowest-seq rows within its budget."""
+    p = with_budget(pending, robots, cfg)
 
     # fast path: hosts with pending <= budget schedule everything and
     # SKIP the rank windows entirely — at steady state in a broad crawl
@@ -218,8 +260,4 @@ def select_wave(
         .drop("_r1", "_r2")
     )
 
-    p2 = under.unionByName(p2).drop("budget", "crawl_delay")
-
-    if cfg.max_wave_size is not None:
-        return p2.orderBy("seq").limit(cfg.max_wave_size)
-    return p2
+    return under.unionByName(p2).drop("budget", "crawl_delay")

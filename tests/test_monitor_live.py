@@ -66,6 +66,7 @@ def test_watch_refresh_smoke(spark, tmp_path):
     n2 = watch(spark, str(tmp_path / "nope"), interval_s=0.0,
                iterations=2, out=buf2)
     assert n2 == 2
+    assert not (tmp_path / "nope").exists()  # a reader creates no run dir
 
 
 def test_watch_live_ticks_across_checkpoint(spark, tmp_path):

@@ -57,6 +57,59 @@ def test_pipeline_unrouted_counted(spark, setup):
     assert unrouted.first()["item_type"] == "unknown"
 
 
+def _parse_out(spark):
+    """A wave's parse output over 3 partitions: 2 responses, 5 items
+    (one with a null item_type) and an outlink."""
+    from ironspark.schemas import PARSE_OUT_SCHEMA
+
+    base = {f.name: None for f in PARSE_OUT_SCHEMA.fields}
+    resp = dict(base, kind="resp", resp_status=200, accepted=True,
+                routed=True, retryable=False, bytes_req=10, bytes_resp=20)
+    rows = [
+        dict(resp, partition_id=0),
+        dict(resp, partition_id=1),
+        dict(base, kind="request", partition_id=1, parent_seq=3),
+    ] + [
+        dict(base, kind="item", partition_id=p, item_type=t, title=str(p))
+        for p, t in ((0, "article"), (0, "unknown"), (1, "unknown"),
+                     (2, "article"), (2, None))
+    ]
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=list(base)), PARSE_OUT_SCHEMA
+    )
+
+
+@pytest.mark.parametrize("chains", [("article",), (), None])
+def test_fused_unrouted_count_equals_process(spark, chains):
+    """The metrics pass counts the unrouted items the wave used to count
+    with a job of its own, PipelineManager.process(items)[1].count(),
+    and its rollup puts the total on the partition_id -1 row: a null
+    item_type beside chains is not counted, with no chains every item
+    is, and with no pipelines none is."""
+    from ironspark.metrics import rollup_wave_metrics, wave_metrics_fine
+
+    parse_out = _parse_out(spark)
+    items = parse_out.filter(F.col("kind") == "item")
+    if chains is None:
+        pm, want = None, 0
+    else:
+        pm = PipelineManager()
+        for t in chains:
+            pm.add_pipeline(t, lambda df: df)
+        want = pm.process(items)[1].count()
+    assert want == {("article",): 2, (): 5, None: 0}[chains]
+    fine = wave_metrics_fine(
+        parse_out, None if pm is None else pm.unrouted()
+    ).collect()
+    assert sum(r["unrouted"] for r in fine) == want
+    mrows, status, _ = rollup_wave_metrics(fine, 4, 1.5)
+    assert [r["partition_id"] for r in mrows] == [0, 1, 2, -1]
+    assert [r["unrouted"] for r in mrows] == [0, 0, 0, want]
+    assert [r["items"] for r in mrows] == [2, 1, 2, 0]
+    assert all(r["wave"] == 4 and r["t_parse_ms"] == 0.0 for r in mrows)
+    assert status == {200: 2}
+
+
 def test_request_response_hooks(spark, setup, tmp_path):
     """North rule: middleware hooks are DataFrame transform stages."""
     pages, seeds = setup

@@ -228,6 +228,18 @@ class _FileFrame:
         open(os.path.join(path, f"part-{uuid.uuid4()}.parquet"), "w").close()
 
 
+def test_read_only_open_leaves_no_run_dir(spark, tmp_path):
+    """Only the writers create the run dir: opening a missing one to
+    read it (the accessors, invalidate_seen) leaves nothing behind."""
+    missing = tmp_path / "missing"
+    io = TableIO(spark, str(missing))
+    assert io.manifest() is None and io.read("seen") is None
+    eng = CrawlEngine(spark, None, {}, EngineConfig())
+    assert eng.items_df(str(missing)) is None
+    assert eng.invalidate_seen(str(missing), ["http://a.com/"]) == 0
+    assert not missing.exists()
+
+
 def test_concurrent_writes_keep_every_file_listed(tmp_path):
     """Writes from more threads than cores — the I/O pool's tail and
     sinks write concurrently — each register their files in the live
