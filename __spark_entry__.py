@@ -706,54 +706,6 @@ def _mm_decode(spark, sf):
     )
 
 
-def _mm_audio(spark, sf):
-    """REAL WAV codec round trip, distributed (multimodal.encode_wav /
-    decode_wav + audio_stats_stage semantics — new in round 5): per
-    doc, synthesize a deterministic int16 mono waveform
-    s_i = (doc_id*(i+1)) % 65536 - 32768 for i in 0..n-1 with
-    n = 50 + doc_id % 13 at rate 8000 + (doc_id % 3)*4000, serialize
-    it to RIFF/WAVE bytes, decode those bytes back, and emit exact
-    integer stats. The oracle recomputes the waveform arithmetically —
-    a wrong chunk walk, byte order, or de-interleave hash-mismatches.
-    One Arrow pass, zero shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    from ironspark.multimodal import decode_wav, encode_wav
-
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_id", "sample_rate", "channels", "bits",
-                "n_frames", "duration_ms", "sum_sq", "peak",
-            )}
-            _i = np.arange(1, 63 + 1, dtype=np.int64)  # n <= 50 + 12
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 50 + did % 13
-                rate = 8000 + (did % 3) * 4000
-                s = (did * _i[:n] % 65536 - 32768).astype(np.int16)
-                w = decode_wav(encode_wav(s, sample_rate=rate))
-                arr = w["samples"].astype(np.int64)
-                out["media_id"].append(did)
-                out["sample_rate"].append(np.int32(w["sample_rate"]))
-                out["channels"].append(np.int32(w["channels"]))
-                out["bits"].append(np.int32(w["bits"]))
-                out["n_frames"].append(w["n_frames"])
-                out["duration_ms"].append(
-                    w["n_frames"] * 1000 // w["sample_rate"]
-                )
-                out["sum_sq"].append(int(np.sum(arr * arr)))
-                out["peak"].append(np.int32(np.max(np.abs(arr))))
-            yield pd.DataFrame(out)
-
-    return _docids(spark, sf).mapInPandas(
-        run,
-        "media_id long, sample_rate int, channels int, bits int, "
-        "n_frames long, duration_ms long, sum_sq long, peak int",
-    )
-
-
 # fixed multilingual snippets driving t_langid_script: one per major
 # writing system + four Latin stopword languages + a no-signal row.
 # The Spark side synthesizes each doc's text as snippet[doc_id % 14]
@@ -794,165 +746,6 @@ def _t_langid_script(spark, sf):
         ).alias("text"),
     )
     return language_id_v2(docs)
-
-
-def _mm_jpeg(spark, sf):
-    """REAL baseline-JPEG codec round trip, distributed
-    (multimodal.encode_jpeg / decode_jpeg — pure stdlib+numpy ITU-T
-    T.81 SOF0, new in round 6): per doc, build a FLAT RGB image of
-    color (doc_id%256, doc_id*7%256, doc_id*13%256) with
-    doc-dependent odd dimensions (8+doc_id%9 rows, 8+doc_id%7 cols —
-    exercising MCU edge padding + crop) and quality 35+doc_id%60
-    (both libjpeg scale-factor branches), encode it 4:4:4, decode it
-    back, and emit the decoded color. A flat image's whole pipeline —
-    RGB->YCbCr, DC-only FDCT, quantize, dequantize, IDCT,
-    YCbCr->RGB, all under the codec's floor(x+0.5+1e-9) rounding —
-    collapses to a closed-form per-doc arithmetic chain the DuckDB
-    oracle recomputes with FLOOR, so a wrong Huffman table, zigzag,
-    DCT normalization, or quant scale hash-mismatches. n_colors
-    asserts the decoded image is uniform (a block-boundary bug would
-    break uniformity before it shifts the mean). One Arrow pass,
-    zero shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    from ironspark.multimodal import decode_jpeg, encode_jpeg
-
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_id", "width", "height", "channels",
-                "n_colors", "px_r", "px_g", "px_b",
-            )}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                h, w = 8 + did % 9, 8 + did % 7
-                px = np.empty((h, w, 3), dtype=np.uint8)
-                px[..., 0] = did % 256
-                px[..., 1] = (did * 7) % 256
-                px[..., 2] = (did * 13) % 256
-                img = decode_jpeg(encode_jpeg(px, quality=35 + did % 60))
-                flat = img["pixels"].reshape(-1, 3)
-                out["media_id"].append(did)
-                out["width"].append(np.int32(img["width"]))
-                out["height"].append(np.int32(img["height"]))
-                out["channels"].append(np.int32(img["channels"]))
-                # distinct colors via 24-bit packing: same count as
-                # np.unique(flat, axis=0) without its per-row
-                # structured-dtype sort (~10x on these tiny images)
-                packed = (
-                    flat[:, 0].astype(np.int32) << 16
-                ) | (flat[:, 1].astype(np.int32) << 8) | flat[:, 2]
-                out["n_colors"].append(np.int32(np.unique(packed).size))
-                out["px_r"].append(np.int32(flat[0, 0]))
-                out["px_g"].append(np.int32(flat[0, 1]))
-                out["px_b"].append(np.int32(flat[0, 2]))
-            yield pd.DataFrame(out)
-
-    return _docids(spark, sf).mapInPandas(
-        run,
-        "media_id long, width int, height int, channels int, "
-        "n_colors int, px_r int, px_g int, px_b int",
-    )
-
-
-def _mm_gif_bmp(spark, sf):
-    """REAL GIF (LZW) + BMP codec round trips, distributed
-    (multimodal.encode_gif/decode_gif + encode_bmp/decode_bmp — pure
-    stdlib, new in round 6): per doc, build a 2x2 4-color paletted
-    image with palette[k][c] = doc_id*(3k+c+1) % 256 and indices
-    idx[r][cc] = (doc_id + 2r + cc) % 4, round-trip it through the GIF
-    LZW coder; and a 2x2 RGB image with bytes doc_id*(j+1) % 256
-    round-tripped through the BMP coder. Both formats are lossless, so
-    the oracle recomputes the exact pixel bytes arithmetically — a
-    wrong LZW width rule, palette layout, BGR swap, or row padding
-    hash-mismatches. One Arrow pass, zero shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    from ironspark.multimodal import (
-        decode_bmp,
-        decode_gif,
-        encode_bmp,
-        encode_gif,
-    )
-
-    def run(batches):
-        for pdf in batches:
-            ids, ghex, bhex = [], [], []
-            _k = np.arange(1, 13, dtype=np.int64).reshape(4, 3)
-            _r = np.arange(4, dtype=np.int64).reshape(2, 2)
-            for did in pdf["doc_id"]:
-                did = int(did)
-                pal = (did * _k % 256).astype(np.uint8)
-                idx = ((did + _r) % 4).astype(np.uint8)
-                g = decode_gif(encode_gif(idx, pal))
-                px = (did * _k % 256).astype(np.uint8).reshape(2, 2, 3)
-                b = decode_bmp(encode_bmp(px, top_down=bool(did % 2)))
-                ids.append(did)
-                ghex.append(g["pixels"].tobytes().hex())
-                bhex.append(b["pixels"].tobytes().hex())
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "width": np.int32(2), "height": np.int32(2),
-                    "gif_hex": ghex, "bmp_hex": bhex,
-                }
-            )
-
-    return _docids(spark, sf).mapInPandas(
-        run,
-        "media_id long, width int, height int, gif_hex string, "
-        "bmp_hex string",
-    )
-
-
-def _mm_gif_frames(spark, sf):
-    """REAL animated-GIF demux + frame compositing, distributed
-    (multimodal.encode_gif_animation / gif_frame_sample_stage, new in
-    round 6): per doc, a 4-frame 2x2 GIF89a animation — palette
-    pal[k][c] = doc_id*(3k+c+1) % 256, frame f indices idx_f[r][cc] =
-    (doc_id+f+2r+cc) % 4, delay (doc_id+f) % 100 cs; frame 0 opaque,
-    frames 1-3 carry transparent index 3 with disposal=leave, so every
-    composited pixel is the LAST non-3 index at that position — a
-    recurrence the oracle unrolls exactly in SQL. The stage samples
-    every 2nd composited frame (frame_idx 0 and 2). A wrong GCE parse,
-    transparency mask, compositing order, or LZW bit width
-    hash-mismatches. Two Arrow passes, zero shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    from ironspark.multimodal import (
-        encode_gif_animation,
-        gif_frame_sample_stage,
-    )
-
-    def build(batches):
-        for pdf in batches:
-            ids, payloads = [], []
-            _k = np.arange(1, 13, dtype=np.int64).reshape(4, 3)
-            _r = np.arange(4, dtype=np.int64).reshape(2, 2)
-            for did in pdf["doc_id"]:
-                did = int(did)
-                pal = (did * _k % 256).astype(np.uint8)
-                frames = [
-                    ((did + f + _r) % 4).astype(np.uint8) for f in range(4)
-                ]
-                payloads.append(encode_gif_animation(
-                    frames, pal,
-                    delays_cs=[(did + f) % 100 for f in range(4)],
-                    transparents=[None, 3, 3, 3],
-                    disposals=[1, 1, 1, 1],
-                ))
-                ids.append(did)
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = _docids(spark, sf).mapInPandas(
-        build, "media_id long, payload binary"
-    )
-    return gif_frame_sample_stage(media, every_n=2).select(
-        "media_id", "frame_idx", "delay_cs", "width", "height", "px_hex"
-    )
 
 
 def _f9_robots_wildcard(spark, sf):
@@ -1306,10 +1099,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "d4_wire_size": _d4_wire_size,
         "t_token_count": _t_token_count,
         "t_quality": _t_quality,
-        "mm_jpeg": _mm_jpeg,
         "t_langid_script": _t_langid_script,
-        "mm_gif_bmp": _mm_gif_bmp,
-        "mm_gif_frames": _mm_gif_frames,
         "t_bpe_merges": _t_bpe_merges,
         "c_url_templates": _c_url_templates,
         "g_components": _g_components,
@@ -1328,7 +1118,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dt_date_funcs": _dt_date_funcs,
         "j_json_extract": _j_json_extract,
         "mm_decode": _mm_decode,
-        "mm_audio": _mm_audio,
         "f9_robots_wildcard": _f9_robots_wildcard,
     }
 
@@ -2040,109 +1829,6 @@ def oracle_sql() -> dict[str, str]:
         # t_langid_script: full cross-engine re-run of the script-aware
         # detection over the fixed multilingual snippet table.
         "t_langid_script": langid_script_sql,
-        # mm_gif_bmp: lossless GIF-LZW + BMP round trips; the oracle
-        # recomputes pixel bytes arithmetically (gif byte at position
-        # j: row r=j//6, col cc=(j%6)//3, channel c=j%3, palette slot
-        # k=(doc_id+2r+cc)%4, value doc_id*(3k+c+1)%256).
-        "mm_gif_bmp": (
-            "SELECT doc_id AS media_id, CAST(2 AS INT) AS width, "
-            "CAST(2 AS INT) AS height, "
-            "(SELECT string_agg(printf('%02x', "
-            "(doc_id * (((doc_id + 2*(j//6) + ((j%6)//3)) % 4) * 3 "
-            "+ j%3 + 1)) % 256), '' ORDER BY j) "
-            "FROM generate_series(0,11) t(j)) AS gif_hex, "
-            "(SELECT string_agg(printf('%02x', (doc_id*(j+1)) % 256), "
-            "'' ORDER BY j) FROM generate_series(0,11) t(j)) AS bmp_hex "
-            "FROM documents"
-        ),
-        # mm_gif_frames: animated-GIF compositing; the oracle unrolls
-        # the transparency recurrence exactly — per pixel j (r=j//6,
-        # cc=(j%6)//3, c=j%3) frame-f raw index i_f=(doc_id+f+2r+cc)%4,
-        # composited slot k_0=i_0, k_f = i_f unless i_f==3 (the
-        # transparent index) in which case k_{f-1} — then hexes the
-        # palette bytes for the sampled frames 0 and 2.
-        "mm_gif_frames": (
-            "WITH fr AS (SELECT unnest([0, 2]) AS fi), "
-            "px AS (SELECT d.doc_id, fr.fi, t.j, "
-            "(t.j // 6) AS r, ((t.j % 6) // 3) AS cc, (t.j % 3) AS c "
-            "FROM documents d, fr, generate_series(0, 11) t(j)), "
-            "i AS (SELECT *, "
-            "(doc_id + 0 + 2*r + cc) % 4 AS i0, "
-            "(doc_id + 1 + 2*r + cc) % 4 AS i1, "
-            "(doc_id + 2 + 2*r + cc) % 4 AS i2 FROM px), "
-            "k1 AS (SELECT *, "
-            "CASE WHEN i1 = 3 THEN i0 ELSE i1 END AS c1 FROM i), "
-            "k2 AS (SELECT *, "
-            "CASE WHEN i2 = 3 THEN c1 ELSE i2 END AS c2 FROM k1) "
-            "SELECT doc_id AS media_id, CAST(fi AS INT) AS frame_idx, "
-            "CAST((doc_id + fi) % 100 AS INT) AS delay_cs, "
-            "CAST(2 AS INT) AS width, CAST(2 AS INT) AS height, "
-            "string_agg(printf('%02x', (doc_id * (3 * "
-            "(CASE WHEN fi = 0 THEN i0 ELSE c2 END) + c + 1)) % 256), "
-            "'' ORDER BY j) AS px_hex "
-            "FROM k2 GROUP BY doc_id, fi"
-        ),
-        # mm_jpeg: the Spark side encodes REAL baseline JPEGs of flat
-        # colors and decodes them back; the oracle recomputes the
-        # closed-form arithmetic the flat round trip collapses to
-        # (RGB->YCbCr, quantize/dequantize DC, YCbCr->RGB, every step
-        # under the codec's FLOOR(x+0.5+1e-9) rounding convention).
-        "mm_jpeg": (
-            "WITH p AS (SELECT doc_id, "
-            "CAST(doc_id % 256 AS DOUBLE) AS rr, "
-            "CAST((doc_id * 7) % 256 AS DOUBLE) AS gg, "
-            "CAST((doc_id * 13) % 256 AS DOUBLE) AS bb, "
-            "35 + doc_id % 60 AS q FROM documents), "
-            "s AS (SELECT *, CASE WHEN q < 50 THEN 5000 // q "
-            "ELSE 200 - 2 * q END AS sfac FROM p), "
-            "t AS (SELECT *, "
-            "LEAST(255, GREATEST(1, (16 * sfac + 50) // 100)) AS qlum, "
-            "LEAST(255, GREATEST(1, (17 * sfac + 50) // 100)) AS qchr "
-            "FROM s), "
-            "y AS (SELECT *, "
-            "LEAST(255.0, GREATEST(0.0, FLOOR(0.299::DOUBLE * rr "
-            "+ 0.587::DOUBLE * gg + 0.114::DOUBLE * bb + 0.5 + 1e-9))) AS yy, "
-            "LEAST(255.0, GREATEST(0.0, FLOOR(-0.168736::DOUBLE * rr "
-            "- 0.331264::DOUBLE * gg + 0.5::DOUBLE * bb + 128.0 + 0.5 + 1e-9))) AS cb, "
-            "LEAST(255.0, GREATEST(0.0, FLOOR(0.5::DOUBLE * rr "
-            "- 0.418688::DOUBLE * gg - 0.081312::DOUBLE * bb + 128.0 + 0.5 + 1e-9))) AS cr "
-            "FROM t), "
-            "o AS (SELECT *, "
-            "LEAST(255.0, GREATEST(0.0, FLOOR(FLOOR(8.0 * (yy - 128.0) / qlum "
-            "+ 0.5 + 1e-9) * qlum / 8.0 + 128.0 + 0.5 + 1e-9))) AS y2, "
-            "LEAST(255.0, GREATEST(0.0, FLOOR(FLOOR(8.0 * (cb - 128.0) / qchr "
-            "+ 0.5 + 1e-9) * qchr / 8.0 + 128.0 + 0.5 + 1e-9))) AS cb2, "
-            "LEAST(255.0, GREATEST(0.0, FLOOR(FLOOR(8.0 * (cr - 128.0) / qchr "
-            "+ 0.5 + 1e-9) * qchr / 8.0 + 128.0 + 0.5 + 1e-9))) AS cr2 "
-            "FROM y) "
-            "SELECT doc_id AS media_id, "
-            "CAST(8 + doc_id % 7 AS INT) AS width, "
-            "CAST(8 + doc_id % 9 AS INT) AS height, "
-            "CAST(3 AS INT) AS channels, CAST(1 AS INT) AS n_colors, "
-            "CAST(LEAST(255.0, GREATEST(0.0, FLOOR(y2 "
-            "+ 1.402::DOUBLE * (cr2 - 128.0) + 0.5 + 1e-9))) AS INT) AS px_r, "
-            "CAST(LEAST(255.0, GREATEST(0.0, FLOOR(y2 "
-            "- 0.344136::DOUBLE * (cb2 - 128.0) "
-            "- 0.714136::DOUBLE * (cr2 - 128.0) + 0.5 + 1e-9))) AS INT) AS px_g, "
-            "CAST(LEAST(255.0, GREATEST(0.0, FLOOR(y2 "
-            "+ 1.772::DOUBLE * (cb2 - 128.0) + 0.5 + 1e-9))) AS INT) AS px_b "
-            "FROM o"
-        ),
-        # mm_audio: the Spark side serializes REAL WAV bytes and decodes
-        # them back; the oracle recomputes the synthetic waveform's exact
-        # integer stats arithmetically
-        "mm_audio": (
-            "WITH p AS (SELECT doc_id, CAST(50 + doc_id % 13 AS BIGINT) AS n, "
-            "CAST(8000 + (doc_id % 3) * 4000 AS INT) AS rate FROM documents), "
-            "s AS (SELECT doc_id, unnest(list_transform(generate_series(1, n), "
-            "i -> CAST((doc_id * i) % 65536 - 32768 AS BIGINT))) AS v FROM p), "
-            "a AS (SELECT doc_id, CAST(SUM(v * v) AS BIGINT) AS sum_sq, "
-            "CAST(MAX(ABS(v)) AS INT) AS peak FROM s GROUP BY doc_id) "
-            "SELECT p.doc_id AS media_id, p.rate AS sample_rate, "
-            "CAST(1 AS INT) AS channels, CAST(16 AS INT) AS bits, "
-            "p.n AS n_frames, (p.n * 1000) // p.rate AS duration_ms, "
-            "a.sum_sq, a.peak FROM p JOIN a USING (doc_id)"
-        ),
         "mm_frame_sample": (
             "WITH m AS (SELECT doc_id AS media_id, octet_length(encode(text)) AS nb "
             "FROM documents) "

@@ -7,9 +7,11 @@ of the engine's own plan choices. Physical plans are not settable:
 the seen anti-join regime is resolved per wave from the engine's
 counters (``seen_broadcast_max_rows``, ``seen_flip_ratio``), and the
 fetch is the corpus join when the engine gets a pages table and live
-HTTP when it gets ``pages=None``. The reference's thread-pool and
-in-flight limits have no meaning in a wave engine and are not carried
-(Spark's task scheduler bounds concurrency; SURVEY.md §2.2, §4.1).
+HTTP when it gets ``pages=None``; the merge-on-read frontier
+compacts past a fixed segment count (``engine._FRONTIER_MAX_SEGMENTS``).
+The reference's thread-pool and in-flight limits have no meaning in a
+wave engine and are not carried (Spark's task scheduler bounds
+concurrency; SURVEY.md §2.2, §4.1).
 """
 
 from __future__ import annotations
@@ -80,12 +82,6 @@ class EngineConfig:
 
     # -- spider admission (src/spider/manager.rs:34-36) ----------------------
     scheduler_holding_threshold: int = 50
-
-    # -- frontier storage (merge-on-read) --------------------------------------
-    # Pending = delta segments minus consumed tombstones; compaction
-    # rewrites the true pending set as one base segment when the list
-    # exceeds this or tombstones outnumber 2x the live backlog.
-    frontier_max_segments: int = 8
 
     # -- loop termination (src/config.rs:51) ----------------------------------
     max_waves: int = 1000

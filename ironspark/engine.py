@@ -79,6 +79,11 @@ _AQE_MIN_PENDING = 65_536
 # makes this a no-op at petabyte corpus sizes.
 _SCAN_TASKS_PER_CORE = 4
 
+# Merge-on-read frontier: compaction rewrites the true pending set as
+# one base segment once the segment list grows past this (or tombstones
+# outnumber 2x the live backlog), so every read scans a bounded list.
+_FRONTIER_MAX_SEGMENTS = 8
+
 _WAVE_TOTALS = (
     "scheduled", "fetched", "failed", "retried", "items", "outlinks", "dropped",
     "unrouted",
@@ -466,7 +471,6 @@ class RunState:
     # probed once the pending count first fits the default budget
     min_budget: int | None = None
     handoff: DataFrame | None = None  # live frame of the next pending set
-    handoff_streak: int = 0
     writes: list = field(default_factory=list)  # this wave's sink futures
     # the PREVIOUS wave's overlapped tail (CrawlEngine._tail) and the
     # gate of its frontier-segment stage
@@ -1379,17 +1383,11 @@ class CrawlEngine:
             # the next wave plans against it directly instead of
             # waiting for the parquet read-back. Only on the plain
             # path (no staged seeds/hooks mutating pending outside
-            # the frame), and lineage-reset every few waves so the
-            # logical plan tree stays bounded on long crawls.
-            st.handoff_streak += 1
-            if (
-                not st.staged
-                and not self.request_hooks
-                and st.handoff_streak % 8 != 0
-            ):
+            # the frame). front_next is localCheckpoint-ed, so its
+            # plan is one LogicalRDD scan however long the chain.
+            if not st.staged and not self.request_hooks:
                 st.handoff = front_next
         else:
-            st.handoff_streak = 0
             st.segments = st.segments + [f"frontier/wave={st.wave + 1}"]
             # tombstones: the PRE-hook scheduled keys leave pending
             # (a hook-dropped request is consumed, never retried).
@@ -1399,7 +1397,7 @@ class CrawlEngine:
             st.consumed = st.consumed + [f"consumed/wave={st.wave}"]
             st.consumed_rows += n_sched
             if (
-                len(st.segments) > self.cfg.frontier_max_segments
+                len(st.segments) > _FRONTIER_MAX_SEGMENTS
                 or st.consumed_rows > 2 * max(pending_next, 1)
             ):
                 # amortized compaction (Iceberg rewrite-data-files

@@ -1,17 +1,23 @@
 """Merge-on-read frontier: per-wave writes are O(wave), compaction is
-amortized, and resume works mid-contention (segments + tombstones in the
-manifest)."""
+amortized, resume works mid-contention (segments + tombstones in the
+manifest), and the fast path hands each wave's frame to the next."""
 
 import os
 
 import pandas as pd
 import pytest
 
+from ironspark import engine as engine_mod
 from ironspark.config import EngineConfig
-from ironspark.corpus import build_graph_corpus_pdf, graph_seeds
+from ironspark.corpus import (
+    article_seeds,
+    build_chain_corpus,
+    build_graph_corpus_pdf,
+    graph_seeds,
+)
 from ironspark.engine import CrawlEngine
 from ironspark.schemas import PAGES_SCHEMA, ROBOTS_SCHEMA, SEEDS_SCHEMA
-from ironspark.spider import LinkSpider
+from ironspark.spider import ArticleSpider, LinkSpider
 from tests.reference_executor import run_reference
 
 N_PAGES, N_HOSTS = 400, 4
@@ -47,10 +53,11 @@ def _cfg(**kw):
     )
 
 
-def test_delta_write_volume_and_parity(spark, contended, tmp_path):
+def test_delta_write_volume_and_parity(spark, contended, tmp_path, monkeypatch):
     pages, seeds, robots, corpus, seeds_pdf, delays = contended
-    eng = CrawlEngine(spark, pages, {1: LinkSpider()}, _cfg(max_waves=8,
-                      frontier_max_segments=3), robots=robots)
+    monkeypatch.setattr(engine_mod, "_FRONTIER_MAX_SEGMENTS", 3)
+    eng = CrawlEngine(spark, pages, {1: LinkSpider()}, _cfg(max_waves=8),
+                      robots=robots)
     run_dir = str(tmp_path / "delta")
     stats = eng.run(seeds=seeds, run_dir=run_dir)
 
@@ -104,3 +111,29 @@ def test_resume_mid_contention(spark, contended, tmp_path):
     assert list(oa["url_canon"]) == list(ob["url_canon"])
     assert list(oa["seq"]) == list(ob["seq"])
     assert list(oa["wave"]) == list(ob["wave"])
+
+
+def test_fast_path_hands_off_every_wave(spark, tmp_path, monkeypatch):
+    """On the fast path (everything pending scheduled, no staged seeds
+    or hooks) each wave plans against the previous wave's checkpointed
+    frame: the pending plan is a bare LogicalRDD scan however long the
+    chain, and no wave reads its segment back from parquet."""
+    n_waves = 12
+    pages = spark.createDataFrame(build_chain_corpus(1, n_waves), PAGES_SCHEMA)
+    seeds = spark.createDataFrame(article_seeds(1, n_waves, dup=1), SEEDS_SCHEMA)
+    plans = []
+    select = engine_mod.select_wave
+
+    def select_spy(pending, *args, **kwargs):
+        plans.append(pending._jdf.queryExecution().logical())
+        return select(pending, *args, **kwargs)
+
+    monkeypatch.setattr(engine_mod, "select_wave", select_spy)
+    cfg = EngineConfig(dedup=True, max_waves=n_waves + 2, respect_robots=False)
+    stats = CrawlEngine(spark, pages, {1: ArticleSpider()}, cfg).run(
+        seeds=seeds, run_dir=str(tmp_path / "run")
+    )
+    assert stats.waves == n_waves == len(plans)
+    for wave, plan in enumerate(plans[1:], start=1):
+        assert plan.nodeName() == "LogicalRDD", (wave, plan.toString())
+        assert plan.children().size() == 0, (wave, plan.toString())

@@ -112,13 +112,11 @@ def test_decode_palette_expands_to_rgb():
 
 
 def test_decode_rejects_unsupported_and_garbage():
-    # a JPEG SOI with a malformed marker stream routes to decode_jpeg
-    # (real since round 6) and dies as malformed, not unsupported;
-    # same for a truncated GIF; containers with no built-in codec
-    # (webp) stay honest NotImplementedError
-    with pytest.raises(ValueError):
+    # PNG is the only built-in codec: JPEG, GIF and webp containers
+    # stay honest NotImplementedError, not a wrong answer
+    with pytest.raises(NotImplementedError):
         decode_image(b"\xff\xd8\xff\xe0 jpeg-ish")
-    with pytest.raises(ValueError):
+    with pytest.raises(NotImplementedError):
         decode_image(b"GIF89a no pixel data")
     with pytest.raises(NotImplementedError):
         decode_image(b"RIFF\x00\x00\x00\x00WEBPVP8 ")
@@ -208,102 +206,3 @@ def test_image_dims_headers():
         image_dims(b"\xff\xd8\xff\xe0\x00\x04\x00\x00\xff\xd9")  # no SOF
     with pytest.raises(ValueError):
         image_dims(b"GIF89a\x01")  # truncated
-
-
-# -- WAV codec (round 5) ---------------------------------------------------
-
-
-def test_wav_roundtrip_against_stdlib_wave():
-    """Our encoder must be readable by the stdlib wave module and our
-    decoder must read stdlib-written files byte-exactly."""
-    import io
-    import wave as stdwave
-
-    import numpy as np
-
-    from ironspark.multimodal import decode_wav, encode_wav
-
-    s = np.array([0, 1000, -1000, 32767, -32768, 7], dtype=np.int16)
-    payload = encode_wav(s, sample_rate=22050)
-
-    # stdlib reads ours
-    with stdwave.open(io.BytesIO(payload)) as w:
-        assert w.getframerate() == 22050
-        assert w.getnchannels() == 1
-        assert w.getsampwidth() == 2
-        assert w.getnframes() == len(s)
-        assert np.frombuffer(w.readframes(len(s)), dtype="<i2").tolist() == s.tolist()
-
-    # ours reads stdlib's
-    buf = io.BytesIO()
-    with stdwave.open(buf, "wb") as w:
-        w.setnchannels(2)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        stereo = np.array([[1, -1], [300, -300]], dtype="<i2")
-        w.writeframes(stereo.tobytes())
-    out = decode_wav(buf.getvalue())
-    assert (out["sample_rate"], out["channels"], out["bits"]) == (8000, 2, 16)
-    assert out["samples"].tolist() == stereo.tolist()
-
-
-def test_wav_decode_edge_cases():
-    import numpy as np
-    import pytest
-
-    from ironspark.multimodal import decode_wav, encode_wav
-
-    with pytest.raises(ValueError):
-        decode_wav(b"not a wav")
-    # odd-sized unknown chunk before data must be skipped word-aligned
-    s = np.array([5, -5, 9], dtype=np.int16)
-    good = encode_wav(s, sample_rate=8000)
-    fmt_end = 12 + 8 + 16
-    injected = (
-        good[:fmt_end]
-        + b"LIST" + (3).to_bytes(4, "little") + b"abc\x00"  # 3-byte chunk + pad
-        + good[fmt_end:]
-    )
-    assert decode_wav(injected)["samples"].ravel().tolist() == [5, -5, 9]
-    # non-PCM format code -> NotImplementedError, not a crash
-    bad_fmt = bytearray(good)
-    bad_fmt[20] = 3  # IEEE float
-    with pytest.raises(NotImplementedError):
-        decode_wav(bytes(bad_fmt))
-
-
-def test_wav_8bit_recentered():
-    import struct
-
-    from ironspark.multimodal import decode_wav, _WAV_FMT
-
-    data = bytes([0, 128, 255])  # unsigned 8-bit: min, mid, max
-    fmt = _WAV_FMT.pack(1, 1, 8000, 8000, 1, 8)
-    body = (
-        b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    payload = b"RIFF" + struct.pack("<I", len(body)) + body
-    out = decode_wav(payload)
-    assert out["bits"] == 8
-    assert out["samples"].ravel().tolist() == [-128, 0, 127]
-
-
-def test_audio_stats_stage_distributed(spark):
-    import numpy as np
-
-    from ironspark.multimodal import audio_stats_stage, encode_wav
-
-    rows = [
-        (1, bytearray(encode_wav(np.array([3, -4], dtype=np.int16), 1000))),
-        (2, bytearray(b"corrupt payload")),
-    ]
-    media = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {r["media_id"]: r for r in audio_stats_stage(media).collect()}
-    r1 = out[1]
-    assert (r1["n_frames"], r1["sum_sq"], r1["peak"]) == (2, 25, 4)
-    assert r1["duration_ms"] == 2 * 1000 // 1000
-    assert r1["decode_err"] is None
-    # corrupt rows survive with an error string, never kill the stage
-    assert out[2]["decode_err"].startswith("ValueError")
-    assert out[2]["sum_sq"] is None
