@@ -39,7 +39,7 @@ def _tp(
     The sf test tables are single-file, SINGLE-ROW-GROUP parquet, and a
     row group is parquet's unit of scan parallelism — so every scan
     stage otherwise runs as ONE task and any per-row-heavy work above
-    it (codec round trips, shingle explodes, regex stacks) serializes
+    it (shingle explodes, regex stacks) serializes
     on one core of local[N] (optimization guide §2.5 "input skew" /
     §6.1). The repartition shuffles only the table's projected rows
     (KB-MB here) to buy back N-way parallelism; it is applied per
@@ -66,7 +66,11 @@ def _tp(
 
 def entry(spark: SparkSession) -> DataFrame:
     """Full crawl: seeds -> politeness schedule -> fetch(corpus join) ->
-    Arrow parse/extract -> dedup -> frontier loop; returns items."""
+    Arrow parse/extract -> dedup -> frontier loop; returns items.
+
+    The items are checkpointed into Spark's block store, so the crawl's
+    temporary run dir is deleted before they are returned."""
+    import shutil
     import tempfile
 
     from ironspark.config import EngineConfig
@@ -104,8 +108,12 @@ def entry(spark: SparkSession) -> DataFrame:
         default_crawl_delay=0.5,
     )
     eng = CrawlEngine(spark, pages, spiders, cfg)
-    stats = eng.run(seeds=seeds, run_dir=tempfile.mkdtemp(prefix="ironspark_entry_"))
-    return eng.items_df(stats.run_dir)
+    run_dir = tempfile.mkdtemp(prefix="ironspark_entry_")
+    try:
+        eng.run(seeds=seeds, run_dir=run_dir)
+        return eng.items_df(run_dir).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(run_dir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -496,18 +504,10 @@ def _t_simhash(spark, sf):
     return simhash(_t(spark, sf, "documents"), bits=16)
 
 
-def _t_langid(spark, sf):
-    from ironspark.textops import language_id
-
-    return language_id(_t(spark, sf, "documents"))
-
-
 def _t_token_count(spark, sf):
     from ironspark.textops import token_count
 
-    return token_count(_t(spark, sf, "documents")).select(
-        "doc_id", "n_tokens"
-    )
+    return token_count(_t(spark, sf, "documents"))
 
 
 def _t_quality(spark, sf):
@@ -619,12 +619,12 @@ def _t_rep_signals(spark, sf):
     return repetition_signals(_chunked_docs(spark, sf), n=2)
 
 
-# -- multimodal plumbing ---------------------------------------------------------
+# -- fanned-out scans -----------------------------------------------------------
 
 def _docids(spark, sf):
-    """doc_id-only scan fanned out to the core count: the media-codec
-    queries run multi-ms Python per row behind a single-row-group scan
-    (see _tp), and only the 8-byte key needs to cross the exchange."""
+    """doc_id-only scan fanned out to the core count (see _tp) for the
+    queries that derive their rows from the key alone: only the 8-byte
+    key needs to cross the exchange."""
     return (
         _t(spark, sf, "documents")
         .select("doc_id")
@@ -635,117 +635,13 @@ def _docids(spark, sf):
 def _tpd(spark, sf):
     """(doc_id, text) scan fanned out to the core count — the _tp
     rationale for the text operators whose per-row work (shingle
-    explodes, regex stacks, symbol splits) dominates at scale,
+    explodes, regex stacks) dominates at scale,
     projected first so the exchange never carries unused columns."""
     return (
         _t(spark, sf, "documents")
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
     )
-
-
-def _mm_metadata(spark, sf):
-    from ironspark.multimodal import documents_as_media, extract_metadata
-
-    return extract_metadata(documents_as_media(_t(spark, sf, "documents")))
-
-
-def _mm_frame_sample(spark, sf):
-    from ironspark.multimodal import documents_as_media, frame_sample
-
-    return frame_sample(documents_as_media(_t(spark, sf, "documents")), 100)
-
-
-def _mm_feature(spark, sf):
-    from ironspark.multimodal import documents_as_media, fake_feature_extract
-
-    feats = fake_feature_extract(documents_as_media(_t(spark, sf, "documents")), dim=8)
-    return feats.select(
-        F.col("media_id"),
-        F.round(F.element_at("feature", 1), 6).alias("f0"),
-        F.round(F.element_at("feature", 8), 6).alias("f7"),
-    )
-
-
-def _mm_decode(spark, sf):
-    """REAL PNG codec round trip, distributed (multimodal.decode_png /
-    encode_png — pure stdlib, new in round 5): per doc, build a 2x2
-    RGB image whose 12 pixel bytes are (doc_id*(j+1)) % 256, encode it
-    with a doc-dependent PNG filter type (all five §9 filters get
-    exercised across the table), decode it back, and emit the
-    reconstructed pixel buffer as hex. The oracle recomputes the pixel
-    bytes arithmetically — so a wrong filter inversion or chunk walk
-    hash-mismatches. One Arrow pass, zero shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    from ironspark.multimodal import decode_image, encode_png
-
-    def run(batches):
-        for pdf in batches:
-            ids, hexes = [], []
-            _j = np.arange(1, 13, dtype=np.int64)
-            for did in pdf["doc_id"]:
-                did = int(did)
-                pix = (did * _j % 256).astype(np.uint8).reshape(2, 2, 3)
-                png = encode_png(pix, filters=[did % 5, (did // 5) % 5])
-                img = decode_image(png)
-                ids.append(did)
-                hexes.append(img["pixels"].tobytes().hex())
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "width": np.int32(2), "height": np.int32(2),
-                    "channels": np.int32(3), "pixel_hex": hexes,
-                }
-            )
-
-    return _docids(spark, sf).mapInPandas(
-        run,
-        "media_id long, width int, height int, channels int, pixel_hex string",
-    )
-
-
-# fixed multilingual snippets driving t_langid_script: one per major
-# writing system + four Latin stopword languages + a no-signal row.
-# The Spark side synthesizes each doc's text as snippet[doc_id % 14]
-# and runs textops.language_id_v2; the oracle re-runs the WHOLE
-# detection (script char-class counts, kana rule, 30% argmax rule,
-# stopword vote, und fallback) over the same snippets in DuckDB's
-# regex dialect — a wrong range, threshold, or tie-break mismatches.
-_LANG_SNIPPETS = [
-    "the cat sat on the mat and it was warm for that time of year",
-    "der hund ist nicht mit der katze auf dem sofa und das ist gut",
-    "le chat est dans la maison et il ne veut pas sortir des que possible",
-    "el perro no es un gato y los dos viven con la familia para siempre",
-    "今天天气很好我们一起去公园散步吧这里的风景非常美丽",
-    "今日はとても良い天気ですので公園へ散歩に行きましょう",
-    "오늘은 날씨가 좋아서 공원에 산책하러 갑니다",
-    "сегодня хорошая погода и мы идем гулять в парк вместе",
-    "الطقس جميل اليوم ونحن ذاهبون إلى الحديقة معا",
-    "आज मौसम बहुत अच्छा है और हम पार्क में टहलने जा रहे हैं",
-    "σήμερα ο καιρός είναι καλός και πηγαίνουμε στο πάρκο μαζί",
-    "วันนี้อากาศดีมากเราไปเดินเล่นที่สวนสาธารณะกัน",
-    "מזג האוויר יפה היום ואנחנו הולכים לפארק יחד",
-    "12345 67890 24680 13579 55555",
-]
-
-
-def _t_langid_script(spark, sf):
-    """Script-aware language ID (textops.language_id_v2, round 6) on
-    deterministic multilingual text: doc text = _LANG_SNIPPETS[doc_id
-    % 14], covering nine non-Latin writing systems, four Latin
-    stopword languages, and a no-signal row. Zero shuffle."""
-    from ironspark.textops import language_id_v2
-
-    docs = _t(spark, sf, "documents").select(
-        "doc_id",
-        F.element_at(
-            F.array(*[F.lit(s) for s in _LANG_SNIPPETS]),
-            (F.col("doc_id") % 14 + 1).cast("int"),
-        ).alias("text"),
-    )
-    return language_id_v2(docs)
 
 
 def _f9_robots_wildcard(spark, sf):
@@ -963,12 +859,6 @@ def _i1_routing_counts(spark, sf):
     )
 
 
-def _t_bpe_merges(spark, sf):
-    from ironspark.textops import bpe_train
-
-    return bpe_train(_tpd(spark, sf), num_merges=6)
-
-
 def _c_url_templates(spark, sf):
     # deterministic URL log derived from events: hosts h0..h49; h0 is a
     # session-id trap (every URL unique, one {H} template, share 1.0),
@@ -1037,18 +927,6 @@ def _t_incr_dedup(spark, sf):
     )
 
 
-def _t_bpe_tokens(spark, sf):
-    from ironspark.textops import _word_freqs, bpe_encode, bpe_train
-
-    # ONE corpus word-count pass shared by train + encode (round 7):
-    # the lazy localCheckpoint materializes inside bpe_train's vocab
-    # collect and bpe_encode's plan then reads the cached blocks
-    # instead of re-running the explode + aggregate a second time.
-    d = _tpd(spark, sf)
-    w = _word_freqs(d).localCheckpoint(eager=False)
-    return bpe_encode(d, bpe_train(d, num_merges=6, words=w), words=w)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "fr_recrawl_due": _fr_recrawl_due,
@@ -1078,11 +956,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "t_lsh_pairs": _t_lsh_pairs,
         "t_jaccard_pairs": _t_jaccard_pairs,
         "t_simhash": _t_simhash,
-        "t_langid": _t_langid,
         "t_fingerprint": _t_fingerprint,
-        "mm_metadata": _mm_metadata,
-        "mm_frame_sample": _mm_frame_sample,
-        "mm_feature": _mm_feature,
         "f4_admission": _f4_admission,
         "m8_spider_counters": _m8_spider_counters,
         "d2_status_filter": _d2_status_filter,
@@ -1099,11 +973,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "d4_wire_size": _d4_wire_size,
         "t_token_count": _t_token_count,
         "t_quality": _t_quality,
-        "t_langid_script": _t_langid_script,
-        "t_bpe_merges": _t_bpe_merges,
         "c_url_templates": _c_url_templates,
         "g_components": _g_components,
-        "t_bpe_tokens": _t_bpe_tokens,
         "t_incr_dedup": _t_incr_dedup,
         "m9_scheduler_depth": _m9_scheduler_depth,
         "i1_routing_counts": _i1_routing_counts,
@@ -1117,7 +988,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "g_rollup": _g_rollup,
         "dt_date_funcs": _dt_date_funcs,
         "j_json_extract": _j_json_extract,
-        "mm_decode": _mm_decode,
         "f9_robots_wildcard": _f9_robots_wildcard,
     }
 
@@ -1139,68 +1009,6 @@ _CHUNKED_CTE = (
     "i -> array_to_string(ws[((i-1)*10+1):(i*10)], ' ')), chr(10)) AS text "
     "FROM ws0)"
 )
-
-def _bpe_ctes(num_merges: int) -> list:
-    """Shared CTE chain for the BPE oracles: word-frequency table,
-    padded-string symbol states s0..s{num_merges}, per-round pair-count
-    argmax m{i} — mirroring textops.bpe_train exactly (same padded
-    double-space representation, same (count desc, lft, rgt)
-    tie-break, same greedy left-to-right literal replace; replace()
-    has identical non-overlapping scan semantics in both engines)."""
-    ctes = [
-        "w AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS freq FROM "
-        "(SELECT unnest(string_split_regex(lower(text), '\\s+')) AS word "
-        "FROM documents) WHERE word <> '' GROUP BY word)",
-        "s0 AS (SELECT ' ' || rtrim(regexp_replace(word, '(.)', '\\1  ', 'g'))"
-        " || ' ' AS s, freq FROM w)",
-    ]
-    for i in range(num_merges):
-        ctes.append(
-            f"c{i} AS (SELECT string_split(trim(s), '  ') AS ws, freq "
-            f"FROM s{i})"
-        )
-        ctes.append(
-            f"q{i} AS (SELECT "
-            "unnest(list_transform(range(1, len(ws)), j -> ws[j])) AS lft, "
-            "unnest(list_transform(range(1, len(ws)), j -> ws[j + 1])) AS rgt, "
-            f"freq FROM c{i})"
-        )
-        ctes.append(
-            f"m{i} AS (SELECT lft, rgt, CAST(SUM(freq) AS BIGINT) AS cnt "
-            f"FROM q{i} GROUP BY lft, rgt ORDER BY cnt DESC, lft, rgt LIMIT 1)"
-        )
-        ctes.append(
-            f"s{i + 1} AS (SELECT replace(s, ' ' || lft || '  ' || rgt || ' ', "
-            f"' ' || lft || rgt || ' ') AS s, freq FROM s{i}, m{i})"
-        )
-    return ctes
-
-
-def _bpe_oracle_sql(num_merges: int = 6) -> str:
-    """Unrolled BPE merge learning: one CTE quartet per round (see
-    _bpe_ctes); selects the per-round argmax rows as the merge list."""
-    ctes = _bpe_ctes(num_merges)
-    sel = " UNION ALL ".join(
-        f"SELECT {i + 1} AS merge_rank, lft, rgt, lft || rgt AS merged, "
-        f"cnt AS pair_count FROM m{i}"
-        for i in range(num_merges)
-    )
-    return "WITH " + ", ".join(ctes) + " " + sel
-
-
-def _bpe_tokens_oracle_sql(num_merges: int = 6) -> str:
-    """Unrolled BPE tokenizer application mirroring textops.bpe_encode:
-    the final symbol state s{num_merges} exploded back into tokens and
-    frequency-summed."""
-    ctes = _bpe_ctes(num_merges)
-    return (
-        "WITH "
-        + ", ".join(ctes)
-        + f", tok AS (SELECT unnest(string_split(trim(s), '  ')) AS token,"
-        f" freq FROM s{num_merges}) "
-        "SELECT token, CAST(SUM(freq) AS BIGINT) AS n_tokens "
-        "FROM tok GROUP BY token"
-    )
 
 # PII patterns (textops._PII_*) with SQL-literal quoting; identical
 # byte-for-byte so the oracle exercises the same regex dialect subset
@@ -1263,73 +1071,6 @@ def oracle_sql() -> dict[str, str]:
     sim_pack = " + ".join(
         f"(CASE WHEN b{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(simhash_bits)
     )
-    # generated from the one authoritative dict (ironspark.textops.
-    # STOPWORDS) so the Spark vote and the DuckDB mirror cannot drift
-    # when a language is added (round 6 added it/nl/pt)
-    from ironspark.textops import STOPWORDS as _STOP
-
-    langs = sorted(_STOP)
-    stop_lists = {
-        lg: ",".join(f"'{w}'" for w in _STOP[lg]) for lg in langs
-    }
-    lang_sums = ", ".join(
-        f"SUM(CASE WHEN word IN ({stop_lists[lg]}) THEN 1 ELSE 0 END) AS n_{lg}"
-        for lg in langs
-    )
-    lang_best = f"GREATEST({', '.join('n_' + lg for lg in langs)})"
-    lang_guess = "CASE WHEN " + lang_best + " = 0 THEN 'und' " + " ".join(
-        f"WHEN n_{lg} = {lang_best} THEN '{lg}'" for lg in langs
-    ) + " ELSE 'und' END"
-
-    # t_langid_script mirror: re-run language_id_v2's WHOLE detection
-    # in DuckDB over the same snippets — the \x{....} char-class
-    # spelling is shared by Java regex and RE2, and all ranges are BMP
-    # so both engines' LENGTH agree. CASE orders mirror the Spark
-    # when-chain tie-breaks (ascending language code).
-    from ironspark.textops import SCRIPT_RANGES
-
-    sn_values = ", ".join(
-        f"({i}, '{s}')" for i, s in enumerate(_LANG_SNIPPETS)
-    )
-    script_counts = ", ".join(
-        f"LENGTH(txt) - LENGTH(regexp_replace(txt, '{rng}', '', 'g')) AS s_{lg}"
-        for lg, rng in sorted(SCRIPT_RANGES.items())
-    )
-    script_langs = [lg for lg in sorted(SCRIPT_RANGES) if lg != "ja"]
-    script_best = f"GREATEST({', '.join('s_' + lg for lg in script_langs)})"
-    script_case = " ".join(
-        f"WHEN s_{lg} = sbest THEN '{lg}'" for lg in script_langs
-    )
-    stop_counts_v2 = ", ".join(
-        "len(list_filter(string_split_regex(lower(txt), '\\s+'), "
-        f"x -> x IN ({stop_lists[lg]}))) AS v_{lg}"
-        for lg in langs
-    )
-    stop_best_v2 = f"GREATEST({', '.join('v_' + lg for lg in langs)})"
-    stop_case_v2 = " ".join(
-        f"WHEN v_{lg} = vbest THEN '{lg}'" for lg in langs
-    )
-    langid_script_sql = (
-        f"WITH sn(idx, txt) AS (VALUES {sn_values}), "
-        "d AS (SELECT doc_id, txt FROM documents "
-        "JOIN sn ON sn.idx = doc_id % 14), "
-        "m AS (SELECT doc_id, txt, "
-        "LENGTH(regexp_replace(txt, '\\s', '', 'g')) AS nos, "
-        f"{script_counts} FROM d), "
-        f"s AS (SELECT *, {script_best} AS sbest FROM m), "
-        f"v AS (SELECT *, {stop_counts_v2} FROM s), "
-        f"b AS (SELECT *, {stop_best_v2} AS vbest FROM v) "
-        "SELECT doc_id, "
-        "CASE WHEN s_ja > 0 AND s_ja * 100 >= nos THEN 'ja' "
-        "WHEN sbest > 0 AND sbest * 10 > nos * 3 THEN "
-        f"(CASE {script_case} END) "
-        f"WHEN vbest > 0 THEN (CASE {stop_case_v2} END) "
-        "ELSE 'und' END AS lang_guess, "
-        "CAST(sbest AS BIGINT) AS n_script_chars, "
-        "CAST(nos AS BIGINT) AS n_nonspace "
-        "FROM b"
-    )
-
     return {
         "m1_counter_sums": (
             "SELECT COUNT(*) AS n_requests, ROUND(SUM(value), 2) AS total_value FROM events"
@@ -1525,11 +1266,6 @@ def oracle_sql() -> dict[str, str]:
             + " AS h FROM w), s AS (SELECT doc_id, " + sim_sums + " FROM h GROUP BY doc_id) "
             "SELECT doc_id, CAST(" + sim_pack + " AS BIGINT) AS simhash FROM s"
         ),
-        "t_langid": (
-            "WITH " + _WORDS_CTE + ", s AS (SELECT doc_id, " + lang_sums
-            + " FROM w GROUP BY doc_id) SELECT doc_id, " + lang_guess
-            + " AS lang_guess FROM s"
-        ),
         "t_token_count": (
             "SELECT doc_id, CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) "
             "AS n_tokens FROM documents"
@@ -1595,8 +1331,6 @@ def oracle_sql() -> dict[str, str]:
             "ROUND(quantile_cont(n_chars, 0.99), 6) AS p99 "
             "FROM documents GROUP BY lang"
         ),
-        "t_bpe_merges": _bpe_oracle_sql(num_merges=6),
-        "t_bpe_tokens": _bpe_tokens_oracle_sql(num_merges=6),
         "t_incr_dedup": (
             # cross-snapshot dedup: signatures are per-doc, so sig over
             # ALL docs then split mirrors signing each side separately;
@@ -1776,11 +1510,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT doc_id, word, CAST(tf AS BIGINT) AS tf, "
             "ROUND(tfidf, 6) AS tfidf, CAST(rn AS INT) AS rn FROM r WHERE rn <= 3"
         ),
-        "mm_metadata": (
-            "SELECT doc_id AS media_id, 'image' AS kind, "
-            "CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes, "
-            "md5(text) AS digest FROM documents"
-        ),
         # f9: the robots rule sets are FIXED literals, so the RFC 9309
         # most-specific-match decision (wildcards compiled to regex on
         # the Spark side) expands to per-host CASE logic in DuckDB's
@@ -1816,26 +1545,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT url, host, last_fetch, n_fetches, "
             "ROUND(age_s, 6) AS age_seconds FROM r WHERE rk <= 5"
         ),
-        # mm_decode: the Spark side encodes REAL PNGs and decodes them
-        # back; the oracle recomputes the expected pixel bytes directly
-        # (a codec that mangles any filter type hash-mismatches here).
-        "mm_decode": (
-            "SELECT doc_id AS media_id, CAST(2 AS INT) AS width, "
-            "CAST(2 AS INT) AS height, CAST(3 AS INT) AS channels, "
-            "(SELECT string_agg(printf('%02x', (doc_id*(j+1))%256), '' ORDER BY j) "
-            "FROM generate_series(0,11) t(j)) AS pixel_hex "
-            "FROM documents"
-        ),
-        # t_langid_script: full cross-engine re-run of the script-aware
-        # detection over the fixed multilingual snippet table.
-        "t_langid_script": langid_script_sql,
-        "mm_frame_sample": (
-            "WITH m AS (SELECT doc_id AS media_id, octet_length(encode(text)) AS nb "
-            "FROM documents) "
-            "SELECT media_id, CAST(f AS INT) AS frame_idx, "
-            "CAST(LEAST(100, nb - f * 100) AS BIGINT) AS frame_bytes "
-            "FROM m, LATERAL unnest(generate_series(0, CAST(CEIL(nb / 100.0) AS INT) - 1)) AS t(f)"
-        ),
         # p8: the query template is a FIXED URL shape, so the pandas-UDF
         # canonicalization (scheme/host lowercase, :80 drop, dot-segment
         # removal, query sort, fragment strip) is expressible as string
@@ -1843,14 +1552,6 @@ def oracle_sql() -> dict[str, str]:
         "p8_canonicalize": (
             "SELECT doc_id, concat('http://', lower(source), '.example.com/A/', "
             "CAST(doc_id AS VARCHAR), '?a=2&z=1') AS url_canon FROM documents"
-        ),
-        # mm_feature: the stub features are md5-digest bytes / 255.0, so
-        # feature[i] = byte i of md5(payload) = hex chars (2i+1, 2i+2).
-        "mm_feature": (
-            "SELECT doc_id AS media_id, "
-            "ROUND(CAST(concat('0x', substr(md5(text), 1, 2)) AS INT) / 255.0, 6) AS f0, "
-            "ROUND(CAST(concat('0x', substr(md5(text), 15, 2)) AS INT) / 255.0, 6) AS f7 "
-            "FROM documents"
         ),
         "f4_admission": (
             "WITH g AS (SELECT user_id % 8 AS grp, COUNT(*) AS pending "

@@ -2,17 +2,14 @@
 
 Each test guards one round-7 optimization:
 - the LSH bucket-guard broadcast inversion (VERDICT r6 #1),
-- the BPE driver-side finishing switch (VERDICT r6 #5),
 - the connected-components star-forest convergence probe (VERDICT r6 #3),
 - the r6 ADVICE guard on the near_dup_clusters algorithm.
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 from ironspark.graph import _star_violations, connected_components
 from ironspark.textops import (
-    _bpe_merge_rounds,
     _incr_candidates,
     lsh_candidate_pairs,
     minhash_signatures,
@@ -74,31 +71,6 @@ def test_incremental_candidate_guard_broadcasts_only_overcap_side(spark):
     assert (0, 102) in got  # new doc 0 == corpus doc 102 (same text)
 
 
-def test_bpe_driver_and_distributed_paths_agree_at_100_merges(spark):
-    # VERDICT r6 #5 done-criterion: parity distributed-vs-switched at
-    # >= 100 merges. driver_max_vocab=0 forces the distributed loop.
-    texts = [
-        "low lower lowest newer newest wide widely widest " * 3,
-        "banana bandana cabana analog and sand band bland stand",
-        "abc abd abe acc accc abab ababab baba bcbc cbcb",
-        "internationalization localization realization optimization",
-        # enough distinct multi-char words that the merge loop does not
-        # exhaust before 100 rounds
-        " ".join(f"w{i}x{i * 7 % 100}y{i * 13 % 100}" for i in range(120)),
-    ] * 2
-    words = (
-        _docs(spark, texts)
-        .select(F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count("*").cast("long").alias("freq"))
-    )
-    driver = _bpe_merge_rounds(words, 120, driver_max_vocab=10**9)
-    dist = _bpe_merge_rounds(words, 120, driver_max_vocab=0)
-    assert len(driver) >= 100
-    assert driver == dist
-
-
 def test_star_violations_detects_fixpoint_exactly(spark):
     def edges(rows):
         return spark.createDataFrame(rows, "u long, v long")
@@ -127,30 +99,3 @@ def test_components_still_correct_on_chain_and_star(spark):
 def test_near_dup_clusters_rejects_unknown_algorithm(spark):
     with pytest.raises(ValueError):
         near_dup_clusters(_docs(spark, NEAR_DUP_TEXTS), algorithm="stars")
-
-
-def test_bpe_shared_words_matches_unshared(spark):
-    # round-7 second pass: _t_bpe_tokens shares ONE _word_freqs table
-    # between bpe_train and bpe_encode — results must equal the
-    # unshared two-pass shape exactly
-    from ironspark.textops import _word_freqs, bpe_encode, bpe_train
-
-    d = _docs(
-        spark,
-        ["low lower lowest", "newer newest new", "low low newest"] * 3,
-    )
-    w = _word_freqs(d).localCheckpoint(eager=False)
-    m_shared = bpe_train(d, num_merges=5, words=w)
-    m_plain = bpe_train(d, num_merges=5)
-    assert sorted(map(tuple, m_shared.collect())) == sorted(
-        map(tuple, m_plain.collect())
-    )
-    t_shared = {
-        (r["token"], r["n_tokens"])
-        for r in bpe_encode(d, m_shared, words=w).collect()
-    }
-    t_plain = {
-        (r["token"], r["n_tokens"])
-        for r in bpe_encode(d, m_plain).collect()
-    }
-    assert t_shared == t_plain

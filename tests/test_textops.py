@@ -8,7 +8,6 @@ from ironspark.textops import (
     exact_dedup,
     fingerprint,
     jaccard_pairs,
-    language_id,
     lsh_candidate_pairs,
     minhash_signatures,
     quality_score,
@@ -64,12 +63,6 @@ def test_simhash_similarity(spark, docs):
     ham_near = bin(int(out[1]) ^ int(out[3])).count("1")
     ham_far = bin(int(out[1]) ^ int(out[7])).count("1")
     assert ham_near < ham_far  # near-dup closer than unrelated
-
-
-def test_language_id(spark, docs):
-    out = language_id(docs).toPandas().set_index("doc_id")["lang_guess"]
-    assert out[1] == "en" and out[4] == "de" and out[5] == "fr"
-    assert out[6] == "und"
 
 
 def test_token_and_quality(spark, docs):
