@@ -457,53 +457,6 @@ def _w_lag_running(spark, sf):
 
 # -- training-data pipeline ops ------------------------------------------------
 
-def _t_exact_dedup(spark, sf):
-    from ironspark.textops import exact_dedup
-
-    return exact_dedup(_t(spark, sf, "documents"))
-
-
-def _t_minhash_sig(spark, sf):
-    from ironspark.textops import minhash_signatures
-
-    return minhash_signatures(_t(spark, sf, "documents"), bands=4)
-
-
-def _t_lsh_pairs(spark, sf):
-    from ironspark.textops import lsh_candidate_pairs
-
-    return lsh_candidate_pairs(_t(spark, sf, "documents"), bands=4)
-
-
-def _t_jaccard_pairs(spark, sf):
-    from ironspark.textops import jaccard_pairs, lsh_candidate_pairs
-
-    docs = _t(spark, sf, "documents")
-    return jaccard_pairs(docs, lsh_candidate_pairs(docs, bands=4))
-
-
-def _t_dup_clusters(spark, sf):
-    from ironspark.textops import near_dup_clusters
-
-    return near_dup_clusters(
-        _t(spark, sf, "documents"), threshold=0.5, bands=4
-    )
-
-
-def _t_dup_collapse(spark, sf):
-    from ironspark.textops import near_dup_collapse
-
-    return near_dup_collapse(
-        _t(spark, sf, "documents"), threshold=0.5, bands=4
-    )
-
-
-def _t_simhash(spark, sf):
-    from ironspark.textops import simhash
-
-    return simhash(_t(spark, sf, "documents"), bits=16)
-
-
 def _t_token_count(spark, sf):
     from ironspark.textops import token_count
 
@@ -516,12 +469,6 @@ def _t_quality(spark, sf):
     return quality_score(_t(spark, sf, "documents")).select(
         "doc_id", "n_chars", "n_tokens", "n_punct", "punct_ratio", "stop_ratio"
     )
-
-
-def _t_fingerprint(spark, sf):
-    from ironspark.textops import fingerprint
-
-    return fingerprint(_t(spark, sf, "documents"))
 
 
 def _t_dup_ngrams(spark, sf):
@@ -589,10 +536,9 @@ def _t_length_quantiles(spark, sf):
 
 def _chunked_docs(spark, sf):
     # The synthetic corpus is single-line; derive deterministic "lines"
-    # as 10-word chunks (identically in the oracles), so line-grained
-    # operators run against their natural newline contract.
-    # Near-dup/exact-dup documents share chunks, so line dedup and
-    # repetition signals do real work here.
+    # as 10-word chunks (identically in the oracle), so repetition
+    # signals run against their natural newline contract. Near-dup and
+    # exact-dup documents share chunks, so the signals do real work here.
     docs = _t(spark, sf, "documents")
     words = F.filter(
         F.split(F.trim(F.col("text")), r"\s+"), lambda x: x != ""
@@ -605,12 +551,6 @@ def _chunked_docs(spark, sf):
         lambda i: F.array_join(F.slice(words, (i - 1) * 10 + 1, 10), " "),
     )
     return docs.select("doc_id", F.array_join(chunks, "\n").alias("text"))
-
-
-def _t_line_dedup(spark, sf):
-    from ironspark.textops import corpus_line_dedup
-
-    return corpus_line_dedup(_chunked_docs(spark, sf), min_docs=3)
 
 
 def _t_rep_signals(spark, sf):
@@ -633,9 +573,8 @@ def _docids(spark, sf):
 
 
 def _tpd(spark, sf):
-    """(doc_id, text) scan fanned out to the core count — the _tp
-    rationale for the text operators whose per-row work (shingle
-    explodes, regex stacks) dominates at scale,
+    """(doc_id, text) scan fanned out to the core count for t_tfidf_topk
+    (the _tp rationale: its per-row word explode dominates at scale),
     projected first so the exchange never carries unused columns."""
     return (
         _t(spark, sf, "documents")
@@ -896,37 +835,6 @@ def _c_url_templates(spark, sf):
     )
 
 
-def _g_components(spark, sf):
-    # deterministic mixed-size component graph from documents: blocks
-    # of 4 consecutive doc_ids star onto their block root, and every
-    # 20th doc bridges its block root to node 5 of the next block
-    # (8-node components at every 20-stride, 4-node otherwise; block
-    # roots appear as self-loops, exercising the u==v drop path)
-    from ironspark.graph import connected_components
-
-    d = _t(spark, sf, "documents")
-    blocks = d.select(
-        F.col("doc_id").alias("src"),
-        (F.col("doc_id") - F.col("doc_id") % 4).alias("dst"),
-    )
-    bridges = d.filter(F.col("doc_id") % 20 == 0).select(
-        F.col("doc_id").alias("src"), (F.col("doc_id") + 5).alias("dst")
-    )
-    return connected_components(blocks.unionByName(bridges))
-
-
-def _t_incr_dedup(spark, sf):
-    # snapshot split: every 3rd doc is the "new crawl", the rest the
-    # existing corpus — ids disjoint by construction
-    from ironspark.textops import incremental_near_dup
-
-    d = _tpd(spark, sf)
-    return incremental_near_dup(
-        d.filter(F.col("doc_id") % 3 == 0),
-        d.filter(F.col("doc_id") % 3 != 0),
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "fr_recrawl_due": _fr_recrawl_due,
@@ -936,12 +844,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "t_dup_ngrams": _t_dup_ngrams,
         "t_vocab_topk": _t_vocab_topk,
         "t_pii_scrub": _t_pii_scrub,
-        "t_dup_clusters": _t_dup_clusters,
-        "t_dup_collapse": _t_dup_collapse,
         "t_stratified_sample": _t_stratified_sample,
         "t_domain_stats": _t_domain_stats,
         "t_length_quantiles": _t_length_quantiles,
-        "t_line_dedup": _t_line_dedup,
         "t_rep_signals": _t_rep_signals,
         "q2_supplier_region": _q2_supplier_region,
         "q3_part_brand": _q3_part_brand,
@@ -951,12 +856,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x1_exchange_join": _x1_exchange_join,
         "q1_lineitem_agg": _q1_lineitem_agg,
         "skew2p_salted_agg": _skew2p_salted_agg,
-        "t_exact_dedup": _t_exact_dedup,
-        "t_minhash_sig": _t_minhash_sig,
-        "t_lsh_pairs": _t_lsh_pairs,
-        "t_jaccard_pairs": _t_jaccard_pairs,
-        "t_simhash": _t_simhash,
-        "t_fingerprint": _t_fingerprint,
         "f4_admission": _f4_admission,
         "m8_spider_counters": _m8_spider_counters,
         "d2_status_filter": _d2_status_filter,
@@ -974,8 +873,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "t_token_count": _t_token_count,
         "t_quality": _t_quality,
         "c_url_templates": _c_url_templates,
-        "g_components": _g_components,
-        "t_incr_dedup": _t_incr_dedup,
         "m9_scheduler_depth": _m9_scheduler_depth,
         "i1_routing_counts": _i1_routing_counts,
         "m5_avg": _m5_avg,
@@ -998,7 +895,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 _MD5NUM_DUCK = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
 
-# 10-word-chunk "lines" shared by the line-grained oracles (mirrors
+# 10-word-chunk "lines" for the t_rep_signals oracle (mirrors
 # _chunked_docs)
 _CHUNKED_CTE = (
     "ws0 AS (SELECT doc_id, "
@@ -1021,56 +918,8 @@ _WORDS_CTE = (
     "FROM documents), w AS (SELECT doc_id, word FROM words WHERE word <> '')"
 )
 
-# MinHash hash family (matches ironspark.textops): h0 = md5num(shingle)
-# mod p, then hash_b = ((1000003 + 2b)*h0 + 12345 + b) mod p, p = 2^31-1.
-_SIG_CTE = (
-    "wl AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'), "
-    "x -> x <> '') AS ws FROM documents)"
-    ", sh AS (SELECT doc_id, unnest(list_transform("
-    "generate_series(1, greatest(len(ws) - 2, 0)), "
-    "i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS shingle FROM wl)"
-    ", shd AS (SELECT DISTINCT doc_id, shingle FROM sh)"
-    ", h0 AS (SELECT doc_id, "
-    + _MD5NUM_DUCK.format(x="shingle")
-    + " % 2147483647 AS h0 FROM shd)"
-    ", bands AS (SELECT unnest(generate_series(0, 3)) AS band)"
-    ", hashes AS (SELECT doc_id, CAST(band AS INT) AS band, "
-    "((1000003 + 2*band) * h0 + 12345 + band) % 2147483647 AS h "
-    "FROM h0 CROSS JOIN bands)"
-    ", sig AS (SELECT doc_id, band, MIN(h) AS minhash FROM hashes GROUP BY doc_id, band)"
-    ", small AS (SELECT band, minhash FROM sig GROUP BY band, minhash "
-    "HAVING COUNT(*) > 1 AND COUNT(*) <= 50)"
-    ", sigf AS (SELECT sig.* FROM sig JOIN small USING (band, minhash))"
-)
-
-
-# exact word-set Jaccard over the LSH candidate pairs (shared by the
-# t_jaccard_pairs oracle and, as a CTE body, by t_dup_clusters)
-_JACCARD_SQL = (
-    "WITH " + _SIG_CTE + ", " + _WORDS_CTE + ", "
-    "wd AS (SELECT DISTINCT doc_id, word FROM w), pairs AS ("
-    "SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b "
-    "FROM sigf a JOIN sigf b USING (band, minhash) WHERE a.doc_id < b.doc_id), "
-    "inter AS (SELECT p.doc_a, p.doc_b, COUNT(*) AS n_inter FROM pairs p "
-    "JOIN wd wa ON wa.doc_id = p.doc_a JOIN wd wb ON wb.doc_id = p.doc_b "
-    "AND wb.word = wa.word GROUP BY p.doc_a, p.doc_b), "
-    "sizes AS (SELECT doc_id, COUNT(*) AS n_words FROM wd GROUP BY doc_id) "
-    "SELECT i.doc_a, i.doc_b, "
-    "ROUND(n_inter / (sa.n_words + sb.n_words - n_inter), 6) AS jaccard "
-    "FROM inter i JOIN sizes sa ON sa.doc_id = i.doc_a "
-    "JOIN sizes sb ON sb.doc_id = i.doc_b"
-)
-
 
 def oracle_sql() -> dict[str, str]:
-    simhash_bits = 16
-    sim_sums = ", ".join(
-        f"SUM(CASE WHEN (h & {1 << i}) <> 0 THEN 1 ELSE -1 END) AS b{i}"
-        for i in range(simhash_bits)
-    )
-    sim_pack = " + ".join(
-        f"(CASE WHEN b{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(simhash_bits)
-    )
     return {
         "m1_counter_sums": (
             "SELECT COUNT(*) AS n_requests, ROUND(SUM(value), 2) AS total_value FROM events"
@@ -1215,57 +1064,6 @@ def oracle_sql() -> dict[str, str]:
             "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS running_value "
             "FROM events"
         ),
-        "t_exact_dedup": (
-            "SELECT MIN(doc_id) AS keep_doc_id, md5(text) AS text_hash, "
-            "COUNT(*) AS dup_count FROM documents GROUP BY md5(text)"
-        ),
-        "t_minhash_sig": (
-            "WITH " + _SIG_CTE + " SELECT doc_id, CAST(band AS INT) AS band, minhash FROM sig"
-        ),
-        "t_lsh_pairs": (
-            "WITH " + _SIG_CTE + " SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b "
-            "FROM sigf a JOIN sigf b USING (band, minhash) WHERE a.doc_id < b.doc_id"
-        ),
-        "t_jaccard_pairs": _JACCARD_SQL,
-        # connected components over the verified pair graph: DuckDB
-        # computes the transitive closure with a recursive CTE and
-        # labels each doc with the min reachable id — exactly the
-        # fixpoint the Spark min-label propagation converges to
-        "t_dup_clusters": (
-            "WITH RECURSIVE jac AS (" + _JACCARD_SQL + "), "
-            "jp AS (SELECT doc_a, doc_b FROM jac WHERE jaccard >= 0.5), "
-            "ed AS (SELECT doc_a AS u, doc_b AS v FROM jp "
-            "UNION SELECT doc_b, doc_a FROM jp), "
-            "reach(u, v) AS (SELECT u, v FROM ed "
-            "UNION SELECT r.u, e.v FROM reach r JOIN ed e ON r.v = e.u) "
-            "SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id "
-            "FROM reach GROUP BY u"
-        ),
-        # dedup collapse: survivors = unclustered docs + each cluster's
-        # min-doc_id representative, with the cluster size attached
-        "t_dup_collapse": (
-            "WITH RECURSIVE jac AS (" + _JACCARD_SQL + "), "
-            "jp AS (SELECT doc_a, doc_b FROM jac WHERE jaccard >= 0.5), "
-            "ed AS (SELECT doc_a AS u, doc_b AS v FROM jp "
-            "UNION SELECT doc_b, doc_a FROM jp), "
-            "reach(u, v) AS (SELECT u, v FROM ed "
-            "UNION SELECT r.u, e.v FROM reach r JOIN ed e ON r.v = e.u), "
-            "lab AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id "
-            "FROM reach GROUP BY u), "
-            "sizes AS (SELECT cluster_id, COUNT(*) AS n FROM lab "
-            "GROUP BY cluster_id) "
-            "SELECT d.doc_id, CAST(COALESCE(s.n, 1) AS BIGINT) AS n_members "
-            "FROM documents d "
-            "LEFT JOIN lab l ON l.doc_id = d.doc_id "
-            "LEFT JOIN sizes s ON s.cluster_id = d.doc_id "
-            "WHERE l.cluster_id IS NULL OR l.cluster_id = d.doc_id"
-        ),
-        "t_simhash": (
-            "WITH " + _WORDS_CTE + ", h AS (SELECT doc_id, "
-            + _MD5NUM_DUCK.format(x="word")
-            + " AS h FROM w), s AS (SELECT doc_id, " + sim_sums + " FROM h GROUP BY doc_id) "
-            "SELECT doc_id, CAST(" + sim_pack + " AS BIGINT) AS simhash FROM s"
-        ),
         "t_token_count": (
             "SELECT doc_id, CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) "
             "AS n_tokens FROM documents"
@@ -1281,11 +1079,6 @@ def oracle_sql() -> dict[str, str]:
             "x -> x IN ('the','and','of','to','in','is','that','it','for','was'))) "
             "/ GREATEST(len(string_split_regex(trim(text), '\\s+')), 1), 6) AS stop_ratio "
             "FROM documents"
-        ),
-        "t_fingerprint": (
-            "SELECT doc_id, md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp_md5, "
-            + _MD5NUM_DUCK.format(x="trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))")
-            + " AS fp_num FROM documents"
         ),
         "t_dup_ngrams": (
             "WITH wl AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'), "
@@ -1331,53 +1124,6 @@ def oracle_sql() -> dict[str, str]:
             "ROUND(quantile_cont(n_chars, 0.99), 6) AS p99 "
             "FROM documents GROUP BY lang"
         ),
-        "t_incr_dedup": (
-            # cross-snapshot dedup: signatures are per-doc, so sig over
-            # ALL docs then split mirrors signing each side separately;
-            # corpus-side bucket guard (<= 50, no lower bound — a
-            # 1-doc corpus bucket is a valid probe target), candidate
-            # equi-join, Jaccard verify, best-match window
-            "WITH " + _SIG_CTE + ", " + _WORDS_CTE + ", "
-            "sign AS (SELECT * FROM sig WHERE doc_id % 3 = 0), "
-            "sigo AS (SELECT * FROM sig WHERE doc_id % 3 <> 0), "
-            "smallo AS (SELECT band, minhash FROM sigo "
-            "GROUP BY band, minhash HAVING COUNT(*) <= 50), "
-            "sigof AS (SELECT sigo.* FROM sigo JOIN smallo USING (band, minhash)), "
-            "cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b "
-            "FROM sign a JOIN sigof b USING (band, minhash)), "
-            "wd AS (SELECT DISTINCT doc_id, word FROM w), "
-            "inter AS (SELECT p.doc_a, p.doc_b, COUNT(*) AS n_inter FROM cand p "
-            "JOIN wd wa ON wa.doc_id = p.doc_a JOIN wd wb ON wb.doc_id = p.doc_b "
-            "AND wb.word = wa.word GROUP BY p.doc_a, p.doc_b), "
-            "sizes AS (SELECT doc_id, COUNT(*) AS n_words FROM wd GROUP BY doc_id), "
-            "ver AS (SELECT i.doc_a, i.doc_b, "
-            "ROUND(n_inter / (sa.n_words + sb.n_words - n_inter), 6) AS jaccard "
-            "FROM inter i JOIN sizes sa ON sa.doc_id = i.doc_a "
-            "JOIN sizes sb ON sb.doc_id = i.doc_b), "
-            "best AS (SELECT doc_a AS doc_id, doc_b AS dup_of, jaccard, "
-            "ROW_NUMBER() OVER (PARTITION BY doc_a ORDER BY jaccard DESC, doc_b) "
-            "AS rn FROM ver WHERE jaccard >= 0.5) "
-            "SELECT doc_id, dup_of, jaccard FROM best WHERE rn = 1"
-        ),
-        "g_components": (
-            # min-node-reachable via recursive transitive closure over
-            # the symmetric edge view — component sizes are planted
-            # small (4/8 nodes), so the closure stays tiny; the Spark
-            # side runs large-star/small-star, a genuinely different
-            # algorithm landing the same labels
-            "WITH RECURSIVE "
-            "e0 AS (SELECT doc_id AS src, doc_id - doc_id % 4 AS dst "
-            "FROM documents UNION ALL "
-            "SELECT doc_id, doc_id + 5 FROM documents WHERE doc_id % 20 = 0), "
-            "e AS (SELECT src AS u, dst AS v FROM e0 WHERE src <> dst "
-            "UNION SELECT dst, src FROM e0 WHERE src <> dst), "
-            "n AS (SELECT DISTINCT node FROM (SELECT src AS node FROM e0 "
-            "UNION ALL SELECT dst FROM e0)), "
-            "r AS (SELECT node, node AS reach FROM n "
-            "UNION SELECT r.node, e.v FROM r JOIN e ON e.u = r.reach) "
-            "SELECT node, CAST(MIN(reach) AS BIGINT) AS component "
-            "FROM r GROUP BY node"
-        ),
         "c_url_templates": (
             "WITH u AS (SELECT CASE WHEN user_id % 50 = 0 "
             "THEN 'https://h0.example.com/s/' || md5(CAST(event_id AS VARCHAR)) "
@@ -1396,21 +1142,6 @@ def oracle_sql() -> dict[str, str]:
             "ROUND(n_urls / host_urls, 6) AS url_share, "
             "(template LIKE '%{%' AND n_urls >= 10 AND n_urls / host_urls >= 0.5) "
             "AS is_trap FROM g JOIN h USING (host)"
-        ),
-        "t_line_dedup": (
-            f"WITH {_CHUNKED_CTE}, "
-            "lines AS (SELECT doc_id, unnest(generate_series(1, len(l))) AS line_idx, "
-            "unnest(l) AS line FROM (SELECT doc_id, string_split(text, chr(10)) AS l "
-            "FROM chunked)), "
-            "dup AS (SELECT md5(line) AS h FROM lines GROUP BY 1 "
-            "HAVING COUNT(DISTINCT doc_id) >= 3), "
-            "kept AS (SELECT * FROM lines WHERE md5(line) NOT IN (SELECT h FROM dup)), "
-            "reb AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept, "
-            "string_agg(line, chr(10) ORDER BY line_idx) AS clean_text "
-            "FROM kept GROUP BY doc_id) "
-            "SELECT c.doc_id, CAST(len(string_split(c.text, chr(10))) AS BIGINT) AS n_lines, "
-            "COALESCE(r.n_kept, 0) AS n_kept, COALESCE(r.clean_text, '') AS clean_text "
-            "FROM chunked c LEFT JOIN reb r USING (doc_id)"
         ),
         "t_rep_signals": (
             f"WITH {_CHUNKED_CTE}, "

@@ -1,8 +1,10 @@
 """Large-scale text-pipeline operators over a documents table.
 
-The operations a web-scale training-data pipeline needs on top of the
-crawl engine: deduplication (exact, MinHash+LSH, SimHash, n-gram
-Jaccard), quality scoring, token counting, fingerprinting.
+The quality and statistics operations a web-scale training-data
+pipeline runs on top of the crawl engine: quality scoring (C4/Gopher
+gates, repetition signals, duplicate n-gram ratio), token counts,
+vocabulary and TF-IDF top-k, PII scrubbing, benchmark decontamination,
+stratified sampling, and per-domain and length statistics.
 
 Everything here is built from JVM-side ``pyspark.sql.functions`` only —
 no Python UDFs — so the plans stay inside whole-stage codegen and the
@@ -26,10 +28,6 @@ def _md5num(col):
 
 _WS = r"\s+"
 
-# MinHash universal-hash modulus (2^31 - 1, Mersenne prime). With h0 < p
-# and a_b < 2^21, a_b*h0 + c_b < 2^52 — exact in int64 on both engines.
-_MH_P = 2147483647
-
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "it", "for", "was"],
     "de": ["der", "die", "das", "und", "ist", "nicht", "ein", "mit", "auf", "zu"],
@@ -40,24 +38,6 @@ STOPWORDS = {
     "nl": ["het", "een", "van", "niet", "op", "te", "voor", "zijn", "met", "ook"],
     "pt": ["de", "do", "da", "em", "para", "com", "uma", "os", "as", "mais"],
 }
-
-
-def exact_dedup(documents: DataFrame) -> DataFrame:
-    """Exact dedup by content hash: one representative (min doc_id) per
-    distinct text + the duplicate count.
-
-    Scale: a single hash-aggregate on md5(text) — map-side partial
-    aggregation, no sort; the 100 TB shape is groupBy over ~1e10 rows
-    with near-unique keys, which AQE coalesces fine.
-    """
-    return (
-        documents.groupBy(F.md5("text").alias("text_hash"))
-        .agg(
-            F.min("doc_id").alias("keep_doc_id"),
-            F.count("*").alias("dup_count"),
-        )
-        .select("keep_doc_id", "text_hash", "dup_count")
-    )
 
 
 def _words(documents: DataFrame) -> DataFrame:
@@ -90,178 +70,6 @@ def _shingles(documents: DataFrame, k: int = 3) -> DataFrame:
     # sequence(0, n) with n < 0 would count DOWN in Spark — guard short docs
     sh = F.when(F.size(ws) >= k, mk).otherwise(F.array().cast("array<string>"))
     return d.select("doc_id", F.explode(sh).alias("shingle"))
-
-
-def minhash_signatures(documents: DataFrame, bands: int = 4, k: int = 3) -> DataFrame:
-    """MinHash signature per (doc, band) over k-word shingles.
-
-    shingle→minhash→band: ONE base hash per shingle (h0 = md5num mod p),
-    then the textbook universal family hash_b = (a_b*h0 + c_b) mod p per
-    band — the same construction Spark's MinHashLSH uses, portable to
-    DuckDB as plain BIGINT arithmetic. Deterministic.
-
-    Scale: ONE explode + ONE groupBy(doc_id) computing all bands' minima
-    as parallel aggregates (map-side combine), then a tiny explode of
-    the bands-wide result. The per-band hash is compile-time column
-    fan-out over a single md5, so the map side hashes each shingle once
-    and the shuffle moves docs×1 rows — NOT shingles×bands as a
-    bands-crossJoin would (at 100 TB the crossJoin variant multiplies
-    the dominant shuffle by bands, this one doesn't).
-    """
-    s = _shingles(documents, k).distinct()
-    h0 = F.pmod(_md5num(F.col("shingle")), F.lit(_MH_P))
-    aggs = [
-        F.min(
-            F.pmod(F.lit(1000003 + 2 * b) * h0 + F.lit(12345 + b), F.lit(_MH_P))
-        ).alias(f"_h{b}")
-        for b in range(bands)
-    ]
-    per_doc = s.groupBy("doc_id").agg(*aggs)
-    bm = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("int").alias("band"),
-                F.col(f"_h{b}").alias("minhash"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return per_doc.select("doc_id", F.explode(bm).alias("_bm")).select(
-        "doc_id", F.col("_bm.band").alias("band"), F.col("_bm.minhash").alias("minhash")
-    )
-
-
-def lsh_candidate_pairs(
-    documents: DataFrame, bands: int = 4, k: int = 3, max_bucket: int = 50
-) -> DataFrame:
-    """LSH banding: docs sharing ANY (band, minhash) bucket become a
-    candidate near-dup pair (doc_a < doc_b).
-
-    Scale: pair explosion is quadratic per bucket, so buckets larger
-    than max_bucket are dropped — the standard boilerplate guard (a
-    bucket holding thousands of docs is template noise, not near-dup
-    signal, and its pairs would dominate the join).
-
-    Round-7 change (VERDICT r6 #1): the round-6 version FORCE-broadcast
-    the under-cap bucket-key list — at corpus scale that is nearly
-    every bucket, i.e. an O(corpus/bands) driver-built broadcast that
-    OOMs long before 10^10 docs. The hint is gone: AQE broadcasts the
-    key list at runtime when it actually fits and falls back to a keyed
-    shuffle join when it is corpus-sized — same result, no driver-sized
-    failure mode (hint absence is plan-asserted in
-    tests/test_round7_fixes.py).
-    """
-    # persist the signatures: they are consumed THREE times (bucket-size
-    # guard + both self-join branches) and each scan would otherwise
-    # re-run the dominant shingle explode over the full corpus. The
-    # cached table is docs x bands rows — tiny next to its input (at
-    # 100 TB you would write it out, like the persisted IVF index).
-    sig = minhash_signatures(documents, bands, k).persist()
-    small = (
-        sig.groupBy("band", "minhash")
-        .agg(F.count("*").alias("_n"))
-        .filter((F.col("_n") > 1) & (F.col("_n") <= max_bucket))
-        .select("band", "minhash")
-    )
-    sig = sig.join(small, ["band", "minhash"])
-    a = sig.select(
-        F.col("band"), F.col("minhash"), F.col("doc_id").alias("doc_a")
-    )
-    b = sig.select(
-        F.col("band"), F.col("minhash"), F.col("doc_id").alias("doc_b")
-    )
-    return (
-        a.join(b, ["band", "minhash"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-
-
-def jaccard_pairs(documents: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Exact word-set Jaccard for candidate pairs (LSH verify step).
-
-    Round-7 shape: verification only ever touches documents that
-    APPEAR in a candidate pair, so the corpus is semi-joined down to
-    that participant set BEFORE the words explode — the round-6
-    version exploded (and distinct-shuffled) the words of the ENTIRE
-    corpus just to read sizes for the usually-sparse candidate docs.
-    The participant id set is data-dependent; AQE broadcasts the
-    semi-join side when it fits, else it is a keyed shuffle — either
-    way the words explode runs over candidates only.
-
-    The intersection itself (round 7) is computed per pair with
-    ``array_intersect`` over per-doc word-SET arrays instead of the
-    round-6 word-level join: that join materialized |pairs| x
-    |words-per-doc| intermediate rows (26M rows for 1.1M candidate
-    pairs on the sf1.0 table — measured 7.1 s of the operator's 10 s),
-    while the array form shuffles only the pairs and two copies of the
-    docset table and evaluates the intersection inside codegen. A
-    doc's word-set array is bounded by the document length, so the row
-    is bounded at any corpus scale. Emits exactly the round-6 rows:
-    pairs whose word sets actually intersect (n_inter >= 1), same
-    jaccard arithmetic to the same 6 decimals.
-
-    The pair set feeds the participant restriction AND the verify
-    join, and the docset table feeds both pair sides — both persisted
-    so each is computed once per action. The caches are
-    operator-lifetime (LRU-evictable); eagerly materializing to
-    release them was measured at 2-4x the whole operator wall at bench
-    scale, so the r6 ADVICE #3 unpersist is deliberately NOT done."""
-    pairs = pairs.persist()
-    ids = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .union(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    relevant = documents.select("doc_id", "text").join(ids, "doc_id", "left_semi")
-    docsets = (
-        _words(relevant)
-        .distinct()
-        .groupBy("doc_id")
-        .agg(F.collect_list("word").alias("_ws"))
-        .persist()
-    )
-    da = docsets.select(F.col("doc_id").alias("doc_a"), F.col("_ws").alias("_wa"))
-    db = docsets.select(F.col("doc_id").alias("doc_b"), F.col("_ws").alias("_wb"))
-    n_inter = F.size(F.array_intersect("_wa", "_wb"))
-    na, nb = F.size("_wa"), F.size("_wb")
-    return (
-        pairs.join(da, "doc_a")
-        .join(db, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            n_inter.alias("n_inter"),
-            F.round(n_inter / (na + nb - n_inter), 6).alias("jaccard"),
-        )
-        .filter(F.col("n_inter") >= 1)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
-def simhash(documents: DataFrame, bits: int = 16) -> DataFrame:
-    """SimHash fingerprint: per-bit majority vote over word hashes.
-
-    Uses the first ``bits`` bits of md5num(word). Pure column
-    arithmetic: explode → conditional sums per bit → bit packing.
-    Scale: one explode + one groupBy(doc_id); bit loop is compile-time
-    column fan-out, not row work.
-    """
-    w = _words(documents)  # term frequency counts (not distinct)
-    w = w.withColumn("h", _md5num("word"))
-    aggs = [
-        F.sum(
-            F.when(F.col("h").bitwiseAND(F.lit(1 << i)) != 0, 1).otherwise(-1)
-        ).alias(f"b{i}")
-        for i in range(bits)
-    ]
-    per_doc = w.groupBy("doc_id").agg(*aggs)
-    packed = None
-    for i in range(bits):
-        term = F.when(F.col(f"b{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        packed = term if packed is None else packed + term
-    return per_doc.select("doc_id", packed.cast("long").alias("simhash"))
 
 
 def token_count(documents: DataFrame) -> DataFrame:
@@ -300,17 +108,6 @@ def quality_score(documents: DataFrame) -> DataFrame:
         stop_ratio.alias("stop_ratio"),
         mean_word_len.alias("mean_word_len"),
         score.alias("quality"),
-    )
-
-
-def fingerprint(documents: DataFrame) -> DataFrame:
-    """Document fingerprint: hash of whitespace-normalized lowercase text
-    (the rolling-hash dedup key, engine-portable form)."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), _WS, " "))
-    return documents.select(
-        "doc_id",
-        F.md5(norm).alias("fp_md5"),
-        _md5num(norm).alias("fp_num"),
     )
 
 
@@ -384,146 +181,6 @@ def pii_scrub(documents: DataFrame) -> DataFrame:
         F.size(F.regexp_extract_all(t, F.lit(_PII_IP), F.lit(0)))
         .cast("long").alias("n_ips"),
         clean.alias("clean_text"),
-    )
-
-
-def near_dup_clusters(
-    documents: DataFrame,
-    threshold: float = 0.5,
-    bands: int = 4,
-    k: int = 3,
-    max_iter: int = 20,
-    algorithm: str = "propagation",
-) -> DataFrame:
-    """Near-duplicate CLUSTERS: connected components over the verified
-    LSH pair graph; every clustered doc gets cluster_id = the minimum
-    doc_id reachable from it (so keeping one doc per cluster_id is the
-    standard near-dup collapse). Docs in no pair are not returned —
-    they are their own singleton clusters by definition.
-
-    Distributed connected components via iterative min-label
-    propagation: each round every vertex takes the min of its own and
-    its neighbors' labels (one join + one groupBy per round), stopping
-    when a round changes nothing. Rounds needed = component diameter —
-    near-dup components are dense blobs of boilerplate variants, so
-    2-4 rounds in practice. At 10^10 docs swap the propagation body
-    for the large-star/small-star contraction [Kiveris et al. 2014,
-    "Connected Components in MapReduce and Beyond"], which bounds
-    rounds at O(log^2 n) with the same join shape; pass
-    algorithm="star" to run exactly that swap (graph.connected_components,
-    this repo's large-star/small-star) — identical labels by
-    construction (both emit min-doc_id-reachable), pinned by a parity
-    test, and the plug-in proof that the documented 10^10 path is real
-    code, not a comment.
-    """
-    if algorithm not in ("propagation", "star"):
-        raise ValueError(
-            f"unknown algorithm {algorithm!r} (use 'propagation' or 'star')"
-        )
-    pairs = jaccard_pairs(documents, lsh_candidate_pairs(documents, bands, k))
-    pairs = (
-        pairs.filter(F.col("jaccard") >= threshold).select("doc_a", "doc_b")
-    )
-    if algorithm == "star":
-        from ironspark.graph import connected_components
-
-        return connected_components(
-            pairs.select(
-                F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-            ),
-            max_rounds=max_iter,
-        ).select(
-            F.col("node").alias("doc_id"),
-            F.col("component").alias("cluster_id"),
-        )
-    edges = pairs.unionByName(
-        pairs.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    ).persist()
-    # each round references `labels` three times (neighbor join, own
-    # label, convergence diff) — without lineage TRUNCATION the logical
-    # plan grows ~3x per round and Catalyst itself OOMs by round 10
-    # (same failure mode as the engine's pending handoff; persist alone
-    # caches data but keeps the plan). localCheckpoint caps the plan at
-    # one round; the convergence count materializes it.
-    labels = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(max_iter):
-        nb_min = (
-            edges.join(
-                labels.select(
-                    F.col("doc_id").alias("doc_b"),
-                    F.col("cluster_id").alias("_nb"),
-                ),
-                "doc_b",
-            )
-            .groupBy("doc_a")
-            .agg(F.min("_nb").alias("_nb_min"))
-            .withColumnRenamed("doc_a", "doc_id")
-        )
-        new_labels = (
-            labels.join(nb_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("_nb_min"), F.col("cluster_id")),
-                ).alias("cluster_id"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            new_labels.join(
-                labels.withColumnRenamed("cluster_id", "_old"), "doc_id"
-            )
-            .filter(F.col("cluster_id") != F.col("_old"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    out = labels.select("doc_id", "cluster_id")
-    edges.unpersist()
-    return out
-
-
-def near_dup_collapse(
-    documents: DataFrame,
-    threshold: float = 0.5,
-    bands: int = 4,
-    k: int = 3,
-) -> DataFrame:
-    """The end-user dedup operation: keep ONE representative per
-    near-dup cluster (the min doc_id — the convention near_dup_clusters
-    labels with) plus every unclustered document, reporting each
-    survivor's cluster size (1 for singletons).
-
-    Scale shape: clusters/sizes are tiny relative to the corpus (only
-    docs that appear in a verified pair), so both joins against the
-    full documents table broadcast; the corpus is scanned once with
-    only doc_id projected.
-    """
-    clusters = near_dup_clusters(documents, threshold, bands, k)
-    sizes = clusters.groupBy("cluster_id").agg(
-        F.count("*").alias("_n")
-    ).withColumnRenamed("cluster_id", "_cid")
-    return (
-        documents.select("doc_id")
-        .join(F.broadcast(clusters), "doc_id", "left")
-        .filter(
-            F.col("cluster_id").isNull()
-            | (F.col("doc_id") == F.col("cluster_id"))
-        )
-        .join(F.broadcast(sizes), F.col("doc_id") == F.col("_cid"), "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("_n"), F.lit(1)).cast("long").alias("n_members"),
-        )
     )
 
 
@@ -792,72 +449,6 @@ def length_quantiles(
     )
 
 
-def corpus_line_dedup(
-    documents: DataFrame, min_docs: int = 2, sep: str = "\n"
-) -> DataFrame:
-    """Corpus-level duplicate-line removal (CCNet-style boilerplate
-    scrub): any line whose exact text occurs in >= ``min_docs``
-    distinct documents is dropped from every document; the survivors
-    are reassembled in original order.
-
-    This is the pass that strips nav bars, cookie banners and footers
-    from web text before training (Wenzek et al., CCNet 2019, step 1 —
-    they dedup on paragraph hashes across shards; we dedup on line
-    hashes across the corpus, the same shape).
-
-    Returns (doc_id, n_lines, n_kept, clean_text); documents whose
-    every line was boilerplate survive with n_kept=0 / clean_text=''.
-
-    Scale: three shuffles, all key-hashed —
-      1. line-hash count-distinct-docs: map-side partial aggregation
-         does the heavy lifting because boilerplate lines repeat
-         millions of times (that is what makes them boilerplate);
-      2. the anti-join of lines vs the dup-hash set: the dup set is
-         the *repeated* tail only, orders of magnitude smaller than
-         the corpus — AQE broadcasts it when it fits, else it is a
-         shuffled-hash anti-join on line_hash;
-      3. the doc_id regroup to reassemble: payload bounded by a
-         single document's size.
-    No step holds more than one document (or one hash bucket) in
-    memory; at 10^10 docs CCNet shards this exact plan by hash
-    prefix, which is what the shuffle already does. All string
-    hashing is md5 (portable to the DuckDB oracle).
-    """
-    lines = documents.select(
-        "doc_id",
-        F.posexplode(F.split("text", sep)).alias("line_idx", "line"),
-    ).withColumn("line_hash", F.md5("line"))
-    dup = (
-        lines.groupBy("line_hash")
-        .agg(F.countDistinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= min_docs)
-        .select("line_hash")
-    )
-    kept = lines.join(dup, "line_hash", "left_anti")
-    rebuilt = kept.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("line_idx", "line"))),
-                lambda s: s["line"],
-            ),
-            sep,
-        ).alias("clean_text"),
-    )
-    base = documents.select(
-        "doc_id", F.size(F.split("text", sep)).cast("long").alias("n_lines")
-    )
-    return (
-        base.join(rebuilt, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_lines",
-            F.coalesce("n_kept", F.lit(0).cast("long")).alias("n_kept"),
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-        )
-    )
-
-
 def repetition_signals(
     documents: DataFrame, sep: str = "\n", n: int = 2
 ) -> DataFrame:
@@ -927,97 +518,5 @@ def repetition_signals(
                 / F.greatest(F.col("n_chars"), F.lit(1)),
                 6,
             ).alias("top_ngram_char_frac"),
-        )
-    )
-
-
-def _incr_candidates(
-    sig_new: DataFrame, sig_old: DataFrame, max_bucket: int
-) -> DataFrame:
-    """Candidate (doc_a, doc_b) pairs for incremental_near_dup: bucket
-    equi-join of the new snapshot's signatures against the corpus
-    signatures, with the boilerplate guard INVERTED from round 6
-    (VERDICT r6 #1) — the over-cap buckets are the RARE side at corpus
-    scale (big buckets are template noise), so broadcast THAT tiny key
-    list and drop its members with an anti-join; the round-6 version
-    broadcast the under-cap list, which is nearly every bucket, i.e.
-    an O(corpus/bands) driver-built broadcast. Plan-asserted in
-    tests/test_round7_fixes.py."""
-    big = (
-        sig_old.groupBy("band", "minhash")
-        .agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") > max_bucket)
-        .select("band", "minhash")
-    )
-    sig_old_kept = sig_old.join(
-        F.broadcast(big), ["band", "minhash"], "left_anti"
-    )
-    return (
-        sig_new.withColumnRenamed("doc_id", "doc_a")
-        .join(
-            sig_old_kept.withColumnRenamed("doc_id", "doc_b"),
-            ["band", "minhash"],
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-
-
-def incremental_near_dup(
-    new_docs: DataFrame,
-    corpus_docs: DataFrame,
-    bands: int = 4,
-    k: int = 3,
-    threshold: float = 0.5,
-    max_bucket: int = 50,
-) -> DataFrame:
-    """Incremental (cross-snapshot) near-dup dedup: flag documents in a
-    NEW crawl snapshot that near-duplicate an EXISTING corpus — the
-    production dedup shape (each snapshot dedups against history, not
-    just within itself; re-deduping the whole corpus per snapshot is
-    quadratic in snapshots).
-
-    doc_ids must be disjoint across the two tables (snapshot ids are).
-    Returns one row per flagged NEW doc: ``(doc_id, dup_of, jaccard)``
-    with dup_of = the best-matching corpus doc (highest verified
-    word-set Jaccard >= threshold; ties break to the smallest corpus
-    doc_id so the output is engine-reproducible).
-
-    Scale: the corpus touch is its (band, minhash) signature table —
-    docs x bands rows, persisted/bucketed by (band, minhash) in
-    production exactly like the IVF index, NOT recomputed per
-    snapshot (recompute here because the sandbox has no cross-run
-    state; the operator's join shape is identical either way). The
-    candidate step is a bucket equi-join new-sigs x corpus-sigs with
-    the same boilerplate guard as lsh_candidate_pairs applied to the
-    CORPUS side (a corpus bucket holding thousands of docs is
-    template noise; joining a new doc into it would explode pairs and
-    add no dedup signal). Verification runs word-set Jaccard only
-    over candidate pairs; the final best-match pick is one window
-    over the (small) verified pair set.
-    """
-    from pyspark.sql import Window
-
-    sig_new = minhash_signatures(new_docs, bands, k)
-    # sig_old feeds the bucket guard AND the candidate join — persisted
-    # so the corpus shingle explode runs once per action (cache is
-    # operator-lifetime, LRU-evictable; see jaccard_pairs on why the
-    # r6 ADVICE #3 eager-unpersist is deliberately not done)
-    sig_old = minhash_signatures(corpus_docs, bands, k).persist()
-    cand = _incr_candidates(sig_new, sig_old, max_bucket)
-    both = new_docs.select("doc_id", "text").unionByName(
-        corpus_docs.select("doc_id", "text")
-    )
-    verified = jaccard_pairs(both, cand).filter(
-        F.col("jaccard") >= threshold
-    )
-    win = Window.partitionBy("doc_a").orderBy(F.desc("jaccard"), "doc_b")
-    return (
-        verified.withColumn("_rn", F.row_number().over(win))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col("doc_a").alias("doc_id"),
-            F.col("doc_b").alias("dup_of"),
-            "jaccard",
         )
     )

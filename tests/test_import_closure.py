@@ -9,7 +9,7 @@ ENGINE_SIDE = (
     "ironspark.engine", "ironspark.monitor", "ironspark.worker_daemon",
     "__spark_entry__",
 )
-OUTSIDE = ("ironspark.textops", "ironspark.graph")
+OUTSIDE = ("ironspark.textops",)
 
 
 def test_engine_imports_no_operator_modules():

@@ -4,16 +4,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from ironspark.textops import (
-    exact_dedup,
-    fingerprint,
-    jaccard_pairs,
-    lsh_candidate_pairs,
-    minhash_signatures,
-    quality_score,
-    simhash,
-    token_count,
-)
+from ironspark.textops import quality_score, token_count
 
 
 @pytest.fixture(scope="module")
@@ -32,56 +23,12 @@ def docs(spark):
     )
 
 
-def test_exact_dedup(spark, docs):
-    out = exact_dedup(docs).toPandas()
-    assert len(out) == 6  # 7 docs, one exact duplicate pair
-    dup = out[out["dup_count"] == 2]
-    assert len(dup) == 1 and dup.iloc[0]["keep_doc_id"] == 1
-
-
-def test_lsh_finds_near_dups(spark, docs):
-    pairs = lsh_candidate_pairs(docs, bands=4).toPandas()
-    got = set(map(tuple, pairs.values))
-    assert (1, 2) in got  # exact dup always collides
-    # near-dup (1,3) shares most shingles; with 4 bands it should collide
-    assert (1, 3) in got or (2, 3) in got
-
-
-def test_jaccard_values(spark, docs):
-    pairs = spark.createDataFrame(
-        pd.DataFrame({"doc_a": [1, 1], "doc_b": [2, 3]})
-    )
-    out = jaccard_pairs(docs, pairs).toPandas().set_index(["doc_a", "doc_b"])
-    assert out.loc[(1, 2), "jaccard"] == 1.0
-    # doc1 has 8 distinct words, doc3 differs by one word: |inter|=7, |union|=9
-    assert abs(out.loc[(1, 3), "jaccard"] - 7 / 9) < 1e-6
-
-
-def test_simhash_similarity(spark, docs):
-    out = simhash(docs, bits=16).toPandas().set_index("doc_id")["simhash"]
-    assert out[1] == out[2]  # identical docs, identical fingerprint
-    ham_near = bin(int(out[1]) ^ int(out[3])).count("1")
-    ham_far = bin(int(out[1]) ^ int(out[7])).count("1")
-    assert ham_near < ham_far  # near-dup closer than unrelated
-
-
 def test_token_and_quality(spark, docs):
     toks = token_count(docs).toPandas().set_index("doc_id")
     assert toks.loc[1, "n_tokens"] == 9
     q = quality_score(docs).toPandas().set_index("doc_id")
     assert q.loc[6, "quality"] == 0.0  # too short
     assert q.loc[1, "stop_ratio"] > 0  # 'the' twice
-
-
-def test_fingerprint_normalizes_whitespace(spark):
-    import pandas as pd
-
-    docs = pd.DataFrame(
-        {"doc_id": [1, 2], "text": ["Hello   World", "hello world"]}
-    )
-    sdf = __import__("pyspark").sql.SparkSession.getActiveSession().createDataFrame(docs)
-    out = fingerprint(sdf).toPandas()
-    assert out["fp_md5"].nunique() == 1  # case+whitespace normalized
 
 
 def test_pii_scrub_goldens(spark):
@@ -132,65 +79,6 @@ def test_vocab_topk_order(spark):
     got = [(r["word"], r["n"]) for r in vocab_topk(df, k=3).collect()]
     # b: 4 (case-folded), a: 3, c: 3 (tie broken bytewise a < c)
     assert got == [("b", 4), ("a", 3), ("c", 3)]
-
-
-def test_near_dup_clusters_semantics(spark):
-    """Connected components over the verified pair graph: transitive
-    chains collapse to one cluster labeled by the min doc_id; docs in
-    no pair are absent (singletons by definition)."""
-    import pandas as pd
-
-    from ironspark.textops import near_dup_clusters
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows = [
-        # cluster {1,2,3}: 1~2 and 2~3 share almost all shingles, 1~3
-        # only transitively
-        (1, base + " one"),
-        (2, base + " two"),
-        (3, base + " two"),          # identical to 2
-        # cluster {10, 11}
-        (10, "lorem ipsum dolor sit amet consectetur adipiscing elit sed do"),
-        (11, "lorem ipsum dolor sit amet consectetur adipiscing elit sed do"),
-        # singleton: unrelated text, never in a candidate pair
-        (99, "completely different words about spark clusters and parquet"),
-    ]
-    docs = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["doc_id", "text"]),
-        "doc_id long, text string",
-    )
-    got = {
-        r.doc_id: r.cluster_id
-        for r in near_dup_clusters(docs, threshold=0.5, bands=4).collect()
-    }
-    assert got[1] == got[2] == got[3] == 1
-    assert got[10] == got[11] == 10
-    assert 99 not in got
-
-
-def test_near_dup_collapse_survivors(spark):
-    """Collapse keeps each cluster's min-doc_id representative with its
-    cluster size, and every unclustered doc with n_members=1."""
-    import pandas as pd
-
-    from ironspark.textops import near_dup_collapse
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows = [
-        (1, base + " one"), (2, base + " two"), (3, base + " two"),
-        (10, "lorem ipsum dolor sit amet consectetur adipiscing elit sed do"),
-        (11, "lorem ipsum dolor sit amet consectetur adipiscing elit sed do"),
-        (99, "completely different words about spark clusters and parquet"),
-    ]
-    docs = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["doc_id", "text"]),
-        "doc_id long, text string",
-    )
-    got = {
-        r.doc_id: r.n_members
-        for r in near_dup_collapse(docs, threshold=0.5, bands=4).collect()
-    }
-    assert got == {1: 3, 10: 2, 99: 1}
 
 
 def test_decontaminate_flags_benchmark_overlap(spark):
@@ -350,56 +238,6 @@ def test_length_quantiles_semantics(spark):
     assert de["n_docs"] == 4 and abs(de["p50"] - 125.0) < 1e-9
 
 
-def test_corpus_line_dedup_drops_boilerplate(spark):
-    from ironspark.textops import corpus_line_dedup
-
-    footer = "subscribe to our newsletter"
-    rows = [
-        (1, f"unique alpha content\n{footer}\nmore alpha"),
-        (2, f"unique beta content\n{footer}"),
-        (3, f"{footer}\nunique gamma content"),
-        (4, "entirely original document"),
-        (5, footer),  # nothing but boilerplate -> emptied
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {
-        r["doc_id"]: r
-        for r in corpus_line_dedup(docs, min_docs=3).collect()
-    }
-    assert out[1]["clean_text"] == "unique alpha content\nmore alpha"
-    assert (out[1]["n_lines"], out[1]["n_kept"]) == (3, 2)
-    assert out[2]["clean_text"] == "unique beta content"
-    assert out[3]["clean_text"] == "unique gamma content"
-    # untouched doc survives byte-identical
-    assert out[4]["clean_text"] == "entirely original document"
-    # all-boilerplate doc keeps its row with empty text, not a dropped row
-    assert (out[5]["n_kept"], out[5]["clean_text"]) == (0, "")
-
-
-def test_corpus_line_dedup_threshold_is_distinct_docs(spark):
-    from ironspark.textops import corpus_line_dedup
-
-    # the repeated line appears TWICE in doc 1 but only in 2 distinct
-    # docs -> min_docs=3 keeps it; within-doc repetition must not count
-    rows = [
-        (1, "dup line\ndup line\nown one"),
-        (2, "dup line\nown two"),
-        (3, "own three"),
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {
-        r["doc_id"]: r["clean_text"]
-        for r in corpus_line_dedup(docs, min_docs=3).collect()
-    }
-    assert out[1] == "dup line\ndup line\nown one"
-    out2 = {
-        r["doc_id"]: r["clean_text"]
-        for r in corpus_line_dedup(docs, min_docs=2).collect()
-    }
-    assert out2[1] == "own one"
-    assert out2[2] == "own two"
-
-
 def test_repetition_signals_semantics(spark):
     from ironspark.textops import repetition_signals
 
@@ -427,136 +265,3 @@ def test_repetition_signals_semantics(spark):
     # top coverage = 4 * len("buy now") / len(text) = 28/31
     r3 = out[3]
     assert r3["top_ngram_char_frac"] == round(28 / 31, 6)
-
-
-def test_near_dup_clusters_star_parity(spark):
-    """algorithm='star' (large-star/small-star via
-    graph.connected_components) must label identically to min-label
-    propagation — the documented 10^10-doc swap, proven as a plug-in."""
-    import pandas as pd
-
-    from ironspark.textops import near_dup_clusters
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows = [
-        (1, base + " one"),
-        (2, base + " two"),
-        (3, base + " two"),
-        (10, "lorem ipsum dolor sit amet consectetur adipiscing elit sed do"),
-        (11, "lorem ipsum dolor sit amet consectetur adipiscing elit sed do"),
-        (99, "completely different words about spark clusters and parquet"),
-    ]
-    docs = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["doc_id", "text"]),
-        "doc_id long, text string",
-    )
-    prop = {
-        r.doc_id: r.cluster_id
-        for r in near_dup_clusters(docs, threshold=0.5, bands=4).collect()
-    }
-    star = {
-        r.doc_id: r.cluster_id
-        for r in near_dup_clusters(
-            docs, threshold=0.5, bands=4, algorithm="star"
-        ).collect()
-    }
-    assert star == prop
-    assert star[1] == 1 and star[10] == 10
-
-
-def test_incremental_near_dup_matches_reference(spark):
-    """Cross-snapshot dedup vs an independent pure-Python pipeline
-    (same md5 minhash family, banding, corpus-side bucket guard, exact
-    word-set Jaccard, best-match tie-break)."""
-    import hashlib
-
-    import pandas as pd
-
-    from ironspark.textops import incremental_near_dup
-
-    P = 2147483647
-    BANDS, K, THRESH, MAXB = 4, 3, 0.5, 2
-
-    def shingle_set(text):
-        ws = [w for w in text.lower().split() if w]
-        return {" ".join(ws[i : i + K]) for i in range(max(len(ws) - K + 1, 0))}
-
-    def signature(text):
-        hs = [
-            int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % P
-            for s in shingle_set(text)
-        ]
-        if not hs:
-            return {}
-        return {
-            b: min(((1000003 + 2 * b) * h + 12345 + b) % P for h in hs)
-            for b in range(BANDS)
-        }
-
-    def word_set(text):
-        return {w for w in text.lower().split() if w}
-
-    base = "the quick brown fox jumps over the lazy dog today again"
-    boiler = "subscribe to our newsletter for daily updates and offers now"
-    old = {
-        100: base,
-        101: "completely unrelated corpus text about parquet shuffles",
-        102: boiler,
-        103: boiler,
-        104: boiler,  # 3-doc boilerplate bucket > MAXB -> guarded out
-    }
-    new = {
-        0: base,                                    # exact dup of 100
-        3: base.replace("today", "tomorrow"),       # near dup of 100
-        6: "fresh document with entirely new words",  # clean
-        9: boiler,                                  # hits only guarded buckets
-    }
-
-    # reference pipeline
-    from collections import Counter
-
-    osig = {i: signature(t) for i, t in old.items()}
-    bucket_count = Counter()
-    for i, sg in osig.items():
-        for b, mh in sg.items():
-            bucket_count[(b, mh)] += 1
-    kept = {k for k, n in bucket_count.items() if n <= MAXB}
-    cands = set()
-    for ni, nt in new.items():
-        for b, mh in signature(nt).items():
-            if (b, mh) in kept:
-                for oi, sg in osig.items():
-                    if sg.get(b) == mh:
-                        cands.add((ni, oi))
-    expect = {}
-    for ni, oi in sorted(cands):
-        wa, wb = word_set(new[ni]), word_set(old[oi])
-        j = round(len(wa & wb) / len(wa | wb), 6)
-        if j >= THRESH:
-            cur = expect.get(ni)
-            if cur is None or (j, -oi) > (cur[1], -cur[0]):
-                expect[ni] = (oi, j)
-
-    new_df = spark.createDataFrame(
-        pd.DataFrame(
-            {"doc_id": list(new), "text": list(new.values())}
-        ),
-        "doc_id long, text string",
-    )
-    old_df = spark.createDataFrame(
-        pd.DataFrame(
-            {"doc_id": list(old), "text": list(old.values())}
-        ),
-        "doc_id long, text string",
-    )
-    got = {
-        r["doc_id"]: (r["dup_of"], r["jaccard"])
-        for r in incremental_near_dup(
-            new_df, old_df, bands=BANDS, k=K, threshold=THRESH,
-            max_bucket=MAXB,
-        ).collect()
-    }
-    assert got == expect
-    assert got[0] == (100, 1.0)       # exact dup found
-    assert 6 not in got               # clean doc untouched
-    assert 9 not in got               # boilerplate bucket guarded out
